@@ -143,8 +143,11 @@ object CdcIngest {
     val updKeys = deduped.select(cfg.primaryKey).distinct()
     val survivors = Cdc.dropTombstones(deduped).drop("row_num", "Op")
       .withColumn(BucketCol, date_format(col(cfg.dateCol), fmt))
+    // the bucket is read in its string form: partition inference types
+    // a day bucket (yyyy-MM-dd) as DATE, and the string cast renders it
+    // back exactly as its directory value
     val touched = dest.join(updKeys, Seq(cfg.primaryKey), "left_semi")
-      .select(BucketCol)
+      .select(col(BucketCol).cast("string"))
       .union(survivors.select(BucketCol))
       .distinct().collect().map(_.getString(0))
     val touchedSpecs = touched.map {

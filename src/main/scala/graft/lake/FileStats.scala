@@ -83,6 +83,15 @@ object FileStats {
     }
   }
 
+  /** Rows in one parquet file, summed over its footer's row groups — a
+    * driver metadata read, no scan. */
+  def rowCount(conf: Configuration, uri: String): Long = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(uri), conf))
+    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+    finally reader.close()
+  }
+
   /** Fold one file's footer into sidecar lines. Per supported
     * top-level column: all-null if every row group reports
     * nulls == rows; otherwise min-of-mins / max-of-maxes over groups

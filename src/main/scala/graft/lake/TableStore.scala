@@ -1494,7 +1494,9 @@ final class TableStore(private[graft] val spark: SparkSession,
         .select(col(RowFileCol).as(DvFileCol), col(RowPosCol).as(DvPosCol))
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dvDir.toString)
       val dvFiles = listDataFiles(dvDir)
-      val n = spark.read.parquet(dvDir.toString).count()
+      // the deleted-row count comes from the vector files' footers — a
+      // driver metadata read (as FileStats.compute does), not a scan job
+      val n = dvFiles.map(FileStats.rowCount(hadoopConf, _)).sum
       if (n == 0) { fs(dvDir).delete(dvDir, true); return 0L }
       try {
         claimLoop(table, mustCreate = false) { (cur, v) =>

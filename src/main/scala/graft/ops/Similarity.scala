@@ -291,14 +291,14 @@ object Similarity {
   // assignment/search arithmetic is untouched.
   // -------------------------------------------------------------------
 
-  private val MaxDriverTrainRows =
+  private[ops] val MaxDriverTrainRows =
     sys.env.get("SPARK_GRAFT_KMEANS_DRIVER_MAX").map(_.toInt)
       .getOrElse(262144)
 
   /** Spark's sort order for the id types the driver path supports;
     * None ⇒ distributed fallback. Strings compare as unsigned UTF-8
     * bytes (UTF8String.compareTo). */
-  private def idOrderingOf(dt: org.apache.spark.sql.types.DataType)
+  private[ops] def idOrderingOf(dt: org.apache.spark.sql.types.DataType)
       : Option[Ordering[Any]] = {
     import org.apache.spark.sql.types._
     dt match {
@@ -340,20 +340,8 @@ object Similarity {
     var i = 0
     while (i < collected.length) {
       val r = collected(i)
-      if (r.isNullAt(0) || r.isNullAt(1)) return None
-      val seq = r.getSeq[Any](1)
-      val v = new Array[Double](seq.length)
-      var j = 0
-      while (j < seq.length) {
-        seq(j) match {
-          case null => return None
-          case f: Float => v(j) = f.toDouble
-          case d: Double => v(j) = d
-          case n: Number => v(j) = n.doubleValue()
-        }
-        j += 1
-      }
-      rows(i) = (r.get(0), v)
+      if (r.isNullAt(0)) return None
+      rows(i) = (r.get(0), doublesOf(r, 1).getOrElse(return None))
       i += 1
     }
     scala.util.Sorting.stableSort(rows,
@@ -362,23 +350,52 @@ object Similarity {
     Some((rows, idType))
   }
 
+  /** Field `i` of a collected row as a double vector (float elements
+    * widen exactly, as graft_dot reads them); None for a null vector
+    * or a null element — the driver paths fall back on those. */
+  private[ops] def doublesOf(r: org.apache.spark.sql.Row, i: Int)
+      : Option[Array[Double]] = {
+    if (r.isNullAt(i)) return None
+    val seq = r.getSeq[Any](i)
+    val v = new Array[Double](seq.length)
+    var j = 0
+    while (j < seq.length) {
+      seq(j) match {
+        case null => return None
+        case f: Float => v(j) = f.toDouble
+        case d: Double => v(j) = d
+        case n: Number => v(j) = n.doubleValue()
+      }
+      j += 1
+    }
+    Some(v)
+  }
+
   /** Spark SQL's double comparison (SQLOrderingUtil.compareDoubles):
     * -0.0 == 0.0, NaN largest — the ordering max(struct(ccos, ...))
     * folds with. */
-  private def sqlCompareDoubles(a: Double, b: Double): Int =
+  private[ops] def sqlCompareDoubles(a: Double, b: Double): Int =
     if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** Spark's `round(x, 4)` on a double: NaN and infinities pass
+    * through, everything else rounds HALF_UP through the decimal
+    * string form (`BigDecimal.valueOf`), as Catalyst's Round does. */
+  private[ops] def round4(d: Double): Double =
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d)
+      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** dot of a double vector against the FLOAT-cast centroid,
     * accumulated left-to-right in double — graft_dot's arithmetic on
     * `cosine(vec, cvec.cast("array<float>"))` exactly. */
-  private def dotVsFloat(v: Array[Double], cf: Array[Float]): Double = {
+  private[ops] def dotVsFloat(v: Array[Double], cf: Array[Float]): Double = {
     var s = 0.0
     var i = 0
     while (i < v.length) { s += v(i) * cf(i).toDouble; i += 1 }
     s
   }
 
-  private def normOf(v: Array[Double]): Double = {
+  private[ops] def normOf(v: Array[Double]): Double = {
     var s = 0.0
     var i = 0
     while (i < v.length) { s += v(i) * v(i); i += 1 }
@@ -762,11 +779,20 @@ object Similarity {
   def pqEncode(corpus: DataFrame, books: DataFrame, m: Int,
                idCol: String = "vec_id",
                vecCol: String = "embedding",
-               carryCols: Seq[String] = Nil): DataFrame = {
+               carryCols: Seq[String] = Nil): DataFrame =
+    pqEncodeSd(corpus, books, m, 0, idCol, vecCol, carryCols)
+
+  /** [[pqEncode]] with the codebooks' sub-dimension `sd` already known
+    * (a caller holding the quantizers on the driver); 0 reads it off
+    * the books frame in one small job. */
+  private[ops] def pqEncodeSd(corpus: DataFrame, books: DataFrame, m: Int,
+                              sd0: Int, idCol: String, vecCol: String,
+                              carryCols: Seq[String]): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val sd = graft.lake.JobLabel(corpus.sparkSession, "graft:pq book meta") {
-      books.select(size(col("cvec"))).first().getInt(0)
-    }
+    val sd = if (sd0 > 0) sd0 else
+      graft.lake.JobLabel(corpus.sparkSession, "graft:pq book meta") {
+        books.select(size(col("cvec"))).first().getInt(0)
+      }
     // carryCols (an index build's cent_id + attribute columns) are
     // constant per id, so `first` inside the per-(id, sub) argmax
     // group is deterministic — carrying them here removes the

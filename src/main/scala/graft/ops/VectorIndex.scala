@@ -30,6 +30,23 @@ import org.apache.spark.sql.functions._
   * overwrites both tables atomically (each commit is atomic; a reader
   * racing a rebuild sees old or new lists, never a mix of list
   * versions within one table).
+  *
+  * Driver-served IVF-PQ. Bounded IVF-PQ searches and index syncs run
+  * on the driver against a quantizer cache (coarse centroids,
+  * codebooks, m, sub-dimension, codeword norms), loaded once per
+  * (store root, index, centroids version, books version) — the
+  * IVFADC serving split of Jégou et al.: the probe side (routing,
+  * the m × ksub LUT, scoring, top-k) is in-process arithmetic over
+  * KBs, and only the probed code partitions are read, in one pruned
+  * merge-on-read scan. A sync collects its netted change feed once,
+  * encodes the inserts on the driver and commits codes plus delete
+  * keys from local frames in the same single commit. The bound is
+  * [[Similarity]]'s driver-training bound (262,144 rows) on candidate
+  * code rows (from manifest row counts) and feed rows (a
+  * limit-guarded collect); past it, on null or ragged vectors, or on
+  * id types the driver path does not order, the distributed plans
+  * run unchanged. Both paths use graft_dot's arithmetic and Spark's
+  * rounding and ordering, so they return the same rows.
   */
 object VectorIndex {
 
@@ -156,6 +173,7 @@ object VectorIndex {
     put(codesTable(name), codes, Seq("cent_id"))
     colsCache.put((store.rootPath, codesTable(name)),
       Seq("cent_id", idCol, "sub", "code") ++ attrCols)
+    quantizers.remove((store.rootPath, name))
   }
 
   /** IVF-PQ search: probes assign to their nprobe coarse lists
@@ -173,7 +191,8 @@ object VectorIndex {
                        k: Int, nprobe: Int, m: Int = 0,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame =
-    searchIvfPqCore(store, name, probes, k, nprobe, None, m, idCol, vecCol)
+    searchIvfPqCore(store, name, probes, k, nprobe, None, m, idCol, vecCol,
+      Similarity.MaxDriverTrainRows)
 
   /** Attribute-filtered IVF-PQ search — [[searchIvfIndexFiltered]]'s
     * contract on the code-compressed index: the predicate pushes into
@@ -190,7 +209,18 @@ object VectorIndex {
                                selectivity: Double = Double.NaN,
                                m: Int = 0,
                                idCol: String = "vec_id",
-                               vecCol: String = "embedding"): DataFrame = {
+                               vecCol: String = "embedding"): DataFrame =
+    searchIvfPqFiltered(store, name, probes, k, nprobe, filter, selectivity,
+      m, idCol, vecCol, Similarity.MaxDriverTrainRows)
+
+  /** [[searchIvfPqIndexFiltered]] with the driver bound as a parameter:
+    * `driverRows` ≤ 0 forces the distributed plan. */
+  private[ops] def searchIvfPqFiltered(store: TableStore, name: String,
+                                       probes: DataFrame, k: Int, nprobe: Int,
+                                       filter: org.apache.spark.sql.Column,
+                                       selectivity: Double, m: Int,
+                                       idCol: String, vecCol: String,
+                                       driverRows: Int): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
     val codes0 = store.read(codesTable(name))
     val s0 =
@@ -200,23 +230,37 @@ object VectorIndex {
         if (r.getLong(0) == 0L) 1.0
         else r.getLong(1) * 1.0 / r.getLong(0)
       }
-    val nlist = store.read(centroidsTable(name)).count()
+    val nlist = quantizer(store, name, m).nlist
     val widened = math.min(nlist.toDouble,
       math.ceil(nprobe / math.max(s0, 1e-9))).toInt
     searchIvfPqCore(store, name, probes, k, math.max(nprobe, widened),
-      Some(filter), m, idCol, vecCol)
+      Some(filter), m, idCol, vecCol, driverRows)
   }
 
-  private def searchIvfPqCore(store: TableStore, name: String,
-                              probes: DataFrame, k: Int, nprobe: Int,
-                              codesFilter: Option[org.apache.spark.sql.Column],
-                              m: Int, idCol: String,
-                              vecCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  /** One IVF-PQ search: driver-served when the quantizers, probes and
+    * probed lists fit `driverRows`, the distributed plan otherwise
+    * (`driverRows` ≤ 0 forces it). */
+  private[ops] def searchIvfPqCore(store: TableStore, name: String,
+                                   probes: DataFrame, k: Int, nprobe: Int,
+                                   codesFilter: Option[org.apache.spark.sql.Column],
+                                   m: Int, idCol: String, vecCol: String,
+                                   driverRows: Int): DataFrame = {
     graft.functions.GraftFunctions.register(probes.sparkSession)
-    val cents = store.read(centroidsTable(name))
-    val books = store.read(booksTable(name))
-    val (mUse, sd) = bookMeta(books, m)
+    val q = quantizer(store, name, m)
+    q.arrays.flatMap(a => searchOnDriver(store, name, a, probes, k, nprobe,
+        codesFilter, idCol, vecCol, driverRows))
+      .getOrElse(searchDistributed(store, name, q, probes, k, nprobe,
+        codesFilter, idCol, vecCol))
+  }
+
+  private def searchDistributed(store: TableStore, name: String,
+                                q: PqQuantizer,
+                                probes: DataFrame, k: Int, nprobe: Int,
+                                codesFilter: Option[org.apache.spark.sql.Column],
+                                idCol: String, vecCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cents = store.readVersion(centroidsTable(name), q.centsVersion)
+    val books = store.readVersion(booksTable(name), q.booksVersion)
     val pa = Similarity.assignTopClusters(probes, cents, nprobe,
         idCol, vecCol)
       .select(col(idCol).as("qid"), col("cent_id"))
@@ -233,7 +277,7 @@ object VectorIndex {
     val lists = codes0.where(col("cent_id").isin(needed: _*))
       .select(col("cent_id"), col(idCol).as("vid"), col("sub"), col("code"))
     // per-probe LUT: dot of each probe sub-vector with every codeword
-    val lut = Similarity.subVectors(probes, mUse, sd, idCol, vecCol, "qid")
+    val lut = Similarity.subVectors(probes, q.m, q.sd, idCol, vecCol, "qid")
       .join(broadcast(books), Seq("sub"))
       .select(col("qid"), col("sub"), col("cent_id").as("code"),
         Similarity.dot(col("svec"), col("cvec")).as("pd"))
@@ -267,9 +311,14 @@ object VectorIndex {
     * streaming micro-batch ingest. */
   def encodeForIvfPq(store: TableStore, name: String, batch: DataFrame,
                      m: Int = 0, idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
-    val cents = store.read(centroidsTable(name))
-    val books = store.read(booksTable(name))
+                     vecCol: String = "embedding"): DataFrame =
+    encodeWith(store, name, quantizer(store, name, m), batch, idCol, vecCol)
+
+  private def encodeWith(store: TableStore, name: String, q: PqQuantizer,
+                         batch: DataFrame, idCol: String,
+                         vecCol: String): DataFrame = {
+    val cents = store.readVersion(centroidsTable(name), q.centsVersion)
+    val books = store.readVersion(booksTable(name), q.booksVersion)
     // conform to the codes table's column set (cached — the streaming
     // ingest calls this per micro-batch): attribute columns the index
     // was built with must come from the batch, loudly, not null-fill
@@ -279,25 +328,9 @@ object VectorIndex {
     // per-(id, sub) argmax — no id-join (see buildIvfPqIndex)
     val assigned = Similarity.assignClusters(batch, cents, idCol, vecCol,
         carryCols = attrs)
-    Similarity.pqEncode(assigned, books, bookMeta(books, m)._1, idCol,
-        vecCol, carryCols = "cent_id" +: attrs)
+    Similarity.pqEncodeSd(assigned, books, q.m, q.sd, idCol, vecCol,
+        "cent_id" +: attrs)
       .select(cols.map(col): _*)
-  }
-
-  /** (m, sub-dim) of a stored codebook table, in ONE driver action
-    * over the tiny books frame. m is what the index was BUILT with
-    * (max sub + 1); a caller-supplied m is validated against it — a
-    * mismatched m would slice probes into wrong-width sub-vectors and
-    * return plausible-looking but wrong rankings; 0 (the default on
-    * every read path) means "use the stored value". */
-  private def bookMeta(books: DataFrame, m: Int): (Int, Int) = {
-    val r = graft.lake.JobLabel(books.sparkSession, "graft:pq book meta") {
-      books.agg(max(col("sub")), first(size(col("cvec")))).first()
-    }
-    val stored = r.getInt(0) + 1
-    require(m <= 0 || m == stored,
-      s"m=$m does not match the stored codebooks (index was built with m=$stored)")
-    (stored, r.getInt(1))
   }
 
   /** Incremental IVF-PQ maintenance: assign + encode `batch` against
@@ -367,8 +400,11 @@ object VectorIndex {
     val lt = listsTable(name)
     if (store.exists(ct)) store.overwrite(ct, cents)
     else store.create(ct, cents)
+    // a re-build at an unchanged corpus version must still replace the
+    // lists: re-ASSERT the watermark (overwriteTxn's replay guard would
+    // no-op the equal version and pair new centroids with old lists)
     if (store.exists(lt))
-      store.overwriteTxn(lt, lists, syncApp(corpusTable), v)
+      store.overwriteReassertTxn(lt, lists, syncApp(corpusTable), v)
     else store.createTxn(lt, lists, syncApp(corpusTable), v,
       partitionBy = Seq("cent_id"))
     colsCache.put((store.rootPath, lt),
@@ -410,12 +446,14 @@ object VectorIndex {
     put(centroidsTable(name), cents)
     put(booksTable(name), books)
     val kt = codesTable(name)
+    // re-assert, not overwriteTxn: see buildIvfIndexFromTable
     if (store.exists(kt))
-      store.overwriteTxn(kt, codes, syncApp(corpusTable), v)
+      store.overwriteReassertTxn(kt, codes, syncApp(corpusTable), v)
     else store.createTxn(kt, codes, syncApp(corpusTable), v,
       partitionBy = Seq("cent_id"))
     colsCache.put((store.rootPath, kt),
       Seq("cent_id", idCol, "sub", "code") ++ attrCols)
+    quantizers.remove((store.rootPath, name))
   }
 
   /** [[syncIvfIndex]] on the code-compressed index: the same netted
@@ -426,7 +464,15 @@ object VectorIndex {
     * idempotent under redelivery. */
   def syncIvfPqIndex(store: TableStore, name: String, corpusTable: String,
                      m: Int = 0, idCol: String = "vec_id",
-                     vecCol: String = "embedding"): Option[Long] = {
+                     vecCol: String = "embedding"): Option[Long] =
+    syncIvfPq(store, name, corpusTable, m, idCol, vecCol,
+      Similarity.MaxDriverTrainRows)
+
+  /** [[syncIvfPqIndex]] with the driver bound as a parameter:
+    * `driverRows` ≤ 0 forces the distributed plan. */
+  private[ops] def syncIvfPq(store: TableStore, name: String,
+                             corpusTable: String, m: Int, idCol: String,
+                             vecCol: String, driverRows: Int): Option[Long] = {
     val kt = codesTable(name)
     val app = syncApp(corpusTable)
     val last = store.lastTxn(kt, app).getOrElse(throw new IllegalStateException(
@@ -435,18 +481,23 @@ object VectorIndex {
     store.changesSince(corpusTable, last) match {
       case None => None
       case Some((feed, cur)) =>
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(idCol).orderBy(
-          col("_commit_version").desc,
-          when(col("_change_type") === "insert", 0).otherwise(1))
-        val latest = feed.withColumn("__r", row_number().over(w))
-          .where(col("__r") === 1)
-        val inserts = latest.where(col("_change_type") === "insert")
-          .drop("_change_type", "_commit_version", "__r")
-        val touched = feed.select(col(idCol)).distinct()
-        store.appendWithDeletes(kt,
-          encodeForIvfPq(store, name, inserts, m, idCol, vecCol),
-          touched, txn = Some((app, cur)))
+        val q = quantizer(store, name, m)
+        val onDriver = q.arrays.exists(a => syncOnDriver(store, name, a,
+          feed, (app, cur), idCol, vecCol, driverRows))
+        if (!onDriver) {
+          import org.apache.spark.sql.expressions.Window
+          val w = Window.partitionBy(idCol).orderBy(
+            col("_commit_version").desc,
+            when(col("_change_type") === "insert", 0).otherwise(1))
+          val latest = feed.withColumn("__r", row_number().over(w))
+            .where(col("__r") === 1)
+          val inserts = latest.where(col("_change_type") === "insert")
+            .drop("_change_type", "_commit_version", "__r")
+          val touched = feed.select(col(idCol)).distinct()
+          store.appendWithDeletes(kt,
+            encodeWith(store, name, q, inserts, idCol, vecCol),
+            touched, txn = Some((app, cur)))
+        }
         Some(cur)
     }
   }
@@ -603,7 +654,6 @@ object VectorIndex {
     val lt = if (store.exists(listsTable(name))) listsTable(name)
              else codesTable(name)
     require(store.exists(lt), s"unknown vector index $name")
-    val CentDir = ".*/cent_id=([^/]+)/[^/]*$".r
     // one version pin for BOTH the file inventory and the row counts —
     // a commit racing the profile must not tear it across versions
     val v = store.currentVersion(lt).get
@@ -615,7 +665,7 @@ object VectorIndex {
     // the raw partition-directory value (string), so non-numeric ids
     // profile instead of crashing; "" marks unpartitioned strays.
     val perFile = store.liveDataFiles(lt, v).map { f =>
-      val cid = f match { case CentDir(c) => c; case _ => "" }
+      val cid = listDirOf(f)
       (cid, rowsByFile.get(f))
     }
     val spark = store.spark
@@ -720,5 +770,387 @@ object VectorIndex {
         round(Similarity.cosine(col("qvec"), col("vvec")), 4).as("cos"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vid"))
     scored.withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
+  }
+
+  // -------------------------------------------------------------------
+  // Driver-served IVF-PQ. The quantizers of an index are KBs (nlist ×
+  // dim centroids, m × ksub × sd codewords), yet the distributed search
+  // paid ~15 Spark jobs per call broadcasting them, building the LUT
+  // and ranking, and the sync paid ~17. Bounded calls now run that
+  // arithmetic in-process — graft_dot's left-to-right double
+  // accumulation over float-widened inputs, Spark's round(x, 4),
+  // Spark's double order, the lowest-id argmax tiebreak — and touch
+  // Spark only to read the probed code partitions (search) or the
+  // change feed and the commit (sync). Nothing per call is compiled:
+  // the driver path generates no code, so no literal reaches Janino
+  // (see Similarity.assignTopClusters' note).
+  // -------------------------------------------------------------------
+
+  /** An IVF-PQ index's quantizers as loaded at (centroids version,
+    * books version): the stored m and sub-dimension serve every path;
+    * `arrays` is None when the quantizers hold something the driver
+    * paths do not reproduce bit for bit (non-integral ids, null or
+    * ragged vectors, a subspace without codewords), and the
+    * distributed plans then serve. */
+  private[ops] final case class PqQuantizer(centsVersion: Long,
+                                            booksVersion: Long,
+                                            nlist: Long, m: Int, sd: Int,
+                                            arrays: Option[PqArrays])
+
+  /** Driver-resident quantizers, each side sorted by ascending id (the
+    * argmax/rank tiebreak order): coarse centroids with their norms,
+    * per-subspace codewords with their squared norms (Σ c², the
+    * reconstruction-norm terms). */
+  private[ops] final case class PqArrays(
+      centIdType: org.apache.spark.sql.types.DataType,
+      centIds: Array[Long], cents: Array[Array[Float]],
+      centNorms: Array[Double],
+      codeIdType: org.apache.spark.sql.types.DataType,
+      codeIds: Array[Array[Long]], books: Array[Array[Array[Float]]],
+      bookSq: Array[Array[Double]]) {
+    def m: Int = books.length
+    def sd: Int = books(0)(0).length
+  }
+
+  /** The latest loaded quantizers per (store root, index). */
+  private val quantizers =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), PqQuantizer]()
+
+  /** The index's quantizers at the current centroids and books
+    * versions — two metadata probes on a hit, one collect of each tiny
+    * table on a miss. A caller-supplied m is validated against the
+    * stored one: a mismatched m would slice probes into wrong-width
+    * sub-vectors and return plausible-looking but wrong rankings; 0
+    * (the default on every read path) means "use the stored value". */
+  private[ops] def quantizer(store: TableStore, name: String,
+                             m: Int = 0): PqQuantizer = {
+    def version(t: String) = store.currentVersion(t).getOrElse(
+      throw new IllegalStateException(s"table $t does not exist"))
+    val cv = version(centroidsTable(name))
+    val bv = version(booksTable(name))
+    val key = (store.rootPath, name)
+    val cached = quantizers.get(key)
+    val q =
+      if (cached != null && cached.centsVersion == cv &&
+          cached.booksVersion == bv) cached
+      else {
+        val fresh = loadQuantizer(store, name, cv, bv)
+        quantizers.put(key, fresh)
+        fresh
+      }
+    require(m <= 0 || m == q.m,
+      s"m=$m does not match the stored codebooks (index was built with m=${q.m})")
+    q
+  }
+
+  private def isIntegral(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+  }
+
+  /** An integral id as `dt`'s external value; None when it does not fit. */
+  private def idAs(v: Long, dt: org.apache.spark.sql.types.DataType): Option[Any] = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case LongType => Some(v)
+      case IntegerType if v.isValidInt => Some(v.toInt)
+      case ShortType if v.isValidShort => Some(v.toShort)
+      case ByteType if v.isValidByte => Some(v.toByte)
+      case _ => None
+    }
+  }
+
+  private def loadQuantizer(store: TableStore, name: String, cv: Long,
+                            bv: Long): PqQuantizer = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val cents = store.readVersion(centroidsTable(name), cv)
+      .select("cent_id", "cvec")
+    val books = store.readVersion(booksTable(name), bv)
+      .select("sub", "cent_id", "cvec")
+    val (cr, br) = graft.lake.JobLabel(store.spark, "graft:ivfpq quantizers") {
+      (cents.collect(), books.collect())
+    }
+    val subs = br.filterNot(_.isNullAt(0)).map(_.getInt(0))
+    require(subs.nonEmpty, s"index $name has no codebooks")
+    // m is what the index was BUILT with (max sub + 1); sd is the first
+    // codeword's width — the values a books-frame aggregate would read
+    val m = subs.max + 1
+    val sd = if (br(0).isNullAt(2)) -1 else br(0).getSeq[Any](2).length
+    def floats(r: Row, i: Int, n: Int): Option[Array[Float]] =
+      if (r.isNullAt(i)) None
+      else {
+        val seq = r.getSeq[Any](i)
+        if (seq.length != n || seq.contains(null)) None
+        else Some(seq.map(_.asInstanceOf[Float]).toArray)
+      }
+    def sq(c: Array[Float]) = Similarity.dotVsFloat(c.map(_.toDouble), c)
+    val floatVecs = Seq(cents, books).forall(_.schema("cvec").dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    })
+    val arrays =
+      if (!floatVecs || sd <= 0 || cr.isEmpty ||
+          !isIntegral(cents.schema("cent_id").dataType) ||
+          !isIntegral(books.schema("cent_id").dataType) ||
+          cr.exists(_.isNullAt(0)) || br.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+        None
+      else {
+        val dim = m * sd
+        val cs = cr.map(r => (r.getAs[Number](0).longValue, floats(r, 1, dim)))
+          .sortBy(_._1)
+        val bs = (0 until m).map { s =>
+          br.filter(_.getInt(0) == s)
+            .map(r => (r.getAs[Number](1).longValue, floats(r, 2, sd)))
+            .sortBy(_._1)
+        }
+        def usable(xs: Seq[(Long, Option[Array[Float]])]) = xs.nonEmpty &&
+          xs.forall(_._2.isDefined) && xs.map(_._1).distinct.size == xs.size
+        if (!usable(cs.toSeq) || !bs.forall(b => usable(b.toSeq))) None
+        else {
+          val cvecs = cs.map(_._2.get)
+          val bvecs = bs.map(_.map(_._2.get)).toArray
+          Some(PqArrays(
+            cents.schema("cent_id").dataType, cs.map(_._1), cvecs,
+            cvecs.map(c => math.sqrt(sq(c))),
+            books.schema("cent_id").dataType, bs.map(_.map(_._1)).toArray,
+            bvecs, bvecs.map(_.map(sq))))
+        }
+      }
+    PqQuantizer(cv, bv, cr.length.toLong, m, sd, arrays)
+  }
+
+  /** The inverted list a codes/lists data file belongs to: its
+    * `cent_id=` partition directory value, "" for unpartitioned strays. */
+  private def listDirOf(file: String): String = file match {
+    case ListDir(c) => c
+    case _ => ""
+  }
+  private val ListDir = ".*/cent_id=([^/]+)/[^/]*$".r
+
+  /** Index of the highest `score`, ties to the lowest index — the
+    * `max(struct(ccos, -id))` argmax over id-sorted candidates. */
+  private def argmax(n: Int)(score: Int => Double): Int = {
+    var best = 0
+    var bestS = score(0)
+    var i = 1
+    while (i < n) {
+      val s = score(i)
+      if (Similarity.sqlCompareDoubles(s, bestS) > 0) { best = i; bestS = s }
+      i += 1
+    }
+    best
+  }
+
+  /** Rounded cosine of `v` (norm `vn`) against a float vector of norm
+    * `cn` — `round(cosine(v, c), 4)` as Spark evaluates it. */
+  private def cos4(v: Array[Double], vn: Double, c: Array[Float],
+                   cn: Double): Double =
+    Similarity.round4(Similarity.dotVsFloat(v, c) / (vn * cn))
+
+  /** The driver-served search, or None when an input is past the bound
+    * or outside what the driver path reproduces. */
+  private def searchOnDriver(store: TableStore, name: String, a: PqArrays,
+                             probes: DataFrame, k: Int, nprobe: Int,
+                             codesFilter: Option[org.apache.spark.sql.Column],
+                             idCol: String, vecCol: String,
+                             driverRows: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    if (driverRows <= 0) return None
+    val spark = probes.sparkSession
+    val kt = codesTable(name)
+    val v = store.currentVersion(kt).getOrElse(
+      throw new IllegalStateException(s"table $kt does not exist"))
+    val codes00 = store.readVersion(kt, v)
+    val codes0 = codesFilter.fold(codes00)(codes00.where)
+    val qField = probes.schema(idCol)
+    val vField = codes0.schema(idCol)
+    val partType = codes0.schema("cent_id").dataType
+    val vOrd = Similarity.idOrderingOf(vField.dataType).getOrElse(return None)
+    if (qField.dataType != vField.dataType || !isIntegral(partType)) return None
+    val (m, sd) = (a.m, a.sd)
+    val probeRows = graft.lake.JobLabel(spark, "graft:ivfpq probe collect") {
+      probes.select(col(idCol), col(vecCol)).limit(driverRows + 1).collect()
+    }
+    if (probeRows.length > driverRows) return None
+    val nq = probeRows.length
+    val qids = new Array[Any](nq)
+    val qvecs = new Array[Array[Double]](nq)
+    var i = 0
+    while (i < nq) {
+      val r = probeRows(i)
+      if (r.isNullAt(0)) return None
+      qids(i) = r.get(0)
+      qvecs(i) = Similarity.doublesOf(r, 1).filter(_.length == m * sd)
+        .getOrElse(return None)
+      i += 1
+    }
+    // one window partition per probe id: duplicated ids merge there
+    if (qids.distinct.length != nq) return None
+    val qn = qvecs.map(Similarity.normOf)
+    val nl = a.cents.length
+    // route: row_number over (ccos desc, cent_id asc) ≤ nprobe — the
+    // centroids are id-sorted, so a stable sort on ccos keeps the tiebreak
+    val probed = Array.tabulate(nq) { q =>
+      val cos = Array.tabulate(nl)(c => cos4(qvecs(q), qn(q), a.cents(c), a.centNorms(c)))
+      (0 until nl).sortWith((x, y) => Similarity.sqlCompareDoubles(cos(x), cos(y)) > 0)
+        .take(math.max(nprobe, 0)).toArray
+    }
+    val needed = probed.flatten.distinct.sorted
+    val schema = StructType(Seq(
+      StructField("qid", qField.dataType, qField.nullable),
+      StructField("vid", vField.dataType, vField.nullable),
+      StructField("cos_pq", DoubleType),
+      StructField("rnk", IntegerType, nullable = false)))
+    import scala.jdk.CollectionConverters._
+    if (needed.isEmpty)
+      return Some(spark.createDataFrame(java.util.List.of[Row](), schema))
+    // bound the candidate read by the probed lists' manifest row counts
+    // (pre-delete, pre-filter: an upper bound); a file without a count
+    // is unknown, so the distributed plan serves
+    val wanted = needed.map(c => a.centIds(c).toString).toSet
+    val counts = store.fileRowCounts(kt, v)
+    var total = 0L
+    for (f <- store.liveDataFiles(kt, v) if wanted(listDirOf(f)))
+      total += counts.getOrElse(f, return None)
+    if (total > driverRows) return None
+    // the probed code partitions, in one pruned merge-on-read scan
+    val lits = needed.flatMap(c => idAs(a.centIds(c), partType))
+    val rows = graft.lake.JobLabel(spark, "graft:ivfpq probed codes") {
+      codes0.where(col("cent_id").isin(lits.toIndexedSeq: _*))
+        .select(col("cent_id"), col(idCol), col("sub"), col("code")).collect()
+    }
+    // per candidate: its (list, sub, codeword) rows in scan order — the
+    // order a group-by sums them in
+    val centIdx = a.centIds.zipWithIndex.toMap
+    val byVid = new java.util.LinkedHashMap[Any, scala.collection.mutable.ArrayBuffer[Array[Int]]]()
+    for (r <- rows) {
+      if ((0 to 3).exists(r.isNullAt)) return None
+      val c = centIdx.getOrElse(r.getAs[Number](0).longValue, return None)
+      val sub = r.getInt(2)
+      if (sub < 0 || sub >= m) return None
+      val code = java.util.Arrays.binarySearch(a.codeIds(sub),
+        r.getAs[Number](3).longValue)
+      if (code < 0) return None
+      byVid.computeIfAbsent(r.get(1), _ => scala.collection.mutable.ArrayBuffer.empty)
+        .append(Array(c, sub, code))
+    }
+    val cands = byVid.asScala.toSeq.map { case (vid, rs) =>
+      var css = 0.0
+      rs.foreach(x => css += a.bookSq(x(1))(x(2)))
+      (vid, rs, math.sqrt(css))
+    }
+    val out = new java.util.ArrayList[Row]()
+    for (q <- 0 until nq) {
+      val inList = new Array[Boolean](nl)
+      probed(q).foreach(inList(_) = true)
+      val lut = Array.tabulate(m) { s =>
+        val sv = java.util.Arrays.copyOfRange(qvecs(q), s * sd, (s + 1) * sd)
+        a.books(s).map(Similarity.dotVsFloat(sv, _))
+      }
+      val scored = cands.flatMap { case (vid, rs, rn) =>
+        if (vid == qids(q) || !rs.exists(x => inList(x(0)))) None
+        else {
+          var adp = 0.0
+          rs.foreach(x => if (inList(x(0))) adp += lut(x(1))(x(2)))
+          Some((vid, Similarity.round4(adp / (qn(q) * rn))))
+        }
+      }
+      // row_number over (cos_pq desc, vid asc) ≤ k
+      scored.sortWith { (x, y) =>
+        val c = Similarity.sqlCompareDoubles(x._2, y._2)
+        if (c != 0) c > 0 else vOrd.lt(x._1, y._1)
+      }.take(math.max(k, 0)).zipWithIndex.foreach { case ((vid, cos), j) =>
+        out.add(Row(qids(q), vid, cos, j + 1))
+      }
+    }
+    Some(spark.createDataFrame(out, schema))
+  }
+
+  /** The driver-served sync: collect the change feed once, net it to
+    * each id's final state, encode the inserts on the driver and commit
+    * codes and delete keys from local frames in one merge-on-read
+    * commit under `txn`. False (nothing committed) when the feed is
+    * past the bound or holds what the driver path does not reproduce. */
+  private def syncOnDriver(store: TableStore, name: String, a: PqArrays,
+                           feed: DataFrame, txn: (String, Long),
+                           idCol: String, vecCol: String,
+                           driverRows: Int): Boolean = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    if (driverRows <= 0) return false
+    val spark = feed.sparkSession
+    val kt = codesTable(name)
+    val cols = cachedCols(store, kt)
+    val attrs = cols.filterNot(Set("cent_id", idCol, "sub", "code"))
+    val proj =
+      try feed.select((Seq(idCol, vecCol) ++ attrs ++
+        Seq("_change_type", "_commit_version")).map(col): _*)
+      catch { case _: org.apache.spark.sql.AnalysisException => return false }
+    val idField = proj.schema(0)
+    if (Similarity.idOrderingOf(idField.dataType).isEmpty) return false
+    val rows = graft.lake.JobLabel(spark, "graft:ivfpq sync feed") {
+      proj.limit(driverRows + 1).collect()
+    }
+    if (rows.length > driverRows) return false
+    val typeAt = attrs.length + 2
+    // net to each id's final state — the distributed window: latest
+    // commit wins, and within one commit an insert beats a delete
+    val latest = new java.util.LinkedHashMap[Any, Row]()
+    for (r <- rows) {
+      if (r.isNullAt(0) || r.isNullAt(typeAt + 1)) return false
+      val prev = latest.get(r.get(0))
+      if (prev == null) latest.put(r.get(0), r)
+      else {
+        val (ver, pver) = (r.getLong(typeAt + 1), prev.getLong(typeAt + 1))
+        val ins = r.get(typeAt) == "insert"
+        val pins = prev.get(typeAt) == "insert"
+        if (ver > pver || (ver == pver && ins && !pins)) latest.put(r.get(0), r)
+        // two different final inserts: the window's pick is arbitrary
+        else if (ver == pver && ins && pins && r != prev) return false
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    val (m, sd) = (a.m, a.sd)
+    val out = new java.util.ArrayList[Row]()
+    for (r <- latest.values.asScala if r.get(typeAt) == "insert") {
+      val v = Similarity.doublesOf(r, 1).filter(_.length == m * sd)
+        .getOrElse(return false)
+      val vn = Similarity.normOf(v)
+      val cent = argmax(a.cents.length)(c =>
+        cos4(v, vn, a.cents(c), a.centNorms(c)))
+      val centId = idAs(a.centIds(cent), a.centIdType).get
+      for (s <- 0 until m) {
+        val sv = java.util.Arrays.copyOfRange(v, s * sd, (s + 1) * sd)
+        val svn = Similarity.normOf(sv)
+        val code = argmax(a.books(s).length)(j =>
+          cos4(sv, svn, a.books(s)(j), math.sqrt(a.bookSq(s)(j))))
+        val codeId = idAs(a.codeIds(s)(code), a.codeIdType).get
+        out.add(Row.fromSeq(cols.map {
+          case "cent_id" => centId
+          case "sub" => s
+          case "code" => codeId
+          case c if c == idCol => r.get(0)
+          case c => r.get(2 + attrs.indexOf(c))
+        }))
+      }
+    }
+    val schema = StructType(cols.map {
+      case "cent_id" => StructField("cent_id", a.centIdType)
+      case "sub" => StructField("sub", IntegerType, nullable = false)
+      case "code" => StructField("code", a.codeIdType)
+      case c if c == idCol => StructField(c, idField.dataType)
+      case c => StructField(c, proj.schema(2 + attrs.indexOf(c)).dataType)
+    })
+    val keys = spark.createDataFrame(
+      latest.keySet.asScala.toSeq.map(Row(_)).asJava,
+      StructType(Seq(StructField(idField.name, idField.dataType))))
+    store.appendWithDeletes(kt, spark.createDataFrame(out, schema), keys,
+      txn = Some(txn))
+    true
   }
 }

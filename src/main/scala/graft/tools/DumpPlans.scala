@@ -4,11 +4,22 @@ import org.apache.spark.sql.SparkSession
 import graft.queries.Queries
 import java.nio.file.{Files, Paths}
 
-/** Writes docs/PLANS.md: the formatted physical plan of each headline
+/** Formatted physical plans of registry queries, in two modes.
+  *
+  * With no arguments, writes docs/PLANS.md: the plan of each headline
   * query at sf0.001 — the artifact behind the plan-shape assertions in
   * PlanSpec (WindowGroupLimit, PushedFilters, broadcast joins, partial
-  * aggregation, codegen spans). Regenerate with:
-  * `sbt "runMain graft.tools.DumpPlans"`. */
+  * aggregation, codegen spans):
+  * `sbt "runMain graft.tools.DumpPlans"`.
+  *
+  * With a query list, writes one `<outDir>/<query>_<suffix>.txt` per
+  * listed query — the before/after evidence of an optimization pass
+  * (run with suffix `before` on the entry tree, `after` on the final
+  * one):
+  * `sbt "runMain graft.tools.DumpPlans <outDir> <suffix> <q1,q2,...> [sfDir]"`.
+  * Lifecycle queries (ANN, MV, store) run their builds eagerly inside
+  * the entry function, so their dumped plan is the final SELECT's.
+  */
 object DumpPlans {
   private val headline = Seq(
     "cdc_dedup_latest", "cdc_incremental_merge", "scan_filter_project",
@@ -70,26 +81,44 @@ object DumpPlans {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
-    val sb = new StringBuilder
-    sb.append("# Physical plans (generated by graft.tools.DumpPlans)\n\n")
-    sb.append("Formatted plans of the headline queries at sf0.001 — the\n")
-    sb.append("evidence behind PlanSpec's shape assertions. Things to see:\n")
-    sb.append("`WindowGroupLimit` under the CDC dedup, `PushedFilters`/pruned\n")
-    sb.append("`ReadSchema` on scans, `BroadcastHashJoin LeftAnti` for the\n")
-    sb.append("merge, partial+final `HashAggregate` pairs around exchanges.\n")
-    Queries.entries.filter(e => headline.contains(e.name)).foreach { e =>
-      val df = e.fn(spark, dir)
-      sb.append(s"\n## ${e.name}\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      sb.append("```\n")
+    def plan(name: String, sf: String): String =
+      Queries.entries.find(_.name == name)
+        .getOrElse(throw new IllegalArgumentException(s"unknown query $name"))
+        .fn(spark, sf).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+    if (args.isEmpty) {
+      val sb = new StringBuilder
+      sb.append("# Physical plans (generated by graft.tools.DumpPlans)\n\n")
+      sb.append("Formatted plans of the headline queries at sf0.001 — the\n")
+      sb.append("evidence behind PlanSpec's shape assertions. Things to see:\n")
+      sb.append("`WindowGroupLimit` under the CDC dedup, `PushedFilters`/pruned\n")
+      sb.append("`ReadSchema` on scans, `BroadcastHashJoin LeftAnti` for the\n")
+      sb.append("merge, partial+final `HashAggregate` pairs around exchanges.\n")
+      Queries.entries.filter(e => headline.contains(e.name)).foreach { e =>
+        sb.append(s"\n## ${e.name}\n\n```\n")
+        sb.append(plan(e.name, dir))
+        sb.append("```\n")
+      }
+      Files.createDirectories(Paths.get("docs"))
+      Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)
+      println(s"wrote docs/PLANS.md (${headline.size} plans)")
+    } else {
+      require(args.length >= 3,
+        "usage: DumpPlans [<outDir> <suffix> <q1,q2,...> [sfDir]]")
+      val Array(outDir, suffix, list) = args.take(3)
+      val sfDir = if (args.length > 3) args(3) else dir
+      Files.createDirectories(Paths.get(outDir))
+      list.split(",").map(_.trim).filter(_.nonEmpty).foreach { q =>
+        try {
+          Files.writeString(Paths.get(outDir, s"${q}_$suffix.txt"), plan(q, sfDir))
+          println(s"wrote ${q}_$suffix")
+        } catch { case t: Throwable => println(s"SKIP $q: $t") }
+      }
     }
-    Files.createDirectories(Paths.get("docs"))
-    Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)
-    println(s"wrote docs/PLANS.md (${headline.size} plans)")
     spark.stop()
   }
 }

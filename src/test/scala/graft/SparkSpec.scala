@@ -24,6 +24,12 @@ trait SparkSpec extends AnyFunSuite {
   def scannedFiles(df: org.apache.spark.sql.DataFrame,
                    pathContains: String = ""): Long = {
     df.collect()
+    scannedFilesIn(df.queryExecution.executedPlan, pathContains)
+  }
+
+  /** [[scannedFiles]] over an already-executed physical plan. */
+  def scannedFilesIn(plan: org.apache.spark.sql.execution.SparkPlan,
+                     pathContains: String = ""): Long = {
     def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[Long] =
       p.collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec
@@ -36,6 +42,38 @@ trait SparkSpec extends AnyFunSuite {
         case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
           scans(q.plan)
       }.flatten
-    scans(df.queryExecution.executedPlan).sum
+    scans(plan).sum
+  }
+
+  /** The query executions Spark completed while `body` ran. */
+  def executionsDuring(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  /** Spark jobs started while `body` ran, counted by a listener. */
+  def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
   }
 }

@@ -125,6 +125,39 @@ class CdcIngestSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("day buckets: a full load and two incremental loads equal " +
+    "dedup-keep-latest") {
+    // yyyy-MM-dd bucket directories read back as DATE partition values
+    val daily = CdcIngest.Config(bucketFormat = Some("yyyy-MM-dd"))
+    val store = new TableStore(spark, tmpDir("ingest"))
+    val batches = Seq(
+      Seq(("k1", "2024-01-05 10:00:00", "I"),
+        ("k2", "2024-01-06 10:00:00", "I"),
+        ("k3", "2024-01-07 10:00:00", "I"),
+        ("k3", "2024-01-07 11:00:00", "U")),
+      Seq(("k2", "2024-01-08 10:00:00", "U"),
+        ("k4", "2024-01-08 11:00:00", "I"),
+        ("k1", "2024-01-09 10:00:00", "D")),
+      Seq(("k3", "2024-01-10 10:00:00", "D"),
+        ("k5", "2024-01-10 11:00:00", "I"),
+        ("k2", "2024-01-11 10:00:00", "U")))
+    val outcomes = batches.map(b => CdcIngest.ingest(spark, store, "t",
+      cdc(b: _*), daily))
+    assert(outcomes.head == CdcIngest.FullLoad)
+    assert(outcomes.tail == Seq(CdcIngest.IncrementalLoad(3),
+      CdcIngest.IncrementalLoad(3)))
+    assert(store.partitioning("t") == Seq(CdcIngest.BucketCol))
+    val all = cdc(batches.flatten: _*)
+    val latest = all.withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("key")
+          .orderBy(col("process_date").desc)))
+      .where(col("rn") === 1 && col("op") =!= "D")
+    def rows(df: DataFrame) = df.select("key", "process_date").orderBy("key")
+      .collect().toSeq
+    assert(rows(store.read("t")) == rows(latest))
+    assert(keys(store.read("t")) == Seq("k2", "k4", "k5"))
+  }
+
   test("bucketed merge deletes a key from an untouched-by-inserts bucket") {
     val bucketed = CdcIngest.Config(bucketFormat = Some("yyyy-MM"))
     val store = new TableStore(spark, tmpDir("ingest"))

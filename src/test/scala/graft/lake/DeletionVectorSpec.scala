@@ -28,11 +28,12 @@ class DeletionVectorSpec extends SparkSpec {
   test("deletion vectors stack across commits and respect later appends") {
     val store = freshStore()
     store.create("t", (1 to 50).map(i => (i, i % 2)).toDF("id", "m"))
-    store.deleteWhere("t", col("m") === 0)
+    assert(store.deleteWhere("t", col("m") === 0) == 25L)
     // rows appended AFTER a vector are exempt from it (manifest order),
     // even when they would match its predicate
     store.append("t", Seq((200, 0)).toDF("id", "m"))
-    store.deleteWhere("t", col("id") === 1)
+    // the count is the rows this vector deletes, not the earlier one's
+    assert(store.deleteWhere("t", col("id") === 1) == 1L)
     val got = store.read("t").select("id").as[Int].collect().sorted.toSeq
     assert(got == (3 to 49 by 2) ++ Seq(200))
   }

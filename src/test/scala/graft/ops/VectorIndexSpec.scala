@@ -197,11 +197,20 @@ class VectorIndexSpec extends SparkSpec {
     val totalFiles = store.manifest(VectorIndex.codesTable("px"),
       store.currentVersion(VectorIndex.codesTable("px")).get)
       .count(l => !l.startsWith("del|"))
-    val one = VectorIndex.searchIvfPqIndex(store, "px",
-      emb.where(col("vec_id") === 0L), k = 3, nprobe = 1, m = 4)
+    val probe0 = emb.where(col("vec_id") === 0L)
+    val one = VectorIndex.searchIvfPqCore(store, "px", probe0, k = 3,
+      nprobe = 1, None, m = 4, "vec_id", "embedding", driverRows = 0)
     val scanned = scannedFiles(one, "px_codes")
     assert(scanned > 0 && scanned < totalFiles,
       s"probed IVF-PQ search scanned $scanned of $totalFiles code files")
+    // the driver-served search reads the probed lists through the same
+    // partition-pruned scan, once
+    val driverScanned = executionsDuring {
+      VectorIndex.searchIvfPqIndex(store, "px", probe0, k = 3, nprobe = 1,
+        m = 4).collect()
+    }.map(qe => scannedFilesIn(qe.executedPlan, "px_codes")).sum
+    assert(driverScanned > 0 && driverScanned <= scanned,
+      s"driver-served search scanned $driverScanned of $totalFiles code files")
     // ADC recall vs brute force stays sane on the clustered corpus
     val probes = emb.where(col("vec_id") < 5)
     val ann = VectorIndex.searchIvfPqIndex(store, "px", probes, k = 3,
@@ -536,5 +545,205 @@ class VectorIndexSpec extends SparkSpec {
         filter = col("label") === 1)
       .select("vid").as[Long].collect().toSeq
     assert(got.nonEmpty && got.forall(_ % 3 == 1))
+  }
+  // -------------------------------------------------------------------
+  // Driver-served IVF-PQ search and sync: each path is forced through
+  // the private[ops] driver bound (0 = distributed plan only).
+  // -------------------------------------------------------------------
+
+  private def pqRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("qid", "rnk", "vid", "cos_pq").orderBy("qid", "rnk")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+        r.getDouble(3))).toSeq
+
+  private def onDriver(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  private def codeRows(store: TableStore, name: String) =
+    store.read(VectorIndex.codesTable(name))
+      .select(col("cent_id").cast("long"), col("vec_id"), col("sub"),
+        col("code").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+        r.getLong(3))).toSet
+
+  /** Driver and distributed search over the same index, row for row. */
+  private def assertSearchParity(store: TableStore, name: String,
+                                 probes: org.apache.spark.sql.DataFrame,
+                                 k: Int, nprobe: Int,
+                                 filter: Option[org.apache.spark.sql.Column] = None): Unit = {
+    def run(driverRows: Int) = filter match {
+      case None => VectorIndex.searchIvfPqCore(store, name, probes, k,
+        nprobe, None, 0, "vec_id", "embedding", driverRows)
+      case Some(f) => VectorIndex.searchIvfPqFiltered(store, name, probes,
+        k, nprobe, f, Double.NaN, 0, "vec_id", "embedding", driverRows)
+    }
+    val driver = run(Similarity.MaxDriverTrainRows)
+    val dist = run(0)
+    assert(onDriver(driver) && !onDriver(dist))
+    val (a, b) = (pqRows(driver), pqRows(dist))
+    assert(a.nonEmpty && a == b, s"driver $a\n!= distributed $b")
+    assert(driver.schema.map(f => (f.name, f.dataType)) ==
+      dist.schema.map(f => (f.name, f.dataType)))
+  }
+
+  test("driver-served IVF-PQ search equals the distributed plan: plain, " +
+    "partial and full probing, filtered, after delete, cosine ties") {
+    val store = new TableStore(spark, tmpDir("pqdriver"))
+    // corpus(n) repeats every 20 ids, so equal vectors tie on every
+    // rounded cosine and the vid / cent_id tiebreaks decide the order
+    val emb = corpus(240).withColumn("label", (col("vec_id") % 3).cast("int"))
+    VectorIndex.buildIvfPqIndex(store, "px", emb, nlist = 8, m = 4,
+      ksub = 8, kmeansIters = 2, attrCols = Seq("label"))
+    val probes = emb.where(col("vec_id") < 6 || col("vec_id") === 37L)
+      .select("vec_id", "embedding")
+    assertSearchParity(store, "px", probes, k = 7, nprobe = 2)
+    assertSearchParity(store, "px", probes, k = 7, nprobe = 8)
+    assertSearchParity(store, "px", probes, k = 30, nprobe = 3)
+    assertSearchParity(store, "px", probes, k = 5, nprobe = 2,
+      filter = Some(col("label") === 1))
+    VectorIndex.deleteFromIvfPqIndex(store, "px",
+      emb.where(col("vec_id") % 5 === 2))
+    assertSearchParity(store, "px", probes, k = 7, nprobe = 3)
+    assertSearchParity(store, "px", probes, k = 5, nprobe = 2,
+      filter = Some(col("label") =!= 0))
+  }
+
+  test("driver-served search falls back above the bound and on null vectors") {
+    val store = new TableStore(spark, tmpDir("pqfallback"))
+    val emb = corpus(200)
+    VectorIndex.buildIvfPqIndex(store, "px", emb, nlist = 4, m = 4,
+      ksub = 8, kmeansIters = 1)
+    val probes = emb.where(col("vec_id") < 4)
+    val bounded = VectorIndex.searchIvfPqCore(store, "px", probes, 5, 2,
+      None, 0, "vec_id", "embedding", driverRows = 20)
+    assert(!onDriver(bounded), "a probed read above the bound ran on the driver")
+    assert(pqRows(bounded) == pqRows(
+      VectorIndex.searchIvfPqIndex(store, "px", probes, k = 5, nprobe = 2)))
+    val withNull = probes.union(
+      Seq((500L, null.asInstanceOf[Array[Float]])).toDF("vec_id", "embedding"))
+    assert(!onDriver(
+      VectorIndex.searchIvfPqIndex(store, "px", withNull, k = 5, nprobe = 2)))
+    val withNullElem = Seq((501L, Seq[Option[Float]](Some(1f), None,
+      Some(1f), Some(1f), Some(1f), Some(1f), Some(1f), Some(1f))))
+      .toDF("vec_id", "embedding")
+    assert(!onDriver(
+      VectorIndex.searchIvfPqIndex(store, "px", withNullElem, k = 5, nprobe = 2)))
+  }
+
+  test("a warm bounded search over a local probe frame runs at most 4 jobs") {
+    val store = new TableStore(spark, tmpDir("pqjobs"))
+    store.create("corpus", corpus(400))
+    VectorIndex.buildIvfPqIndexFromTable(store, "px", "corpus", nlist = 8,
+      m = 4, ksub = 8, kmeansIters = 1)
+    store.deleteWhere("corpus", col("vec_id") % 7 === 3)
+    VectorIndex.syncIvfPqIndex(store, "px", "corpus")
+    val probes = corpus(3).select("vec_id", "embedding")
+    VectorIndex.searchIvfPqIndex(store, "px", probes, k = 10, nprobe = 4)
+      .collect() // loads the quantizers once
+    var got = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsDuring {
+      got = VectorIndex.searchIvfPqIndex(store, "px", probes, k = 10,
+        nprobe = 4).collect()
+    }
+    assert(got.nonEmpty)
+    assert(jobs <= 4, s"bounded driver-served search ran $jobs Spark jobs")
+  }
+
+  test("driver-served sync equals the distributed sync; its encode equals " +
+    "assignClusters + pqEncode") {
+    val emb = corpus(300).withColumn("label", (col("vec_id") % 3).cast("int"))
+    def history(store: TableStore): Unit = {
+      store.create("corpus", emb.where(col("vec_id") % 2 === 0))
+      VectorIndex.buildIvfPqIndexFromTable(store, "px", "corpus", nlist = 6,
+        m = 4, ksub = 8, kmeansIters = 1, attrCols = Seq("label"))
+      store.append("corpus", emb.where(col("vec_id") % 2 === 1))
+      store.deleteWhere("corpus", col("vec_id") % 5 === 2)
+      // delete-and-reinsert id 4 under a changed vector in one commit
+      store.appendWithDeletes("corpus",
+        Seq((4L, Array.tabulate(8)(d => 30f + d * 0.1f), 1))
+          .toDF("vec_id", "embedding", "label"),
+        Seq(4L).toDF("vec_id"))
+    }
+    val (ds, dd) = (new TableStore(spark, tmpDir("pqsyncd")),
+      new TableStore(spark, tmpDir("pqsyncx")))
+    history(ds); history(dd)
+    val planned = executionsDuring {
+      assert(VectorIndex.syncIvfPq(ds, "px", "corpus", 0, "vec_id",
+        "embedding", Similarity.MaxDriverTrainRows).isDefined)
+    }
+    // the driver path nets the feed on the driver: no window runs
+    assert(!planned.exists(_.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window])))
+    assert(VectorIndex.syncIvfPq(dd, "px", "corpus", 0, "vec_id",
+      "embedding", driverRows = 0).isDefined)
+    assert(codeRows(ds, "px") == codeRows(dd, "px"))
+    // both commits carry the watermark: a second sync is a no-op
+    assert(VectorIndex.syncIvfPqIndex(ds, "px", "corpus").isEmpty)
+    assert(VectorIndex.syncIvfPqIndex(dd, "px", "corpus").isEmpty)
+    // the synced codes equal a one-shot assign + encode of the
+    // corpus's final state against the stored quantizers
+    val cents = ds.read(VectorIndex.centroidsTable("px"))
+    val books = ds.read(VectorIndex.booksTable("px"))
+    val live = ds.read("corpus")
+    val want = Similarity.pqEncode(live, books, m = 4)
+      .join(Similarity.assignClusters(live, cents).select("vec_id", "cent_id"),
+        Seq("vec_id"))
+      .select(col("cent_id").cast("long"), col("vec_id"), col("sub"),
+        col("code").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+        r.getLong(3))).toSet
+    assert(codeRows(ds, "px") == want)
+    val labels = ds.read(VectorIndex.codesTable("px"))
+      .select("vec_id", "label").distinct().as[(Long, Int)].collect().toMap
+    assert(labels.forall { case (id, l) => l == id % 3 })
+    assertSearchParity(ds, "px", emb.where(col("vec_id") < 5)
+      .select("vec_id", "embedding"), k = 6, nprobe = 2)
+  }
+
+  test("sync falls back to the distributed plan above the bound and on " +
+    "null vectors") {
+    val store = new TableStore(spark, tmpDir("pqsyncfb"))
+    val emb = corpus(200)
+    store.create("corpus", emb.where(col("vec_id") < 100))
+    VectorIndex.buildIvfPqIndexFromTable(store, "px", "corpus", nlist = 4,
+      m = 4, ksub = 8, kmeansIters = 1)
+    def windowed(body: => Unit) = executionsDuring(body).exists(
+      _.analyzed.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window]))
+    store.append("corpus", emb.where(col("vec_id") >= 100))
+    assert(windowed(VectorIndex.syncIvfPq(store, "px", "corpus", 0,
+      "vec_id", "embedding", driverRows = 50)))
+    store.append("corpus",
+      Seq((900L, null.asInstanceOf[Array[Float]])).toDF("vec_id", "embedding"))
+    assert(windowed(VectorIndex.syncIvfPqIndex(store, "px", "corpus")))
+    assert(VectorIndex.syncIvfPqIndex(store, "px", "corpus").isEmpty)
+    val ids = store.read(VectorIndex.codesTable("px"))
+      .select("vec_id").distinct().as[Long].collect().toSet
+    assert((0L until 200L).toSet.subsetOf(ids))
+  }
+
+  test("rebuilding the index invalidates the driver quantizer cache") {
+    val store = new TableStore(spark, tmpDir("pqcache"))
+    store.create("corpus", corpus(200))
+    VectorIndex.buildIvfPqIndexFromTable(store, "px", "corpus", nlist = 4,
+      m = 4, ksub = 8, kmeansIters = 1)
+    val probes = corpus(200).where(col("vec_id") < 4)
+    assertSearchParity(store, "px", probes, k = 5, nprobe = 2)
+    assert(VectorIndex.quantizer(store, "px").nlist == 4L)
+    // re-created from scratch, the tables restart at the cached
+    // versions: only the build's own invalidation reveals the change
+    Seq(VectorIndex.centroidsTable("px"), VectorIndex.booksTable("px"),
+      VectorIndex.codesTable("px")).foreach(store.drop)
+    VectorIndex.buildIvfPqIndexFromTable(store, "px", "corpus", nlist = 8,
+      m = 2, ksub = 8, kmeansIters = 2)
+    assert(VectorIndex.quantizer(store, "px").nlist == 8L)
+    assert(VectorIndex.quantizer(store, "px").m == 2)
+    assertSearchParity(store, "px", probes, k = 5, nprobe = 3)
+    // a rebuild in place moves the versions and reloads as well
+    VectorIndex.buildIvfPqIndexFromTable(store, "px", "corpus", nlist = 5,
+      m = 4, ksub = 4, kmeansIters = 1)
+    assert(VectorIndex.quantizer(store, "px").nlist == 5L)
+    assertSearchParity(store, "px", probes, k = 5, nprobe = 2)
   }
 }
