@@ -2870,6 +2870,46 @@ final class TableStore(private[graft] val spark: SparkSession,
     !appendOnly || perVersion.exists(_.exists(_.startsWith(DelPrefix)))
   }
 
+  /** An upper bound on the rows `changes(table, fromV, toV)` emits,
+    * from the manifests and the stats sidecar's footer row counts
+    * alone — no Spark job — so a consumer that collects bounded feeds
+    * decides BEFORE the feed is evaluated. Replays `changes`' case
+    * analysis: a content-neutral range emits nothing; a pure-append
+    * range emits at most its new files' rows, plus, per commit with
+    * equality-delete lines, every row of the version before it; a
+    * range that forces the endpoint bag diff emits at most both
+    * endpoints whole. None when a file it counts has no folded count. */
+  private[graft] def changeRowsBound(table: String, fromV: Long,
+                                     toV: Long): Option[Long] = {
+    if (fromV >= toV) return Some(0L)
+    val neutralOps = Set("COMPACT", "OPTIMIZE", "OPTIMIZE (zorder)")
+    if (((fromV + 1) to toV).forall(v => neutralOps(operationOf(table, v))))
+      return Some(0L)
+    val man = scala.collection.mutable.LongMap.empty[Seq[String]]
+    def mf(v: Long): Seq[String] = man.getOrElseUpdate(v, manifest(table, v))
+    // physical rows of `v`'s data lines among `lines`
+    def rows(v: Long, lines: Seq[String]): Option[Long] = {
+      val counts = fileRowCounts(table, v)
+      lines.filterNot(isDeleteLine).foldLeft(Option(0L)) { (acc, f) =>
+        acc.flatMap(a => counts.get(f).map(a + _))
+      }
+    }
+    val perVersion = ((fromV + 1) to toV).map { v =>
+      val prev = mf(v - 1).toSet
+      (v, mf(v).filterNot(prev))
+    }
+    val appendOnly = mf(fromV).forall(mf(toV).contains) &&
+      perVersion.forall { case (_, nl) => !nl.exists(_.startsWith(DvPrefix)) }
+    val parts =
+      if (appendOnly) perVersion.flatMap { case (v, nl) =>
+        rows(v, nl) +: (
+          if (nl.exists(_.startsWith(DelPrefix))) Seq(rows(v - 1, mf(v - 1)))
+          else Nil)
+      }
+      else Seq(rows(fromV, mf(fromV)), rows(toV, mf(toV)))
+    parts.foldLeft(Option(0L))((acc, p) => acc.flatMap(a => p.map(a + _)))
+  }
+
   /** Declarative write-time CHECK constraints (Delta parity). One
     * `name\tsql` line per constraint in `_CONSTRAINTS`; every
     * create / overwrite / append / MoR commit validates the incoming

@@ -379,11 +379,21 @@ object Similarity {
 
   /** Spark's `round(x, 4)` on a double: NaN and infinities pass
     * through, everything else rounds HALF_UP through the decimal
-    * string form (`BigDecimal.valueOf`), as Catalyst's Round does. */
-  private[ops] def round4(d: Double): Double =
-    if (d.isNaN || d.isInfinite) d
-    else java.math.BigDecimal.valueOf(d)
+    * string form (`BigDecimal.valueOf`), as Catalyst's Round does.
+    * Away from a half-way point the double product |x|·10⁴ (error
+    * < 1e-6 below 1e9) already decides the rounded integer n, and
+    * n / 1e4 is the nearest double to the rounded decimal — what
+    * `doubleValue` returns — so only near-ties take the string path
+    * (the driver paths round every candidate cosine). */
+  private[ops] def round4(d: Double): Double = {
+    if (d.isNaN || d.isInfinite) return d
+    val t = math.abs(d) * 10000.0
+    if (t < 1e9 && math.abs(t - math.floor(t) - 0.5) > 1e-6) {
+      val n = math.floor(t + 0.5).toLong
+      (if (d < 0) -n else n) / 10000.0
+    } else java.math.BigDecimal.valueOf(d)
       .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
 
   /** dot of a double vector against the FLOAT-cast centroid,
     * accumulated left-to-right in double — graft_dot's arithmetic on

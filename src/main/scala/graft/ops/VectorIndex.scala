@@ -34,19 +34,23 @@ import org.apache.spark.sql.functions._
   * Driver-served IVF-PQ. Bounded IVF-PQ searches and index syncs run
   * on the driver against a quantizer cache (coarse centroids,
   * codebooks, m, sub-dimension, codeword norms), loaded once per
-  * (store root, index, centroids version, books version) — the
-  * IVFADC serving split of Jégou et al.: the probe side (routing,
-  * the m × ksub LUT, scoring, top-k) is in-process arithmetic over
-  * KBs, and only the probed code partitions are read, in one pruned
-  * merge-on-read scan. A sync collects its netted change feed once,
-  * encodes the inserts on the driver and commits codes plus delete
-  * keys from local frames in the same single commit. The bound is
-  * [[Similarity]]'s driver-training bound (262,144 rows) on candidate
-  * code rows (from manifest row counts) and feed rows (a
-  * limit-guarded collect); past it, on null or ragged vectors, or on
-  * id types the driver path does not order, the distributed plans
-  * run unchanged. Both paths use graft_dot's arithmetic and Spark's
-  * rounding and ordering, so they return the same rows.
+  * (store root, index) and reloaded when the centroids' or books'
+  * live data files change — the IVFADC serving split of Jégou et
+  * al.: the probe side (routing, the m × ksub LUT, scoring, top-k) is
+  * in-process arithmetic over KBs, and only the probed code
+  * partitions are read, in one pruned merge-on-read scan. A sync
+  * collects its change feed once, nets and encodes it on the driver
+  * and commits codes plus delete keys from local frames in the same
+  * single commit. The bound is [[Similarity]]'s driver-training bound
+  * (262,144; `SPARK_GRAFT_KMEANS_DRIVER_MAX` overrides it for
+  * training, search and sync alike), applied to the driver's work
+  * and decided from metadata before any data is read: a search's
+  * probes × their probed lists' code rows (manifest row counts), a
+  * sync's feed rows (`TableStore.changeRowsBound`). Past it, on null
+  * or ragged vectors, or on id types the driver path does not order,
+  * the distributed plans run unchanged. Both paths use graft_dot's
+  * arithmetic and Spark's rounding and ordering, so they return the
+  * same rows.
   */
 object VectorIndex {
 
@@ -173,7 +177,6 @@ object VectorIndex {
     put(codesTable(name), codes, Seq("cent_id"))
     colsCache.put((store.rootPath, codesTable(name)),
       Seq("cent_id", idCol, "sub", "code") ++ attrCols)
-    quantizers.remove((store.rootPath, name))
   }
 
   /** IVF-PQ search: probes assign to their nprobe coarse lists
@@ -237,18 +240,18 @@ object VectorIndex {
       Some(filter), m, idCol, vecCol, driverRows)
   }
 
-  /** One IVF-PQ search: driver-served when the quantizers, probes and
-    * probed lists fit `driverRows`, the distributed plan otherwise
-    * (`driverRows` ≤ 0 forces it). */
-  private[ops] def searchIvfPqCore(store: TableStore, name: String,
+  /** One IVF-PQ search: driver-served when its scoring work (probes ×
+    * probed code rows) fits `driverRows`, the distributed plan
+    * otherwise (`driverRows` ≤ 0 forces it). */
+  private[graft] def searchIvfPqCore(store: TableStore, name: String,
                                    probes: DataFrame, k: Int, nprobe: Int,
                                    codesFilter: Option[org.apache.spark.sql.Column],
                                    m: Int, idCol: String, vecCol: String,
                                    driverRows: Int): DataFrame = {
     graft.functions.GraftFunctions.register(probes.sparkSession)
     val q = quantizer(store, name, m)
-    q.arrays.flatMap(a => searchOnDriver(store, name, a, probes, k, nprobe,
-        codesFilter, idCol, vecCol, driverRows))
+    q.arrays.flatMap(a => searchOnDriver(store, name, q, a, probes, k,
+        nprobe, codesFilter, idCol, vecCol, driverRows))
       .getOrElse(searchDistributed(store, name, q, probes, k, nprobe,
         codesFilter, idCol, vecCol))
   }
@@ -453,7 +456,6 @@ object VectorIndex {
       partitionBy = Seq("cent_id"))
     colsCache.put((store.rootPath, kt),
       Seq("cent_id", idCol, "sub", "code") ++ attrCols)
-    quantizers.remove((store.rootPath, name))
   }
 
   /** [[syncIvfIndex]] on the code-compressed index: the same netted
@@ -470,7 +472,7 @@ object VectorIndex {
 
   /** [[syncIvfPqIndex]] with the driver bound as a parameter:
     * `driverRows` ≤ 0 forces the distributed plan. */
-  private[ops] def syncIvfPq(store: TableStore, name: String,
+  private[graft] def syncIvfPq(store: TableStore, name: String,
                              corpusTable: String, m: Int, idCol: String,
                              vecCol: String, driverRows: Int): Option[Long] = {
     val kt = codesTable(name)
@@ -482,18 +484,42 @@ object VectorIndex {
       case None => None
       case Some((feed, cur)) =>
         val q = quantizer(store, name, m)
-        val onDriver = q.arrays.exists(a => syncOnDriver(store, name, a,
-          feed, (app, cur), idCol, vecCol, driverRows))
+        // the feed's size is bounded from metadata BEFORE it is
+        // evaluated: a feed the driver can hold is collected once and
+        // serves whichever path then runs; a larger (or uncounted) one
+        // stays the distributed plan over the feed itself
+        val held =
+          if (driverRows <= 0 || q.arrays.isEmpty ||
+              !store.changeRowsBound(corpusTable, last, cur)
+                .exists(_ <= driverRows)) None
+          else {
+            val attrs = cachedCols(store, kt)
+              .filterNot(Set("cent_id", idCol, "sub", "code"))
+            val proj = feed.select((Seq(idCol, vecCol) ++ attrs ++
+              Seq("_change_type", "_commit_version")).map(col): _*)
+            val rows = graft.lake.JobLabel(store.spark, "graft:ivfpq sync feed") {
+              proj.collect()
+            }
+            Some((rows, proj.schema, attrs))
+          }
+        val onDriver = held.exists { case (rows, schema, attrs) =>
+          syncOnDriver(store, name, q, q.arrays.get, rows, schema,
+            (app, cur), attrs, idCol)
+        }
         if (!onDriver) {
           import org.apache.spark.sql.expressions.Window
+          import scala.jdk.CollectionConverters._
+          val src = held.fold(feed) { case (rows, schema, _) =>
+            store.spark.createDataFrame(rows.toSeq.asJava, schema)
+          }
           val w = Window.partitionBy(idCol).orderBy(
             col("_commit_version").desc,
             when(col("_change_type") === "insert", 0).otherwise(1))
-          val latest = feed.withColumn("__r", row_number().over(w))
+          val latest = src.withColumn("__r", row_number().over(w))
             .where(col("__r") === 1)
           val inserts = latest.where(col("_change_type") === "insert")
             .drop("_change_type", "_commit_version", "__r")
-          val touched = feed.select(col(idCol)).distinct()
+          val touched = src.select(col(idCol)).distinct()
           store.appendWithDeletes(kt,
             encodeWith(store, name, q, inserts, idCol, vecCol),
             touched, txn = Some((app, cur)))
@@ -786,14 +812,15 @@ object VectorIndex {
   // (see Similarity.assignTopClusters' note).
   // -------------------------------------------------------------------
 
-  /** An IVF-PQ index's quantizers as loaded at (centroids version,
-    * books version): the stored m and sub-dimension serve every path;
-    * `arrays` is None when the quantizers hold something the driver
-    * paths do not reproduce bit for bit (non-integral ids, null or
-    * ragged vectors, a subspace without codewords), and the
-    * distributed plans then serve. */
+  /** An IVF-PQ index's quantizers as loaded from the centroids and
+    * books data files `files` (read at the given versions): the stored
+    * m and sub-dimension serve every path; `arrays` is None when the
+    * index's ids are not integral (a corpus keyed by strings), whose
+    * `max(struct(ccos, -id))` tiebreak the driver paths do not
+    * reproduce, and the distributed plans then serve. */
   private[ops] final case class PqQuantizer(centsVersion: Long,
                                             booksVersion: Long,
+                                            files: (Seq[String], Seq[String]),
                                             nlist: Long, m: Int, sd: Int,
                                             arrays: Option[PqArrays])
 
@@ -807,34 +834,37 @@ object VectorIndex {
       centNorms: Array[Double],
       codeIdType: org.apache.spark.sql.types.DataType,
       codeIds: Array[Array[Long]], books: Array[Array[Array[Float]]],
-      bookSq: Array[Array[Double]]) {
-    def m: Int = books.length
-    def sd: Int = books(0)(0).length
-  }
+      bookSq: Array[Array[Double]])
 
   /** The latest loaded quantizers per (store root, index). */
   private val quantizers =
     new java.util.concurrent.ConcurrentHashMap[(String, String), PqQuantizer]()
 
   /** The index's quantizers at the current centroids and books
-    * versions — two metadata probes on a hit, one collect of each tiny
-    * table on a miss. A caller-supplied m is validated against the
-    * stored one: a mismatched m would slice probes into wrong-width
-    * sub-vectors and return plausible-looking but wrong rankings; 0
-    * (the default on every read path) means "use the stored value". */
+    * versions — two manifest reads on a hit, one collect of each tiny
+    * table on a miss. An entry is valid while the two tables' live
+    * data files are unchanged: every commit writes files under a fresh
+    * directory, so a drop and re-create that restarts the version
+    * numbers (SQL DROP TABLE, a rebuild by another process on the same
+    * store) still reloads. A caller-supplied m is validated against
+    * the stored one: a mismatched m would slice probes into
+    * wrong-width sub-vectors and return plausible-looking but wrong
+    * rankings; 0 (the default on every read path) means "use the
+    * stored value". */
   private[ops] def quantizer(store: TableStore, name: String,
                              m: Int = 0): PqQuantizer = {
     def version(t: String) = store.currentVersion(t).getOrElse(
       throw new IllegalStateException(s"table $t does not exist"))
-    val cv = version(centroidsTable(name))
-    val bv = version(booksTable(name))
+    val (ct, bt) = (centroidsTable(name), booksTable(name))
+    val (cv, bv) = (version(ct), version(bt))
+    val files = (store.liveDataFiles(ct, cv), store.liveDataFiles(bt, bv))
     val key = (store.rootPath, name)
     val cached = quantizers.get(key)
     val q =
-      if (cached != null && cached.centsVersion == cv &&
-          cached.booksVersion == bv) cached
+      if (cached != null && cached.files == files)
+        cached.copy(centsVersion = cv, booksVersion = bv)
       else {
-        val fresh = loadQuantizer(store, name, cv, bv)
+        val fresh = loadQuantizer(store, name, cv, bv, files)
         quantizers.put(key, fresh)
         fresh
       }
@@ -851,22 +881,21 @@ object VectorIndex {
     }
   }
 
-  /** An integral id as `dt`'s external value; None when it does not fit. */
-  private def idAs(v: Long, dt: org.apache.spark.sql.types.DataType): Option[Any] = {
+  /** An integral id as `dt`'s external value. */
+  private def idAs(v: Long, dt: org.apache.spark.sql.types.DataType): Any = {
     import org.apache.spark.sql.types._
     dt match {
-      case LongType => Some(v)
-      case IntegerType if v.isValidInt => Some(v.toInt)
-      case ShortType if v.isValidShort => Some(v.toShort)
-      case ByteType if v.isValidByte => Some(v.toByte)
-      case _ => None
+      case IntegerType => v.toInt
+      case ShortType => v.toShort
+      case ByteType => v.toByte
+      case _ => v
     }
   }
 
   private def loadQuantizer(store: TableStore, name: String, cv: Long,
-                            bv: Long): PqQuantizer = {
+                            bv: Long,
+                            files: (Seq[String], Seq[String])): PqQuantizer = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     val cents = store.readVersion(centroidsTable(name), cv)
       .select("cent_id", "cvec")
     val books = store.readVersion(booksTable(name), bv)
@@ -874,53 +903,41 @@ object VectorIndex {
     val (cr, br) = graft.lake.JobLabel(store.spark, "graft:ivfpq quantizers") {
       (cents.collect(), books.collect())
     }
-    val subs = br.filterNot(_.isNullAt(0)).map(_.getInt(0))
-    require(subs.nonEmpty, s"index $name has no codebooks")
+    require(br.nonEmpty, s"index $name has no codebooks")
     // m is what the index was BUILT with (max sub + 1); sd is the first
     // codeword's width — the values a books-frame aggregate would read
-    val m = subs.max + 1
-    val sd = if (br(0).isNullAt(2)) -1 else br(0).getSeq[Any](2).length
-    def floats(r: Row, i: Int, n: Int): Option[Array[Float]] =
-      if (r.isNullAt(i)) None
-      else {
-        val seq = r.getSeq[Any](i)
-        if (seq.length != n || seq.contains(null)) None
-        else Some(seq.map(_.asInstanceOf[Float]).toArray)
-      }
-    def sq(c: Array[Float]) = Similarity.dotVsFloat(c.map(_.toDouble), c)
-    val floatVecs = Seq(cents, books).forall(_.schema("cvec").dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
+    val m = br.map(_.getInt(0)).max + 1
+    val sd = br(0).getSeq[Float](2).length
+    val (centIdType, codeIdType) =
+      (cents.schema("cent_id").dataType, books.schema("cent_id").dataType)
     val arrays =
-      if (!floatVecs || sd <= 0 || cr.isEmpty ||
-          !isIntegral(cents.schema("cent_id").dataType) ||
-          !isIntegral(books.schema("cent_id").dataType) ||
-          cr.exists(_.isNullAt(0)) || br.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        None
+      if (!isIntegral(centIdType) || !isIntegral(codeIdType)) None
       else {
-        val dim = m * sd
-        val cs = cr.map(r => (r.getAs[Number](0).longValue, floats(r, 1, dim)))
+        // the builds write non-null float vectors, m·sd-wide centroids
+        // and ksub sd-wide codewords for every sub in 0 until m
+        def vec(r: Row, i: Int, n: Int): Array[Float] = {
+          val v = r.getSeq[Float](i).toArray
+          require(v.length == n,
+            s"index $name holds a ${v.length}-wide quantizer vector, expected $n")
+          v
+        }
+        def sq(c: Array[Float]) = Similarity.dotVsFloat(c.map(_.toDouble), c)
+        val cs = cr.map(r => (r.getAs[Number](0).longValue, vec(r, 1, m * sd)))
           .sortBy(_._1)
-        val bs = (0 until m).map { s =>
+        val bs = Array.tabulate(m) { s =>
           br.filter(_.getInt(0) == s)
-            .map(r => (r.getAs[Number](1).longValue, floats(r, 2, sd)))
+            .map(r => (r.getAs[Number](1).longValue, vec(r, 2, sd)))
             .sortBy(_._1)
         }
-        def usable(xs: Seq[(Long, Option[Array[Float]])]) = xs.nonEmpty &&
-          xs.forall(_._2.isDefined) && xs.map(_._1).distinct.size == xs.size
-        if (!usable(cs.toSeq) || !bs.forall(b => usable(b.toSeq))) None
-        else {
-          val cvecs = cs.map(_._2.get)
-          val bvecs = bs.map(_.map(_._2.get)).toArray
-          Some(PqArrays(
-            cents.schema("cent_id").dataType, cs.map(_._1), cvecs,
-            cvecs.map(c => math.sqrt(sq(c))),
-            books.schema("cent_id").dataType, bs.map(_.map(_._1)).toArray,
-            bvecs, bvecs.map(_.map(sq))))
-        }
+        require(cs.nonEmpty && bs.forall(_.nonEmpty),
+          s"index $name has an empty quantizer")
+        val cvecs = cs.map(_._2)
+        val bvecs = bs.map(_.map(_._2))
+        Some(PqArrays(centIdType, cs.map(_._1), cvecs,
+          cvecs.map(c => math.sqrt(sq(c))), codeIdType, bs.map(_.map(_._1)),
+          bvecs, bvecs.map(_.map(sq))))
       }
-    PqQuantizer(cv, bv, cr.length.toLong, m, sd, arrays)
+    PqQuantizer(cv, bv, files, cr.length.toLong, m, sd, arrays)
   }
 
   /** The inverted list a codes/lists data file belongs to: its
@@ -952,14 +969,21 @@ object VectorIndex {
     Similarity.round4(Similarity.dotVsFloat(v, c) / (vn * cn))
 
   /** The driver-served search, or None when an input is past the bound
-    * or outside what the driver path reproduces. */
-  private def searchOnDriver(store: TableStore, name: String, a: PqArrays,
+    * or outside what the driver path reproduces. The bound is on the
+    * scoring work: every probe scores every code row of its probed
+    * lists (the rows the distributed plan's list ⋈ probe join
+    * produces), counted from the manifest row counts before any file
+    * is read. It also caps the probes collected and, since each probed
+    * list is probed at least once, the candidate code rows held. */
+  private def searchOnDriver(store: TableStore, name: String,
+                             q: PqQuantizer, a: PqArrays,
                              probes: DataFrame, k: Int, nprobe: Int,
                              codesFilter: Option[org.apache.spark.sql.Column],
                              idCol: String, vecCol: String,
                              driverRows: Int): Option[DataFrame] = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
+    import scala.collection.mutable.ArrayBuffer
     if (driverRows <= 0) return None
     val spark = probes.sparkSession
     val kt = codesTable(name)
@@ -972,9 +996,10 @@ object VectorIndex {
     val partType = codes0.schema("cent_id").dataType
     val vOrd = Similarity.idOrderingOf(vField.dataType).getOrElse(return None)
     if (qField.dataType != vField.dataType || !isIntegral(partType)) return None
-    val (m, sd) = (a.m, a.sd)
+    val (m, sd) = (q.m, q.sd)
     val probeRows = graft.lake.JobLabel(spark, "graft:ivfpq probe collect") {
-      probes.select(col(idCol), col(vecCol)).limit(driverRows + 1).collect()
+      probes.select(col(idCol), col(vecCol))
+        .limit(math.min(driverRows, Int.MaxValue - 1) + 1).collect()
     }
     if (probeRows.length > driverRows) return None
     val nq = probeRows.length
@@ -1000,6 +1025,24 @@ object VectorIndex {
       (0 until nl).sortWith((x, y) => Similarity.sqlCompareDoubles(cos(x), cos(y)) > 0)
         .take(math.max(nprobe, 0)).toArray
     }
+    // per-list code rows from the manifest row counts (pre-delete,
+    // pre-filter: an upper bound); a probed list with an uncounted
+    // file is unknown, so the distributed plan serves
+    val listOf = a.centIds.zipWithIndex.map { case (id, c) => (id.toString, c) }.toMap
+    val counts = store.fileRowCounts(kt, v)
+    val listRows = new Array[Long](nl)
+    val uncounted = new Array[Boolean](nl)
+    for (f <- store.liveDataFiles(kt, v); c <- listOf.get(listDirOf(f)))
+      counts.get(f) match {
+        case Some(n) => listRows(c) += n
+        case None => uncounted(c) = true
+      }
+    var work = 0L
+    for (ps <- probed; c <- ps) {
+      if (uncounted(c)) return None
+      work += listRows(c)
+    }
+    if (work > driverRows) return None
     val needed = probed.flatten.distinct.sorted
     val schema = StructType(Seq(
       StructField("qid", qField.dataType, qField.nullable),
@@ -1009,25 +1052,22 @@ object VectorIndex {
     import scala.jdk.CollectionConverters._
     if (needed.isEmpty)
       return Some(spark.createDataFrame(java.util.List.of[Row](), schema))
-    // bound the candidate read by the probed lists' manifest row counts
-    // (pre-delete, pre-filter: an upper bound); a file without a count
-    // is unknown, so the distributed plan serves
-    val wanted = needed.map(c => a.centIds(c).toString).toSet
-    val counts = store.fileRowCounts(kt, v)
-    var total = 0L
-    for (f <- store.liveDataFiles(kt, v) if wanted(listDirOf(f)))
-      total += counts.getOrElse(f, return None)
-    if (total > driverRows) return None
     // the probed code partitions, in one pruned merge-on-read scan
-    val lits = needed.flatMap(c => idAs(a.centIds(c), partType))
+    val lits = needed.map(c => idAs(a.centIds(c), partType))
     val rows = graft.lake.JobLabel(spark, "graft:ivfpq probed codes") {
       codes0.where(col("cent_id").isin(lits.toIndexedSeq: _*))
         .select(col("cent_id"), col(idCol), col("sub"), col("code")).collect()
     }
-    // per candidate: its (list, sub, codeword) rows in scan order — the
-    // order a group-by sums them in
+    // per candidate: its (list, sub, codeword) triples in scan order —
+    // the order a group-by sums them in; `seen` marks the last probe
+    // that scored it (a vid stored in two lists sits in both buckets)
+    final class Cand(val vid: Any) {
+      val codes = ArrayBuffer.empty[Int]
+      var rn = 0.0
+      var seen = -1
+    }
     val centIdx = a.centIds.zipWithIndex.toMap
-    val byVid = new java.util.LinkedHashMap[Any, scala.collection.mutable.ArrayBuffer[Array[Int]]]()
+    val byVid = new java.util.LinkedHashMap[Any, Cand]()
     for (r <- rows) {
       if ((0 to 3).exists(r.isNullAt)) return None
       val c = centIdx.getOrElse(r.getAs[Number](0).longValue, return None)
@@ -1036,13 +1076,18 @@ object VectorIndex {
       val code = java.util.Arrays.binarySearch(a.codeIds(sub),
         r.getAs[Number](3).longValue)
       if (code < 0) return None
-      byVid.computeIfAbsent(r.get(1), _ => scala.collection.mutable.ArrayBuffer.empty)
-        .append(Array(c, sub, code))
+      byVid.computeIfAbsent(r.get(1), new Cand(_)).codes ++= Seq(c, sub, code)
     }
-    val cands = byVid.asScala.toSeq.map { case (vid, rs) =>
+    // candidates bucketed by list: a probe visits only its probed
+    // lists' buckets, so the driver does the distributed join's work
+    val buckets = Array.fill(nl)(ArrayBuffer.empty[Cand])
+    for (cand <- byVid.values.asScala) {
+      val xs = cand.codes
       var css = 0.0
-      rs.foreach(x => css += a.bookSq(x(1))(x(2)))
-      (vid, rs, math.sqrt(css))
+      var j = 0
+      while (j < xs.length) { css += a.bookSq(xs(j + 1))(xs(j + 2)); j += 3 }
+      cand.rn = math.sqrt(css)
+      (0 until xs.length by 3).map(xs(_)).distinct.foreach(buckets(_) += cand)
     }
     val out = new java.util.ArrayList[Row]()
     for (q <- 0 until nq) {
@@ -1052,12 +1097,18 @@ object VectorIndex {
         val sv = java.util.Arrays.copyOfRange(qvecs(q), s * sd, (s + 1) * sd)
         a.books(s).map(Similarity.dotVsFloat(sv, _))
       }
-      val scored = cands.flatMap { case (vid, rs, rn) =>
-        if (vid == qids(q) || !rs.exists(x => inList(x(0)))) None
-        else {
+      val scored = ArrayBuffer.empty[(Any, Double)]
+      for (c <- probed(q); cand <- buckets(c) if cand.seen != q) {
+        cand.seen = q
+        if (cand.vid != qids(q)) {
+          val xs = cand.codes
           var adp = 0.0
-          rs.foreach(x => if (inList(x(0))) adp += lut(x(1))(x(2)))
-          Some((vid, Similarity.round4(adp / (qn(q) * rn))))
+          var j = 0
+          while (j < xs.length) {
+            if (inList(xs(j))) adp += lut(xs(j + 1))(xs(j + 2))
+            j += 3
+          }
+          scored += ((cand.vid, Similarity.round4(adp / (qn(q) * cand.rn))))
         }
       }
       // row_number over (cos_pq desc, vid asc) ≤ k
@@ -1071,32 +1122,25 @@ object VectorIndex {
     Some(spark.createDataFrame(out, schema))
   }
 
-  /** The driver-served sync: collect the change feed once, net it to
-    * each id's final state, encode the inserts on the driver and commit
-    * codes and delete keys from local frames in one merge-on-read
-    * commit under `txn`. False (nothing committed) when the feed is
-    * past the bound or holds what the driver path does not reproduce. */
-  private def syncOnDriver(store: TableStore, name: String, a: PqArrays,
-                           feed: DataFrame, txn: (String, Long),
-                           idCol: String, vecCol: String,
-                           driverRows: Int): Boolean = {
+  /** The driver-served sync over a collected change feed `rows` (the
+    * `feedCols` projection): net it to each id's final state, encode
+    * the inserts on the driver and commit codes and delete keys from
+    * local frames in one merge-on-read commit under `txn`. False
+    * (nothing committed) when the feed holds what the driver path does
+    * not reproduce — null ids, versions or vectors, or two different
+    * final inserts of one id. */
+  private def syncOnDriver(store: TableStore, name: String, q: PqQuantizer,
+                           a: PqArrays, rows: Array[org.apache.spark.sql.Row],
+                           feedSchema: org.apache.spark.sql.types.StructType,
+                           txn: (String, Long), attrs: Seq[String],
+                           idCol: String): Boolean = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    if (driverRows <= 0) return false
-    val spark = feed.sparkSession
+    val spark = store.spark
     val kt = codesTable(name)
     val cols = cachedCols(store, kt)
-    val attrs = cols.filterNot(Set("cent_id", idCol, "sub", "code"))
-    val proj =
-      try feed.select((Seq(idCol, vecCol) ++ attrs ++
-        Seq("_change_type", "_commit_version")).map(col): _*)
-      catch { case _: org.apache.spark.sql.AnalysisException => return false }
-    val idField = proj.schema(0)
+    val idField = feedSchema(0)
     if (Similarity.idOrderingOf(idField.dataType).isEmpty) return false
-    val rows = graft.lake.JobLabel(spark, "graft:ivfpq sync feed") {
-      proj.limit(driverRows + 1).collect()
-    }
-    if (rows.length > driverRows) return false
     val typeAt = attrs.length + 2
     // net to each id's final state — the distributed window: latest
     // commit wins, and within one commit an insert beats a delete
@@ -1115,27 +1159,37 @@ object VectorIndex {
       }
     }
     import scala.jdk.CollectionConverters._
-    val (m, sd) = (a.m, a.sd)
+    val (m, sd) = (q.m, q.sd)
     val out = new java.util.ArrayList[Row]()
+    // each output column's source: the coarse id, the sub, the code,
+    // or a field of the feed row
+    val (centSrc, subSrc, codeSrc) = (-1, -2, -3)
+    val src = cols.map {
+      case "cent_id" => centSrc
+      case "sub" => subSrc
+      case "code" => codeSrc
+      case c if c == idCol => 0
+      case c => 2 + attrs.indexOf(c)
+    }.toArray
+    val bookNorms = a.bookSq.map(_.map(math.sqrt))
     for (r <- latest.values.asScala if r.get(typeAt) == "insert") {
       val v = Similarity.doublesOf(r, 1).filter(_.length == m * sd)
         .getOrElse(return false)
       val vn = Similarity.normOf(v)
       val cent = argmax(a.cents.length)(c =>
         cos4(v, vn, a.cents(c), a.centNorms(c)))
-      val centId = idAs(a.centIds(cent), a.centIdType).get
+      val centId = idAs(a.centIds(cent), a.centIdType)
       for (s <- 0 until m) {
         val sv = java.util.Arrays.copyOfRange(v, s * sd, (s + 1) * sd)
         val svn = Similarity.normOf(sv)
         val code = argmax(a.books(s).length)(j =>
-          cos4(sv, svn, a.books(s)(j), math.sqrt(a.bookSq(s)(j))))
-        val codeId = idAs(a.codeIds(s)(code), a.codeIdType).get
-        out.add(Row.fromSeq(cols.map {
-          case "cent_id" => centId
-          case "sub" => s
-          case "code" => codeId
-          case c if c == idCol => r.get(0)
-          case c => r.get(2 + attrs.indexOf(c))
+          cos4(sv, svn, a.books(s)(j), bookNorms(s)(j)))
+        val codeId = idAs(a.codeIds(s)(code), a.codeIdType)
+        out.add(Row.fromSeq(src.toSeq.map {
+          case `centSrc` => centId
+          case `subSrc` => s
+          case `codeSrc` => codeId
+          case i => r.get(i)
         }))
       }
     }
@@ -1144,7 +1198,7 @@ object VectorIndex {
       case "sub" => StructField("sub", IntegerType, nullable = false)
       case "code" => StructField("code", a.codeIdType)
       case c if c == idCol => StructField(c, idField.dataType)
-      case c => StructField(c, proj.schema(2 + attrs.indexOf(c)).dataType)
+      case c => StructField(c, feedSchema(2 + attrs.indexOf(c)).dataType)
     })
     val keys = spark.createDataFrame(
       latest.keySet.asScala.toSeq.map(Row(_)).asJava,

@@ -181,4 +181,26 @@ class ChangesSpec extends SparkSpec {
       .where($"_change_type" === "delete" && $"id" === 3).count()
     assert(d3 == 2, s"expected both copies of id=3 deleted, got $d3")
   }
+
+  test("changeRowsBound bounds every range's feed from metadata alone") {
+    val store = freshStore()
+    store.create("t", Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    store.append("t", Seq((3, "c"), (4, "d"), (5, "e")).toDF("id", "v"))
+    store.appendWithDeletes("t", Seq((2, "b2")).toDF("id", "v"),
+      Seq(2).toDF("id"))
+    store.deleteWhere("t", $"id" === 4) // positional (deletion vector)
+    store.compact("t")
+    store.append("t", Seq((6, "f")).toDF("id", "v"))
+    store.overwrite("t", Seq((1, "a"), (7, "g")).toDF("id", "v"))
+    val cur = store.currentVersion("t").get
+    for (v <- 0L to cur; w <- v to cur) {
+      val n = store.changes("t", v, w).count()
+      val bound = store.changeRowsBound("t", v, w)
+      assert(bound.exists(_ >= n), s"($v, $w]: bound $bound < feed rows $n")
+    }
+    // a pure-append range is bounded by exactly its new files' rows
+    assert(store.changeRowsBound("t", 0L, 1L).contains(3L))
+    // a content-neutral range emits nothing
+    assert(store.changeRowsBound("t", 3L, 4L).contains(0L))
+  }
 }

@@ -618,6 +618,13 @@ class VectorIndexSpec extends SparkSpec {
     val bounded = VectorIndex.searchIvfPqCore(store, "px", probes, 5, 2,
       None, 0, "vec_id", "embedding", driverRows = 20)
     assert(!onDriver(bounded), "a probed read above the bound ran on the driver")
+    // the bound is on scoring work, probes × their probed code rows:
+    // all 800 code rows fit, but 4 probes over 2 of 4 lists each do not
+    val codeRows = store.read(VectorIndex.codesTable("px")).count().toInt
+    def driverAt(rows: Int) = onDriver(VectorIndex.searchIvfPqCore(store,
+      "px", probes, 5, 2, None, 0, "vec_id", "embedding", driverRows = rows))
+    assert(!driverAt(codeRows))
+    assert(driverAt(4 * codeRows))
     assert(pqRows(bounded) == pqRows(
       VectorIndex.searchIvfPqIndex(store, "px", probes, k = 5, nprobe = 2)))
     val withNull = probes.union(
@@ -708,22 +715,32 @@ class VectorIndexSpec extends SparkSpec {
     store.create("corpus", emb.where(col("vec_id") < 100))
     VectorIndex.buildIvfPqIndexFromTable(store, "px", "corpus", nlist = 4,
       m = 4, ksub = 8, kmeansIters = 1)
-    def windowed(body: => Unit) = executionsDuring(body).exists(
-      _.analyzed.exists(
+    def windowed(qes: Seq[org.apache.spark.sql.execution.QueryExecution]) =
+      qes.exists(_.analyzed.exists(
         _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window]))
+    // executions that read the corpus's files, i.e. evaluate the feed
+    def feedReads(qes: Seq[org.apache.spark.sql.execution.QueryExecution]) =
+      qes.count(qe => scannedFilesIn(qe.executedPlan, "/corpus/") > 0)
     store.append("corpus", emb.where(col("vec_id") >= 100))
-    assert(windowed(VectorIndex.syncIvfPq(store, "px", "corpus", 0,
-      "vec_id", "embedding", driverRows = 50)))
+    // above the bound, decided from metadata: the feed is never
+    // collected, and the distributed plan evaluates it as before
+    val above = executionsDuring(VectorIndex.syncIvfPq(store, "px", "corpus",
+      0, "vec_id", "embedding", driverRows = 50))
+    assert(windowed(above) && feedReads(above) == 2)
     store.append("corpus",
       Seq((900L, null.asInstanceOf[Array[Float]])).toDF("vec_id", "embedding"))
-    assert(windowed(VectorIndex.syncIvfPqIndex(store, "px", "corpus")))
+    // a null vector: the distributed plan runs over the collected copy,
+    // so the feed is still evaluated once
+    val nulls = executionsDuring(VectorIndex.syncIvfPqIndex(store, "px", "corpus"))
+    assert(windowed(nulls) && feedReads(nulls) == 1)
     assert(VectorIndex.syncIvfPqIndex(store, "px", "corpus").isEmpty)
     val ids = store.read(VectorIndex.codesTable("px"))
       .select("vec_id").distinct().as[Long].collect().toSet
     assert((0L until 200L).toSet.subsetOf(ids))
   }
 
-  test("rebuilding the index invalidates the driver quantizer cache") {
+  test("rebuilding or re-creating the index invalidates the driver " +
+    "quantizer cache") {
     val store = new TableStore(spark, tmpDir("pqcache"))
     store.create("corpus", corpus(200))
     VectorIndex.buildIvfPqIndexFromTable(store, "px", "corpus", nlist = 4,
@@ -731,12 +748,19 @@ class VectorIndexSpec extends SparkSpec {
     val probes = corpus(200).where(col("vec_id") < 4)
     assertSearchParity(store, "px", probes, k = 5, nprobe = 2)
     assert(VectorIndex.quantizer(store, "px").nlist == 4L)
-    // re-created from scratch, the tables restart at the cached
-    // versions: only the build's own invalidation reveals the change
-    Seq(VectorIndex.centroidsTable("px"), VectorIndex.booksTable("px"),
-      VectorIndex.codesTable("px")).foreach(store.drop)
-    VectorIndex.buildIvfPqIndexFromTable(store, "px", "corpus", nlist = 8,
+    // dropped and re-created out of band (no build call of this
+    // object), the tables restart at the cached version numbers: only
+    // their new data files reveal the change
+    VectorIndex.buildIvfPqIndex(store, "py", corpus(200), nlist = 8,
       m = 2, ksub = 8, kmeansIters = 2)
+    Seq(VectorIndex.centroidsTable _, VectorIndex.booksTable _,
+        VectorIndex.codesTable _).foreach { t =>
+      val v = store.currentVersion(t("px"))
+      store.drop(t("px"))
+      store.create(t("px"), store.read(t("py")),
+        partitionBy = if (t("px").endsWith("_codes")) Seq("cent_id") else Nil)
+      assert(store.currentVersion(t("px")) == v)
+    }
     assert(VectorIndex.quantizer(store, "px").nlist == 8L)
     assert(VectorIndex.quantizer(store, "px").m == 2)
     assertSearchParity(store, "px", probes, k = 5, nprobe = 3)
@@ -745,5 +769,23 @@ class VectorIndexSpec extends SparkSpec {
       m = 4, ksub = 4, kmeansIters = 1)
     assert(VectorIndex.quantizer(store, "px").nlist == 5L)
     assertSearchParity(store, "px", probes, k = 5, nprobe = 2)
+  }
+
+  test("the driver paths' round4 equals Spark's round(x, 4), ties included") {
+    val rnd = new java.util.Random(7)
+    val ties = (-20000 to 20000 by 37).flatMap { n =>
+      val t = (n + 0.5) / 10000.0
+      Seq(t, math.nextUp(t), math.nextDown(t))
+    }
+    val xs = ties ++ Seq.fill(3000)(rnd.nextDouble() * 2 - 1) ++
+      Seq.fill(300)(rnd.nextGaussian() * 1e6) ++
+      Seq(0.0, -0.0, 1e-5, -1e-5, 0.99995, -0.99995, 123456.78905,
+        Double.MinPositiveValue, 1e300, Double.NaN,
+        Double.PositiveInfinity, Double.NegativeInfinity)
+    val spk = xs.toDF("x").select(round(col("x"), 4)).as[Double].collect()
+    xs.zip(spk).foreach { case (x, want) =>
+      assert(java.lang.Double.compare(Similarity.round4(x), want) == 0,
+        s"round4($x) = ${Similarity.round4(x)}, Spark gives $want")
+    }
   }
 }
