@@ -577,33 +577,42 @@ final class TableStore(private[graft] val spark: SparkSession,
             if (dvApplicable.isEmpty) tagged
             else tagged.join(
               org.apache.spark.sql.functions.broadcast(
-                spark.read.parquet(dvApplicable: _*)),
-              col(RowFileCol) === col(DvFileCol) &&
-                col(RowPosCol) === col(DvPosCol),
-              "left_anti")
+                dvPositions(dvApplicable)), atDvPosition, "left_anti")
           if (withRowId) merged else merged.drop(RowFileCol, RowPosCol)
         }
       val applicable = dels.collect { case (f, i) if i > minIdx => f }
       if (applicable.isEmpty) df0
       else {
-        // mergeSchema: delete files from different commits must agree
-        // on the key columns; a missing column would null-fill and a
-        // null key never anti-matches, silently resurrecting rows.
-        // The merged schema is cached on the immutable file set
-        // (SchemaCache) and supplied explicitly, so repeat reads skip
-        // the distributed inference job; per-file missing columns
-        // null-fill identically under a supplied merged schema.
-        val delSchema = SchemaCache.getOrInfer(
-          SchemaCache.keyOf("del" +: applicable)) {
-          spark.read.option("mergeSchema", "true")
-            .parquet(applicable: _*).schema
-        }
-        val delKeys = spark.read.schema(delSchema).parquet(applicable: _*)
-        df0.join(org.apache.spark.sql.functions.broadcast(delKeys),
-          delKeys.columns.toSeq, "left_anti")
+        val keys = delKeys(applicable)
+        df0.join(org.apache.spark.sql.functions.broadcast(keys),
+          keys.columns.toSeq, "left_anti")
       }
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
+
+  /** The equality-delete keys of `files` (`del|` lines). mergeSchema:
+    * delete files from different commits must agree on the key
+    * columns; a missing column would null-fill and a null key never
+    * anti-matches, silently resurrecting rows. The merged schema is
+    * cached on the immutable file set (SchemaCache) and supplied
+    * explicitly, so repeat reads skip the distributed inference job;
+    * per-file missing columns null-fill identically under a supplied
+    * merged schema. */
+  private def delKeys(files: Seq[String]): DataFrame = {
+    val schema = SchemaCache.getOrInfer(SchemaCache.keyOf("del" +: files)) {
+      spark.read.option("mergeSchema", "true").parquet(files: _*).schema
+    }
+    spark.read.schema(schema).parquet(files: _*)
+  }
+
+  /** Deletion-vector `files`' positions, under their one known schema
+    * (inferring it would be a Spark job). */
+  private def dvPositions(files: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(files: _*)
+
+  /** A `withRowId` read's row sits at a vector position. */
+  private def atDvPosition: Column =
+    col(RowFileCol) === col(DvFileCol) && col(RowPosCol) === col(DvPosCol)
 
   /** One commit group's scan, built the way `spark.read.parquet`
     * builds it (same [[org.apache.spark.sql.execution.datasources.InMemoryFileIndex]]
@@ -676,6 +685,10 @@ final class TableStore(private[graft] val spark: SparkSession,
   private val RowPosCol = "__row_pos"
   private val DvFileCol = "__dv_file"
   private val DvPosCol = "__dv_pos"
+  // `_metadata.file_path` and `_metadata.row_index`, as written by
+  // deleteWhere and updateWhere
+  private val DvSchema = new org.apache.spark.sql.types.StructType()
+    .add(DvFileCol, "string").add(DvPosCol, "long")
 
   /** True for manifest lines that are delete entries (equality-delete
     * key files or positional deletion vectors), not data files. */
@@ -2729,39 +2742,35 @@ final class TableStore(private[graft] val spark: SparkSession,
     * `_commit_version`. The downstream-consumption primitive — an
     * incremental materialized view reads the feed, not the table.
     *
-    * Append-only history (appends and merge-on-read commits — the CDC
-    * steady state) is read MANIFEST-AWARE: inserts come only from the
-    * range's new data files with the range's own equality deletes
-    * applied in manifest order (a batch that delete-and-reinserts a
-    * key emits both its delete and its insert), and each commit's
-    * deletes are the previous version's rows matching its delete keys
-    * (one broadcast semi join) — O(changed data) on the insert side,
-    * the property that makes a daily feed off a 100 TB table cheap. A
-    * version range containing a rewrite (overwrite / compact /
-    * partition overwrite) falls back to a full bag diff
-    * (`exceptAll` both ways — null-safe, multiplicity-exact) with
-    * attribution collapsed to `toV`, as rewrites don't preserve
-    * row-level lineage. */
+    * A range without rewrites (appends, merge-on-read commits and
+    * deletion-vector DELETE/UPDATE — the CDC steady state) is read
+    * COMMIT BY COMMIT from each commit's own manifest lines, the Delta
+    * Lake change-feed design: inserts are the commit's new data files
+    * as committed, and deletes are the previous version's rows the
+    * commit removed — those matching its equality-delete keys and
+    * those at its deletion vectors' (file, row position) entries, one
+    * broadcast semi join each. That is O(changed data) on the insert
+    * side and joins only KB-sized delete files on the delete side —
+    * no shuffle, the property that makes a daily feed off a 100 TB
+    * table cheap. A range containing a rewrite (overwrite / compact /
+    * partition overwrite / restore: some commit drops a line its
+    * predecessor had) falls back to a full bag diff (`exceptAll` both
+    * ways — null-safe, multiplicity-exact) with attribution collapsed
+    * to `toV`, as rewrites don't preserve row-level lineage. */
   def changes(table: String, fromV: Long, toV: Long): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast => bc, col, lit}
     require(fromV <= toV, s"fromV $fromV must be <= toV $toV")
-    // a range of content-neutral rewrites (COMPACT / OPTIMIZE /
-    // z-order) preserves the row bag by contract: emit the empty feed
-    // directly instead of falling back to the O(table) two-sided bag
-    // diff a rewrite normally forces — this is what keeps "maintenance
-    // ran between syncs" from turning an incremental consumer's next
-    // pull into a full-table scan
-    val neutralOps = Set("COMPACT", "OPTIMIZE", "OPTIMIZE (zorder)")
-    if (fromV < toV &&
-        ((fromV + 1) to toV).forall(v => neutralOps(operationOf(table, v))))
-      return readVersion(table, toV).limit(0)
-        .withColumn("_change_type", lit(""))
-        .withColumn("_commit_version", lit(0L))
-    // every version in the range is consulted both as "current" and
-    // "previous" — read each manifest file once
-    val man = scala.collection.mutable.LongMap.empty[Seq[String]]
-    def mf(v: Long): Seq[String] = man.getOrElseUpdate(v, manifest(table, v))
-    val from = mf(fromV)
+    def tagged(df: DataFrame, kind: String, v: Long): DataFrame =
+      df.withColumn("_change_type", lit(kind))
+        .withColumn("_commit_version", lit(v))
+    def empty = tagged(readVersion(table, toV).limit(0), "", 0L)
+    val plan = new FeedPlan(table, fromV, toV)
+    // a range of content-neutral rewrites preserves the row bag by
+    // contract: emit the empty feed directly instead of falling back
+    // to the O(table) two-sided bag diff a rewrite normally forces —
+    // this is what keeps "maintenance ran between syncs" from turning
+    // an incremental consumer's next pull into a full-table scan
+    if (plan.neutral) return empty
     // the whole feed surfaces under the LATEST (toV) schema,
     // Delta-CDF-style: files and delete keys store PHYSICAL names, so
     // mapping every version through toV's colmap makes a range that
@@ -2769,59 +2778,60 @@ final class TableStore(private[graft] val spark: SparkSession,
     // old-name/new-name pair, each half-null), and a column dropped
     // by toV is absent from the whole feed
     val mvTo = columnMapping(table, toV)
-    val perVersion = ((fromV + 1) to toV).map { v =>
-      val prev = mf(v - 1).toSet
-      (v, mf(v).filterNot(prev))
-    }
-    // positional deletion vectors change rows without changing data
-    // lines; the per-commit feed below can't express them, so any dv
-    // commit in the range falls back to the exact endpoint diff
-    val appendOnly = from.forall(mf(toV).contains) &&
-      perVersion.forall { case (_, nl) => !nl.exists(_.startsWith(DvPrefix)) }
-    if (appendOnly) {
-      val feeds = perVersion.flatMap { case (v, newLines) =>
-        // inserts: this commit's own data files, as committed (its del
-        // lines precede them in the manifest, so they exempt these
-        // rows by construction). Emitted UN-netted: a row inserted at
-        // v1 and deleted at v2 appears as insert(v1) + delete(v2) —
-        // with deletes diffed against the v-1 view below, the feed
-        // telescopes exactly from the fromV state to the toV state
-        // under plain bag algebra, per version or all at once.
+    if (!plan.rewrite) {
+      val feeds = plan.commits.flatMap { case (v, newLines) =>
+        // inserts: this commit's own data files, as committed (its
+        // delete lines precede them in the manifest, so they exempt
+        // these rows by construction). Emitted UN-netted: a row
+        // inserted at v1 and deleted at v2 appears as insert(v1) +
+        // delete(v2) — with deletes taken from the v-1 view below, the
+        // feed telescopes exactly from the fromV state to the toV
+        // state under plain bag algebra, per version or all at once.
         val ins =
-          if (newLines.exists(!_.startsWith(DelPrefix)))
-            Some(mvTo.applyRead(readLines(table, newLines))
-              .withColumn("_change_type", lit("insert"))
-              .withColumn("_commit_version", lit(v)))
+          if (newLines.exists(!isDeleteLine(_)))
+            Some(tagged(mvTo.applyRead(readLines(table, newLines)),
+              "insert", v))
           else None
-        // deletes: the PREVIOUS version's rows matching this commit's
-        // del keys — exactly the rows this commit removed. Diffing
-        // against v-1 (not fromV) keeps multiplicities exact when a
-        // later commit re-deletes a key it already removed: the row is
-        // gone from the v-1 view, so no phantom second delete. The
-        // join runs RAW (physical names on both sides), then maps.
-        val delFiles = newLines.filter(_.startsWith(DelPrefix))
-          .map(_.stripPrefix(DelPrefix))
+        // deletes: the PREVIOUS version's rows this commit's delete
+        // lines remove. Reading v-1 (not fromV) keeps multiplicities
+        // exact when a later commit re-deletes a key it already
+        // removed: the row is gone from the v-1 view, so no phantom
+        // second delete; and a vector's positions are rows live at
+        // v-1 by construction. A row both a key and a vector remove
+        // emits once. The joins run RAW (physical names on both
+        // sides); the row ids drop before the mapping.
+        val keyFiles = newLines.filter(_.startsWith(DelPrefix)).map(lineFile)
+        val dvFiles = newLines.filter(_.startsWith(DvPrefix)).map(lineFile)
         val del =
-          if (delFiles.nonEmpty) {
-            val keys = spark.read.option("mergeSchema", "true")
-              .parquet(delFiles: _*)
-            Some(mvTo.applyRead(readLines(table, mf(v - 1))
-                .join(bc(keys), keys.columns.toSeq, "left_semi"))
-              .withColumn("_change_type", lit("delete"))
-              .withColumn("_commit_version", lit(v)))
-          } else None
+          if (keyFiles.isEmpty && dvFiles.isEmpty) None
+          else {
+            val prev = readLines(table, plan.lines(v - 1),
+              withRowId = dvFiles.nonEmpty)
+            def byKey(df: DataFrame) = {
+              val keys = delKeys(keyFiles)
+              df.join(bc(keys), keys.columns.toSeq, "left_semi")
+            }
+            val removed =
+              if (dvFiles.isEmpty) byKey(prev)
+              else {
+                val pos = bc(dvPositions(dvFiles))
+                val byPos = prev.join(pos, atDvPosition, "left_semi")
+                (if (keyFiles.isEmpty) byPos
+                 else byPos.unionByName(
+                   byKey(prev.join(pos, atDvPosition, "left_anti"))))
+                  .drop(RowFileCol, RowPosCol)
+              }
+            Some(tagged(mvTo.applyRead(removed), "delete", v))
+          }
         ins.toSeq ++ del.toSeq
       }
-      if (feeds.isEmpty) {
-        readVersion(table, toV).limit(0)
-          .withColumn("_change_type", lit(""))
-          .withColumn("_commit_version", lit(0L))
-      } else feeds.reduce(_.unionByName(_, allowMissingColumns = true))
+      if (feeds.isEmpty) empty
+      else feeds.reduce(_.unionByName(_, allowMissingColumns = true))
     } else {
       // both endpoints read RAW and map through toV's colmap (see
       // above) so a rename inside the range still diffs one column
-      val a = mvTo.applyRead(readLines(table, from))
-      val b = mvTo.applyRead(readLines(table, mf(toV)))
+      val a = mvTo.applyRead(readLines(table, plan.lines(fromV)))
+      val b = mvTo.applyRead(readLines(table, plan.lines(toV)))
       // the diff runs under toV's schema exactly: a column added since
       // fromV null-fills the old side (typed from toV), and a column
       // present only at fromV (its files all rewritten away by a
@@ -2832,13 +2842,40 @@ final class TableStore(private[graft] val spark: SparkSession,
         if (df.columns.contains(c)) col(c)
         else lit(null).cast(b.schema(c).dataType).as(c)
       }: _*)
-      aligned(b).exceptAll(aligned(a))
-        .withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_version", lit(toV))
+      tagged(aligned(b).exceptAll(aligned(a)), "insert", toV)
         .unionByName(
-          aligned(a).exceptAll(aligned(b))
-            .withColumn("_change_type", lit("delete"))
-            .withColumn("_commit_version", lit(toV)))
+          tagged(aligned(a).exceptAll(aligned(b)), "delete", toV))
+    }
+  }
+
+  /** `changes`' case analysis over `(fromV, toV]`, from manifest
+    * metadata alone — no Spark job. `changes`, [[rangeMayDelete]] and
+    * [[changeRowsBound]] all read it, so the feed and the two answers
+    * about it cannot drift apart. Each manifest is read at most once,
+    * and only when asked for. */
+  private final class FeedPlan(table: String, fromV: Long, toV: Long) {
+    private val man = scala.collection.mutable.LongMap.empty[Seq[String]]
+    def lines(v: Long): Seq[String] =
+      man.getOrElseUpdate(v, manifest(table, v))
+    private def range = (fromV + 1) to toV
+    /** Every commit is a content-neutral rewrite (COMPACT / OPTIMIZE /
+      * z-order): the feed is empty. Decided from the commits' op
+      * headers alone, so it still answers after a vacuum has aged out
+      * fromV's manifest. */
+    val neutral: Boolean =
+      fromV < toV &&
+        range.forall(v => TableStore.NeutralOps(operationOf(table, v)))
+    /** Some commit drops a line its predecessor had — its rows lose
+      * their lineage, so the feed is the endpoint bag diff. */
+    lazy val rewrite: Boolean = range.exists { v =>
+      val cur = lines(v).toSet
+      !lines(v - 1).forall(cur)
+    }
+    /** Each commit's new manifest lines, in manifest order: data
+      * files, `del|` key files and `dv|` vectors. */
+    lazy val commits: Seq[(Long, Seq[String])] = range.map { v =>
+      val prev = lines(v - 1).toSet
+      (v, lines(v).filterNot(prev))
     }
   }
 
@@ -2846,47 +2883,37 @@ final class TableStore(private[graft] val spark: SparkSession,
     * row — answered from MANIFEST METADATA alone, no Spark job. The
     * change-feed consumers that branch on "any deletes in this batch?"
     * (the MV extremum/sketch repair) were paying a take(1) job per
-    * refresh to probe the feed; this replays `changes`' own case
-    * analysis instead: a content-neutral range and a pure-append range
-    * without equality-delete lines emit insert-only feeds by
-    * construction. Conservative the other way: del lines whose keys
-    * match nothing return true — the repair then runs with an empty
-    * affected set and reproduces the plain fold exactly (spec-pinned). */
+    * refresh to probe the feed; this reads `changes`' own case
+    * analysis instead: a content-neutral range, and a range without
+    * rewrites whose commits carry no delete lines, emit insert-only
+    * feeds by construction. Conservative the other way: delete lines
+    * that match nothing return true — the repair then runs with an
+    * empty affected set and reproduces the plain fold exactly
+    * (spec-pinned). */
   private[graft] def rangeMayDelete(table: String, fromV: Long,
                                     toV: Long): Boolean = {
     if (fromV >= toV) return false
-    val neutralOps = Set("COMPACT", "OPTIMIZE", "OPTIMIZE (zorder)")
-    if (((fromV + 1) to toV).forall(v => neutralOps(operationOf(table, v))))
-      return false
-    val man = scala.collection.mutable.LongMap.empty[Seq[String]]
-    def mf(v: Long): Seq[String] = man.getOrElseUpdate(v, manifest(table, v))
-    val from = mf(fromV)
-    val perVersion = ((fromV + 1) to toV).map { v =>
-      val prev = mf(v - 1).toSet
-      mf(v).filterNot(prev)
-    }
-    val appendOnly = from.forall(mf(toV).contains) &&
-      perVersion.forall(nl => !nl.exists(_.startsWith(DvPrefix)))
-    !appendOnly || perVersion.exists(_.exists(_.startsWith(DelPrefix)))
+    val plan = new FeedPlan(table, fromV, toV)
+    !plan.neutral &&
+      (plan.rewrite || plan.commits.exists(_._2.exists(isDeleteLine)))
   }
 
   /** An upper bound on the rows `changes(table, fromV, toV)` emits,
-    * from the manifests and the stats sidecar's footer row counts
-    * alone — no Spark job — so a consumer that collects bounded feeds
-    * decides BEFORE the feed is evaluated. Replays `changes`' case
-    * analysis: a content-neutral range emits nothing; a pure-append
-    * range emits at most its new files' rows, plus, per commit with
-    * equality-delete lines, every row of the version before it; a
-    * range that forces the endpoint bag diff emits at most both
-    * endpoints whole. None when a file it counts has no folded count. */
+    * from the manifests, the stats sidecar's footer row counts and the
+    * deletion vectors' footers alone — no Spark job — so a consumer
+    * that collects bounded feeds decides BEFORE the feed is evaluated.
+    * Reads `changes`' case analysis: a content-neutral range emits
+    * nothing; a range without rewrites emits, per commit, its new
+    * files' rows, plus every row of the version before it when it has
+    * equality-delete lines, or else its vectors' positions; a range
+    * with a rewrite emits at most both endpoints whole. Exact for a
+    * range of appends and deletion-vector DELETE/UPDATE commits. None
+    * when a file it counts has no folded count. */
   private[graft] def changeRowsBound(table: String, fromV: Long,
                                      toV: Long): Option[Long] = {
     if (fromV >= toV) return Some(0L)
-    val neutralOps = Set("COMPACT", "OPTIMIZE", "OPTIMIZE (zorder)")
-    if (((fromV + 1) to toV).forall(v => neutralOps(operationOf(table, v))))
-      return Some(0L)
-    val man = scala.collection.mutable.LongMap.empty[Seq[String]]
-    def mf(v: Long): Seq[String] = man.getOrElseUpdate(v, manifest(table, v))
+    val plan = new FeedPlan(table, fromV, toV)
+    if (plan.neutral) return Some(0L)
     // physical rows of `v`'s data lines among `lines`
     def rows(v: Long, lines: Seq[String]): Option[Long] = {
       val counts = fileRowCounts(table, v)
@@ -2894,19 +2921,15 @@ final class TableStore(private[graft] val spark: SparkSession,
         acc.flatMap(a => counts.get(f).map(a + _))
       }
     }
-    val perVersion = ((fromV + 1) to toV).map { v =>
-      val prev = mf(v - 1).toSet
-      (v, mf(v).filterNot(prev))
-    }
-    val appendOnly = mf(fromV).forall(mf(toV).contains) &&
-      perVersion.forall { case (_, nl) => !nl.exists(_.startsWith(DvPrefix)) }
     val parts =
-      if (appendOnly) perVersion.flatMap { case (v, nl) =>
+      if (plan.rewrite)
+        Seq(rows(fromV, plan.lines(fromV)), rows(toV, plan.lines(toV)))
+      else plan.commits.flatMap { case (v, nl) =>
         rows(v, nl) +: (
-          if (nl.exists(_.startsWith(DelPrefix))) Seq(rows(v - 1, mf(v - 1)))
-          else Nil)
+          if (nl.exists(_.startsWith(DelPrefix))) Seq(rows(v - 1, plan.lines(v - 1)))
+          else nl.filter(_.startsWith(DvPrefix)).map(l =>
+            Some(FileStats.rowCount(hadoopConf, lineFile(l)))))
       }
-      else Seq(rows(fromV, mf(fromV)), rows(toV, mf(toV)))
     parts.foldLeft(Option(0L))((acc, p) => acc.flatMap(a => p.map(a + _)))
   }
 
@@ -3388,6 +3411,10 @@ final class TableStore(private[graft] val spark: SparkSession,
 }
 
 object TableStore {
+  /** Content-neutral rewrites: the row bag is preserved by contract,
+    * so change-feed readers skip them. */
+  private[graft] val NeutralOps = Set("COMPACT", "OPTIMIZE", "OPTIMIZE (zorder)")
+
   /** Control flow for the in-claim app-txn revalidation: a commit
     * whose (app, version) watermark the published chain already
     * carries must no-op (exactly-once under zombie redelivery), not

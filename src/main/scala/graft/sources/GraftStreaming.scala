@@ -194,20 +194,16 @@ class GraftStreamSource(spark: SparkSession, store: TableStore,
     else df.withColumn("_change_type", lit("insert"))
       .withColumn("_commit_version", lit(v))
 
-  /** Content-neutral maintenance ops — the row bag is preserved by
-    * contract, so the stream skips them (mirrors
-    * [[TableStore.changes]]'s neutral-range fast path). */
-  private val NeutralOps = Set("COMPACT", "OPTIMIZE", "OPTIMIZE (zorder)")
-
+  /** Whether the stream serves commit `v`: content-neutral
+    * maintenance is skipped (as [[TableStore.changes]] skips it), and
+    * any other commit that is not a pure append fails the stream
+    * unless `skipChangeCommits` is set. */
   private def servesAppends(v: Long): Boolean = {
     val op = store.operationOf(table, v)
-    if (NeutralOps(op)) return false
-    val prev = store.manifest(table, v - 1)
-    val lines = store.manifest(table, v)
-    val prevSet = prev.toSet
-    val newLines = lines.filterNot(prevSet)
-    val pureAppend = prev.forall(lines.contains) &&
-      !newLines.exists(l => l.startsWith("del|") || l.startsWith("dv|"))
+    if (TableStore.NeutralOps(op)) return false
+    // the change feed's own case analysis: no line dropped, no delete
+    // line added
+    val pureAppend = !store.rangeMayDelete(table, v - 1, v)
     if (!pureAppend && !skipChangeCommits)
       throw new IllegalStateException(
         s"version $v of $table is a data-changing commit ($op); a graft " +

@@ -13,6 +13,14 @@ class ChangesSpec extends SparkSpec {
 
   private def freshStore() = new TableStore(spark, tmpDir("cdf"))
 
+  /** (id, v, change type, commit version) of a feed, sorted. */
+  private def feedRows(store: TableStore, table: String, fromV: Long,
+                       toV: Long, valCol: String = "v") =
+    store.changes(table, fromV, toV)
+      .select(col("id"), col(valCol), col("_change_type"),
+        col("_commit_version"))
+      .as[(Int, String, String, Long)].collect().toSeq.sorted
+
   /** bag-apply the feed to `from` and check it equals `to`. */
   private def telescopes(store: TableStore, table: String,
                          fromV: Long, toV: Long): Unit = {
@@ -202,5 +210,125 @@ class ChangesSpec extends SparkSpec {
     assert(store.changeRowsBound("t", 0L, 1L).contains(3L))
     // a content-neutral range emits nothing
     assert(store.changeRowsBound("t", 3L, 4L).contains(0L))
+  }
+
+  test("a deleteWhere commit emits exactly its matched rows as deletes") {
+    val store = freshStore()
+    store.create("t", Seq((1, "a"), (2, "b"), (3, "c"), (4, "d"))
+      .toDF("id", "v"))
+    assert(store.deleteWhere("t", $"id" % 2 === 0) == 2)
+    assert(feedRows(store, "t", 0L, 1L) ==
+      Seq((2, "b", "delete", 1L), (4, "d", "delete", 1L)))
+    // a second vector only removes what the first left
+    store.deleteWhere("t", $"id" <= 2)
+    assert(feedRows(store, "t", 0L, 2L) == Seq((1, "a", "delete", 2L),
+      (2, "b", "delete", 1L), (4, "d", "delete", 1L)))
+    for (v <- 0L to 2L; w <- v to 2L) telescopes(store, "t", v, w)
+  }
+
+  test("an updateWhere commit emits its pre-image deleted, its post-image inserted") {
+    val store = freshStore()
+    store.create("t", Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"))
+    assert(store.updateWhere("t", $"id" === 2, Map("v" -> lit("B"))) == 1)
+    assert(feedRows(store, "t", 0L, 1L) ==
+      Seq((2, "B", "insert", 1L), (2, "b", "delete", 1L)))
+    telescopes(store, "t", 0L, 1L)
+  }
+
+  test("a row appended and then deleted by a vector emits insert then delete") {
+    val store = freshStore()
+    store.create("t", Seq((1, "a")).toDF("id", "v"))
+    store.append("t", Seq((2, "b"), (3, "c")).toDF("id", "v"))
+    store.deleteWhere("t", $"id" === 2)
+    assert(feedRows(store, "t", 0L, 2L) == Seq((2, "b", "delete", 2L),
+      (2, "b", "insert", 1L), (3, "c", "insert", 1L)))
+    telescopes(store, "t", 0L, 2L)
+  }
+
+  test("a deletion vector after a RENAME surfaces under the latest names") {
+    val store = freshStore()
+    store.create("t", Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    store.renameColumn("t", "v", "val")
+    store.deleteWhere("t", $"val" === "a")
+    store.updateWhere("t", $"id" === 2, Map("val" -> lit("B")))
+    val feed = store.changes("t", 0L, 3L)
+    assert(feed.columns.toSet ==
+      Set("id", "val", "_change_type", "_commit_version"))
+    assert(feedRows(store, "t", 0L, 3L, "val") == Seq(
+      (1, "a", "delete", 2L), (2, "B", "insert", 3L), (2, "b", "delete", 3L)))
+    for (v <- 0L to 3L; w <- v to 3L) telescopes(store, "t", v, w)
+  }
+
+  test("changeRowsBound is exact on a deletion-vector range") {
+    val store = freshStore()
+    store.create("t", (1 to 6).map(i => (i, s"r$i")).toDF("id", "v"))
+    store.deleteWhere("t", $"id" <= 2)
+    store.updateWhere("t", $"id" === 3, Map("v" -> lit("R3")))
+    store.deleteWhere("t", $"id" >= 3)
+    store.append("t", Seq((7, "r7")).toDF("id", "v"))
+    val cur = store.currentVersion("t").get
+    for (v <- 0L to cur; w <- v to cur) {
+      val n = store.changes("t", v, w).count()
+      assert(store.changeRowsBound("t", v, w).contains(n),
+        s"($v, $w]: bound ${store.changeRowsBound("t", v, w)}, feed rows $n")
+    }
+    // 2 deleted + (1 deleted, 1 inserted) + 4 deleted + 1 appended
+    assert(store.changeRowsBound("t", 0L, cur).contains(9L))
+  }
+
+  test("a deletion-vector range's feed plans no Except and no shuffle") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val store = freshStore()
+    store.create("t", (1 to 20).map(i => (i, s"r$i")).toDF("id", "v"))
+    store.deleteWhere("t", $"id" <= 5)
+    store.updateWhere("t", $"id" === 10, Map("v" -> lit("x")))
+    val feed = store.changes("t", 0L, 2L)
+    assert(feed.count() == 7)
+    assert(!feed.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Except]))
+    def shuffles(p: SparkPlan): Int = p.collect {
+      case _: ShuffleExchangeExec => 1
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+    }.sum
+    assert(shuffles(feed.queryExecution.executedPlan) == 0,
+      feed.queryExecution.executedPlan.toString)
+  }
+
+  test("a commit with both key deletes and a vector emits each removed row once") {
+    val root = tmpDir("cdfmix")
+    val mixed = new TableStore(spark, root)
+    mixed.create("t", Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"))
+    mixed.deleteWhere("t", $"id" === 1)
+    mixed.appendWithDeletes("t", Seq((4, "d")).toDF("id", "v"),
+      Seq(1, 2).toDF("id"))
+    // no writer emits `del|` and `dv|` lines in one commit, so move
+    // version 1's vector line into version 2: version 1 becomes a
+    // no-op and version 2 removes row 1 by key AND by position
+    val m1 = java.nio.file.Paths.get(root, "t", "manifest-1")
+    val lines = new String(java.nio.file.Files.readAllBytes(m1), "UTF-8")
+      .split("\n").filterNot(_.startsWith("dv|"))
+    java.nio.file.Files.write(m1, lines.mkString("\n").getBytes("UTF-8"))
+    assert(mixed.readVersion("t", 1L).count() == 3)
+    assert(feedRows(mixed, "t", 1L, 2L) == Seq((1, "a", "delete", 2L),
+      (2, "b", "delete", 2L), (4, "d", "insert", 2L)))
+    assert(mixed.changeRowsBound("t", 1L, 2L).exists(_ >= 3L))
+    for (v <- 0L to 2L; w <- v to 2L) telescopes(mixed, "t", v, w)
+  }
+
+  test("a RESTORE in the range falls back to the bag diff") {
+    val store = freshStore()
+    store.create("t", Seq((1, "a")).toDF("id", "v"))
+    store.append("t", Seq((2, "b")).toDF("id", "v"))
+    store.restore("t", 0L)
+    // version 2 equals version 0, so the feed between them is empty,
+    // although every line of version 0 is still at version 2
+    assert(store.changes("t", 0L, 2L).isEmpty)
+    assert(store.rangeMayDelete("t", 0L, 2L))
+    store.restore("t", 1L)
+    assert(store.changes("t", 1L, 3L).isEmpty)
+    for (v <- 0L to 3L; w <- v to 3L) telescopes(store, "t", v, w)
   }
 }
