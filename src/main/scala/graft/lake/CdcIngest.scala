@@ -1,6 +1,7 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{GreaterThan, Literal}
 import org.apache.spark.sql.functions._
 import graft.ops.Cdc
 
@@ -72,8 +73,8 @@ object CdcIngest {
     val cleaned = kept.drop("row_num", "Op")
     cfg.bucketFormat match {
       case Some(fmt) =>
-        store.create(table, cleaned.withColumn(BucketCol,
-          date_format(col(cfg.dateCol), fmt)), partitionBy = Seq(BucketCol))
+        store.create(table, cleaned.withColumn(BucketCol, bucketOf(cfg, fmt)),
+          partitionBy = Seq(BucketCol))
       case None => store.create(table, cleaned)
     }
     FullLoad
@@ -85,71 +86,114 @@ object CdcIngest {
     * atomic commit (stronger than the reference's two commits). */
   def incrementalLoad(spark: SparkSession, store: TableStore, table: String,
                       source: DataFrame, cfg: Config): Outcome = {
-    // pin the snapshot: the watermark, the anti-join survivors, and
-    // the touched-bucket probe are all computed against THIS version;
-    // a concurrent commit makes the merge abort (SnapshotConflict)
-    // rather than silently replay/undo it. MoR appends keep CDC
-    // blind-append semantics (equality deletes by design apply to a
-    // racer's rows too), so no pin there.
+    // pin the snapshot: the watermark, the touched-bucket probe (one
+    // grouped scan when bucketed) and the anti-join survivors are all
+    // computed against THIS version; a concurrent commit makes the
+    // merge abort (SnapshotConflict) rather than silently replay/undo
+    // it. MoR appends keep CDC blind-append semantics (equality
+    // deletes by design apply to a racer's rows too), so no pin there.
     val rs = store.currentVersion(table).get
     val dest = store.readVersion(table, rs)
+    val bucketed = store.partitioning(table).contains(BucketCol)
+    if (bucketed && !cfg.mergeOnRead)
+      return mergeTouchedPartitions(store, table, dest, source, cfg, rs)
     // A1/A2: watermark = max(process_date) in the destination (:131)
     val maxDate = dest.agg(max(col(cfg.dateCol))).first().get(0)
-    val newRows = source.where(col(cfg.dateCol) > lit(maxDate))
-    if (newRows.isEmpty) NoNewData // C3 (:152-153), A3 via Dataset.isEmpty
-    else {
-      // localCheckpoint: the deduped batch feeds the row-count report
-      // AND 2-3 consumers per merge path (survivors + delete keys on
-      // MoR; touched-bucket probe + anti-join + union when bucketed) —
-      // one window computation, cheap re-reads, instead of re-running
-      // the dedup shuffle per consumer
-      val deduped = Cdc.dedupLatest(newRows, Seq(cfg.primaryKey),
-        (cfg.dateCol +: cfg.tiebreak).map(col(_).desc)).localCheckpoint()
-      val n = deduped.count()
-      if (cfg.mergeOnRead) {
-        val survivors0 = Cdc.dropTombstones(deduped).drop("row_num", "Op")
-        val survivors = cfg.bucketFormat match {
-          case Some(fmt) if store.partitioning(table).contains(BucketCol) =>
-            survivors0.withColumn(BucketCol, date_format(col(cfg.dateCol), fmt))
-          case _ => survivors0
-        }
-        store.appendWithDeletes(table, survivors,
-          deduped.select(cfg.primaryKey).distinct())
-      } else if (store.partitioning(table).contains(BucketCol))
-        mergeTouchedPartitions(store, table, dest, deduped, cfg, rs)
-      else {
-        val merged = CdcMerge.upsert(dest, deduped, Seq(cfg.primaryKey))
-        store.overwrite(table, merged, readSnapshot = Some(rs),
-          op = "MERGE")
+    val (deduped, n, _) = dedupObserved(
+      source.where(col(cfg.dateCol) > lit(maxDate)), cfg, None)
+    if (n == 0) return NoNewData // C3 (:152-153)
+    if (cfg.mergeOnRead) {
+      val survivors0 = Cdc.dropTombstones(deduped).drop("row_num", "Op")
+      val survivors = cfg.bucketFormat match {
+        case Some(fmt) if bucketed => survivors0.withColumn(BucketCol, bucketOf(cfg, fmt))
+        case _ => survivors0
       }
-      IncrementalLoad(n)
+      store.appendWithDeletes(table, survivors, deduped.select(cfg.primaryKey))
+    } else {
+      val merged = CdcMerge.upsert(dest, deduped, Seq(cfg.primaryKey))
+      store.overwrite(table, merged, readSnapshot = Some(rs), op = "MERGE")
     }
+    IncrementalLoad(n)
   }
 
-  /** O(touched partitions) merge: find the date buckets that contain a
-    * matched key (a column-pruned `(pk, bucket)` semi-join scan — no
-    * rewrite) plus the buckets the survivors land in, rebuild ONLY
-    * those partitions (anti-join scoped to them), and commit with the
-    * rest of the table carried by reference. At 100 TB with a daily
-    * CDC batch this rewrites a handful of partitions instead of the
-    * whole table; the bucket list itself is a tiny driver-side
-    * materialization (A2-style). */
+  /** The bucket a row lands in: its date rendered with `fmt`. */
+  private def bucketOf(cfg: Config, fmt: String): Column =
+    date_format(col(cfg.dateCol), fmt)
+
+  /** Dedup keep-latest over the rows past the watermark, localCheckpointed:
+    * the deduped batch feeds 2-3 consumers per merge path (survivors +
+    * delete keys on MoR; anti-join + union when bucketed), so the
+    * window runs once and the consumers re-read it cheaply. One
+    * Observation on that same job yields the row count and, given a
+    * bucket format, the buckets the live (non-tombstone) rows land in
+    * — no separate count() or survivor scan. Buckets are collected as
+    * 1-field structs because collect_set drops null elements and a
+    * null bucket is a real (default) partition. Returns the
+    * checkpointed batch, its row count and the survivor buckets. */
+  private def dedupObserved(newRows: DataFrame, cfg: Config,
+                            fmt: Option[String]): (DataFrame, Long, Seq[String]) = {
+    val deduped = Cdc.dedupLatest(newRows, Seq(cfg.primaryKey),
+      (cfg.dateCol +: cfg.tiebreak).map(col(_).desc))
+    val obs = new Observation()
+    val buckets = fmt.map(f => collect_set(
+      when(Cdc.live(deduped), struct(bucketOf(cfg, f)))).as("buckets"))
+    val checkpointed = deduped
+      .observe(obs, count(lit(1)).as("n"), buckets.toSeq: _*)
+      .localCheckpoint()
+    val facts = obs.get
+    val survivorBuckets = facts.get("buckets").toSeq.flatMap(
+      _.asInstanceOf[scala.collection.Seq[Row]].map(_.getString(0)))
+    (checkpointed, facts("n").asInstanceOf[Long], survivorBuckets)
+  }
+
+  /** O(touched partitions) merge, planned from ONE grouped probe of the
+    * destination: `(pk, bucket, dateCol)` left-joined to the batch's
+    * newest date per key and grouped by bucket yields, per bucket, the
+    * destination's max date and the batch's max date over the keys it
+    * holds. The watermark is the largest destination max; a bucket
+    * holds a matched key iff its batch max passes that watermark (a key
+    * is in the deduped batch iff its newest row does). The observed
+    * survivor buckets complete the touched set; ONLY those partitions
+    * are rebuilt (anti-join scoped to them) and the rest of the table
+    * is carried by reference. At 100 TB with a daily CDC batch this
+    * rewrites a handful of partitions instead of the whole table; the
+    * probe collects at most one row per partition (A2-style). */
   private def mergeTouchedPartitions(store: TableStore, table: String,
-                                     dest: DataFrame, deduped: DataFrame,
-                                     cfg: Config, readSnapshot: Long): Unit = {
+                                     dest: DataFrame, source: DataFrame,
+                                     cfg: Config, readSnapshot: Long): Outcome = {
     val fmt = cfg.bucketFormat.getOrElse(
       throw new IllegalStateException(
         s"$table is bucket-partitioned but cfg.bucketFormat is unset"))
-    val updKeys = deduped.select(cfg.primaryKey).distinct()
-    val survivors = Cdc.dropTombstones(deduped).drop("row_num", "Op")
-      .withColumn(BucketCol, date_format(col(cfg.dateCol), fmt))
+    val pk = cfg.primaryKey
+    val dateType = dest.select(cfg.dateCol).schema.head.dataType
+    // the batch max is cast to the destination's date type so both
+    // sides of the driver-side `>` share one Spark ordering (a no-op
+    // cast when the types agree, as they do for a table this loaded)
+    val batchMax = source.groupBy(col(pk))
+      .agg(max(col(cfg.dateCol)).cast(dateType).as("__batch_max"))
     // the bucket is read in its string form: partition inference types
     // a day bucket (yyyy-MM-dd) as DATE, and the string cast renders it
     // back exactly as its directory value
-    val touched = dest.join(updKeys, Seq(cfg.primaryKey), "left_semi")
-      .select(col(BucketCol).cast("string"))
-      .union(survivors.select(BucketCol))
-      .distinct().collect().map(_.getString(0))
+    val probe = dest.select(col(pk), col(BucketCol).cast("string").as(BucketCol),
+        col(cfg.dateCol))
+      .join(batchMax, Seq(pk), "left_outer")
+      .groupBy(BucketCol)
+      .agg(max(col(cfg.dateCol)), max(col("__batch_max")))
+      .collect()
+    // Spark's `>` for the column's type, the one the batch filter uses;
+    // null on either side is not greater (as in the filter)
+    def gt(a: Any, b: Any): Boolean =
+      GreaterThan(Literal.create(a, dateType), Literal.create(b, dateType))
+        .eval() == true
+    // A1/A2: watermark = max(process_date) in the destination (:131);
+    // null (empty table / all-null dates) filters every row, as before
+    val maxDate = probe.map(_.get(1)).filter(_ != null)
+      .reduceOption((a, b) => if (gt(b, a)) b else a).orNull
+    val (deduped, n, survivorBuckets) = dedupObserved(
+      source.where(col(cfg.dateCol) > lit(maxDate)), cfg, Some(fmt))
+    if (n == 0) return NoNewData // C3 (:152-153)
+    val matched = probe.filter(r => gt(r.get(2), maxDate)).map(_.getString(0))
+    val touched = (matched.toSeq ++ survivorBuckets).distinct
     val touchedSpecs = touched.map {
       case null => s"$BucketCol=__HIVE_DEFAULT_PARTITION__"
       case v    => s"$BucketCol=$v"
@@ -157,20 +201,25 @@ object CdcIngest {
     val nonNull = touched.filter(_ != null)
     val bucketMatch =
       if (touched.contains(null))
-        col(BucketCol).isNull || col(BucketCol).isin(nonNull.toSeq: _*)
-      else col(BucketCol).isin(nonNull.toSeq: _*)
+        col(BucketCol).isNull || col(BucketCol).isin(nonNull: _*)
+      else col(BucketCol).isin(nonNull: _*)
+    val survivors = Cdc.dropTombstones(deduped).drop("row_num", "Op")
+      .withColumn(BucketCol, bucketOf(cfg, fmt))
+    // deduped holds one row per key, and an anti join is set-semantic
+    // on its right side anyway: no distinct() shuffle on the keys
     val replacement = dest.where(bucketMatch)
-      .join(updKeys, Seq(cfg.primaryKey), "left_anti")
+      .join(deduped.select(pk), Seq(pk), "left_anti")
       .unionByName(survivors, allowMissingColumns = true)
     // STRICT snapshot validation (disjointAddsOk stays false): the
-    // touched-bucket probe above read EVERY partition (the pk
-    // semi-join), so a concurrent append — even into an untouched
+    // grouped probe above read EVERY partition to find the touched
+    // buckets, so a concurrent append — even into an untouched
     // bucket — can carry a matched/tombstoned key this replacement
     // never folded. Tolerating it would resurrect deleted keys;
     // aborting (SnapshotConflictException) keeps the §7.7 merge
     // exactly-once under races, as the pin comment in
     // incrementalLoad promises.
-    store.overwritePartitions(table, replacement, touchedSpecs.toSeq,
+    store.overwritePartitions(table, replacement, touchedSpecs,
       readSnapshot = Some(readSnapshot), op = "MERGE")
+    IncrementalLoad(n)
   }
 }

@@ -18,10 +18,11 @@ import org.apache.spark.sql.functions.col
   */
 object CdcMerge {
 
-  /** J1: delete-matched. Keys are deduplicated first so the anti join
-    * is a pure key-set subtraction. */
+  /** J1: delete-matched. A left anti join is already a key-set
+    * subtraction (duplicate update keys change nothing), so the keys
+    * go in as they are — no `distinct()` shuffle ahead of it. */
   def deleteMatched(target: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame =
-    target.join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    target.join(updates.select(keys.map(col): _*), keys, "left_anti")
 
   /** Full upsert-with-delete-propagation: target rows whose key is
     * updated are dropped, then surviving (non-tombstone) update rows are

@@ -1930,8 +1930,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     * dirs the racer never wrote). That is sound ONLY when the
     * transaction's READS were confined to the touched partitions —
     * the caller asserts that by passing true. A merge whose probe
-    * scanned the whole table (e.g. a pk semi-join deciding which
-    * buckets are touched) must stay strict: a concurrent append of a
+    * scanned the whole table (e.g. CdcIngest's grouped pk probe
+    * deciding which buckets are touched) must stay strict: a concurrent append of a
     * matched key into an UNtouched bucket is a logical conflict its
     * replacement frame can't see, and tolerating it resurrects
     * deleted keys. Default = strict (abort on any concurrent change

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -61,15 +61,13 @@ object Cdc {
     * process_date desc.
     */
   def dedupLatest(df: DataFrame, keyCols: Seq[String],
-                  orderCols: Seq[org.apache.spark.sql.Column]): DataFrame = {
+                  orderCols: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(orderCols: _*)
     df.withColumn("row_num", row_number().over(w))
       .where(col("row_num") === 1)
       .drop("row_num")
   }
 
-  /** P6: CDC tombstone predicate — keep op IS NULL OR op IN (I, U)
-    * (icberg/iceberg_tables.py:35,:51). */
   /** Slowly-changing-dimension Type 2 build: turn a change log
     * (key, attributes, change time) into versioned dimension rows with
     * `valid_from` / `valid_to` / `is_current` — the standard lakehouse
@@ -106,8 +104,14 @@ object Cdc {
       .withColumn("is_current", col("valid_to").isNull)
   }
 
+  /** P6: CDC tombstone predicate — keep op IS NULL OR op IN (I, U)
+    * (icberg/iceberg_tables.py:35,:51); every row is live when `df`
+    * has no op column. One Column, so a filter and an aggregate over
+    * the same rows (CdcIngest's observed survivor buckets) agree. */
+  def live(df: DataFrame): Column =
+    if (hasOpCol(df)) col("op").isNull || col("op").isin("I", "U")
+    else lit(true)
+
   def dropTombstones(df: DataFrame): DataFrame =
-    if (hasOpCol(df))
-      df.where(col("op").isNull || col("op").isin("I", "U"))
-    else df
+    if (hasOpCol(df)) df.where(live(df)) else df
 }
