@@ -39,8 +39,9 @@ object CdcIngest {
       /** Merge-on-read: incremental merges commit O(batch) equality
         * deletes + appended survivors with ZERO rewrite (takes
         * precedence over the partition-rewrite path). Read-side debt
-        * grows one broadcast anti-join per commit — compact on a
-        * cadence (`TableStore.compact`, gauge via `deleteDebt`). */
+        * grows by each commit's keys in the delete set every read
+        * filters by — compact on a cadence (`TableStore.compact`,
+        * gauge via `deleteDebt`). */
       mergeOnRead: Boolean = false)
 
   /** Hive partition column name used by the bucketed layout. */

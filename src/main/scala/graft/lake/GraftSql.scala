@@ -1093,7 +1093,7 @@ object GraftSql {
     val alias = aliasOf(d.table).getOrElse(target)
     // deletion-vector mode: commit row POSITIONS instead of rewriting
     // survivors — O(deleted rows) written, not O(table); the read pays
-    // one broadcast anti join until OPTIMIZE/compact folds it. SQL
+    // one delete-set filter until OPTIMIZE/compact folds it. SQL
     // semantics unchanged (TRUE deletes; NULL keeps the row).
     if (spark.conf.get("spark.graft.delete.deletionVectors", "false")
         .toBoolean) {

@@ -60,11 +60,14 @@ final class StatsFileIndex(
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val dirs = inner.listFiles(partitionFilters, dataFilters)
-    if (dataFilters.isEmpty) return dirs
+    // a merge-on-read delete-set probe is never decided by file stats:
+    // leave it out rather than stream the sidecar for it on every read
+    val prunable = dataFilters.filterNot(_.exists(_.isInstanceOf[InDeleteSet]))
+    if (prunable.isEmpty) return dirs
     val bloomRejected: Set[String] =
-      dataFilters.flatMap(e => StatsFileIndex.rejectsOf(e, bloomRejects))
+      prunable.flatMap(e => StatsFileIndex.rejectsOf(e, bloomRejects))
         .foldLeft(Set.empty[String])(_ ++ _)
-    val statRejected = statsRejects(dataFilters)
+    val statRejected = statsRejects(prunable)
     if (statRejected.isEmpty && bloomRejected.isEmpty) dirs
     else dirs.map { pd =>
       pd.copy(files = pd.files.filter { f =>

@@ -45,7 +45,7 @@ import java.util.UUID
   * holding matched keys (O(touched), not O(table));
   * `appendWithDeletes` goes further — merge-on-read equality deletes
   * (Iceberg v2 style) make a merge O(batch) with zero rewrite, paying
-  * one broadcast anti-join per commit at read until `compact`. Full
+  * one delete-set filter per commit group at read until `compact`. Full
   * `overwrite` rewrites by nature. Reads
   * resolve a manifest once and only ever see fully-written, immutable
   * files. Time travel reads any retained manifest; `vacuum` deletes
@@ -439,8 +439,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     * group that appears BEFORE it in the manifest — within one commit
     * the delete lines precede the commit's own data files, so a batch
     * can delete-and-reinsert a key atomically. Each affected group
-    * anti-joins the union of its later delete sets (small, broadcast);
-    * `compact` folds the debt away. */
+    * drops the rows in the union of its later delete sets (one filter
+    * over driver-built hash sets, see [[DeleteSet]]); `compact` folds
+    * the debt away. */
   def readVersion(table: String, v: Long): DataFrame =
     columnMapping(table, v).applyRead(
       readLines(table, manifest(table, v),
@@ -528,7 +529,8 @@ final class TableStore(private[graft] val spark: SparkSession,
       val schema =
         if (!flat) None
         else metas.flatMap(ms => SchemaCache.get(SchemaCache.keyOf(
-          ms.map { case (f, len, mt) => s"$f#$len#$mt" })))
+          ms.map { case (f, len, mt) => s"$f#$len#$mt" }))
+          .orElse(commitDirSchema(files.map(new Path(_)))))
       Grp(base, files, minIdx,
         dels.collect { case (f, i) if i > minIdx => f },
         dvs.collect { case (f, i) if i > minIdx => f },
@@ -564,55 +566,29 @@ final class TableStore(private[graft] val spark: SparkSession,
       // identified by (file, row position in file) — `_metadata`
       // columns, zero storage cost on the data. A vector applies to
       // groups BEFORE it in the manifest, same rule as equality
-      // deletes; the vectors are tiny (positions of deleted rows
-      // only), so the merge is one broadcast anti join per group.
+      // deletes. Both delete kinds are KB-sized, so the group's merge
+      // is one filter over driver-built delete sets (DeleteSet).
       val dvApplicable = dvs.collect { case (f, i) if i > minIdx => f }
-      val df0 =
-        if (dvApplicable.isEmpty && !withRowId) raw
-        else {
-          val tagged = raw.select(col("*"),
-            col("_metadata.file_path").as(RowFileCol),
-            col("_metadata.row_index").as(RowPosCol))
-          val merged =
-            if (dvApplicable.isEmpty) tagged
-            else tagged.join(
-              org.apache.spark.sql.functions.broadcast(
-                dvPositions(dvApplicable)), atDvPosition, "left_anti")
-          if (withRowId) merged else merged.drop(RowFileCol, RowPosCol)
-        }
       val applicable = dels.collect { case (f, i) if i > minIdx => f }
-      if (applicable.isEmpty) df0
-      else {
-        val keys = delKeys(applicable)
-        df0.join(org.apache.spark.sql.functions.broadcast(keys),
-          keys.columns.toSeq, "left_anti")
-      }
+      val tagged =
+        if (dvApplicable.isEmpty && !withRowId) raw
+        else raw.select(col("*"),
+          col("_metadata.file_path").as(RowFileCol),
+          col("_metadata.row_index").as(RowPosCol))
+      val deleted = Option.when(dvApplicable.nonEmpty)(inVectors(dvApplicable)) ++
+        Option.when(applicable.nonEmpty)(
+          DeleteSet.inKeys(spark, hadoopConf, applicable, tagged))
+      val kept = deleted.reduceOption(_ || _).fold(tagged)(d => tagged.where(!d))
+      if (withRowId || dvApplicable.isEmpty) kept
+      else kept.drop(RowFileCol, RowPosCol)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** The equality-delete keys of `files` (`del|` lines). mergeSchema:
-    * delete files from different commits must agree on the key
-    * columns; a missing column would null-fill and a null key never
-    * anti-matches, silently resurrecting rows. The merged schema is
-    * cached on the immutable file set (SchemaCache) and supplied
-    * explicitly, so repeat reads skip the distributed inference job;
-    * per-file missing columns null-fill identically under a supplied
-    * merged schema. */
-  private def delKeys(files: Seq[String]): DataFrame = {
-    val schema = SchemaCache.getOrInfer(SchemaCache.keyOf("del" +: files)) {
-      spark.read.option("mergeSchema", "true").parquet(files: _*).schema
-    }
-    spark.read.schema(schema).parquet(files: _*)
-  }
-
-  /** Deletion-vector `files`' positions, under their one known schema
-    * (inferring it would be a Spark job). */
-  private def dvPositions(files: Seq[String]): DataFrame =
-    spark.read.schema(DvSchema).parquet(files: _*)
-
-  /** A `withRowId` read's row sits at a vector position. */
-  private def atDvPosition: Column =
-    col(RowFileCol) === col(DvFileCol) && col(RowPosCol) === col(DvPosCol)
+  /** A row-id-tagged read's row sits at a position vectors `files`
+    * hold. */
+  private def inVectors(files: Seq[String]): Column =
+    DeleteSet.inVectors(spark, hadoopConf, files, DvSchema,
+      col(RowFileCol), col(RowPosCol))
 
   /** One commit group's scan, built the way `spark.read.parquet`
     * builds it (same [[org.apache.spark.sql.execution.datasources.InMemoryFileIndex]]
@@ -664,16 +640,20 @@ final class TableStore(private[graft] val spark: SparkSession,
     // listing itself already happened above, so the key costs no
     // extra IO. Coalesced scans supply the schema (their merge
     // precondition is that every group's schema is cached and equal),
-    // so they never infer.
-    val dataSchema = knownSchema.getOrElse {
-      val key = SchemaCache.keyOf(listed.map(f =>
-        s"${f.getPath}#${f.getLen}#${f.getModificationTime}").toSeq)
-      SchemaCache.getOrInfer(key) {
-        fmt.inferSchema(spark, opts, listed).getOrElse(
-          throw new IllegalStateException(
-            s"could not infer parquet schema under ${base.getOrElse(files.head)}"))
+    // so they never infer. A subset of one commit dir's files (its
+    // file-set key then misses) takes the schema its commit seeded
+    // under the dir name.
+    val dataSchema = knownSchema
+      .orElse(commitDirSchema(listed.map(_.getPath).toSeq))
+      .getOrElse {
+        val key = SchemaCache.keyOf(listed.map(f =>
+          s"${f.getPath}#${f.getLen}#${f.getModificationTime}").toSeq)
+        SchemaCache.getOrInfer(key) {
+          fmt.inferSchema(spark, opts, listed).getOrElse(
+            throw new IllegalStateException(
+              s"could not infer parquet schema under ${base.getOrElse(files.head)}"))
+        }
       }
-    }
     val rel = HadoopFsRelation(new StatsFileIndex(index, statsRejects, bloomRejects),
       partSchema, dataSchema, None, fmt, opts)(spark)
     spark.baseRelationToDataFrame(rel)
@@ -704,6 +684,27 @@ final class TableStore(private[graft] val spark: SparkSession,
     * starts with `d-`. */
   private val CommitDirPattern =
     "^d-[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}$".r
+
+  /** SchemaCache key of the schema `commit` seeds under its commit
+    * dir's name: every file in a `d-<uuid>` dir comes from one Spark
+    * write, so any subset of them shares that schema. */
+  private def commitDirKey(dir: String): String =
+    SchemaCache.keyOf(Seq("dir", dir))
+
+  /** The seeded schema of the one commit dir holding every file of
+    * `files` (directly or under hive `k=v` dirs); None when they span
+    * dirs, sit in a foreign (CONVERTed) dir, or none was seeded. */
+  private def commitDirSchema(files: Seq[Path])
+      : Option[org.apache.spark.sql.types.StructType] = {
+    def dirOf(f: Path): Option[String] =
+      Iterator.iterate(f.getParent)(_.getParent).takeWhile(_ != null)
+        .find(!_.getName.contains("=")).map(_.getName)
+        .filter(n => CommitDirPattern.matches(n))
+    files.map(dirOf).distinct match {
+      case Seq(Some(dir)) => SchemaCache.get(commitDirKey(dir))
+      case _ => None
+    }
+  }
 
   /** Stats-pruned read: drop data files whose per-file min/max
     * ([[FileStats]], `stats-<n>` sidecar) cannot intersect `pred`
@@ -1448,8 +1449,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     * partition rewrite at all. The delete applies to every PRIOR
     * commit's rows; `df`'s own rows are exempt (delete lines precede
     * them in the manifest), so a CDC batch deletes-and-reinserts a key
-    * atomically. Each MoR commit adds one broadcast anti-join of
-    * read-side debt — fold it periodically with `compact`.
+    * atomically. Each MoR commit adds its keys to every earlier
+    * group's read-side delete set — fold it periodically with
+    * `compact`.
     * `readSnapshot` (optional): CDC semantics make equality deletes
     * apply to ANY prior commit — including one that raced in after
     * this batch was computed (Iceberg allows the same) — so the
@@ -1461,7 +1463,7 @@ final class TableStore(private[graft] val spark: SparkSession,
                         txn: Option[(String, Long)] = None): Unit = {
     require(exists(table), s"table $table does not exist")
     val delDir = new Path(tablePath(table), s"x-${UUID.randomUUID()}")
-    // delete keys anti-join raw (physical) data groups at read time,
+    // delete keys filter raw (physical) data groups at read time,
     // so a key on a renamed column must be stored physically too
     currentMapping(table).applyWrite(deleteKeys, table)
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(delDir.toString)
@@ -1479,10 +1481,11 @@ final class TableStore(private[graft] val spark: SparkSession,
     * key needed) without rewriting a single data file. One pruned
     * scan finds the matching rows' (file, row-position) identities
     * (`_metadata` columns — free, no storage cost on the data), the
-    * positions commit as a tiny `dv|` sidecar, and reads anti-join it
-    * per commit group — broadcast, the vector holds deleted positions
-    * only. At 100 TB with wide rows this turns "rewrite every touched
-    * file for a 0.1% delete" into "append KBs of positions".
+    * positions commit as a tiny `dv|` sidecar, and reads filter each
+    * commit group by a driver-built set of its positions — the vector
+    * holds deleted positions only. At 100 TB with wide rows this turns
+    * "rewrite every touched file for a 0.1% delete" into "append KBs
+    * of positions".
     * Snapshot-checked like every read-then-write: positions computed
     * against version `rs` must not publish over a concurrent data
     * change — on a lost race the delete RECOMPUTES against the new
@@ -1613,10 +1616,10 @@ final class TableStore(private[graft] val spark: SparkSession,
           if (attempts >= 8) throw e
           // two straight losses mean a HOT writer: without priority
           // the fold defers forever and the table's merge-on-read
-          // debt (one anti-join per read) grows unbounded. Raise the
-          // janitor claim — writers back off at their claim point
-          // until the fold lands or the marker's TTL expires — and
-          // recompute from the new head.
+          // debt (a delete-set filter on every read) grows unbounded.
+          // Raise the janitor claim — writers back off at their claim
+          // point until the fold lands or the marker's TTL expires —
+          // and recompute from the new head.
           if (attempts >= 2 && !raised) { raiseJanitor(table); raised = true }
         }
       }
@@ -2431,6 +2434,10 @@ final class TableStore(private[graft] val spark: SparkSession,
         val meta = FsListing.dataFilesWithMeta(dataDir, hadoopConf)
         val key = SchemaCache.keyOf(meta.map(t => s"${t._1}#${t._2}#${t._3}"))
         SchemaCache.getOrInfer(key)(st)
+        // also under the dir name, for reads of a SUBSET of the group
+        // (a partition overwrite superseded some of its files, or a
+        // feed reads only the files a vector names)
+        SchemaCache.getOrInfer(commitDirKey(dataDir.getName))(st)
       }
     } catch { case scala.util.control.NonFatal(_) => () }
 
@@ -2747,18 +2754,20 @@ final class TableStore(private[graft] val spark: SparkSession,
     * COMMIT BY COMMIT from each commit's own manifest lines, the Delta
     * Lake change-feed design: inserts are the commit's new data files
     * as committed, and deletes are the previous version's rows the
-    * commit removed — those matching its equality-delete keys and
-    * those at its deletion vectors' (file, row position) entries, one
-    * broadcast semi join each. That is O(changed data) on the insert
-    * side and joins only KB-sized delete files on the delete side —
-    * no shuffle, the property that makes a daily feed off a 100 TB
-    * table cheap. A range containing a rewrite (overwrite / compact /
-    * partition overwrite / restore: some commit drops a line its
-    * predecessor had) falls back to a full bag diff (`exceptAll` both
-    * ways — null-safe, multiplicity-exact) with attribution collapsed
-    * to `toV`, as rewrites don't preserve row-level lineage. */
+    * commit removed — those matching its equality-delete keys or at
+    * its deletion vectors' (file, row position) entries, one filter
+    * over driver-built delete sets ([[DeleteSet]]). A vector-only
+    * commit reads only the data files its vectors name. That is
+    * O(changed data) on the insert side and, for vectors, on the
+    * delete side too — no join and no shuffle, the property that
+    * makes a daily feed off a 100 TB table cheap. A range containing a
+    * rewrite (overwrite / compact / partition overwrite / restore:
+    * some commit drops a line its predecessor had) falls back to a
+    * full bag diff (`exceptAll` both ways — null-safe,
+    * multiplicity-exact) with attribution collapsed to `toV`, as
+    * rewrites don't preserve row-level lineage. */
   def changes(table: String, fromV: Long, toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast => bc, col, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     require(fromV <= toV, s"fromV $fromV must be <= toV $toV")
     def tagged(df: DataFrame, kind: String, v: Long): DataFrame =
       df.withColumn("_change_type", lit(kind))
@@ -2798,30 +2807,30 @@ final class TableStore(private[graft] val spark: SparkSession,
         // removed: the row is gone from the v-1 view, so no phantom
         // second delete; and a vector's positions are rows live at
         // v-1 by construction. A row both a key and a vector remove
-        // emits once. The joins run RAW (physical names on both
+        // emits once. The filter runs RAW (physical names on both
         // sides); the row ids drop before the mapping.
         val keyFiles = newLines.filter(_.startsWith(DelPrefix)).map(lineFile)
         val dvFiles = newLines.filter(_.startsWith(DvPrefix)).map(lineFile)
-        val del =
-          if (keyFiles.isEmpty && dvFiles.isEmpty) None
+        // a vector-only commit removes rows of the files its vectors
+        // name and nothing else: read just those (and v-1's delete
+        // lines, in manifest order) — O(changed files), not O(table)
+        val prevLines =
+          if (dvFiles.isEmpty || keyFiles.nonEmpty) plan.lines(v - 1)
           else {
-            val prev = readLines(table, plan.lines(v - 1),
-              withRowId = dvFiles.nonEmpty)
-            def byKey(df: DataFrame) = {
-              val keys = delKeys(keyFiles)
-              df.join(bc(keys), keys.columns.toSeq, "left_semi")
-            }
-            val removed =
-              if (dvFiles.isEmpty) byKey(prev)
-              else {
-                val pos = bc(dvPositions(dvFiles))
-                val byPos = prev.join(pos, atDvPosition, "left_semi")
-                (if (keyFiles.isEmpty) byPos
-                 else byPos.unionByName(
-                   byKey(prev.join(pos, atDvPosition, "left_anti"))))
-                  .drop(RowFileCol, RowPosCol)
-              }
-            Some(tagged(mvTo.applyRead(removed), "delete", v))
+            val named = DeleteSet.vectorTargets(spark, hadoopConf, dvFiles, DvSchema)
+            plan.lines(v - 1).filter(l => isDeleteLine(l) || named(new Path(l)))
+          }
+        val del =
+          if (keyFiles.isEmpty && dvFiles.isEmpty || prevLines.forall(isDeleteLine)) None
+          else {
+            val prev = readLines(table, prevLines, withRowId = dvFiles.nonEmpty)
+            val removed = Option.when(dvFiles.nonEmpty)(inVectors(dvFiles)) ++
+              Option.when(keyFiles.nonEmpty)(
+                DeleteSet.inKeys(spark, hadoopConf, keyFiles, prev))
+            val rows = prev.where(removed.reduce(_ || _))
+            Some(tagged(mvTo.applyRead(
+              if (dvFiles.isEmpty) rows else rows.drop(RowFileCol, RowPosCol)),
+              "delete", v))
           }
         ins.toSeq ++ del.toSeq
       }
@@ -3101,7 +3110,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     * recorded from parquet footers — answers without a scan or a job,
     * the way Iceberg serves `count(*)` from manifests. None when
     * metadata can't be exact: pending equality deletes (rows need the
-    * anti join) or any data file lacking a recorded count (pre-stats
+    * delete-set filter) or any data file lacking a recorded count (pre-stats
     * commits). */
   def fastRowCount(table: String): Option[Long] = {
     if (deleteDebt(table) != 0) return None
@@ -3168,9 +3177,10 @@ final class TableStore(private[graft] val spark: SparkSession,
     val retained = versions(table)
     val lines = manifest(table, cur)
     val (dels, data) = lines.partition(isDeleteLine)
-    // deletion-vector debt gets its own gauge: every dv| entry is one
-    // broadcast anti-join on EVERY read until compacted, so count and
-    // bytes are the numbers a maintenance policy thresholds on
+    // deletion-vector debt gets its own gauge: every dv| entry is
+    // decoded into the delete set EVERY read filters by until
+    // compacted, so count and bytes are the numbers a maintenance
+    // policy thresholds on
     val dvs = dels.filter(_.startsWith(DvPrefix)).map(_.stripPrefix(DvPrefix))
     val dvBytes = dvs.map { f =>
       val p = new Path(f); fs(p).getFileStatus(p).getLen }.sum

@@ -580,7 +580,7 @@ object VectorIndex {
   /** Propagate corpus deletes into the persisted index: drop `ids`'
     * vectors from the inverted lists as merge-on-read EQUALITY
     * deletes — one O(batch) commit, no list rewrite (the store
-    * anti-joins the keys at read; `OPTIMIZE`/compact folds the debt
+    * filters the keys out at read; `OPTIMIZE`/compact folds the debt
     * away). Without this, a dedup purge or CDC delete on the corpus
     * leaves the index serving stale ids forever. The contract —
     * search-after-delete ≡ search over an index rebuilt from the

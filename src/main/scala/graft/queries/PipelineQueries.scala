@@ -92,7 +92,7 @@ object PipelineQueries {
     * after the three merges, `deleteWhere(value < 20)` commits a
     * DELETION VECTOR — row positions, no file rewritten, a non-key
     * predicate no equality delete could express — and the final read
-    * pays one broadcast anti join against the vector. Oracle = the
+    * pays one delete-set filter over the vector. Oracle = the
     * batch-replay invariant with the purge predicate applied last. */
   val cdcPipelineE2eDv: Entry = Entry(
     "cdc_pipeline_e2e_dv",
@@ -1468,7 +1468,7 @@ object PipelineQueries {
     * per-version insert/delete rows. The oracle rebuilds the feed with
     * set algebra over `orders`: the appended slice at v1, the deleted
     * slice and the new slice at v2. Append-only history reads ONLY the
-    * range's new files (plus one broadcast semi join per del commit);
+    * range's new files (plus one delete-set filter per del commit);
     * nothing rescans the base table. */
   val tableChanges: Entry = Entry(
     "table_changes_feed",

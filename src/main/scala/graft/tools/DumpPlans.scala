@@ -55,7 +55,7 @@ object DumpPlans {
     // double window, bloom point lookup (file-skipped scan)
     "multimodal_phash_neardup", "q21_exclusive_late",
     "mmr_diversified_topk", "scd2_dimension_build", "bloom_point_lookup",
-    // round 8: dv-purged CDC pipeline (broadcast anti vs the position
+    // round 8: dv-purged CDC pipeline (delete-set filter over the position
     // vector), codegen'd bloom decontamination (no UDF fence),
     // vocab-bounded BPE budget (one corpus shuffle + broadcast map),
     // deterministic KMV+histogram sketches, transactional transfer

@@ -18,6 +18,19 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `e` with its floating-point values normalized the way join keys
+    * are (`NaN`s equal, `-0.0` = `0.0`) — the `private[sql]`
+    * `NormalizeFloatingNumbers.normalize`; `e` must be resolved. */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
+  /** Two parquet schemas merged the way `mergeSchema` merges footers
+    * (the `private[sql]` `StructType.merge`). */
+  def mergeSchemas(a: org.apache.spark.sql.types.StructType,
+                   b: org.apache.spark.sql.types.StructType,
+                   caseSensitive: Boolean): org.apache.spark.sql.types.StructType =
+    a.merge(b, caseSensitive)
+
   /** A DataFrame over an already-analyzed logical plan, attribute ids
     * preserved — how the row-level DML commands re-enter the target /
     * source relations their resolved expressions reference

@@ -45,6 +45,15 @@ trait SparkSpec extends AnyFunSuite {
     scans(plan).sum
   }
 
+  /** Delete-set probes ([[graft.lake.InDeleteSet]]) in the filters of
+    * `df`'s optimized plan: a read with merge-on-read debt has one per
+    * commit group and delete kind. */
+  def deleteSetProbes(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.collect { case _: graft.lake.InDeleteSet => 1 }.sum
+    }.sum
+
   /** The query executions Spark completed while `body` ran. */
   def executionsDuring(body: => Unit)
       : Seq[org.apache.spark.sql.execution.QueryExecution] = {

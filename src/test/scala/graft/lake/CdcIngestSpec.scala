@@ -268,6 +268,27 @@ class CdcIngestSpec extends SparkSpec {
     assert(keys(store.read("t")) == Seq("k2", "k3", "k4", "k5"))
   }
 
+  test("the first read after a bucketed merge runs one Spark job") {
+    val bucketed = CdcIngest.Config(bucketFormat = Some("yyyy-MM"))
+    val store = new TableStore(spark, tmpDir("ingest"))
+    CdcIngest.ingest(spark, store, "t", cdc(
+      ("k1", "2024-01-05 10:00:00", "I"),
+      ("k2", "2024-02-05 10:00:00", "I"),
+      ("k3", "2024-03-05 10:00:00", "I")), bucketed)
+    // rewrites the full load's 2024-02 bucket: that commit group's
+    // remaining files no longer form the file set its schema was
+    // cached under, so only the commit dir's seeded schema spares a
+    // distributed schema-inference job
+    CdcIngest.ingest(spark, store, "t", cdc(
+      ("k2", "2024-04-01 10:00:00", "U")), bucketed)
+    val v = store.currentVersion("t").get
+    assert(store.manifest("t", 0L).exists(l => !store.manifest("t", v).contains(l)))
+    var got = Seq.empty[String]
+    val jobs = jobsDuring { got = keys(store.read("t")) }
+    assert(jobs == 1, s"$jobs Spark jobs for the first read after a merge")
+    assert(got == Seq("k1", "k2", "k3"))
+  }
+
   test("replaying batches equals one full load when timestamps are unique") {
     val all = cdc(
       ("k1", "2024-01-01 10:00:00", "I"),
