@@ -2818,7 +2818,12 @@ final class TableStore(private[graft] val spark: SparkSession,
           if (dvFiles.isEmpty || keyFiles.nonEmpty) plan.lines(v - 1)
           else {
             val named = DeleteSet.vectorTargets(spark, hadoopConf, dvFiles, DvSchema)
-            plan.lines(v - 1).filter(l => isDeleteLine(l) || named(new Path(l)))
+            val kept = plan.lines(v - 1).filter(l => isDeleteLine(l) || named(new Path(l)))
+            // a name that matched no line would silently drop its deletes
+            if (kept.count(!isDeleteLine(_)) != named.size)
+              throw new IllegalStateException(
+                s"deletion vectors of $table version $v name files not live at ${v - 1}")
+            kept
           }
         val del =
           if (keyFiles.isEmpty && dvFiles.isEmpty || prevLines.forall(isDeleteLine)) None
