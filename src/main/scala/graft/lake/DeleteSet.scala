@@ -4,12 +4,12 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCoercion
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EqualTo, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral, GenerateUnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.col
@@ -32,8 +32,8 @@ import org.apache.spark.sql.types.{BooleanType, DataType, StructType}
   * Join semantics are kept exactly: key rows with a null field are
   * dropped (a null never joins), floating-point fields are normalized
   * the way join keys are (`NaN`s equal, `-0.0` = `0.0`), and a key
-  * column whose type differs from the table's compares in their wider
-  * common type, as the join's coercion would.
+  * column whose type differs from the table's compares in the type the
+  * session's analyzer coerces the join's `=` to.
   *
   * Decoded rows are cached per process on the file's
   * (path, length, mtime) identity, like [[SchemaCache]]: a delete file
@@ -73,7 +73,7 @@ private[lake] object DeleteSet {
             s"(have ${scan.columns.mkString(", ")})"))
       val t =
         if (s.dataType == k.dataType) s.dataType
-        else TypeCoercion.findWiderTypeForTwo(s.dataType, k.dataType).getOrElse(
+        else comparisonType(spark, s.dataType, k.dataType).getOrElse(
           throw new IllegalArgumentException(
             s"delete key column ${k.name}: ${k.dataType.catalogString} " +
               s"does not compare with ${s.dataType.catalogString}"))
@@ -81,6 +81,21 @@ private[lake] object DeleteSet {
     }
     member(spark, decoded, merged.fieldNames.toSeq, keyCols.map(_._2), keyCols.map(_._1))
   }
+
+  /** The type the session's analyzer compares a `table`-typed column
+    * and a `key`-typed one in, as it coerces a join's `=` (ANSI mode
+    * or not): e.g. a string key against a long column compares as
+    * long, so `"07"` matches `7L`. None when they do not compare. Only
+    * analyzes an empty relation; runs no job. */
+  private def comparisonType(spark: SparkSession, table: DataType,
+                             key: DataType): Option[DataType] =
+    try {
+      val probe = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        new StructType().add("t", table).add("k", key)).where(col("t") === col("k"))
+      probe.queryExecution.analyzed.collectFirst {
+        case Filter(EqualTo(l, _), _) => l.dataType
+      }
+    } catch { case _: AnalysisException => None }
 
   /** The data files deletion vectors `files` name, as Hadoop paths:
     * `_metadata.file_path` is URL-encoded ([[SparkPath]]), manifest

@@ -3,7 +3,8 @@ package graft.lake
 import org.apache.spark.sql.types.StructType
 
 /** Process-wide cache of merge-inferred parquet schemas, keyed on the
-  * exact (immutable) file set.
+  * exact (immutable) file set, or on a commit dir's name for the schema
+  * its one Spark write gave every file in it (seeded at commit).
   *
   * Why: `mergeSchema` inference (`ParquetFileFormat.inferSchema` /
   * `spark.read.option("mergeSchema", ...)`) launches a DISTRIBUTED

@@ -508,10 +508,12 @@ final class TableStore(private[graft] val spark: SparkSession,
     //  (c) every file sits directly under its commit dir (no hive
     //      partition dirs, so basePath-driven partition resolution is
     //      a no-op for the multi-root index).
-    // Schemas come from the commit-seeded SchemaCache via a driver
-    // stat of the exact manifest files — no Spark job; a group whose
-    // schema is not cached stays a single-group scan (its statsScan
-    // run caches it for the next read).
+    // Schemas come from the SchemaCache with no Spark job: the one
+    // its commit seeded under the commit dir name, else (a foreign or
+    // CONVERTed dir) the one an earlier statsScan inferred under the
+    // exact manifest files' identity. A group whose schema is not
+    // cached stays a single-group scan (its statsScan run caches it
+    // for the next read).
     final case class Grp(base: String, files: Seq[String], minIdx: Int,
                          delSet: Seq[String], dvSet: Seq[String],
                          flat: Boolean,
@@ -528,9 +530,9 @@ final class TableStore(private[graft] val spark: SparkSession,
       // partitioned groups never coalesce
       val schema =
         if (!flat) None
-        else metas.flatMap(ms => SchemaCache.get(SchemaCache.keyOf(
-          ms.map { case (f, len, mt) => s"$f#$len#$mt" }))
-          .orElse(commitDirSchema(files.map(new Path(_)))))
+        else commitDirSchema(files.map(new Path(_)))
+          .orElse(metas.flatMap(ms => SchemaCache.get(SchemaCache.keyOf(
+            ms.map { case (f, len, mt) => s"$f#$len#$mt" }))))
       Grp(base, files, minIdx,
         dels.collect { case (f, i) if i > minIdx => f },
         dvs.collect { case (f, i) if i > minIdx => f },
@@ -634,15 +636,15 @@ final class TableStore(private[graft] val spark: SparkSession,
         (inMem: FileIndex, inMem.partitionSchema, inMem.allFiles())
     }
     val fmt = new ParquetFileFormat
-    // merge-inference launches a DISTRIBUTED footer job per CALL, and
-    // the group's file set is immutable — cache the merged schema on
-    // the listed (path, size, mtime) identity (SchemaCache doc). The
-    // listing itself already happened above, so the key costs no
-    // extra IO. Coalesced scans supply the schema (their merge
-    // precondition is that every group's schema is cached and equal),
-    // so they never infer. A subset of one commit dir's files (its
-    // file-set key then misses) takes the schema its commit seeded
-    // under the dir name.
+    // merge-inference launches a DISTRIBUTED footer job per CALL.
+    // Coalesced scans supply the schema (their merge precondition is
+    // that every group's schema is cached and equal), so they never
+    // infer. Files of one commit dir, any subset of them, take the
+    // schema their commit seeded under the dir name. Anything else (a
+    // foreign or CONVERTed dir) infers once and caches the merged
+    // schema on the listed (path, size, mtime) identity, which is
+    // immutable (SchemaCache doc); the listing already happened
+    // above, so the key costs no extra IO.
     val dataSchema = knownSchema
       .orElse(commitDirSchema(listed.map(_.getPath).toSeq))
       .getOrElse {
@@ -2431,12 +2433,9 @@ final class TableStore(private[graft] val spark: SparkSession,
       sparkSchema.foreach { json =>
         val st = org.apache.spark.sql.types.DataType.fromJson(json)
           .asInstanceOf[org.apache.spark.sql.types.StructType]
-        val meta = FsListing.dataFilesWithMeta(dataDir, hadoopConf)
-        val key = SchemaCache.keyOf(meta.map(t => s"${t._1}#${t._2}#${t._3}"))
-        SchemaCache.getOrInfer(key)(st)
-        // also under the dir name, for reads of a SUBSET of the group
+        // keyed on the dir name, so a read of any SUBSET of the group
         // (a partition overwrite superseded some of its files, or a
-        // feed reads only the files a vector names)
+        // feed reads only the files a vector names) finds it too
         SchemaCache.getOrInfer(commitDirKey(dataDir.getName))(st)
       }
     } catch { case scala.util.control.NonFatal(_) => () }

@@ -174,6 +174,30 @@ class DeleteSetSpec extends SparkSpec {
     assert(interpreted == generated)
   }
 
+  test("string keys on a long column match as the session's join coerces them") {
+    val base = (1 to 9).map(i => (i.toLong, s"v$i")).toDF("id", "s")
+    val extra = Seq((10L, "w")).toDF("id", "s")
+    def ids(df: DataFrame): Seq[Long] = df.select("id").as[Long].collect().toSeq.sorted
+    // the join compares string against long as long: "07" and " 8" match
+    val keys = Seq("07", " 8", "3").toDF("id")
+    val store = new TableStore(spark, tmpDir("dset"))
+    store.create("t", base)
+    store.appendWithDeletes("t", extra, keys)
+    val read = ids(store.read("t"))
+    assert(read == ids(base.join(keys, Seq("id"), "left_anti").unionByName(extra)))
+    assert(read == Seq(1L, 2L, 4L, 5L, 6L, 9L, 10L))
+    // a key that does not parse fails the read exactly when it fails the
+    // join (ANSI mode), else matches nothing
+    val bad = Seq("x", "5").toDF("id")
+    val badStore = new TableStore(spark, tmpDir("dset"))
+    badStore.create("t", base)
+    badStore.appendWithDeletes("t", extra, bad)
+    val joined = scala.util.Try(ids(base.join(bad, Seq("id"), "left_anti").unionByName(extra)))
+    val ours = scala.util.Try(ids(badStore.read("t")))
+    assert(ours.isFailure == joined.isFailure, s"join $joined, read $ours")
+    if (joined.isSuccess) assert(ours.get == joined.get)
+  }
+
   test("file-stats pruning leaves delete-set probes out") {
     import org.apache.spark.sql.catalyst.expressions.{Expression, GreaterThan, Literal, Not, UnsafeRow}
     val asked = scala.collection.mutable.ArrayBuffer.empty[Seq[Expression]]
