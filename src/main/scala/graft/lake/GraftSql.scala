@@ -1,54 +1,32 @@
 package graft.lake
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedIdentifier, UnresolvedTableValuedFunction}
-import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AddColumns, AddConstraint, Assignment, CreateTableAsSelect, DeleteAction, DeleteFromTable, DropColumns, DropConstraint, DropTable, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, RenameColumn, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable}
-import org.apache.spark.sql.functions.{coalesce, col, expr, lit, struct, when}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AddColumns, AddConstraint, CreateTableAsSelect, DeleteFromTable, DropColumns, DropConstraint, DropTable, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, RenameColumn, SubqueryAlias, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.functions.{col, lit, struct, when}
 
 /** SQL-text front door for the statements Spark can parse but not
   * execute without a v2 row-level-operation catalog: MERGE INTO — the
-  * reference's merge_sql_stmnt (icberg/iceberg_tables.py:45-50) plus
-  * the natural extensions a user hits first when growing past it —
-  * and the plain DML forms `UPDATE ... SET ... [WHERE]`,
-  * `DELETE FROM ... WHERE` (each one read → one atomic overwrite
-  * commit) and `INSERT INTO | OVERWRITE` (compiled onto the store's
+  * reference's merge_sql_stmnt (icberg/iceberg_tables.py:45-50) — and
+  * the plain DML forms `UPDATE ... SET ... [WHERE]`, `DELETE FROM ...
+  * WHERE` and `INSERT INTO | OVERWRITE` (compiled onto the store's
   * append / overwrite / partition-scoped overwrite commits when the
   * target is a graft table; otherwise it delegates to `spark.sql`,
-  * the S9 session-catalog path).
+  * the S9 session-catalog path), plus the DDL, maintenance and
+  * time-travel verbs below.
   *
-  * We reuse Catalyst's parser (no regex dialect): `parsePlan` yields a
-  * `MergeIntoTable`, compiled onto the graft engine as joins + ONE
-  * atomic commit. Supported forms:
-  *
-  *   - `WHEN MATCHED [AND <cond>] THEN DELETE` — matched rows whose
-  *     joined (target, source) row satisfies the condition are removed.
-  *   - `WHEN MATCHED [AND <cond>] THEN UPDATE SET c = expr, ...` and
-  *     `UPDATE SET *` — matched rows are rewritten with the
-  *     assignments (un-assigned target columns carry through; `SET *`
-  *     assigns every target column from the same-named source column).
-  *   - `WHEN NOT MATCHED [AND <cond>] THEN INSERT *` — source rows
-  *     whose key is absent from the (pre-merge) target are appended
-  *     by name (schema evolution tolerated, as `append` does).
-  *   - `WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN DELETE |
-  *     UPDATE SET ...` — target rows with no source match are pruned
-  *     or rewritten (conditions/assignments may reference only t.*),
-  *     completing the full table-sync matrix.
-  *
-  * Matched actions follow SQL MERGE semantics: evaluated in
-  * declaration order per matched row, first satisfied condition wins;
-  * a matched row satisfying no action carries through unchanged. As
-  * one plan: a single left-outer join target×source classifies each
-  * target ROW's action; deletes are filtered out, one projection
-  * CASEs each column over the action index (update assignments or
-  * the carried target value), and the not-matched inserts union in —
-  * ONE join pass, ONE atomic commit. Shuffle-bounded on the merge
-  * keys, broadcast when the source is small.
-  *
-  * The source is assumed key-unique (a CDC-deduped batch — the P5
-  * output); like Delta/Iceberg, multiple source matches for one
-  * target row make UPDATE ambiguous.
+  * We reuse Catalyst's parser (no regex dialect). MERGE / UPDATE /
+  * DELETE on a store table bind the parsed target to a pinned read
+  * of the table, run Spark's analyzer over the statement, and hand
+  * it to [[graft.plans.GraftDml]] — the one row-level compiler, the
+  * same one `spark.sql` reaches on a catalog-addressed table, so both
+  * surfaces share semantics and errors: any merge condition, subquery
+  * sources, the full WHEN MATCHED / NOT MATCHED / NOT MATCHED BY
+  * SOURCE matrix, the cardinality guard, and one atomic commit (a
+  * blind append for an insert-only merge). The one surface
+  * difference: star actions here evolve the target's schema by
+  * default (`spark.graft.merge.schemaEvolution`, see [[evolveMerge]]).
   *
   * Any other statement delegates to `spark.sql` untouched.
   */
@@ -591,9 +569,8 @@ object GraftSql {
           Seq((table, v, dest)).toDF("table_name", "version", "export_path")
         }
       case _ => spark.sessionState.sqlParser.parsePlan(sql) match {
-        case m: MergeIntoTable => executeMerge(spark, store, m)
-        case u: UpdateTable => executeUpdate(spark, store, u)
-        case d: DeleteFromTable => executeDelete(spark, store, d)
+        case dml if graft.plans.GraftDml.targetOf(dml).isDefined =>
+          executeDml(spark, store, dml, sql)
         case i: InsertIntoStatement => executeInsert(spark, store, i, sql)
         case c: CreateTableAsSelect => executeCtas(spark, store, c)
         case d: DropTable => executeDrop(spark, store, d, sql)
@@ -1072,89 +1049,6 @@ object GraftSql {
     store.read(target)
   }
 
-  /** `DELETE FROM t [AS a] WHERE c` — the other statement Spark parses
-    * but cannot run without a v2 row-level catalog. SQL semantics: a
-    * row is removed iff the predicate is TRUE; NULL keeps the row, like
-    * the engines this fronts for. One read → one atomic overwrite. */
-  /** Pin a snapshot for a read-then-rewrite statement: the version AND
-    * the frame of exactly that version, so the rewrite commit can
-    * assert nothing moved in between (overwrite(readSnapshot=...)) —
-    * a concurrent append between the read and the claim aborts with
-    * [[SnapshotConflictException]] instead of being silently dropped. */
-  private def pinnedRead(store: TableStore, table: String): (Long, DataFrame) = {
-    val rs = store.currentVersion(table).getOrElse(
-      throw new IllegalStateException(s"table $table does not exist"))
-    (rs, store.readVersion(table, rs))
-  }
-
-  private def executeDelete(spark: SparkSession, store: TableStore,
-                            d: DeleteFromTable): DataFrame = {
-    val target = tableName(d.table)
-    val alias = aliasOf(d.table).getOrElse(target)
-    // deletion-vector mode: commit row POSITIONS instead of rewriting
-    // survivors — O(deleted rows) written, not O(table); the read pays
-    // one delete-set filter until OPTIMIZE/compact folds it. SQL
-    // semantics unchanged (TRUE deletes; NULL keeps the row).
-    if (spark.conf.get("spark.graft.delete.deletionVectors", "false")
-        .toBoolean) {
-      store.deleteWhere(target,
-        coalesce(expr(d.condition.sql), lit(false)), Some(alias))
-      return store.read(target)
-    }
-    val (rs, pinned) = pinnedRead(store, target)
-    val dest = pinned.alias(alias)
-    val survivors = dest.where(!coalesce(expr(d.condition.sql), lit(false)))
-    store.overwrite(target, survivors, readSnapshot = Some(rs),
-      op = "DELETE")
-    store.read(target)
-  }
-
-  /** `UPDATE t [AS a] SET c = expr, ... [WHERE cond]` — compiled to one
-    * projection that CASEs each assigned column over the (null-safe)
-    * condition; unassigned columns and non-matching rows carry through
-    * unchanged. Same loud-failure rules as MERGE: unknown assignment
-    * targets reject at compile time. One read → one atomic overwrite. */
-  private def executeUpdate(spark: SparkSession, store: TableStore,
-                            u: UpdateTable): DataFrame = {
-    val target = tableName(u.table)
-    val alias = aliasOf(u.table).getOrElse(target)
-    val cond = coalesce(
-      u.condition.map(e => expr(e.sql)).getOrElse(lit(true)), lit(false))
-    val assigns = u.assignments.map { case Assignment(k, v) =>
-      val name = k match {
-        case a: UnresolvedAttribute => a.nameParts.last
-        case other => throw new IllegalArgumentException(
-          s"unsupported assignment target ${other.sql}")
-      }
-      name.toLowerCase -> expr(v.sql)
-    }.toMap
-    // deletion-vector mode first — BEFORE the pinned read, whose
-    // per-group schema resolution updateWhere would only repeat
-    // (unknown assignment targets reject inside updateWhere): delete
-    // the matched rows' positions and append their updated copies in
-    // one commit — O(matched), no rewrite of untouched rows (the CoW
-    // path below is O(table))
-    if (spark.conf.get("spark.graft.delete.deletionVectors", "false")
-        .toBoolean) {
-      store.updateWhere(target, cond, assigns, Some(alias))
-      return store.read(target)
-    }
-    val (rs, pinned) = pinnedRead(store, target)
-    val dest = pinned.alias(alias)
-    val destCols = dest.columns.map(_.toLowerCase).toSet
-    val unknown = assigns.keys.filterNot(destCols)
-    require(unknown.isEmpty,
-      s"UPDATE SET targets unknown column(s): ${unknown.mkString(", ")}")
-    val updated = dest.select(dest.columns.toIndexedSeq.map { n =>
-      assigns.get(n.toLowerCase)
-        .map(v => when(cond, v).otherwise(col(s"$alias.$n")))
-        .getOrElse(col(s"$alias.$n")).as(n)
-    }: _*)
-    store.overwrite(target, updated, readSnapshot = Some(rs),
-      op = "UPDATE")
-    store.read(target)
-  }
-
   import org.apache.spark.sql.types.StructType
 
   private def fieldNamesOf(st: StructType): Seq[String] = st.fields
@@ -1205,61 +1099,67 @@ object GraftSql {
     when(c.isNull, lit(null).cast(to)).otherwise(rebuilt)
   }
 
-  private def executeMerge(spark: SparkSession, store: TableStore,
-                           m: MergeIntoTable): DataFrame = {
-    require(m.matchedActions.forall(a => a.isInstanceOf[DeleteAction] ||
-        a.isInstanceOf[UpdateAction] || a.isInstanceOf[UpdateStarAction]) &&
-      m.notMatchedActions.forall(_.isInstanceOf[InsertStarAction]) &&
-      m.notMatchedBySourceActions.forall(a => a.isInstanceOf[DeleteAction] ||
-        a.isInstanceOf[UpdateAction]) &&
-      (m.matchedActions.nonEmpty || m.notMatchedActions.nonEmpty ||
-        m.notMatchedBySourceActions.nonEmpty),
-      "graft MERGE supports WHEN MATCHED [AND <cond>] THEN DELETE | " +
-        "UPDATE SET ... | UPDATE SET *, WHEN NOT MATCHED [AND <cond>] " +
-        "THEN INSERT *, and WHEN NOT MATCHED BY SOURCE [AND <cond>] " +
-        "THEN DELETE | UPDATE SET ...")
+  /** `MERGE INTO` / `UPDATE ... SET` / `DELETE FROM` on a store table:
+    * the statement's target relation is bound to the pinned read of
+    * the table, Spark's analyzer resolves the statement, and the one
+    * row-level compiler ([[graft.plans.GraftDml]]) commits it against
+    * the pinned version. A MERGE is first widened for schema
+    * evolution ([[evolveMerge]]). A target the store doesn't know
+    * delegates to `spark.sql`. Returns the table after the commit. */
+  private def executeDml(spark: SparkSession, store: TableStore,
+                         stmt: LogicalPlan, sqlText: String): DataFrame = {
+    val targetRel = graft.plans.GraftDml.targetOf(stmt).get
+    val target = tableName(targetRel)
+    if (!store.exists(target)) return spark.sql(sqlText)
+    val rs = store.currentVersion(target).get
+    val pinned = store.readVersion(target, rs)
+    def bind(df: DataFrame): LogicalPlan = targetRel.transform {
+      case _: UnresolvedRelation =>
+        SubqueryAlias(target, df.queryExecution.analyzed)
+    }
+    val bound = stmt match {
+      case m: MergeIntoTable => evolveMerge(spark, m, target, pinned, bind)
+      case u: UpdateTable => u.copy(table = bind(pinned))
+      case d: DeleteFromTable => d.copy(table = bind(pinned))
+    }
+    val analyzed = spark.sessionState.analyzer
+      .executeAndCheck(bound, new QueryPlanningTracker)
+    graft.plans.GraftDml.execute(spark, store, target, rs, analyzed)
+    store.read(target)
+  }
 
-    val target = tableName(m.targetTable)
-    val source = tableName(m.sourceTable)
-    val tAlias = aliasOf(m.targetTable).getOrElse(target)
-    val uAlias = aliasOf(m.sourceTable).getOrElse(source)
-    // every conjunct must be a same-name equi-join — a dropped non-equi
-    // conjunct would silently delete MORE rows than the SQL specifies
-    val keys = equiKeys(m.mergeCondition).getOrElse(
-      throw new IllegalArgumentException(
-        s"merge condition must be AND-ed same-column equi-joins, " +
-          s"got ${m.mergeCondition.sql}"))
-
-    val (rs, destRaw) = pinnedRead(store, target)
-    val updates = spark.table(source)
-
-    // MERGE schema evolution (Delta autoMerge semantics, matching the
-    // reference's evolved-source reality — mergeSchema'd dynamic frames
-    // feeding merge_sql_stmnt, icberg/iceberg_tables.py:23,45-50): when
-    // a star action (INSERT * / UPDATE SET *) pulls the source schema
-    // in and the source carries columns the target lacks, widen the
-    // target with typed NULLs up front so BOTH legs see the evolved
-    // schema — updated rows take the source value, carried rows NULL —
-    // and the widened schema lands in the SAME atomic commit. Explicit
-    // assignments to unknown columns stay hard errors. Disable with
-    // spark.graft.merge.schemaEvolution=false (then an evolved source
-    // is a loud error, never a silent half-evolution). Dropped-name
-    // resurrection and physical-name collisions under column mapping
-    // are rejected by the commit's own applyWrite validation.
+  /** MERGE schema evolution (Delta autoMerge semantics, matching the
+    * reference's evolved-source reality — mergeSchema'd dynamic frames
+    * feeding merge_sql_stmnt, icberg/iceberg_tables.py:23,45-50): when
+    * a star action (INSERT * / UPDATE SET *) pulls the source schema
+    * in and the source carries columns the target lacks, the target
+    * is widened with typed NULLs up front, so every leg sees the
+    * evolved schema — updated and inserted rows take the source
+    * value, carried rows NULL — and the widened schema lands in the
+    * SAME atomic commit. Explicit assignments to unknown columns stay
+    * analysis errors. Disable with spark.graft.merge.schemaEvolution=
+    * false (then an evolved source is a loud error, never a silent
+    * half-evolution). Dropped-name resurrection and physical-name
+    * collisions under column mapping are rejected by the commit's own
+    * applyWrite validation. Returns `m` with its target bound to the
+    * (widened) pinned read. */
+  private def evolveMerge(spark: SparkSession, m: MergeIntoTable,
+                          target: String, pinned: DataFrame,
+                          bind: DataFrame => LogicalPlan): MergeIntoTable = {
     val starPulls = m.matchedActions.exists(_.isInstanceOf[UpdateStarAction]) ||
-      m.notMatchedActions.nonEmpty
-    val destLower = destRaw.columns.map(_.toLowerCase).toSet
-    val srcExtra =
-      if (starPulls)
-        updates.schema.fields.toIndexedSeq
-          .filterNot(f => destLower.contains(f.name.toLowerCase))
-      else Nil
+      m.notMatchedActions.exists(_.isInstanceOf[InsertStarAction])
+    if (!starPulls) return m.copy(targetTable = bind(pinned))
+    val updates = org.apache.spark.sql.graft.ColumnBridge
+      .ofRows(spark, m.sourceTable)
+    val destLower = pinned.columns.map(_.toLowerCase).toSet
+    val srcExtra = updates.schema.fields.toIndexedSeq
+      .filterNot(f => destLower.contains(f.name.toLowerCase))
     val evolveOn = spark.conf
       .get("spark.graft.merge.schemaEvolution", "true").toBoolean
     require(srcExtra.isEmpty || evolveOn,
       s"MERGE source carries column(s) ${srcExtra.map(_.name).mkString(", ")} " +
         s"absent from $target and spark.graft.merge.schemaEvolution is false")
-    val destPre = srcExtra.foldLeft(destRaw)((d, f) =>
+    val destPre = srcExtra.foldLeft(pinned)((d, f) =>
       d.withColumn(f.name, lit(null).cast(f.dataType)))
     // NESTED evolution, the same autoMerge contract one level down
     // (the events.props / semi-structured direction): for columns BOTH
@@ -1270,8 +1170,7 @@ object GraftSql {
     // struct type. Struct casts match by POSITION in Spark, so the
     // rebuild is by NAME ([[widenStructTo]]), never a cast.
     val structWide: Seq[(String, StructType, StructType, StructType)] =
-      if (!starPulls) Nil
-      else destPre.schema.fields.toIndexedSeq.flatMap { tf =>
+      destPre.schema.fields.toIndexedSeq.flatMap { tf =>
         updates.schema.fields.find(_.name.equalsIgnoreCase(tf.name))
           .flatMap { sf =>
             (tf.dataType, sf.dataType) match {
@@ -1291,133 +1190,23 @@ object GraftSql {
     val dest = structWide.foldLeft(destPre) { case (d, (n, ts, _, m2)) =>
       d.withColumn(n, widenStructTo(col(n), ts, m2))
     }
-    val updatesW = structWide.foldLeft(updates) { case (d, (n, _, ss, m2)) =>
-      if (fieldNamesOf(ss) == fieldNamesOf(m2)) d
-      else d.withColumn(n, widenStructTo(col(n), ss, m2))
-    }
-
-    // Action conditions and assignment values re-enter as Columns via
-    // their generated SQL and resolve against the statement's own
-    // aliases (t.x / u.y).
-    def condOf(c: Option[Expression]): Column =
-      c.map(e => expr(e.sql)).getOrElse(lit(true))
-
-    // NMBS clauses run on rows with NO source match — every u.* column
-    // is NULL there, so a source reference would silently evaluate to
-    // NULL (a never-firing condition, a NULL-writing assignment).
-    // Reject at compile time, as analysis-time engines do.
-    def refsSource(e: Expression): Boolean = e.collect {
-      case a: UnresolvedAttribute if a.nameParts.length > 1 &&
-        (a.nameParts.init.last.equalsIgnoreCase(uAlias) ||
-          a.nameParts.init.last.equalsIgnoreCase(source)) => a
-    }.nonEmpty
-    m.notMatchedBySourceActions.foreach { a =>
-      val exprs: Seq[Expression] = a match {
-        case DeleteAction(c) => c.toSeq
-        case UpdateAction(c, assigns, _) => c.toSeq ++ assigns.map(_.value)
-        case other => Seq(other)
-      }
-      require(!exprs.exists(refsSource),
-        "NOT MATCHED BY SOURCE conditions/assignments may reference " +
-          "only the target; the source side is all-NULL there")
-    }
-
-    val survivors =
-      if (m.matchedActions.isEmpty && m.notMatchedBySourceActions.isEmpty) dest
+    val widened = structWide.filterNot { case (_, _, ss, m2) =>
+      fieldNamesOf(ss) == fieldNamesOf(m2) }
+    // a rebuilt source keeps the name its columns are qualified by
+    val source =
+      if (widened.isEmpty) m.sourceTable
       else {
-        val joinCond = keys.map(k => col(s"$tAlias.$k") === col(s"$uAlias.$k"))
-          .reduce(_ && _)
-        // with no matched actions the source is only a match PROBE —
-        // dedup its keys so a raw (duplicate-key) source can't
-        // multiply carried target rows through the outer join
-        val src = if (m.matchedActions.isEmpty)
-          updatesW.select(keys.map(col): _*).distinct() else updatesW
-        // ONE left-outer join classifies every target ROW (not key):
-        // __act = index of the first action (declaration order) whose
-        // condition holds — matched rows walk the MATCHED chain,
-        // unmatched rows the NOT MATCHED BY SOURCE chain (indices
-        // offset past the matched ones) — null means no action claims
-        // the row and it carries through unchanged. Row-level
-        // classification matters: with duplicate target keys, a
-        // key-level anti-join would silently drop a sibling row whose
-        // own conditions all failed. The `__m` marker (not the action
-        // conditions) decides matched-ness, so a condition like
-        // `u.x IS NULL` can't fire on unmatched rows.
-        def chainOf(actions: Seq[org.apache.spark.sql.catalyst.plans.logical.MergeAction],
-                    offset: Int): Column =
-          actions.zipWithIndex.foldLeft(lit(null).cast("int")) {
-            case (acc, (a, i)) =>
-              val c = a match {
-                case DeleteAction(cc) => condOf(cc)
-                case UpdateAction(cc, _, _) => condOf(cc)
-                case UpdateStarAction(cc) => condOf(cc)
-              }
-              when(acc.isNotNull, acc).otherwise(when(c, lit(offset + i)))
-          }
-        val allActions = m.matchedActions ++ m.notMatchedBySourceActions
-        val joined = dest.alias(tAlias)
-          .join(src.withColumn("__m", lit(1)).alias(uAlias),
-            joinCond, "left_outer")
-          .withColumn("__act",
-            when(col("__m").isNotNull, chainOf(m.matchedActions, 0))
-              .otherwise(chainOf(m.notMatchedBySourceActions,
-                m.matchedActions.size)))
-        // deletes drop; every other row is produced by ONE projection
-        // whose columns CASE over the action index (update assignments
-        // per leg, else the target value) — single pass, no union of
-        // re-executed join legs
-        val deleteIdx = allActions.zipWithIndex.collect {
-          case (_: DeleteAction, i) => i
+        val plan = widened.foldLeft(updates) { case (d, (n, _, ss, m2)) =>
+          d.withColumn(n, widenStructTo(col(n), ss, m2))
+        }.queryExecution.analyzed
+        m.sourceTable match {
+          case SubqueryAlias(id, _) => SubqueryAlias(id, plan)
+          case r: UnresolvedRelation =>
+            SubqueryAlias(r.multipartIdentifier.last, plan)
+          case _ => plan
         }
-        val assignsByIdx: Map[Int, Map[String, Column]] =
-          allActions.zipWithIndex.collect {
-            case (UpdateAction(_, assigns, _), i) =>
-              i -> assigns.map { a =>
-                val k = a.key match {
-                  case u: UnresolvedAttribute => u.nameParts.last
-                  case other => throw new IllegalArgumentException(
-                    s"unsupported assignment target ${other.sql}")
-                }
-                k.toLowerCase -> expr(a.value.sql)
-              }.toMap
-            case (UpdateStarAction(_), i) =>
-              i -> dest.columns.map(n => n.toLowerCase -> col(s"$uAlias.$n")).toMap
-          }.toMap
-        // a typo'd assignment target must fail, not silently no-op
-        val destCols = dest.columns.map(_.toLowerCase).toSet
-        val unknown = assignsByIdx.values.flatMap(_.keys).filterNot(destCols)
-        require(unknown.isEmpty,
-          s"UPDATE SET targets unknown column(s): ${unknown.mkString(", ")}")
-        val kept = deleteIdx
-          .foldLeft(joined)((df, i) => df.where(
-            col("__act").isNull || col("__act") =!= i))
-        kept.select(dest.columns.toIndexedSeq.map { n =>
-          assignsByIdx.foldLeft(col(s"$tAlias.$n")) {
-            case (acc, (i, byName)) =>
-              byName.get(n.toLowerCase)
-                .map(v => when(col("__act") === i, v).otherwise(acc))
-                .getOrElse(acc)
-          }.as(n)
-        }: _*)
       }
-
-    val result =
-      if (m.notMatchedActions.isEmpty) survivors
-      else {
-        val insCond = m.notMatchedActions.collect {
-          case InsertStarAction(c) => condOf(c)
-        }.reduce(_ || _)
-        // NOT MATCHED is judged against the pre-merge target, so the
-        // anti join runs on `dest`, not `survivors`
-        val inserts = updatesW.alias(uAlias)
-          .join(dest.select(keys.map(col): _*).distinct(), keys, "left_anti")
-          .where(insCond)
-        survivors.unionByName(inserts, allowMissingColumns = true)
-      }
-
-    store.overwrite(target, result, readSnapshot = Some(rs),
-      op = "MERGE")
-    store.read(target)
+    m.copy(targetTable = bind(dest), sourceTable = source)
   }
 
   /** Read-side time travel: `SELECT ... FROM t VERSION AS OF n` /
@@ -1519,35 +1308,14 @@ object GraftSql {
   private[graft] def sessionTimestampMs(spark: SparkSession, ts: String): Long =
     evalTimestampMs(spark, s"'$ts'")
 
-  /** The merge compiles `spark.table(name)` / `store.read(name)` from
-    * the NAME alone, so anything beyond a bare (optionally aliased)
-    * relation — a subquery, a filter, a join — would silently run the
-    * merge against the full underlying table, dropping the subquery's
-    * predicates. Reject those loudly. */
-  private def tableName(plan: LogicalPlan): String = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-    plan match {
-      case r: UnresolvedRelation => r.multipartIdentifier.last
-      case SubqueryAlias(_, r: UnresolvedRelation) => r.multipartIdentifier.last
-      case other => throw new IllegalArgumentException(
-        s"graft MERGE requires a bare table or view name (got " +
-          s"${other.getClass.getSimpleName}); register a temp view for " +
-          "subquery sources")
-    }
-  }
-
-  private def aliasOf(plan: LogicalPlan): Option[String] = plan.collectFirst {
-    case a: SubqueryAlias => a.alias
-  }
-
-  /** Extract key column names from an AND-tree of `t.k = u.k`;
-    * None if ANY conjunct is not a same-name equi-join. */
-  private def equiKeys(cond: Expression): Option[Seq[String]] = cond match {
-    case And(l, r) =>
-      for (a <- equiKeys(l); b <- equiKeys(r)) yield a ++ b
-    case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute)
-        if a.nameParts.last == b.nameParts.last =>
-      Some(Seq(a.nameParts.last))
-    case _ => None
+  /** The store table a statement names. Anything beyond a bare
+    * (optionally aliased) relation — a subquery, a filter, a join —
+    * is rejected loudly, never compiled from the name alone. */
+  private def tableName(plan: LogicalPlan): String = plan match {
+    case r: UnresolvedRelation => r.multipartIdentifier.last
+    case SubqueryAlias(_, r: UnresolvedRelation) => r.multipartIdentifier.last
+    case other => throw new IllegalArgumentException(
+      s"graft statements require a bare table name here (got " +
+        s"${other.getClass.getSimpleName})")
   }
 }

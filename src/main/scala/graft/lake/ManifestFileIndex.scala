@@ -24,8 +24,8 @@ import org.apache.spark.sql.types.StructType
   * commit dir — no hive `k=v` partition dirs), so the partition
   * schema is empty by construction and no partition-value inference
   * is skipped. Hive-partitioned groups (ANN inverted lists,
-  * partitioned tables) keep the `InMemoryFileIndex` path with its
-  * full partition resolution.
+  * partitioned tables) index through `GraftManifestIndex`, fed the
+  * same statuses, for Spark's own partition resolution.
   *
   * Semantics: identical file set, lengths and mtimes as the listing
   * would produce (same rendering — manifest lines are the qualified

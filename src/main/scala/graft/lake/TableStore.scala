@@ -514,26 +514,30 @@ final class TableStore(private[graft] val spark: SparkSession,
     // exact manifest files' identity. A group whose schema is not
     // cached stays a single-group scan (its statsScan run caches it
     // for the next read).
-    final case class Grp(base: String, files: Seq[String], minIdx: Int,
+    final case class Grp(base: String, minIdx: Int,
                          delSet: Seq[String], dvSet: Seq[String],
                          flat: Boolean,
-                         metas: Option[Seq[(String, Long, Long)]],
+                         metas: Seq[(String, Long, Long)],
                          schema: Option[org.apache.spark.sql.types.StructType])
     val infos = groups.map { case (base, files, minIdx) =>
       val flat = files.forall(f => f.length > base.length + 1 &&
         !f.substring(base.length + 1).contains('/'))
-      val ms0 = files.map(f =>
-        FsListing.fileMeta(new Path(f), hadoopConf)
-          .map { case (len, mt) => (f, len, mt) })
-      val metas = if (ms0.exists(_.isEmpty)) None else Some(ms0.flatten)
+      // a data file the manifest lists but the filesystem can't stat
+      // is lost data: fail the read naming it, never skip its rows
+      val metas = files.map { f =>
+        val (len, mt) = FsListing.fileMeta(new Path(f), hadoopConf).getOrElse(
+          throw new java.io.FileNotFoundException(
+            s"data file $f of table $table is missing"))
+        (f, len, mt)
+      }
       // schema (for run merging) only matters for flat groups —
       // partitioned groups never coalesce
       val schema =
         if (!flat) None
         else commitDirSchema(files.map(new Path(_)))
-          .orElse(metas.flatMap(ms => SchemaCache.get(SchemaCache.keyOf(
-            ms.map { case (f, len, mt) => s"$f#$len#$mt" }))))
-      Grp(base, files, minIdx,
+          .orElse(SchemaCache.get(SchemaCache.keyOf(
+            metas.map { case (f, len, mt) => s"$f#$len#$mt" })))
+      Grp(base, minIdx,
         dels.collect { case (f, i) if i > minIdx => f },
         dvs.collect { case (f, i) if i > minIdx => f },
         flat, metas, schema)
@@ -541,7 +545,6 @@ final class TableStore(private[graft] val spark: SparkSession,
     val runs = infos.foldLeft(Vector.empty[Vector[Grp]]) { (acc, g) =>
       acc.lastOption match {
         case Some(run) if run.head.flat && g.flat &&
-            run.head.metas.isDefined && g.metas.isDefined &&
             run.head.schema.isDefined && run.head.schema == g.schema &&
             run.head.delSet == g.delSet && run.head.dvSet == g.dvSet =>
           acc.init :+ (run :+ g)
@@ -549,21 +552,17 @@ final class TableStore(private[graft] val spark: SparkSession,
       }
     }
     runs.map { run =>
-      val files = run.flatMap(_.files)
       val minIdx = run.head.minIdx
-      val metas =
-        if (run.forall(_.metas.isDefined)) Some(run.flatMap(_.metas.get))
-        else None
+      val metas = run.flatMap(_.metas)
       val raw =
         if (run.size == 1)
-          statsScan(Some(run.head.base), files, statsRejects,
+          statsScan(Some(run.head.base), metas, statsRejects,
             (c, k) => bloomRejectsCached(table, c, k),
-            knownSchema = run.head.schema, metas = metas,
-            flat = run.head.flat)
+            knownSchema = run.head.schema, flat = run.head.flat)
         else
-          statsScan(None, files, statsRejects,
+          statsScan(None, metas, statsRejects,
             (c, k) => bloomRejectsCached(table, c, k),
-            knownSchema = run.head.schema, metas = metas, flat = true)
+            knownSchema = run.head.schema, flat = true)
       // positional deletion vectors (Iceberg/Delta DV shape): rows are
       // identified by (file, row position in file) — `_metadata`
       // columns, zero storage cost on the data. A vector applies to
@@ -592,49 +591,43 @@ final class TableStore(private[graft] val spark: SparkSession,
     DeleteSet.inVectors(spark, hadoopConf, files, DvSchema,
       col(RowFileCol), col(RowPosCol))
 
-  /** One commit group's scan, built the way `spark.read.parquet`
-    * builds it (same [[org.apache.spark.sql.execution.datasources.InMemoryFileIndex]]
-    * listing, same mergeSchema inference, same basePath partition
-    * resolution) but over a [[StatsFileIndex]] so the sidecar's
-    * per-file min/max/null stats prune files at predicate-pushdown
-    * time — the DEFAULT read path's automatic data skipping. With no
-    * stats recorded the index degenerates to the plain listing. */
-  private def statsScan(base: Option[String], files: Seq[String],
+  /** One commit group's scan over its manifest files' (path, length,
+    * mtime), built the way `spark.read.parquet` builds it (same
+    * mergeSchema inference, same basePath partition resolution) but
+    * over a [[StatsFileIndex]] so the sidecar's per-file
+    * min/max/null stats prune files at predicate-pushdown time — the
+    * DEFAULT read path's automatic data skipping. With no stats
+    * recorded the index degenerates to the plain file list. */
+  private def statsScan(base: Option[String], metas: Seq[(String, Long, Long)],
                         statsRejects: Seq[org.apache.spark.sql.catalyst.expressions.Expression] => Set[String],
                         bloomRejects: (String, String) => Option[Set[String]] =
                           (_, _) => None,
                         knownSchema: Option[org.apache.spark.sql.types.StructType] =
                           None,
-                        metas: Option[Seq[(String, Long, Long)]] = None,
                         flat: Boolean = false)
       : DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{FileIndex, GraftManifestIndex, HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.{FileIndex, GraftManifestIndex, HadoopFsRelation}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     // base is absent for coalesced multi-group scans (flat files only
     // — no partition resolution to anchor; see readLines), present
     // for the single-group scan spark.read.parquet would build.
     val opts = Map("mergeSchema" -> "true") ++ base.map("basePath" -> _)
-    // groups with stat'able manifest metadata index straight off it —
-    // no Hadoop listing, no per-file permission fork: flat groups via
-    // the trivial ManifestFileIndex, hive-partitioned ones via
+    // the index comes straight off the manifest metadata — no Hadoop
+    // listing, no per-file permission fork: flat groups via the
+    // trivial ManifestFileIndex, hive-partitioned ones via
     // GraftManifestIndex (PartitioningAwareFileIndex fed our statuses,
-    // so partition inference/pruning are Spark's own code verbatim);
-    // stat failures fall back to InMemoryFileIndex's full listing
-    val (index, partSchema, listed) = metas match {
-      case Some(ms) if flat =>
-        val mfi = new ManifestFileIndex(ms)
+    // so partition inference/pruning are Spark's own code verbatim)
+    val (index, partSchema, listed) =
+      if (flat) {
+        val mfi = new ManifestFileIndex(metas)
         (mfi: FileIndex, mfi.partitionSchema, mfi.allFiles)
-      case Some(ms) =>
-        val sts = ms.map { case (p, len, mt) =>
+      } else {
+        val sts = metas.map { case (p, len, mt) =>
           new org.apache.hadoop.fs.FileStatus(len, false, 1,
             128L * 1024 * 1024, mt, new Path(p)) }
         val gmi = new GraftManifestIndex(spark, opts, sts)
         (gmi: FileIndex, gmi.partitionSchema, gmi.allFiles())
-      case None =>
-        val inMem = new InMemoryFileIndex(spark, files.map(new Path(_)),
-          opts, None)
-        (inMem: FileIndex, inMem.partitionSchema, inMem.allFiles())
-    }
+      }
     val fmt = new ParquetFileFormat
     // merge-inference launches a DISTRIBUTED footer job per CALL.
     // Coalesced scans supply the schema (their merge precondition is
@@ -653,7 +646,7 @@ final class TableStore(private[graft] val spark: SparkSession,
         SchemaCache.getOrInfer(key) {
           fmt.inferSchema(spark, opts, listed).getOrElse(
             throw new IllegalStateException(
-              s"could not infer parquet schema under ${base.getOrElse(files.head)}"))
+              s"could not infer parquet schema under ${base.getOrElse(metas.head._1)}"))
         }
       }
     val rel = HadoopFsRelation(new StatsFileIndex(index, statsRejects, bloomRejects),
@@ -1494,19 +1487,15 @@ final class TableStore(private[graft] val spark: SparkSession,
     * head (SQL DELETE semantics: remove whatever matches at execution).
     * `compact` folds dv debt exactly like equality-delete debt.
     * Returns the number of rows deleted. */
-  def deleteWhere(table: String, pred: Column,
-                  alias: Option[String] = None): Long = {
+  def deleteWhere(table: String, pred: Column): Long = {
     var attempts = 0
     while (true) {
       attempts += 1
       val rs = currentVersion(table).getOrElse(
         throw new IllegalStateException(s"table $table does not exist"))
-      val mapped = columnMapping(table, rs).applyRead(
+      val withId = columnMapping(table, rs).applyRead(
         readLines(table, manifest(table, rs), withRowId = true,
           statsRejects = statsRejectsFor(table, rs)))
-      // a SQL statement's predicate may qualify columns by the
-      // statement alias (`t.x`) — resolve it here
-      val withId = alias.fold(mapped)(a => mapped.alias(a))
       val dvDir = new Path(tablePath(table), s"v-${UUID.randomUUID()}")
       withId.where(pred)
         .select(col(RowFileCol).as(DvFileCol), col(RowPosCol).as(DvPosCol))
@@ -1552,8 +1541,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     * otherwise delete one row set and reinsert another). Conflicts
     * recompute against the new head, same as [[deleteWhere]].
     * Returns the number of rows updated. */
-  def updateWhere(table: String, cond: Column, assigns: Map[String, Column],
-                  alias: Option[String] = None): Long = {
+  def updateWhere(table: String, cond: Column,
+                  assigns: Map[String, Column]): Long = {
     require(assigns.nonEmpty, "updateWhere needs at least one assignment")
     var attempts = 0
     while (true) {
@@ -1569,8 +1558,7 @@ final class TableStore(private[graft] val spark: SparkSession,
         require(cols.exists(_.equalsIgnoreCase(k)),
           s"UPDATE assigns unknown column $k (have ${cols.mkString(", ")})")
       }
-      val src = alias.fold(mapped)(a => mapped.alias(a))
-      val matched = src.where(cond).localCheckpoint()
+      val matched = mapped.where(cond).localCheckpoint()
       val n = matched.count()
       if (n == 0) return 0L
       val dvDir = new Path(tablePath(table), s"v-${UUID.randomUUID()}")

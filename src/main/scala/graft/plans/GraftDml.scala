@@ -3,7 +3,8 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Cast, Coalesce, Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, Command, DeleteAction, DeleteFromTable, InsertAction, LeafNode, LogicalPlan, MergeAction, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.SparkSession
@@ -13,22 +14,25 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.lake.TableStore
 import graft.sources.GraftTable
 
-/** Row-level SQL (MERGE INTO / UPDATE / DELETE) against
-  * catalog-addressed graft tables in a VANILLA Spark session — the
+/** Row-level SQL (MERGE INTO / UPDATE / DELETE) on graft tables — the
   * reference's headline statement (`MERGE INTO catalog.db.table`,
-  * icberg/iceberg_tables.py:45-50) in its native habitat. Spark's own
-  * analyzer rewrite only fires for connectors implementing
-  * `SupportsRowLevelOperations` (whose `ReplaceData` demands a full
-  * DSv2 `BatchWrite` — a second parquet writer the store's V1 commit
-  * path already subsumes); instead the Delta-shaped route: a session
-  * extension ([[graft.functions.GraftExtensions]]) injects
-  * [[GraftDmlRule]], which claims the RESOLVED `MergeIntoTable` /
-  * `UpdateTable` / `DeleteFromTable` plans whose target is a
-  * [[GraftTable]] relation and replaces them with a
-  * [[GraftDmlCommand]] — executed eagerly, compiling onto the store's
-  * existing read → classify → one-atomic-commit machinery.
+  * icberg/iceberg_tables.py:45-50). ONE compiler serves both SQL
+  * surfaces; each hands [[execute]] a statement Spark's analyzer has
+  * already resolved over a pinned read of the target:
+  *  - catalog-addressed tables in a vanilla session: a session
+  *    extension ([[graft.functions.GraftExtensions]]) injects
+  *    [[GraftDmlRule]], which claims the resolved `MergeIntoTable` /
+  *    `UpdateTable` / `DeleteFromTable` whose target is a [[GraftTable]]
+  *    relation and replaces it with a [[GraftDmlCommand]]. Spark's own
+  *    rewrite only fires for `SupportsRowLevelOperations`, whose
+  *    `ReplaceData` demands a second DSv2 parquet writer the store's
+  *    commit path already subsumes — the Delta-shaped route instead;
+  *  - the [[graft.lake.GraftSql]] front door, which binds the target
+  *    to the pinned store read, runs the analyzer itself and calls
+  *    [[execute]] (no session extension needed).
   *
   * Semantics (ANSI + Delta conventions):
   *  - DELETE: a row is removed iff the predicate is TRUE (NULL keeps).
@@ -41,17 +45,24 @@ import graft.sources.GraftTable
   *    cardinality violation (inline `assert_true` — no second pass).
   *    An insert-ONLY merge commits as a blind append (no rewrite, no
   *    snapshot conflict surface — Delta's insert-only optimization).
-  *  - All rewrite shapes pin the analysis-time snapshot: a concurrent
-  *    commit aborts ([[graft.lake.SnapshotConflictException]]) rather
-  *    than being silently swallowed.
+  *  - Rewrites pin the analysis-time snapshot: a concurrent commit
+  *    aborts ([[graft.lake.SnapshotConflictException]]) rather than
+  *    being silently swallowed.
+  *  - Under `spark.graft.delete.deletionVectors` DELETE and UPDATE
+  *    commit the matched rows' positions (plus UPDATE's new copies)
+  *    instead of rewriting survivors: O(matched rows) written, the
+  *    read pays one delete-set filter until compaction folds it.
   *
-  * Scale: identical to the GraftSql front-door DML — the target scan
-  * is the store-composed plan (pushed filters, stats/bloom skipping),
-  * the classification is one shuffle join on the merge keys, and the
-  * commit is the store's atomic claim. The cardinality guard rides
-  * the join output (a window over the synthetic row id) only when
-  * MATCHED actions exist. `WITH SCHEMA EVOLUTION` and
-  * nested-field assignment targets route to the GraftSql front door.
+  * Scale: the target scan is the store-composed plan (pushed filters,
+  * stats/bloom skipping), the classification is one shuffle join on
+  * the merge condition, and the commit is the store's atomic claim.
+  * The cardinality guard rides the join output (a window over the
+  * synthetic row id) only when MATCHED actions exist.
+  *
+  * The surfaces differ only before analysis: the front door widens
+  * the target for star actions whose source carries new columns or
+  * struct fields (`spark.graft.merge.schemaEvolution`, on by default),
+  * while the catalog path rejects `WITH SCHEMA EVOLUTION`.
   */
 object GraftDml {
 
@@ -73,6 +84,91 @@ object GraftDml {
       case _ => None
     }
 
+  /** The target relation of a row-level statement; None for any other
+    * plan. */
+  private[graft] def targetOf(stmt: LogicalPlan): Option[LogicalPlan] =
+    stmt match {
+      case d: DeleteFromTable => Some(d.table)
+      case u: UpdateTable => Some(u.table)
+      case m: MergeIntoTable => Some(m.targetTable)
+      case _ => None
+    }
+
+  /** Compile `stmt` — a resolved DELETE / UPDATE / MERGE whose target
+    * relation reads version `pinned` of store table `table` — and
+    * commit it: a rewrite checked against `pinned`, a blind append
+    * for an insert-only MERGE, or a deletion-vector commit. */
+  def execute(spark: SparkSession, store: TableStore, table: String,
+              pinned: Long, stmt: LogicalPlan): Unit = {
+    requirePlain(store, table, stmt)
+    def rewrite(rows: DataFrame, op: String): Unit =
+      store.overwrite(table, rows, readSnapshot = Some(pinned), op = op)
+    // deletion vectors: the Columns name the target's columns
+    // ([[byName]]), so they bind to the store's own row-position read
+    val positional = spark.conf
+      .get("spark.graft.delete.deletionVectors", "false").toBoolean
+    stmt match {
+      case DeleteFromTable(target, cond) =>
+        val drop = nullSafe(Some(cond))
+        if (positional) store.deleteWhere(table, byName(drop, target.output))
+        else rewrite(ColumnBridge.ofRows(spark, target).where(!colOf(drop))
+          .select(target.output.map(a => colOf(a).as(a.name)): _*), "DELETE")
+
+      case UpdateTable(target, assignments, cond) =>
+        val attrs = target.output
+        val hit = nullSafe(cond)
+        val values = assignTargets(assignments, attrs)
+        if (positional) store.updateWhere(table, byName(hit, attrs),
+          attrs.flatMap(a => values.get(a.name.toLowerCase).map(v =>
+            a.name -> byName(Cast(v, a.dataType), attrs))).toMap)
+        else rewrite(ColumnBridge.ofRows(spark, target).select(attrs.map { a =>
+          values.get(a.name.toLowerCase)
+            .map(v => when(colOf(hit), colOf(v).cast(a.dataType))
+              .otherwise(colOf(a)))
+            .getOrElse(colOf(a)).as(a.name)
+        }: _*), "UPDATE")
+
+      case m: MergeIntoTable =>
+        merge(spark, m, store.append(table, _), rewrite(_, "MERGE"))
+    }
+  }
+
+  /** Materialized views are maintained from their source's change
+    * feed, and a live view's `__def` companion holds its 1-row
+    * definition: row-level DML on either would corrupt the view. */
+  private def requirePlain(store: TableStore, table: String,
+                           stmt: LogicalPlan): Unit = {
+    val verb = stmt match {
+      case _: MergeIntoTable => "MERGE"
+      case _: UpdateTable => "UPDATE"
+      case _ => "DELETE"
+    }
+    if (GraftTable.isMaterializedView(store, table))
+      throw new UnsupportedOperationException(
+        s"$table is a materialized view — it is maintained from its " +
+          s"source's change feed (REFRESH MATERIALIZED VIEW), not by $verb")
+    if (GraftTable.isLiveCompanion(store, table))
+      throw new UnsupportedOperationException(
+        s"$table is the definition companion of materialized view " +
+          s"'${table.stripSuffix("__def")}' — it is engine-managed and " +
+          s"cannot be modified by $verb")
+  }
+
+  /** `cond` with NULL read as false (absent = true). */
+  private def nullSafe(cond: Option[Expression]): Expression =
+    Coalesce(Seq(cond.getOrElse(Literal.TrueLiteral), Literal.FalseLiteral))
+
+  /** `e` with every target attribute replaced by its column NAME, so
+    * the Column resolves against any read of the table — the store's
+    * row-position read under deletion vectors. Everything else in
+    * `e` stays as the analyzer resolved it. */
+  private def byName(e: Expression, target: Seq[Attribute]): Column = {
+    val ids = target.map(_.exprId).toSet
+    colOf(e.transform {
+      case a: AttributeReference if ids(a.exprId) => UnresolvedAttribute(Seq(a.name))
+    })
+  }
+
   /** Assignment keys must be top-level target columns; resolve each to
     * the target attribute it assigns (by exprId, falling back to a
     * case-insensitive name match for aligned copies). */
@@ -88,8 +184,8 @@ object GraftDml {
               s"assignment target ${ar.name} is not a column of the " +
                 "target table"))
         case other => throw new UnsupportedOperationException(
-          s"unsupported assignment target ${other.sql} — nested-field " +
-            "assignments go through the GraftSql front door")
+          s"unsupported assignment target ${other.sql} — only top-level " +
+            "columns can be assigned")
       }
       attr.name.toLowerCase -> a.value
     }.toMap
@@ -140,182 +236,85 @@ object GraftDml {
       .foldLeft(df)((d, i) =>
         d.where(col(ActCol).isNull || col(ActCol) =!= i))
 
-  def execute(spark: SparkSession, cmd: GraftDmlCommand): Unit = {
-    val g = cmd.table
-    val store = g.graftStore
-    val name = g.name()
-    val targetAttrs = graftRelationOutput(cmd.targetPlan)
-    val t = ColumnBridge.ofRows(spark, cmd.targetPlan)
-    def pin = Some(g.pinnedVersion)
-    def finishOverwrite(result: DataFrame, op: String): Unit =
-      store.overwrite(name, result, readSnapshot = pin, op = op)
+  /** Classify and project a MERGE; commit the new rows through
+    * `append` when it only inserts, else the full result through
+    * `rewrite`. */
+  private def merge(spark: SparkSession, m: MergeIntoTable,
+                    append: DataFrame => Unit,
+                    rewrite: DataFrame => Unit): Unit = {
+    val targetAttrs = m.targetTable.output
+    val t = ColumnBridge.ofRows(spark, m.targetTable)
+    val s = ColumnBridge.ofRows(spark, m.sourceTable)
+    val cond = colOf(m.mergeCondition)
 
-    cmd.kind match {
-      case "DELETE" =>
-        val cond = coalesce(colOf(cmd.condition.get), lit(false))
-        finishOverwrite(
-          t.where(!cond).select(targetAttrs.map(a => colOf(a).as(a.name)): _*),
-          "DELETE")
+    // NOT MATCHED is judged against the PRE-merge target
+    def inserts: DataFrame = projectActions(
+      s.join(t, cond, "left_anti")
+        .withColumn(ActCol, chainOf(m.notMatchedActions, 0))
+        .where(col(ActCol).isNotNull),
+      m.notMatchedActions, 0, targetAttrs, carry = false)
 
-      case "UPDATE" =>
-        val cond = coalesce(
-          cmd.condition.map(colOf).getOrElse(lit(true)), lit(false))
-        val byName = assignTargets(cmd.assignments, targetAttrs)
-        finishOverwrite(
-          t.select(targetAttrs.toIndexedSeq.map { a =>
-            byName.get(a.name.toLowerCase)
-              .map(v => when(cond, colOf(v).cast(a.dataType))
-                .otherwise(colOf(a)))
-              .getOrElse(colOf(a)).as(a.name)
-          }: _*), "UPDATE")
-
-      case "MERGE" =>
-        val s = ColumnBridge.ofRows(spark, cmd.sourcePlan.get)
-        val cond = colOf(cmd.condition.get)
-        val sourceAttrSet = AttributeSet(cmd.sourcePlan.get.output)
-        // NMBS clauses run on rows with NO source match — every source
-        // column is NULL there, so a source reference would silently
-        // evaluate to NULL. Reject, like analysis-time engines do.
-        cmd.notMatchedBySourceActions.foreach { a =>
-          val exprs: Seq[Expression] = a match {
-            case DeleteAction(c) => c.toSeq
-            case UpdateAction(c, assigns, _) => c.toSeq ++ assigns.map(_.value)
-            case other => Seq(other)
-          }
-          require(!exprs.exists(_.references.intersect(sourceAttrSet).nonEmpty),
-            "NOT MATCHED BY SOURCE conditions/assignments may reference " +
-              "only the target; the source side is all-NULL there")
-        }
-
-        val inserts: Option[DataFrame] =
-          if (cmd.notMatchedActions.isEmpty) None
-          else {
-            // NOT MATCHED is judged against the PRE-merge target
-            val unmatchedSrc = s.join(t, cond, "left_anti")
-              .withColumn(ActCol, chainOf(cmd.notMatchedActions, 0))
-              .where(col(ActCol).isNotNull)
-            Some(projectActions(unmatchedSrc, cmd.notMatchedActions, 0,
-              targetAttrs, carry = false))
-          }
-
-        if (cmd.matchedActions.isEmpty &&
-            cmd.notMatchedBySourceActions.isEmpty) {
-          // insert-only merge: the target is untouched — commit the
-          // new rows as a blind append, no rewrite at any scale
-          inserts.foreach(store.append(name, _))
+    if (m.matchedActions.isEmpty && m.notMatchedBySourceActions.isEmpty) {
+      // insert-only merge: the target is untouched — commit the new
+      // rows as a blind append, no rewrite at any scale
+      append(inserts)
+    } else {
+      val survivors =
+        if (m.matchedActions.isEmpty) {
+          // no matched action needs source VALUES — matched-ness via
+          // duplication-free semi/anti joins (a raw duplicate-key
+          // source can't multiply carried target rows)
+          val matched = t.join(s, cond, "left_semi")
+            .select(targetAttrs.map(a => colOf(a).as(a.name)): _*)
+          val unmatched = t.join(s, cond, "left_anti")
+            .withColumn(ActCol, chainOf(m.notMatchedBySourceActions, 0))
+          val processed = projectActions(
+            dropDeletes(unmatched, m.notMatchedBySourceActions, 0),
+            m.notMatchedBySourceActions, 0, targetAttrs, carry = true)
+          matched.unionByName(processed)
         } else {
-          val survivors =
-            if (cmd.matchedActions.isEmpty) {
-              // no matched action needs source VALUES — matched-ness
-              // via duplication-free semi/anti joins (a raw duplicate-
-              // key source can't multiply carried target rows)
-              val matched = t.join(s, cond, "left_semi")
-                .select(targetAttrs.map(a => colOf(a).as(a.name)): _*)
-              val unmatched = t.join(s, cond, "left_anti")
-                .withColumn(ActCol,
-                  chainOf(cmd.notMatchedBySourceActions, 0))
-              val processed = projectActions(
-                dropDeletes(unmatched, cmd.notMatchedBySourceActions, 0),
-                cmd.notMatchedBySourceActions, 0, targetAttrs, carry = true)
-              matched.unionByName(processed)
-            } else {
-              val tid = t.withColumn(TidCol, monotonically_increasing_id())
-              val j = tid.join(s.withColumn(SrcMarkCol, lit(1)),
-                cond, "left_outer")
-              // ANSI cardinality rule, enforced inline on the join
-              // output (one window over the synthetic row id, no
-              // second pass): a target row matched by two source rows
-              // is ambiguous — which update wins is undefined — so it
-              // raises instead of silently double-applying
-              val guarded = j.withColumn(CardCol,
-                  count(col(SrcMarkCol)).over(Window.partitionBy(TidCol)))
-                .where(assert_true(col(CardCol) <= 1,
-                  lit("MERGE cardinality violation: a target row matched " +
-                    "more than one source row")).isNull)
-              val all = cmd.matchedActions ++ cmd.notMatchedBySourceActions
-              val classified = guarded.withColumn(ActCol,
-                when(col(SrcMarkCol).isNotNull, chainOf(cmd.matchedActions, 0))
-                  .otherwise(chainOf(cmd.notMatchedBySourceActions,
-                    cmd.matchedActions.size)))
-              projectActions(dropDeletes(classified, all, 0), all, 0,
-                targetAttrs, carry = true)
-            }
-          val result = inserts.fold(survivors)(survivors.unionByName(_))
-          finishOverwrite(result, "MERGE")
+          val tid = t.withColumn(TidCol, monotonically_increasing_id())
+          val j = tid.join(s.withColumn(SrcMarkCol, lit(1)),
+            cond, "left_outer")
+          // ANSI cardinality rule, enforced inline on the join output
+          // (one window over the synthetic row id, no second pass): a
+          // target row matched by two source rows is ambiguous —
+          // which update wins is undefined — so it raises instead of
+          // silently double-applying
+          val guarded = j.withColumn(CardCol,
+              count(col(SrcMarkCol)).over(Window.partitionBy(TidCol)))
+            .where(assert_true(col(CardCol) <= 1,
+              lit("MERGE cardinality violation: a target row matched " +
+                "more than one source row")).isNull)
+          val all = m.matchedActions ++ m.notMatchedBySourceActions
+          // the source marker (not the action conditions) decides
+          // matched-ness, so a condition like `u.x IS NULL` can't fire
+          // on an unmatched row
+          val classified = guarded.withColumn(ActCol,
+            when(col(SrcMarkCol).isNotNull, chainOf(m.matchedActions, 0))
+              .otherwise(chainOf(m.notMatchedBySourceActions,
+                m.matchedActions.size)))
+          projectActions(dropDeletes(classified, all, 0), all, 0,
+            targetAttrs, carry = true)
         }
+      rewrite(if (m.notMatchedActions.isEmpty) survivors
+        else survivors.unionByName(inserts))
     }
   }
-
-  /** Output attributes of the target relation (the table's columns,
-    * with the exprIds every condition/assignment references). */
-  private def graftRelationOutput(plan: LogicalPlan): Seq[Attribute] =
-    plan match {
-      case SubqueryAlias(_, child) => graftRelationOutput(child)
-      case r: DataSourceV2Relation => r.output
-      case other => other.output
-    }
 }
 
-/** Opaque payload wrapper: a plain case class, NOT an Expression, so
-  * TreeNode's product sweep does not surface the held expression as
-  * one of the command's own. The payload was fully resolved and
-  * CheckAnalysis-validated inside its ORIGINAL node (the rule only
-  * claims resolved statements); re-exposing it on a generic leaf
-  * command would re-run placement checks that are node-type-specific
-  * — e.g. IN/EXISTS subqueries are legal under DeleteFromTable but
-  * flagged on an unrecognized command. */
-final case class Held(e: Expression)
-
-/** The analyzed row-level statement, reduced to everything execution
-  * needs. A LEAF command: the target/source plans ride as fields (not
-  * children) and every expression rides [[Held]], so the analyzer
-  * leaves them be and CheckAnalysis's sweeps (children- and
-  * own-expression-only) don't misfire on the cross-plan payload. */
-case class GraftDmlCommand(
-    kind: String,
-    table: GraftTable,
-    targetPlan: LogicalPlan,
-    sourcePlan: Option[LogicalPlan],
-    heldCondition: Option[Held],
-    heldAssignments: Seq[(Held, Held)] = Nil,
-    heldMatched: Seq[Held] = Nil,
-    heldNotMatched: Seq[Held] = Nil,
-    heldNotMatchedBySource: Seq[Held] = Nil)
+/** The analyzed row-level statement and the graft table it targets. A
+  * LEAF command: the statement rides as a field (not a child), so the
+  * analyzer leaves it be and CheckAnalysis's node-type-specific
+  * placement checks don't re-run on it — the statement was fully
+  * resolved and validated inside its ORIGINAL node (the rule only
+  * claims resolved statements; e.g. IN/EXISTS subqueries are legal
+  * under DeleteFromTable but flagged on an unrecognized command). */
+case class GraftDmlCommand(table: GraftTable, statement: LogicalPlan)
     extends LeafNode with Command {
   override def output: Seq[Attribute] = Nil
   override def simpleString(maxFields: Int): String =
-    s"GraftDmlCommand $kind ${table.name()}"
-
-  def condition: Option[Expression] = heldCondition.map(_.e)
-  def assignments: Seq[Assignment] =
-    heldAssignments.map { case (k, v) => Assignment(k.e, v.e) }
-  def matchedActions: Seq[MergeAction] =
-    heldMatched.map(_.e.asInstanceOf[MergeAction])
-  def notMatchedActions: Seq[MergeAction] =
-    heldNotMatched.map(_.e.asInstanceOf[MergeAction])
-  def notMatchedBySourceActions: Seq[MergeAction] =
-    heldNotMatchedBySource.map(_.e.asInstanceOf[MergeAction])
-}
-
-object GraftDmlCommand {
-  def delete(table: GraftTable, target: LogicalPlan,
-             cond: Expression): GraftDmlCommand =
-    GraftDmlCommand("DELETE", table, target, None, Some(Held(cond)))
-
-  def update(table: GraftTable, target: LogicalPlan,
-             assignments: Seq[Assignment],
-             cond: Option[Expression]): GraftDmlCommand =
-    GraftDmlCommand("UPDATE", table, target, None, cond.map(Held),
-      heldAssignments = assignments.map(a => (Held(a.key), Held(a.value))))
-
-  def merge(table: GraftTable, target: LogicalPlan, source: LogicalPlan,
-            cond: Expression, matched: Seq[MergeAction],
-            notMatched: Seq[MergeAction],
-            nmbs: Seq[MergeAction]): GraftDmlCommand =
-    GraftDmlCommand("MERGE", table, target, Some(source), Some(Held(cond)),
-      heldMatched = matched.map(Held(_)),
-      heldNotMatched = notMatched.map(Held(_)),
-      heldNotMatchedBySource = nmbs.map(Held(_)))
+    s"GraftDmlCommand ${statement.nodeName} ${table.name()}"
 }
 
 /** Claims resolved DELETE/UPDATE/MERGE plans whose target is a graft
@@ -329,45 +328,18 @@ case class GraftDmlRule(spark: org.apache.spark.sql.SparkSession)
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperatorsDown {
-      case d @ DeleteFromTable(target, cond) if d.resolved =>
-        GraftDml.graftTarget(target).map { g =>
-          requirePlain(g, "DELETE")
-          GraftDmlCommand.delete(g, target, cond)
-        }.getOrElse(d)
-
-      case u @ UpdateTable(target, assignments, cond) if u.resolved =>
-        GraftDml.graftTarget(target).map { g =>
-          requirePlain(g, "UPDATE")
-          GraftDmlCommand.update(g, target, assignments, cond)
-        }.getOrElse(u)
-
-      case m @ MergeIntoTable(target, source, cond, matched, notMatched,
-            nmbs, withSchemaEvolution) if m.resolved =>
-        GraftDml.graftTarget(target).map { g =>
-          requirePlain(g, "MERGE")
-          if (withSchemaEvolution) throw new UnsupportedOperationException(
-            "MERGE WITH SCHEMA EVOLUTION on a catalog-addressed graft " +
-              "table is not supported — use the GraftSql front door " +
-              "(spark.graft.merge.schemaEvolution)")
-          GraftDmlCommand.merge(g, target, source, cond, matched,
-            notMatched, nmbs)
-        }.getOrElse(m)
+      case stmt if stmt.resolved =>
+        GraftDml.targetOf(stmt).flatMap(GraftDml.graftTarget).map { g =>
+          stmt match {
+            case m: MergeIntoTable if m.withSchemaEvolution =>
+              throw new UnsupportedOperationException(
+                "MERGE WITH SCHEMA EVOLUTION on a catalog-addressed graft " +
+                  "table is not supported — use the GraftSql front door " +
+                  "(spark.graft.merge.schemaEvolution)")
+            case _ => GraftDmlCommand(g, stmt)
+          }
+        }.getOrElse(stmt)
     }
-
-  private def requirePlain(g: GraftTable, stmt: String): Unit = {
-    if (g.isMaterialized) throw new UnsupportedOperationException(
-      s"${g.name()} is a materialized view — it is maintained from its " +
-        s"source's change feed (REFRESH MATERIALIZED VIEW), not by $stmt")
-    // a live view's __def companion holds the 1-row view definition;
-    // row-level DML commits via store.overwrite directly, so it needs
-    // the same shield the INSERT/TRUNCATE/DROP surfaces already have
-    val n = g.name()
-    if (n.endsWith("__def") && g.graftStore.exists(n.stripSuffix("__def")))
-      throw new UnsupportedOperationException(
-        s"$n is the definition companion of materialized view " +
-          s"'${n.stripSuffix("__def")}' — it is engine-managed and " +
-          s"cannot be modified by $stmt")
-  }
 }
 
 /** Plans [[GraftDmlCommand]]; the exec runs the store commit once on
@@ -383,8 +355,11 @@ object GraftDmlStrategy extends SparkStrategy {
 case class GraftDmlExec(cmd: GraftDmlCommand) extends LeafExecNode {
   override def output: Seq[Attribute] = Nil
 
-  @transient private lazy val sideEffect: Unit =
-    GraftDml.execute(session, cmd)
+  @transient private lazy val sideEffect: Unit = {
+    val g = cmd.table
+    GraftDml.execute(session, g.graftStore, g.name(), g.pinnedVersion,
+      cmd.statement)
+  }
 
   override def executeCollect(): Array[InternalRow] = {
     sideEffect

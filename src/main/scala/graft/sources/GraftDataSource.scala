@@ -283,7 +283,7 @@ object GraftTable {
   /** A store table is a materialized view iff its `__def` companion
     * exists (the same registry rule GraftSql and SHOW MATERIALIZED
     * VIEWS use). The companion itself reads as a plain table. */
-  private[sources] def isMaterializedView(store: TableStore,
+  private[graft] def isMaterializedView(store: TableStore,
                                           table: String): Boolean =
     !table.endsWith("__def") && store.exists(table + "__def")
 
@@ -291,7 +291,7 @@ object GraftTable {
     * engine-managed definition row vanilla writers/droppers must not
     * touch in isolation. An ORPHAN def (view table absent) is not
     * live: it is invisible residue a re-create may replace. */
-  private[sources] def isLiveCompanion(store: TableStore,
+  private[graft] def isLiveCompanion(store: TableStore,
                                        table: String): Boolean =
     table.endsWith("__def") &&
       store.exists(table.stripSuffix("__def"))

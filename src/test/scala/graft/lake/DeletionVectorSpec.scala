@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * predicate without rewriting data files — positions commit as a
   * tiny `dv|` sidecar, reads filter by its positions, compact folds
   * it. */
-class DeletionVectorSpec extends SparkSpec {
+class DeletionVectorSpec extends SparkSpec with DmlSurfaces {
   import spark.implicits._
 
   private def freshStore() = new TableStore(spark, tmpDir("dv"))
@@ -86,21 +86,25 @@ class DeletionVectorSpec extends SparkSpec {
   }
 
   test("SQL DELETE uses deletion vectors when the conf is on") {
-    val store = freshStore()
-    store.create("sdv", (1 to 40).map(i => (i, i % 4)).toDF("id", "m"))
-    spark.conf.set("spark.graft.delete.deletionVectors", "true")
-    try {
-      GraftSql.execute(spark, store, "DELETE FROM sdv t WHERE t.m = 1")
-      val after = store.manifest("sdv", store.currentVersion("sdv").get)
-      assert(after.exists(_.startsWith("dv|")),
-        "SQL DELETE should have committed a deletion vector")
-      assert(store.read("sdv").count() == (1 to 40).count(_ % 4 != 1))
-      // NULL predicate keeps the row (SQL semantics) — exercised via a
-      // predicate over a nullable expression
-      GraftSql.execute(spark, store,
-        "DELETE FROM sdv WHERE CASE WHEN m = 2 THEN true END")
-      assert(store.read("sdv").count() == (1 to 40).count(i => i % 4 != 1 && i % 4 != 2))
-    } finally spark.conf.unset("spark.graft.delete.deletionVectors")
+    for (sf <- surfaces("dv-sql-del")) {
+      val store = sf.store
+      val t = sf.table("sdv")
+      store.create("sdv", (1 to 40).map(i => (i, i % 4)).toDF("id", "m"))
+      spark.conf.set("spark.graft.delete.deletionVectors", "true")
+      try {
+        sf.run(s"DELETE FROM $t t WHERE t.m = 1")
+        val after = store.manifest("sdv", store.currentVersion("sdv").get)
+        assert(after.exists(_.startsWith("dv|")),
+          s"${sf.name}: SQL DELETE should have committed a deletion vector")
+        assert(store.read("sdv").count() == (1 to 40).count(_ % 4 != 1),
+          sf.name)
+        // NULL predicate keeps the row (SQL semantics) — exercised via
+        // a predicate over a nullable expression
+        sf.run(s"DELETE FROM $t WHERE CASE WHEN m = 2 THEN true END")
+        assert(store.read("sdv").count() ==
+          (1 to 40).count(i => i % 4 != 1 && i % 4 != 2), sf.name)
+      } finally spark.conf.unset("spark.graft.delete.deletionVectors")
+    }
   }
 
   test("updateWhere rewrites no files: positions + updated copies in one commit") {
@@ -127,23 +131,27 @@ class DeletionVectorSpec extends SparkSpec {
   }
 
   test("SQL UPDATE rides deletion vectors under the conf") {
-    val store = freshStore()
-    store.create("u", (1 to 30).map(i => (i, i % 3, "x")).toDF("id", "m", "v"))
-    val before = store.manifest("u", 0L)
-    spark.conf.set("spark.graft.delete.deletionVectors", "true")
-    try GraftSql.execute(spark, store,
-      "UPDATE u SET v = concat(v, '!') WHERE m = 0")
-    finally spark.conf.unset("spark.graft.delete.deletionVectors")
-    val after = store.manifest("u", store.currentVersion("u").get)
-    assert(before.forall(after.contains) && after.exists(_.startsWith("dv|")))
-    assert(store.read("u").where(col("v") === "x!").count() ==
-      (1 to 30).count(_ % 3 == 0))
-    assert(store.read("u").count() == 30)
-    // unknown assignment target still rejects loudly in dv mode
-    spark.conf.set("spark.graft.delete.deletionVectors", "true")
-    try intercept[IllegalArgumentException] {
-      GraftSql.execute(spark, store, "UPDATE u SET nope = 1")
-    } finally spark.conf.unset("spark.graft.delete.deletionVectors")
+    for (sf <- surfaces("dv-sql-upd")) {
+      val store = sf.store
+      val t = sf.table("u")
+      store.create("u", (1 to 30).map(i => (i, i % 3, "x")).toDF("id", "m", "v"))
+      val before = store.manifest("u", 0L)
+      spark.conf.set("spark.graft.delete.deletionVectors", "true")
+      try {
+        sf.run(s"UPDATE $t SET v = concat(v, '!') WHERE m = 0")
+        val after = store.manifest("u", store.currentVersion("u").get)
+        assert(before.forall(after.contains) &&
+          after.exists(_.startsWith("dv|")), sf.name)
+        assert(store.read("u").where(col("v") === "x!").count() ==
+          (1 to 30).count(_ % 3 == 0), sf.name)
+        assert(store.read("u").count() == 30, sf.name)
+        // unknown assignment target still rejects loudly in dv mode
+        intercept[org.apache.spark.sql.AnalysisException] {
+          sf.run(s"UPDATE $t SET nope = 1")
+        }
+        assert(store.currentVersion("u").contains(1L), sf.name)
+      } finally spark.conf.unset("spark.graft.delete.deletionVectors")
+    }
   }
 
   test("vacuum reaps dv sidecars of dropped versions") {

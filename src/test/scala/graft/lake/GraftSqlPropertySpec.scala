@@ -3,16 +3,20 @@ package graft.lake
 import graft.SparkSpec
 import scala.util.Random
 
-/** Randomized MERGE statements executed through GraftSql against a
-  * real store, checked row-for-row against an executable Scala model
+/** Randomized MERGE statements executed through BOTH SQL entry points
+  * ([[DmlSurfaces]]: the GraftSql front door and `spark.sql` on a
+  * GraftCatalog) against a real store, each checked row-for-row
+  * against the same executable Scala model
   * of the documented semantics: per target ROW, matched-ness is decided
   * by key presence in the source; the first action (declaration order)
   * whose condition holds claims the row; unclaimed rows carry through;
   * NOT MATCHED inserts are judged against the PRE-merge target keys.
   * Duplicate target keys are legal (each sibling row classifies
   * independently); the source is key-unique per the engine contract.
+  * The statements the engine must refuse raise the same exception on
+  * both surfaces and commit nothing.
   */
-class GraftSqlPropertySpec extends SparkSpec {
+class GraftSqlPropertySpec extends SparkSpec with DmlSurfaces {
   import spark.implicits._
 
   private case class T(pk: Int, v: Int)
@@ -90,7 +94,7 @@ class GraftSqlPropertySpec extends SparkSpec {
       val doInsert = rnd.nextBoolean()
       val nmbs = if (rnd.nextBoolean()) List(nmbsAction(rnd)) else Nil
       if (matched.nonEmpty || doInsert || nmbs.nonEmpty) {
-        val stmt = (Seq(s"MERGE INTO d$iter t USING s$iter u ON t.pk = u.pk") ++
+        def stmt(target: String) = (Seq(s"MERGE INTO $target t USING s$iter u ON t.pk = u.pk") ++
           matched.map(_.sql) ++
           (if (doInsert) Seq("WHEN NOT MATCHED" +
             insertCond.map(c => s" AND ${c.sql}").getOrElse("") +
@@ -115,18 +119,86 @@ class GraftSqlPropertySpec extends SparkSpec {
         val expect = (survivors ++ inserts).map(t => (t.pk, t.v))
           .sorted
 
-        // engine
-        val store = new TableStore(spark, tmpDir("gsqlprop"))
-        store.create(s"d$iter", target.map(t => (t.pk, t.v)).toDF("pk", "v"))
+        // engine, through each entry point
         source.map(u => (u.pk, u.uv)).toDF("pk", "v")
           .createOrReplaceTempView(s"s$iter")
-        val got = GraftSql.execute(spark, store, stmt)
-          .as[(Int, Int)].collect().toSeq.sorted
+        for (sf <- surfaces("gsqlprop")) {
+          sf.store.create(s"d$iter",
+            target.map(t => (t.pk, t.v)).toDF("pk", "v"))
+          sf.run(stmt(sf.table(s"d$iter")))
+          val got = sf.store.read(s"d$iter")
+            .as[(Int, Int)].collect().toSeq.sorted
 
-        assert(got == expect,
-          s"iteration $iter diverged\nstatement:\n$stmt\n" +
-            s"target=$target\nsource=$source\ngot=$got\nexpect=$expect")
+          assert(got == expect,
+            s"iteration $iter diverged on ${sf.name}\nstatement:\n" +
+              s"${stmt(sf.table(s"d$iter"))}\ntarget=$target\n" +
+              s"source=$source\ngot=$got\nexpect=$expect")
+        }
       }
     }
+  }
+
+  /** Run `stmt` (target name rendered per surface) on each surface's
+    * freshly seeded store; each must raise, the exception classes must
+    * agree, and no table may change. */
+  private def refusedAlike(label: String, seed: TableStore => Unit,
+                           tables: Seq[String], stmt: (String => String) => String)
+      : Seq[Throwable] = {
+    val errs = surfaces("gsqlerr").map { sf =>
+      seed(sf.store)
+      def state = tables.map(t => (sf.store.currentVersion(t),
+        sf.store.read(t).collect().map(_.toString).sorted.toSeq))
+      val before = state
+      val e = intercept[Throwable](sf.run(stmt(sf.table)))
+      assert(state == before, s"$label: ${sf.name} committed a change")
+      e
+    }
+    assert(errs.map(_.getClass).distinct.size == 1,
+      s"$label: the surfaces raised different errors: ${errs.mkString(" | ")}")
+    errs
+  }
+
+  private def seedPlain(store: TableStore): Unit =
+    store.create("e", Seq((1, 10), (2, 20)).toDF("pk", "v"))
+
+  test("refused MERGE statements raise the same error on both surfaces") {
+    Seq((1, 5), (1, 6), (3, 7)).toDF("pk", "v").createOrReplaceTempView("dup_src")
+    Seq((1, 5), (3, 7)).toDF("pk", "v").createOrReplaceTempView("uniq_src")
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x =>
+        Option(x.getMessage).toSeq ++ messages(x.getCause))
+
+    // two source rows match target row 1: ambiguous, never committed
+    val dup = refusedAlike("duplicate source key", seedPlain, Seq("e"),
+      t => s"""MERGE INTO ${t("e")} t USING dup_src u ON t.pk = u.pk
+              |WHEN MATCHED THEN UPDATE SET v = u.v""".stripMargin)
+    assert(dup.forall(messages(_).exists(_.contains("cardinality"))),
+      dup.mkString(" | "))
+
+    refusedAlike("unknown SET target", seedPlain, Seq("e"),
+      t => s"""MERGE INTO ${t("e")} t USING uniq_src u ON t.pk = u.pk
+              |WHEN MATCHED THEN UPDATE SET nope = u.v""".stripMargin)
+      .foreach(e => assert(e.isInstanceOf[org.apache.spark.sql.AnalysisException], e))
+
+    // the source side is all-NULL on a NOT MATCHED BY SOURCE row
+    refusedAlike("NMBS source reference", seedPlain, Seq("e"),
+      t => s"""MERGE INTO ${t("e")} t USING uniq_src u ON t.pk = u.pk
+              |WHEN NOT MATCHED BY SOURCE AND u.v > 0 THEN DELETE""".stripMargin)
+      .foreach(e => assert(e.isInstanceOf[org.apache.spark.sql.AnalysisException], e))
+
+    def seedView(store: TableStore): Unit = {
+      seedPlain(store)
+      MaterializedView.create(store, "mv", "e", Seq("pk"), Seq("v"))
+    }
+    refusedAlike("MERGE into a materialized view", seedView,
+      Seq("mv", "mv__def"),
+      t => s"""MERGE INTO ${t("mv")} t USING uniq_src u ON t.pk = u.pk
+              |WHEN MATCHED THEN DELETE""".stripMargin)
+      .foreach(e => assert(messages(e).exists(_.contains("materialized view")), e))
+    refusedAlike("MERGE into a view's __def companion", seedView,
+      Seq("mv", "mv__def"),
+      t => s"""MERGE INTO ${t("mv__def")} d USING (SELECT 'x' AS src) s
+              |ON d.src = s.src WHEN MATCHED THEN DELETE""".stripMargin)
+      .foreach(e => assert(messages(e).exists(_.contains("definition companion")), e))
   }
 }

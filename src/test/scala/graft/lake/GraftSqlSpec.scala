@@ -154,19 +154,18 @@ class GraftSqlSpec extends SparkSpec {
     assert(store.currentVersion("dx").get == v0 + 1)
   }
 
-  test("subquery merge sources are rejected, not silently widened") {
+  test("subquery merge sources keep their predicates, never silently widened") {
     val store = new TableStore(spark, tmpDir("gsql"))
-    store.create("ds", Seq(("k1", 1)).toDF("pk", "v"))
-    Seq(("k1", 9)).toDF("pk", "v").createOrReplaceTempView("upds")
+    store.create("ds", Seq(("k1", 1), ("k2", 2)).toDF("pk", "v"))
+    Seq(("k1", 9), ("k2", 1)).toDF("pk", "v").createOrReplaceTempView("upds")
     // compiling this from the NAME alone would drop the batch filter
-    // and merge against the whole updates table
-    val e = intercept[IllegalArgumentException] {
-      GraftSql.execute(spark, store,
-        "MERGE INTO ds t USING (SELECT * FROM upds WHERE v > 5) u " +
-          "ON t.pk = u.pk WHEN MATCHED THEN DELETE")
-    }
-    assert(e.getMessage.contains("bare table"))
-    assert(store.read("ds").count() == 1) // nothing executed
+    // and merge against the whole updates table (deleting k2 too)
+    GraftSql.execute(spark, store,
+      "MERGE INTO ds t USING (SELECT * FROM upds WHERE v > 5) u " +
+        "ON t.pk = u.pk WHEN MATCHED THEN DELETE")
+    assert(store.read("ds").select("pk").as[String].collect().toSeq ==
+      Seq("k2"))
+    assert(store.currentVersion("ds").contains(1L))
   }
 
   test("WHEN MATCHED THEN UPDATE SET applies multi-assignments to matched rows") {
@@ -374,13 +373,15 @@ class GraftSqlSpec extends SparkSpec {
     val store = new TableStore(spark, tmpDir("gsql"))
     store.create("dtypo", Seq(("k1", 1)).toDF("pk", "v"))
     Seq("k1").toDF("pk").createOrReplaceTempView("updtypo")
-    val e = intercept[IllegalArgumentException] {
+    // rejected by the analyzer, the same error the catalog path raises
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
       GraftSql.execute(spark, store,
         "MERGE INTO dtypo t USING updtypo u ON t.pk = u.pk " +
           "WHEN MATCHED THEN UPDATE SET vv = 0")
     }
-    assert(e.getMessage.contains("unknown column"))
+    assert(e.getMessage.contains("vv"))
     assert(store.read("dtypo").count() == 1) // nothing committed
+    assert(store.currentVersion("dtypo").contains(0L))
   }
 
   test("NOT MATCHED BY SOURCE deletes target rows absent from the source") {
@@ -426,26 +427,42 @@ class GraftSqlSpec extends SparkSpec {
 
   test("unsupported merge forms are rejected with a clear error") {
     val store = new TableStore(spark, tmpDir("gsql"))
-    store.create("d3", Seq(("k1", 1)).toDF("pk", "v"))
+    store.create("d3", Seq(("k1", 1, ("a", 1))).toDF("pk", "v", "s"))
     Seq(("k1", 9)).toDF("pk", "v").createOrReplaceTempView("upd3")
-    val e = intercept[IllegalArgumentException] {
+    // nested-field assignment targets: only top-level columns assign
+    val e = intercept[UnsupportedOperationException] {
       GraftSql.execute(spark, store,
         "MERGE INTO d3 t USING upd3 u ON t.pk = u.pk " +
-          "WHEN NOT MATCHED THEN INSERT (pk) VALUES (u.pk)")
+          "WHEN MATCHED THEN UPDATE SET t.s._2 = u.v")
     }
-    assert(e.getMessage.contains("graft MERGE supports"))
+    assert(e.getMessage.contains("only top-level"))
+    assert(store.currentVersion("d3").contains(0L)) // nothing committed
+  }
+
+  test("INSERT (cols) VALUES merges null-fill the columns not named") {
+    val store = new TableStore(spark, tmpDir("gsql"))
+    store.create("d3i", Seq(("k1", 1)).toDF("pk", "v"))
+    Seq(("k1", 9), ("k2", 2)).toDF("pk", "v").createOrReplaceTempView("upd3i")
+    GraftSql.execute(spark, store,
+      "MERGE INTO d3i t USING upd3i u ON t.pk = u.pk " +
+        "WHEN NOT MATCHED THEN INSERT (pk) VALUES (u.pk)")
+    assert(store.read("d3i").orderBy("pk").collect()
+      .map(r => (r.getString(0), Option(r.get(1)))).toSeq ==
+      Seq(("k1", Some(1)), ("k2", None)))
   }
 
   test("NMBS clauses referencing the source are rejected, not NULL-evaluated") {
     val store = new TableStore(spark, tmpDir("gsql"))
     store.create("dnms", Seq(("k1", 1)).toDF("pk", "v"))
     Seq(("k1", 9)).toDF("pk", "uv").createOrReplaceTempView("updnms")
-    val e = intercept[IllegalArgumentException] {
+    // the analyzer resolves NMBS clauses against the target alone
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
       GraftSql.execute(spark, store,
         "MERGE INTO dnms t USING updnms u ON t.pk = u.pk " +
           "WHEN NOT MATCHED BY SOURCE AND u.uv > 5 THEN DELETE")
     }
-    assert(e.getMessage.contains("only the target"))
+    assert(e.getMessage.contains("uv"))
+    assert(store.currentVersion("dnms").contains(0L)) // nothing committed
   }
 
   test("NMBS-only merge with a duplicate-key source never duplicates target rows") {
@@ -477,10 +494,11 @@ class GraftSqlSpec extends SparkSpec {
     GraftSql.execute(spark, store, "UPDATE dua SET v = v + 100")
     assert(store.read("dua").orderBy("pk").as[(String, Int)].collect()
       .toSeq == Seq(("k1", 101), ("k2", 102)))
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
       GraftSql.execute(spark, store, "UPDATE dua SET nope = 1")
     }
-    assert(e.getMessage.contains("unknown column"))
+    assert(e.getMessage.contains("nope"))
+    assert(store.currentVersion("dua").contains(1L)) // nothing committed
   }
 
   test("DELETE FROM removes rows where the predicate is TRUE; NULL keeps") {
@@ -695,13 +713,15 @@ class GraftSqlSpec extends SparkSpec {
     GraftSql.execute(spark, store,
       """MERGE INTO hop t USING hop_src u ON t.id = u.id
         |WHEN MATCHED THEN UPDATE SET *""".stripMargin)
+    // a second small file, so OPTIMIZE has files to fold
+    GraftSql.execute(spark, store, "INSERT INTO hop VALUES (5, 50)")
     GraftSql.execute(spark, store, "OPTIMIZE hop")
     GraftSql.execute(spark, store, "RESTORE TABLE hop TO VERSION AS OF 1")
     val ops = store.history("hop").orderBy("version")
       .select("operation").as[String].collect().toSeq
-    assert(ops.take(5) ==
-      Seq("CREATE", "APPEND", "UPDATE", "DELETE", "MERGE"), ops)
-    assert(ops(5) == "OPTIMIZE")
+    assert(ops.take(6) ==
+      Seq("CREATE", "APPEND", "UPDATE", "DELETE", "MERGE", "APPEND"), ops)
+    assert(ops(6) == "OPTIMIZE")
     assert(ops.last == "RESTORE(1)")
     // dv ops carry their own tags
     spark.conf.set("spark.graft.delete.deletionVectors", "true")
