@@ -6,8 +6,6 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets
 import java.util.Base64
@@ -31,17 +29,6 @@ import scala.jdk.CollectionConverters._
   * predicate can match — drops a file.
   */
 object FileStats {
-
-  /** Driver-evaluable predicate. Numeric bounds compare in
-    * BigDecimal space, exact for the full long and double ranges (no
-    * 2^53 truncation on id-like keys). [[IsNull]]/[[IsNotNull]] prune
-    * on the per-file null COUNT folded from the same footers. */
-  sealed trait Pred { def col: String }
-  final case class NumRange(col: String, lo: BigDecimal, hi: BigDecimal)
-    extends Pred
-  final case class StrRange(col: String, lo: String, hi: String) extends Pred
-  final case class IsNull(col: String) extends Pred
-  final case class IsNotNull(col: String) extends Pred
 
   /** One parsed sidecar entry: range bounds plus the column's null
     * count (None on pre-null-count sidecar lines — conservative). */
@@ -213,14 +200,8 @@ object FileStats {
   /** Parsed sidecar: (fileKey, column) -> [[Stat]]. 5-field lines from
     * pre-null-count sidecars parse with an unknown null count. */
   def parse(content: String): Map[(String, String), Stat] =
-    content.split("\n").toSeq.map(_.trim).filter(_.nonEmpty).flatMap { line =>
-      line.split("\t", -1) match {
-        case Array(f, c, tag, mn, mx) => Some(((f, c), Stat(tag, mn, mx, None)))
-        case Array(f, c, tag, mn, mx, nulls) =>
-          Some(((f, c), Stat(tag, mn, mx, nulls.toLongOption)))
-        case _ => None
-      }
-    }.toMap
+    content.split("\n").iterator.flatMap(parseLine)
+      .map { case (f, c, st) => ((f, c), st) }.toMap
 
   /** One parsed sidecar line: (fileKey, column, [[Stat]]). */
   private def parseLine(line: String): Option[(String, String, Stat)] =
@@ -285,39 +266,10 @@ object FileStats {
     (rejected.toSet, StreamFoldStats(nFiles, nLines, maxCols, capped))
   }
 
-  /** Can rows of a file with these stats satisfy the predicate?
-    * Unknown/mismatched entries answer true (keep the file). */
-  def mayMatch(entry: Option[Stat], pred: Pred): Boolean = pred match {
-    case IsNull(_) => entry match {
-      // a file with a RECORDED zero null count cannot produce a NULL;
-      // anything else (all-null, positive count, unknown) is kept
-      case Some(s) if s.tag != CntTag => !s.nulls.contains(0L)
-      case _ => true
-    }
-    case IsNotNull(_) => entry match {
-      case Some(s) => s.tag != NullTag // only an all-NULL column skips
-      case _ => true
-    }
-    case _ => entry match {
-      case Some(Stat(NullTag, _, _, _)) => false
-      case Some(Stat(NumTag, mn, mx, _)) => pred match {
-        case NumRange(_, lo, hi) =>
-          BigDecimal(mx) >= lo && BigDecimal(mn) <= hi
-        case _ => true
-      }
-      case Some(Stat(StrTag, mn, mx, _)) => pred match {
-        case StrRange(_, lo, hi) => unb64(mx) >= lo && unb64(mn) <= hi
-        case _ => true
-      }
-      case _ => true
-    }
-  }
-
   /** Conservative driver-side test of a pushed-down Catalyst data
-    * filter against ONE file's recorded stats — the evaluator behind
-    * [[StatsFileIndex]], which makes manifest-level skipping automatic
-    * on the DEFAULT read path (`store.read(t).where(...)`, SQL SELECT)
-    * instead of opt-in via [[graft.lake.TableStore.readPruned]].
+    * filter against ONE file's recorded stats — the store's only
+    * file-skipping evaluator, run by [[StatsFileIndex]] on every scan
+    * (`store.read(t).where(...)`, SQL SELECT).
     * Answers "could any row of this file satisfy `e`?": false only
     * when the recorded ranges / null counts PROVE no row can;
     * unsupported expression shapes, unknown columns, and type
@@ -355,10 +307,15 @@ object FileStats {
         cmpMayMatch(statOf(a.name), v, "<=")
       case ce.LessThanOrEqual(ce.Literal(v, _), a: ce.AttributeReference) =>
         cmpMayMatch(statOf(a.name), v, ">=")
-      case ce.IsNull(a: ce.AttributeReference) =>
-        mayMatch(statOf(a.name), IsNull(a.name))
+      // a file with a RECORDED zero null count cannot produce a NULL;
+      // anything else (all-null, positive count, unknown) is kept
+      case ce.IsNull(a: ce.AttributeReference) => statOf(a.name) match {
+        case Some(s) if s.tag != CntTag => !s.nulls.contains(0L)
+        case _ => true
+      }
+      // only an all-NULL column skips
       case ce.IsNotNull(a: ce.AttributeReference) =>
-        mayMatch(statOf(a.name), IsNotNull(a.name))
+        !statOf(a.name).exists(_.tag == NullTag)
       case ce.In(a: ce.AttributeReference, vs)
           if vs.nonEmpty && vs.size <= 256 &&
             vs.forall(_.isInstanceOf[ce.Literal]) =>
@@ -449,15 +406,5 @@ object FileStats {
     case s: String =>
       if (s.exists(_ >= 0x80.toChar)) None else Some(s)
     case _ => None
-  }
-
-  /** The residual predicate to apply after pruning (stats are a
-    * superset filter, never the answer). */
-  def residual(df: DataFrame, pred: Pred): DataFrame = pred match {
-    case NumRange(c, lo, hi) =>
-      df.where(col(c) >= lit(lo.underlying) && col(c) <= lit(hi.underlying))
-    case StrRange(c, lo, hi) => df.where(col(c) >= lo && col(c) <= hi)
-    case IsNull(c) => df.where(col(c).isNull)
-    case IsNotNull(c) => df.where(col(c).isNotNull)
   }
 }

@@ -2,7 +2,7 @@ package graft.lake
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableValuedFunction}
 import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AddColumns, AddConstraint, CreateTableAsSelect, DeleteFromTable, DropColumns, DropConstraint, DropTable, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, RenameColumn, SubqueryAlias, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.functions.{col, lit, struct, when}
 
@@ -572,7 +572,7 @@ object GraftSql {
         case dml if graft.plans.GraftDml.targetOf(dml).isDefined =>
           executeDml(spark, store, dml, sql)
         case i: InsertIntoStatement => executeInsert(spark, store, i, sql)
-        case c: CreateTableAsSelect => executeCtas(spark, store, c)
+        case c: CreateTableAsSelect => executeCtas(spark, store, c, sql)
         case d: DropTable => executeDrop(spark, store, d, sql)
         case a: AddColumns => executeAddColumns(spark, store, a, sql)
         case r: RenameColumn => executeRenameColumn(spark, store, r, sql)
@@ -606,13 +606,7 @@ object GraftSql {
   private def executeAddColumns(spark: SparkSession, store: TableStore,
                                 a: AddColumns, sqlText: String): DataFrame = {
     import org.apache.spark.sql.types.{StructField, StructType}
-    val target = a.table match {
-      case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-        ut.multipartIdentifier.last
-      case other => throw new IllegalArgumentException(
-        s"unsupported ALTER target ${other.getClass.getSimpleName}")
-    }
-    if (!store.exists(target)) return spark.sql(sqlText)
+    val target = storeTable(store, a.table).getOrElse(return spark.sql(sqlText))
     a.columnsToAdd.foreach { q =>
       require(q.position.isEmpty,
         "FIRST/AFTER positions are not supported on graft tables")
@@ -673,8 +667,7 @@ object GraftSql {
     * logical name onto it. Top-level columns only. */
   private def executeRenameColumn(spark: SparkSession, store: TableStore,
                                   r: RenameColumn, sqlText: String): DataFrame = {
-    val target = alterTarget(r.table).getOrElse(return spark.sql(sqlText))
-    if (!store.exists(target)) return spark.sql(sqlText)
+    val target = storeTable(store, r.table).getOrElse(return spark.sql(sqlText))
     require(r.column.name.length == 1,
       s"nested column rename ${r.column.name.mkString(".")} is not " +
         "supported on graft tables")
@@ -687,8 +680,7 @@ object GraftSql {
     * files, hidden from every read. Top-level columns only. */
   private def executeDropColumns(spark: SparkSession, store: TableStore,
                                  d: DropColumns, sqlText: String): DataFrame = {
-    val target = alterTarget(d.table).getOrElse(return spark.sql(sqlText))
-    if (!store.exists(target)) return spark.sql(sqlText)
+    val target = storeTable(store, d.table).getOrElse(return spark.sql(sqlText))
     d.columnsToDrop.foreach { c =>
       require(c.name.length == 1,
         s"nested column drop ${c.name.mkString(".")} is not supported " +
@@ -700,12 +692,6 @@ object GraftSql {
     store.read(target)
   }
 
-  private def alterTarget(plan: LogicalPlan): Option[String] = plan match {
-    case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-      Some(ut.multipartIdentifier.last)
-    case _ => None
-  }
-
   /** `ALTER TABLE t ADD CONSTRAINT name CHECK (expr)` — compiled onto
     * the store's write-time CHECK machinery ([[TableStore.addConstraint]]:
     * existing rows validated by one read job, every later commit
@@ -714,11 +700,8 @@ object GraftSql {
     * target relation. */
   private def executeAddCheck(spark: SparkSession, store: TableStore,
                               a: AddCheckConstraint, sqlText: String): DataFrame = {
-    val target = a.child.collectFirst {
-      case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
-        r.multipartIdentifier.last
-    }.getOrElse(return spark.sql(sqlText))
-    if (!store.exists(target)) return spark.sql(sqlText)
+    val target = a.child.collectFirst { case r: UnresolvedRelation => r }
+      .flatMap(storeTable(store, _)).getOrElse(return spark.sql(sqlText))
     val c = a.checkConstraint
     // an unnamed CHECK gets a deterministic content-derived name
     val name = Option(c.userProvidedName).getOrElse(
@@ -740,8 +723,7 @@ object GraftSql {
   private def executeAddConstraint(spark: SparkSession, store: TableStore,
                                    a: AddConstraint, sqlText: String): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{ForeignKeyConstraint, PrimaryKeyConstraint, UniqueConstraint}
-    val target = alterTarget(a.table).getOrElse(return spark.sql(sqlText))
-    if (!store.exists(target)) return spark.sql(sqlText)
+    val target = storeTable(store, a.table).getOrElse(return spark.sql(sqlText))
     def named(user: String, fallback: String): String =
       Option(user).filter(_.nonEmpty).getOrElse(fallback)
     a.tableConstraint match {
@@ -769,8 +751,7 @@ object GraftSql {
   /** `ALTER TABLE t DROP CONSTRAINT [IF EXISTS] name`. */
   private def executeDropConstraint(spark: SparkSession, store: TableStore,
                                     d: DropConstraint, sqlText: String): DataFrame = {
-    val target = alterTarget(d.table).getOrElse(return spark.sql(sqlText))
-    if (!store.exists(target)) return spark.sql(sqlText)
+    val target = storeTable(store, d.table).getOrElse(return spark.sql(sqlText))
     val check = store.constraints(target).contains(d.name)
     val rely = store.relyConstraintNames(target).contains(d.name)
     require(check || rely || d.ifExists,
@@ -910,14 +891,11 @@ object GraftSql {
     * <query>` — S6 through the SQL front door; with INSERT / UPDATE /
     * DELETE / MERGE this makes the whole DDL+DML lifecycle of a store
     * table SQL-drivable. Only identity partition transforms are
-    * supported (hive-style layout, what the store writes). */
+    * supported (hive-style layout, what the store writes). A
+    * qualified target name delegates to `spark.sql`. */
   private def executeCtas(spark: SparkSession, store: TableStore,
-                          c: CreateTableAsSelect): DataFrame = {
-    val target = c.name match {
-      case UnresolvedIdentifier(parts, _) => parts.last
-      case other => throw new IllegalArgumentException(
-        s"unsupported CTAS target ${other.getClass.getSimpleName}")
-    }
+                          c: CreateTableAsSelect, sqlText: String): DataFrame = {
+    val target = storeName(c.name).getOrElse(return spark.sql(sqlText))
     if (store.exists(target)) {
       require(c.ignoreIfExists, s"table $target already exists")
       return store.read(target)
@@ -944,13 +922,9 @@ object GraftSql {
     * (temp views, S9 externals). */
   private def executeDrop(spark: SparkSession, store: TableStore,
                           d: DropTable, sqlText: String): DataFrame = {
-    val target = d.child match {
-      case UnresolvedIdentifier(parts, _) => parts.last
-      case other => throw new IllegalArgumentException(
-        s"unsupported DROP target ${other.getClass.getSimpleName}")
-    }
-    if (store.exists(target)) { store.drop(target); spark.emptyDataFrame }
-    else spark.sql(sqlText)
+    val target = storeTable(store, d.child).getOrElse(return spark.sql(sqlText))
+    store.drop(target)
+    spark.emptyDataFrame
   }
 
   /** `INSERT INTO | OVERWRITE [TABLE] t [(cols) | BY NAME]
@@ -971,8 +945,7 @@ object GraftSql {
     * that lets a daily re-load coexist with a 100 TB table. */
   private def executeInsert(spark: SparkSession, store: TableStore,
                             i: InsertIntoStatement, sqlText: String): DataFrame = {
-    val target = tableName(i.table)
-    if (!store.exists(target)) return spark.sql(sqlText)
+    val target = storeTable(store, i.table).getOrElse(return spark.sql(sqlText))
     require(!i.ifPartitionNotExists,
       "INSERT ... IF NOT EXISTS is not supported on graft tables")
     val queryText = (for {
@@ -1109,8 +1082,7 @@ object GraftSql {
   private def executeDml(spark: SparkSession, store: TableStore,
                          stmt: LogicalPlan, sqlText: String): DataFrame = {
     val targetRel = graft.plans.GraftDml.targetOf(stmt).get
-    val target = tableName(targetRel)
-    if (!store.exists(target)) return spark.sql(sqlText)
+    val target = storeTable(store, targetRel).getOrElse(return spark.sql(sqlText))
     val rs = store.currentVersion(target).get
     val pinned = store.readVersion(target, rs)
     def bind(df: DataFrame): LogicalPlan = targetRel.transform {
@@ -1249,9 +1221,9 @@ object GraftSql {
                                 plan: LogicalPlan, sqlText: String): String = {
     val tts = plan.collect { case tt: RelationTimeTravel => tt }
     val splices = tts.map { tt =>
-      val table = tableName(tt.relation)
-      require(store.exists(table),
-        s"time travel requires a graft table; $table is not one")
+      val table = storeTable(store, tt.relation).getOrElse(
+        throw new IllegalArgumentException("time travel requires a graft " +
+          s"table; ${nameParts(tt.relation).mkString(".")} is not one"))
       val v = tt.version match {
         case Some(vs) =>
           require(vs.forall(_.isDigit), s"VERSION AS OF must be a " +
@@ -1308,14 +1280,28 @@ object GraftSql {
   private[graft] def sessionTimestampMs(spark: SparkSession, ts: String): Long =
     evalTimestampMs(spark, s"'$ts'")
 
-  /** The store table a statement names. Anything beyond a bare
-    * (optionally aliased) relation — a subquery, a filter, a join —
-    * is rejected loudly, never compiled from the name alone. */
-  private def tableName(plan: LogicalPlan): String = plan match {
-    case r: UnresolvedRelation => r.multipartIdentifier.last
-    case SubqueryAlias(_, r: UnresolvedRelation) => r.multipartIdentifier.last
+  /** The name a statement's target relation is written with. Anything
+    * beyond a bare (optionally aliased) name — a subquery, a filter, a
+    * join — is rejected loudly, never compiled from the name alone. */
+  private def nameParts(plan: LogicalPlan): Seq[String] = plan match {
+    case r: UnresolvedRelation => r.multipartIdentifier
+    case SubqueryAlias(_, r: UnresolvedRelation) => r.multipartIdentifier
+    case t: UnresolvedTable => t.multipartIdentifier
+    case UnresolvedIdentifier(parts, _) => parts
     case other => throw new IllegalArgumentException(
       s"graft statements require a bare table name here (got " +
         s"${other.getClass.getSimpleName})")
   }
+
+  /** The store table name `plan` is written with: only a one-part name
+    * denotes one. A qualified name (`cat.db.t`) answers None whatever
+    * its last part, so the caller delegates the statement to
+    * `spark.sql` and never touches the store's own `t`. */
+  private def storeName(plan: LogicalPlan): Option[String] =
+    Some(nameParts(plan)).collect { case Seq(name) => name }
+
+  /** [[storeName]], when the store holds that table; None sends the
+    * statement to `spark.sql`, as for any table the store doesn't know. */
+  private def storeTable(store: TableStore, plan: LogicalPlan): Option[String] =
+    storeName(plan).filter(store.exists)
 }

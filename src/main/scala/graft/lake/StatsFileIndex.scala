@@ -6,20 +6,17 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, InMemoryFileIndex,
 import org.apache.spark.sql.types.StructType
 
 /** A [[FileIndex]] that makes the store's manifest-level data
-  * skipping AUTOMATIC on the default read path. It wraps the plain
-  * [[InMemoryFileIndex]] a `spark.read.parquet` would have built
-  * (same listing, same hive-partition inference and pruning) and
-  * additionally drops files whose stats-sidecar entries PROVE the
-  * pushed-down data filters can't match — so
-  * `store.read(t).where(pred)` and every SQL SELECT through the
-  * front door skip non-intersecting files the moment Catalyst pushes
-  * the predicate to the scan, without the caller opting in via
-  * `readPruned`/`readPointLookup`.
+  * skipping AUTOMATIC on the default read path, and the store's only
+  * file-skipping path. It wraps the plain [[InMemoryFileIndex]] a
+  * `spark.read.parquet` would have built (same listing, same
+  * hive-partition inference and pruning) and additionally drops files
+  * whose stats-sidecar entries PROVE the pushed-down data filters
+  * can't match — so `store.read(t).where(pred)` and every SQL SELECT
+  * through the front door skip non-intersecting files the moment
+  * Catalyst pushes the predicate to the scan.
   *
-  * At 100 TB this is the difference between the engine's own skipping
-  * working everywhere and working only in the three queries that call
-  * the opt-in API: pruning happens driver-side before any footer is
-  * opened, and shows up directly in the scan's `numFiles` metric.
+  * Pruning happens driver-side before any footer is opened, and shows
+  * up directly in the scan's `numFiles` metric.
   * Driver memory is BOUNDED: the index never holds a materialized
   * (file, column) → stat map — `statsRejects` streams the sidecar
   * ([[FileStats.streamRejects]]) and returns only the capped set of
@@ -27,7 +24,7 @@ import org.apache.spark.sql.types.StructType
   * a bounded reject set, not a multi-GB map. Pruning is conservative
   * (unknown columns/types/expressions keep the file; equality deletes
   * ride separate manifest lines and are untouched), so the result
-  * always equals the unpruned scan filtered — the 172-query oracle
+  * always equals the unpruned scan filtered — the 208-query oracle
   * surface re-proves that equivalence on every run.
   *
   * When a Bloom index exists for a probed column (built via
@@ -36,8 +33,8 @@ import org.apache.spark.sql.types.StructType
   * file keys whose bloom DEFINITELY lacks the key (None when the
   * column has no index). Bloom probing covers the point-lookup keys
   * min/max ranges can't separate (uuids, hashes) — building the index
-  * is the opt-in; every later `read(t).where(col === v)` then skips
-  * automatically, `readPointLookup` no longer required.
+  * is the only opt-in; every later `read(t).where(col === v)` then
+  * skips automatically.
   *
   * Reference behavior context: the reference's engines (Delta/Iceberg,
   * e.g. icberg/iceberg_tables.py:34-51 reads) get this from their

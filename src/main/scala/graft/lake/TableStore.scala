@@ -421,8 +421,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     * Stats-sidecar file skipping is AUTOMATIC here: the scan is built
     * over a [[StatsFileIndex]], so `read(t).where(pred)` drops
     * non-intersecting files when Catalyst pushes `pred` down — every
-    * front-door path (SQL SELECT included) gets the pruning
-    * `readPruned` used to require opting into. */
+    * front-door path (SQL SELECT included) gets the same pruning. */
   def read(table: String): DataFrame = {
     val v = currentVersion(table).getOrElse(
       throw new IllegalStateException(s"table $table does not exist"))
@@ -701,45 +700,6 @@ final class TableStore(private[graft] val spark: SparkSession,
     }
   }
 
-  /** Stats-pruned read: drop data files whose per-file min/max
-    * ([[FileStats]], `stats-<n>` sidecar) cannot intersect `pred`
-    * BEFORE the scan starts — manifest-level data skipping, the read
-    * side of `Layout.cluster`. Driver-side metadata only: at 100 TB
-    * this removes files from the plan without opening them, where
-    * plain parquet pushdown still opens every footer. Files without a
-    * recorded entry for the column are kept (conservative), equality
-    * deletes still apply, and the residual predicate is re-applied to
-    * the survivors, so the result always equals
-    * `read(table).where(pred)`. */
-  def readPruned(table: String, pred: FileStats.Pred): DataFrame = {
-    val v = currentVersion(table).getOrElse(
-      throw new IllegalStateException(s"table $table does not exist"))
-    FileStats.residual(columnMapping(table, v)
-      .applyRead(readLines(table, pruneLines(table, v, pred),
-        statsRejects = statsRejectsFor(table, v))), pred)
-  }
-
-  /** Manifest lines of version `v` with stats-excluded data files
-    * removed (delete entries always survive). Exposed within the
-    * package for pruning-ratio assertions. Stats sidecars record
-    * PHYSICAL column names (footers don't know about renames), so the
-    * predicate's logical column resolves through the mapping first. */
-  private[lake] def pruneLines(table: String, v: Long,
-                               pred: FileStats.Pred): Seq[String] = {
-    val physCol = columnMapping(table, v).physicalOf(pred.col)
-    // stream the sidecar into a capped reject set — same bounded
-    // driver allocation as the automatic path (one file's column
-    // group resident, never the full map)
-    val rejected = withStatsLines(table, v) { lines =>
-      FileStats.streamRejects(lines,
-        group => FileStats.mayMatch(group.get(physCol), pred),
-        MaxStatsRejects)._1
-    }
-    manifest(table, v).filter { line =>
-      isDeleteLine(line) || !rejected(FileStats.fileKey(line))
-    }
-  }
-
   private def statsPath(table: String, v: Long): Path =
     new Path(tablePath(table), s"stats-$v")
 
@@ -902,66 +862,6 @@ final class TableStore(private[graft] val spark: SparkSession,
         (file, bos.toByteArray)
       }
       .toDF("file", "bits")
-  }
-
-  /** Point-lookup read `column = value` with Bloom file skipping:
-    * files whose bloom definitely lacks the value leave the plan
-    * before the scan starts (driver-side, no footer opened). Files
-    * without an entry are kept, equality deletes still apply, and the
-    * equality predicate re-applies to the survivors — so the result
-    * always equals `read(table).where(col(column) === value)`,
-    * independent of fpp or index staleness. */
-  def readPointLookup(table: String, column: String, value: Any): DataFrame = {
-    val v = currentVersion(table).getOrElse(
-      throw new IllegalStateException(s"table $table does not exist"))
-    val keep = bloomPrunedLines(table, v, column, value)
-    // every data file bloom-rejected: the key is definitely absent —
-    // an empty frame with the table's schema, no scan at all
-    if (keep.forall(isDeleteLine))
-      read(table).where(lit(false))
-    else
-      columnMapping(table, v).applyRead(
-        readLines(table, keep, statsRejects = statsRejectsFor(table, v)))
-        .where(col(column) === lit(value))
-  }
-
-  /** Manifest lines with bloom-excluded data files removed (delete
-    * entries and entry-less files always survive). Package-private for
-    * pruning-ratio assertions.
-    *
-    * The probe key renders through SPARK's string cast (a
-    * LocalTableScan — no job), the same cast the build side applied:
-    * a JVM `toString` would disagree on decimals/timestamps/doubles
-    * ("42.5" vs "42.50") and silently prune files that hold the value.
-    * Probing runs WHERE THE BITS ARE: executors filter the sidecar and
-    * return only the keys of definitely-rejecting files (small
-    * strings), so the driver never deserializes the index — at 1B rows
-    * the bits are GBs, the rejected-file list is KBs. */
-  private[lake] def bloomPrunedLines(table: String, v: Long, column: String,
-                                     value: Any): Seq[String] = {
-    val phys = columnMapping(table, v).physicalOf(column)
-    val p = bloomPath(table, phys)
-    if (!fs(p).exists(p)) return manifest(table, v)
-    import spark.implicits._
-    val key = Seq(0).toDF("__x").select(lit(value).cast("string").as("k"))
-      .first().getString(0)
-    val rejects = udf((bits: Array[Byte]) =>
-      !org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(bits)).mightContainString(key))
-    // capped like the automatic path (MaxBloomRejects): files past
-    // the cap stay in the plan conservatively rather than pulling an
-    // unbounded key set to the driver. A corrupt sidecar degrades to
-    // no pruning — the contract (result ≡ unindexed read) holds
-    // regardless of index state, so a broken index must never fail
-    // the lookup itself.
-    val rejected = scala.util.Try {
-      spark.read.parquet(p.toString)
-        .where(rejects(col("bits")))
-        .select("file").as[String].limit(MaxBloomRejects).collect().toSet
-    }.getOrElse(Set.empty[String])
-    manifest(table, v).filter { line =>
-      isDeleteLine(line) || !rejected(FileStats.fileKey(line))
-    }
   }
 
   /** Probe results for AUTOMATIC bloom skipping, keyed
@@ -1199,20 +1099,16 @@ final class TableStore(private[graft] val spark: SparkSession,
     val live = manifest(table, v).filterNot(isDeleteLine)
       .map(FileStats.fileKey)
     // the row count obeys the same contract as the bounds: any live
-    // file without a folded footer count makes the total unknown.
-    // tag-checked: a user column literally named __rows suppresses the
-    // commit's cnt line, and its own num entry must not be misread as
-    // a file row count
+    // file without a folded footer count makes the total unknown
     val perFileRows = live.map(f => stats.get((f, FileStats.RowsCol))
-      .filter(_.tag == FileStats.CntTag)
-      .flatMap(st => scala.util.Try(st.max.toLong).toOption))
+      .flatMap(rowCountOf(FileStats.RowsCol, _)))
     val nRows: Option[Long] =
       if (perFileRows.exists(_.isEmpty)) None
       else Some(perFileRows.flatten.sum)
     // sidecar entries carry PHYSICAL names — report logical ones, hide
     // dropped columns, and take FOR COLUMNS requests in logical terms,
     // same translation discipline as every other sidecar consumer
-    // (pruneLines, bloomIndexedColumns)
+    // (statsRejectsFor, bloomIndexedColumns)
     val cm = columnMapping(table, v)
     val present = stats.keysIterator.map(_._2)
       .filter(_ != FileStats.RowsCol).toSeq.distinct

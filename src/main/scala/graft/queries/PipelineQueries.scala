@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.{Cdc, Skew, TopK}
-import graft.lake.{Catalog, CdcIngest, FileStats, GraftSql, Layout, TableStore}
+import graft.lake.{Catalog, CdcIngest, GraftSql, Layout, TableStore}
 import Queries.{Entry, t}
 
 /** End-to-end engine queries: the real TableStore + CdcIngest pipeline
@@ -256,8 +256,9 @@ object PipelineQueries {
   /** Manifest-level data skipping end-to-end: commit a z-ordered
     * lineitem projection into the store (per-file min/max recorded in
     * the `stats-<n>` sidecar at write), then answer a range predicate
-    * via `readPruned` — non-intersecting files leave the plan before
-    * the scan starts, the skipping Delta/Iceberg get from log stats.
+    * with a plain filtered read — non-intersecting files leave the
+    * plan before the scan starts, the skipping Delta/Iceberg get from
+    * log stats.
     * Content is layout- and pruning-invariant, so the oracle is the
     * plain filter; the pruning ratio itself is asserted in
     * StatsPruningSpec. */
@@ -268,8 +269,8 @@ object PipelineQueries {
       store.create("li", Layout.cluster(
         t(s, dir, "lineitem").select("l_partkey", "l_suppkey", "l_quantity"),
         Seq("l_partkey", "l_suppkey"), numFiles = 16))
-      store.readPruned("li",
-          FileStats.NumRange("l_partkey", BigDecimal(100), BigDecimal(300)))
+      store.read("li")
+        .where(col("l_partkey").between(100, 300))
         .where(col("l_suppkey").between(10, 50))
         .groupBy("l_suppkey")
         .agg(count(lit(1)).as("n"),
@@ -367,12 +368,12 @@ object PipelineQueries {
 
   /** Per-file Bloom-index point lookups end-to-end: keys land in
     * range-partitioned files, the bloom index is built in one
-    * distributed pass, and each lookup plans only the file(s) whose
-    * bloom might hold the key — the skipping dimension min/max stats
-    * can't provide on hash/uuid-like keys. Content is
-    * pruning-invariant (readPointLookup == filter by contract), so
-    * the oracle is the plain equality filter; the skipping ratio
-    * itself is asserted in BloomIndexSpec. */
+    * distributed pass, and each plain equality read plans only the
+    * file(s) whose stats and bloom might hold the key — the bloom
+    * adds the skipping dimension min/max stats can't provide on
+    * hash/uuid-like keys. Content is pruning-invariant, so the oracle
+    * is the plain equality filter; the skipping ratio itself is
+    * asserted in BloomIndexSpec. */
   val bloomPointLookup: Entry = Entry(
     "bloom_point_lookup",
     (s, dir) => {
@@ -382,7 +383,7 @@ object PipelineQueries {
         .repartitionByRange(8, col("c_custkey")))
       store.buildBloomIndex("cust_bl", "c_custkey")
       Seq(42L, 77L, 120L)
-        .map(k => store.readPointLookup("cust_bl", "c_custkey", k))
+        .map(k => store.read("cust_bl").where(col("c_custkey") === k))
         .reduce(_.unionByName(_))
         .select(col("c_custkey"), col("c_name"),
           col("c_acctbal").cast("decimal(18,2)").cast("double").as("bal"))
@@ -396,9 +397,9 @@ object PipelineQueries {
   /** AUTOMATIC bloom skipping on the DEFAULT read path: keys are md5
     * hashes hash-distributed across files, so every file's string
     * min/max spans the key space and stats prune nothing — once the
-    * index is built, a plain `read(t).where(key = ...)` (no
-    * readPointLookup opt-in) consults the bloom sidecar at
-    * predicate-pushdown time and plans only the surviving file(s).
+    * index is built, a plain `read(t).where(key = ...)` consults the
+    * bloom sidecar at predicate-pushdown time and plans only the
+    * surviving file(s).
     * Content is pruning-invariant, so the oracle is the equality
     * filter on the pre-hash key; the scanned-file counts are asserted
     * in BloomIndexSpec. */
@@ -423,9 +424,10 @@ object PipelineQueries {
 
   /** Null-count data skipping end-to-end: the stats sidecar records
     * per-file null counts (folded from the same parquet footers as
-    * min/max), so `IS NULL` drops every file with a recorded zero
-    * null count and `IS NOT NULL` drops all-null files — the pruning
-    * dimension Delta gets from `nullCount` in its log. Nulls cluster
+    * min/max), so a plain read filtered `IS NULL` drops every file
+    * with a recorded zero null count and one filtered `IS NOT NULL`
+    * drops all-null files — the pruning dimension Delta gets from
+    * `nullCount` in its log. Nulls cluster
     * because the layout range-partitions on the nullable column
     * (NULLS FIRST), which is what a real pipeline's clustering does
     * to its quality columns. Content is pruning-invariant, so the
@@ -440,10 +442,10 @@ object PipelineQueries {
           when(col("o_orderkey") % 3 === 0, lit(null).cast("double"))
             .otherwise(col("o_totalprice")).as("v"))
         .repartitionByRange(8, col("v")))
-      val nulls = store.readPruned("onull", FileStats.IsNull("v"))
+      val nulls = store.read("onull").where(col("v").isNull)
         .agg(count(lit(1)).as("n_null"),
           sum("o_orderkey").cast("long").as("key_sum"))
-      val valued = store.readPruned("onull", FileStats.IsNotNull("v"))
+      val valued = store.read("onull").where(col("v").isNotNull)
         .agg(count(lit(1)).as("n_valued"), round(sum("v"), 2).as("total"))
       nulls.crossJoin(broadcast(valued)) // 1-row x 1-row stats join
     },

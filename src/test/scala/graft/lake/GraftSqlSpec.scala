@@ -621,6 +621,26 @@ class GraftSqlSpec extends SparkSpec {
       e.getMessage.contains("session_t"))
   }
 
+  test("a qualified name never resolves to the store's table of the same last name") {
+    val store = new TableStore(spark, tmpDir("gsql"))
+    store.create("t", Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    // each statement delegates to spark.sql, which has no catalog
+    // `nosuch`, so each raises instead of rewriting the store's `t`
+    for (stmt <- Seq(
+        "DELETE FROM nosuch.db.t WHERE id = 1",
+        "INSERT INTO nosuch.db.t VALUES (3, 'c')",
+        "DROP TABLE nosuch.db.t")) {
+      intercept[Exception](GraftSql.execute(spark, store, stmt))
+    }
+    val e = intercept[IllegalArgumentException] {
+      GraftSql.execute(spark, store, "SELECT * FROM nosuch.db.t VERSION AS OF 0")
+    }
+    assert(e.getMessage.contains("nosuch.db.t is not one"))
+    assert(store.currentVersion("t").contains(0L))
+    assert(store.read("t").orderBy("id").as[(Int, String)].collect().toSeq ==
+      Seq((1, "a"), (2, "b")))
+  }
+
   test("OPTIMIZE folds small files into one commit; rows unchanged") {
     val store = new TableStore(spark, tmpDir("gsql"))
     store.create("topt", Seq((1, "a")).toDF("id", "v"))

@@ -1,7 +1,6 @@
 package graft.lake
 
 import graft.SparkSpec
-import graft.lake.FileStats.{IsNotNull, IsNull, NumRange, StrRange}
 import org.apache.spark.sql.functions._
 
 class StatsPruningSpec extends SparkSpec {
@@ -22,14 +21,12 @@ class StatsPruningSpec extends SparkSpec {
     val total = dataLines(store, "t")
     assert(total >= 8, s"expected >=8 files, got $total")
 
-    val pred = NumRange("id", BigDecimal(100), BigDecimal(199))
-    val kept = store.pruneLines("t", 0L, pred).size
+    val hit = store.read("t").where(col("id").between(100, 199))
+    val kept = scannedFiles(hit)
     assert(kept < total / 2, s"pruning missing: kept $kept of $total files")
-    // and the answer is exactly the unpruned filter
-    assert(store.readPruned("t", pred).orderBy("id").as[(Long, Long)]
-      .collect().toSeq ==
-      store.read("t").where(col("id").between(100, 199))
-        .orderBy("id").as[(Long, Long)].collect().toSeq)
+    // and the answer is exactly the filtered rows
+    assert(hit.orderBy("id").as[(Long, Long)].collect().toSeq ==
+      (100L to 199L).map(i => (i, i % 7)))
   }
 
 
@@ -40,7 +37,6 @@ class StatsPruningSpec extends SparkSpec {
       .repartitionByRange(8, col("id")))
     val total = dataLines(store, "t")
     assert(total >= 8)
-    // plain read().where(...) — no readPruned opt-in anywhere
     val df = store.read("t").where(col("id").between(100, 199))
     val scanned = scannedFiles(df)
     assert(scanned < total,
@@ -88,11 +84,10 @@ class StatsPruningSpec extends SparkSpec {
     val total = dataLines(store, "t")
     // a probe inside the first commit's range drops all second-commit
     // files AND the first commit's non-intersecting ones
-    val kept = store.pruneLines("t", 1L,
-      NumRange("id", BigDecimal(10), BigDecimal(20))).size
+    val df = store.read("t").where(col("id").between(10, 20))
+    val kept = scannedFiles(df)
     assert(kept < total / 2, s"kept $kept of $total")
-    assert(store.readPruned("t",
-        NumRange("id", BigDecimal(10), BigDecimal(20))).count() == 11)
+    assert(df.count() == 11)
   }
 
   test("schema evolution: files predating a column survive pruning on it") {
@@ -102,9 +97,8 @@ class StatsPruningSpec extends SparkSpec {
       .toDF("id", "v", "score"))
     // pruning on `score` must keep the v0 file (no stats entry for the
     // column it predates) even though its rows null-fill and then fail
-    // the residual predicate
-    val out = store.readPruned("t",
-      NumRange("score", BigDecimal(0), BigDecimal(100)))
+    // the filter
+    val out = store.read("t").where(col("score").between(0, 100))
     assert(out.select("id").as[Long].collect().toSeq == Seq(3L))
   }
 
@@ -114,7 +108,7 @@ class StatsPruningSpec extends SparkSpec {
       spark.range(0, 100).toDF("id").repartitionByRange(4, col("id")))
     store.appendWithDeletes("t", Seq(10L, 200L).toDF("id"),
       deleteKeys = Seq(11L, 12L).toDF("id"))
-    val got = store.readPruned("t", NumRange("id", BigDecimal(0), BigDecimal(20)))
+    val got = store.read("t").where(col("id").between(0, 20))
       .as[Long].collect().toSeq.sorted
     // 11,12 deleted from the base commit; the batch re-inserts a
     // second 10 exempt from its own delete keys
@@ -128,11 +122,10 @@ class StatsPruningSpec extends SparkSpec {
       .toDF("id", "name"))
     store.append("t", Seq((4L, Some("zulu"))).toDF("id", "name"))
     val total = dataLines(store, "t")
-    val pred = StrRange("name", "aa", "m")
-    val kept = store.pruneLines("t", store.currentVersion("t").get, pred)
-    assert(kept.size < total, s"kept ${kept.size} of $total")
-    assert(store.readPruned("t", pred).select("id").as[Long]
-      .collect().toSeq.sorted == Seq(2L, 3L))
+    val df = store.read("t").where(col("name").between("aa", "m"))
+    val kept = scannedFiles(df)
+    assert(kept < total, s"kept $kept of $total")
+    assert(df.select("id").as[Long].collect().toSeq.sorted == Seq(2L, 3L))
   }
 
   test("IS NULL skips files with a recorded zero null count") {
@@ -145,11 +138,12 @@ class StatsPruningSpec extends SparkSpec {
     store.create("t", df)
     val total = dataLines(store, "t")
     assert(total >= 6, s"expected a multi-file layout, got $total")
-    val kept = store.pruneLines("t", 0L, IsNull("v")).size
+    val nulls = store.read("t").where(col("v").isNull)
+    val kept = scannedFiles(nulls)
     assert(kept < total / 2, s"IS NULL kept $kept of $total files")
-    assert(store.readPruned("t", IsNull("v")).count() == 50)
-    // IS NOT NULL keeps mixed files (the residual does the row work)
-    assert(store.readPruned("t", IsNotNull("v")).count() == 350)
+    assert(nulls.count() == 50)
+    // IS NOT NULL keeps mixed files (the filter does the row work)
+    assert(store.read("t").where(col("v").isNotNull).count() == 350)
   }
 
   test("IS NOT NULL skips an all-null file; legacy stats lines stay conservative") {
@@ -157,20 +151,22 @@ class StatsPruningSpec extends SparkSpec {
     store.create("t", Seq((1L, Option.empty[Long])).toDF("id", "v"))
     store.append("t", Seq((2L, Some(5L)), (3L, Some(6L))).toDF("id", "v"))
     val total = dataLines(store, "t")
-    val kept = store.pruneLines("t", store.currentVersion("t").get,
-      IsNotNull("v")).size
+    val valued = store.read("t").where(col("v").isNotNull)
+    val kept = scannedFiles(valued)
     assert(kept < total, s"all-null file survived: kept $kept of $total")
-    assert(store.readPruned("t", IsNotNull("v")).select("id").as[Long]
-      .collect().toSeq.sorted == Seq(2L, 3L))
+    assert(valued.select("id").as[Long].collect().toSeq.sorted == Seq(2L, 3L))
     // the all-null file is definitely-null: IS NULL keeps exactly it
-    assert(store.readPruned("t", IsNull("v")).select("id").as[Long]
+    assert(store.read("t").where(col("v").isNull).select("id").as[Long]
       .collect().toSeq == Seq(1L))
     // a 5-field line from a pre-null-count sidecar parses with an
     // unknown count and never lets IS NULL drop the file
+    import org.apache.spark.sql.catalyst.{expressions => ce}
     val legacy = FileStats.parse("f\tc\tnum\t1\t2")
     assert(legacy(("f", "c")).nulls.isEmpty)
-    assert(FileStats.mayMatch(legacy.get(("f", "c")), IsNull("c")))
-    assert(FileStats.mayMatch(legacy.get(("f", "c")), IsNotNull("c")))
+    val c = ce.AttributeReference("c", org.apache.spark.sql.types.LongType)()
+    val statOf = (name: String) => legacy.get(("f", name))
+    assert(FileStats.exprMayMatch(ce.IsNull(c), statOf))
+    assert(FileStats.exprMayMatch(ce.IsNotNull(c), statOf))
   }
 
   test("float equality at a file's exact bound never prunes the matching file") {
@@ -261,11 +257,11 @@ class StatsPruningSpec extends SparkSpec {
     store.create("t", Layout.cluster(grid, Seq("x", "y"), numFiles = 16, bits = 6))
     val total = dataLines(store, "t")
     assert(total >= 8)
-    for (pred <- Seq(NumRange("x", BigDecimal(20), BigDecimal(29)),
-                     NumRange("y", BigDecimal(20), BigDecimal(29)))) {
-      val kept = store.pruneLines("t", 0L, pred).size
-      assert(kept <= total / 2, s"${pred.col}: kept $kept of $total")
-      assert(store.readPruned("t", pred).count() == 10 * 64)
+    for (c <- Seq("x", "y")) {
+      val df = store.read("t").where(col(c).between(20, 29))
+      val kept = scannedFiles(df)
+      assert(kept <= total / 2, s"$c: kept $kept of $total")
+      assert(df.count() == 10 * 64)
     }
   }
 }
