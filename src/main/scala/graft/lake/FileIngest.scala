@@ -160,9 +160,9 @@ object FileIngest {
       val entries = (refreshed ++ fresh).filter { case (p, t) =>
         t >= pruneBelow(p) }
       val lines = entries.toSeq.sortBy(_._1)
-        .map { case (p, t) => TableStore.ingestLine(t, p) } ++
+        .map { case (p, t) => Manifest.ingestLine(t, p) } ++
         newWms.toSeq.sortBy(_._1)
-          .map { case (r, t) => TableStore.ingestWmLine(t, r) }
+          .map { case (r, t) => Manifest.ingestWmLine(t, r) }
       try {
         // the commit folds parquet footer row counts into the stats
         // sidecar anyway — the exactness report rides that, so the

@@ -710,9 +710,6 @@ object GraftSql {
     store.read(target)
   }
 
-  /** Non-CHECK constraint forms (PRIMARY KEY / FOREIGN KEY / UNIQUE)
-    * would need global state a file store can't validate batch-locally
-    * — rejected loudly on graft tables, delegated otherwise. */
   /** `ALTER TABLE t ADD CONSTRAINT name PRIMARY KEY (cols) [RELY]` /
     * `UNIQUE (cols)` / `FOREIGN KEY (cols) REFERENCES r (cols)` —
     * informational RELY constraints ([[TableStore.setKeyConstraint]]/
@@ -737,10 +734,13 @@ object GraftSql {
             s"${target}_uq_${uq.columns.mkString("_")}"),
           uq.columns, unique = true)
       case fk: ForeignKeyConstraint =>
+        // only a one-part name denotes a store table (see storeName)
+        require(fk.parentTableId.size == 1, "a graft FOREIGN KEY references a " +
+          s"store table by its bare name, got ${fk.parentTableId.mkString(".")}")
         store.addForeignKey(target,
           named(fk.userProvidedName,
             s"${target}_fk_${fk.childColumns.mkString("_")}"),
-          fk.childColumns, fk.parentTableId.last, fk.parentColumns)
+          fk.childColumns, fk.parentTableId.head, fk.parentColumns)
       case other => throw new IllegalArgumentException(
         s"graft tables support CHECK, PRIMARY KEY, UNIQUE and FOREIGN " +
           s"KEY constraints, got ${other.getClass.getSimpleName}")
@@ -823,9 +823,7 @@ object GraftSql {
     // data-file count BEFORE any rewrite: the honest "inputs folded"
     // figure, and the z-order range count (a post-debt-fold manifest
     // would collapse it to ~1, losing the multi-range skipping layout)
-    val filesBefore = store
-      .manifest(table, store.currentVersion(table).get)
-      .count(l => !l.startsWith("del|") && !l.startsWith("dv|"))
+    val filesBefore = store.liveDataFiles(table).size
     val debtFolded = store.deleteDebt(table) > 0
     val folded =
       if (zorderBy.nonEmpty) {

@@ -13,6 +13,11 @@ private[graft] object MetaMetrics {
   /** Full `manifest-<n>` directory listings (the O(#commits) path). */
   val manifestListings = new AtomicLong()
 
+  /** Manifest file loads ([[TableStore]]'s one loader), so specs can
+    * pin how often a read, a commit or a change feed opens each
+    * version's manifest. Test observability only, like the rest. */
+  val manifestLoads = new AtomicLong()
+
   /** MV definition loads that COLLECTED the 1-row `__def` table (a
     * Spark job) — the cache-miss path of [[MaterializedView]]'s def
     * cache; rewrite probes over a store with many views must answer
@@ -30,6 +35,7 @@ private[graft] object MetaMetrics {
 
   def reset(): Unit = {
     manifestListings.set(0)
+    manifestLoads.set(0)
     mvDefLoads.set(0)
     mvDirectAnalyses.set(0)
     claimConflicts.set(0)

@@ -355,16 +355,15 @@ final class TableStore(private[graft] val spark: SparkSession,
     * manifests here are already self-contained — each carries the
     * full file list and headers — so no log-replay rollup is
     * needed, only an entry point). */
-  def currentVersion(table: String): Option[Long] = {
-    // this instance's own staged commits are visible to itself (a
-    // transaction reads its earlier writes); invisible to every other
-    // reader until the commit swing
-    val staged = synchronized {
-      if (activeTxn.isEmpty) None
-      else stagedCommits.collect { case (t, v) if t == table => v }
-        .reduceOption(_ max _)
-    }
-    (publishedCurrent(table).toSeq ++ staged.toSeq).reduceOption(_ max _)
+  def currentVersion(table: String): Option[Long] =
+    (publishedCurrent(table).toSeq ++ stagedVersions(table)).maxOption
+
+  /** This instance's own staged commits of `table`: visible to itself
+    * (a transaction reads its earlier writes), invisible to every other
+    * reader until the commit swing. */
+  private def stagedVersions(table: String): Seq[Long] = synchronized {
+    if (activeTxn.isEmpty) Nil
+    else stagedCommits.collect { case (t, v) if t == table => v }.toSeq
   }
 
   private def latestHintPath(table: String): Path =
@@ -417,14 +416,18 @@ final class TableStore(private[graft] val spark: SparkSession,
     fs(m).exists(m)
   }
 
+  /** `o` (the table's current version, or the version a claim
+    * supersedes), failing loudly when the table does not exist. */
+  private def existing[A](table: String, o: Option[A]): A =
+    o.getOrElse(throw new IllegalStateException(s"table $table does not exist"))
+
   /** S3/S4: destination table scan of the current committed version.
     * Stats-sidecar file skipping is AUTOMATIC here: the scan is built
     * over a [[StatsFileIndex]], so `read(t).where(pred)` drops
     * non-intersecting files when Catalyst pushes `pred` down — every
     * front-door path (SQL SELECT included) gets the same pruning. */
   def read(table: String): DataFrame = {
-    val v = currentVersion(table).getOrElse(
-      throw new IllegalStateException(s"table $table does not exist"))
+    val v = existing(table, currentVersion(table))
     readVersion(table, v)
   }
 
@@ -442,24 +445,30 @@ final class TableStore(private[graft] val spark: SparkSession,
     * over driver-built hash sets, see [[DeleteSet]]); `compact` folds
     * the debt away. */
   def readVersion(table: String, v: Long): DataFrame =
-    columnMapping(table, v).applyRead(
-      readLines(table, manifest(table, v),
-        statsRejects = statsRejectsFor(table, v)))
+    readManifest(table, v, load(table, v))
 
   /** Version `v`'s rows viewed under version `schemaV`'s column
     * mapping — how `changes(_, fromV, toV)` sees its fromV endpoint.
     * Exposed within the package for feed-telescoping assertions. */
   private[lake] def readVersionAs(table: String, v: Long,
                                   schemaV: Long): DataFrame =
-    columnMapping(table, schemaV).applyRead(
-      readLines(table, manifest(table, v),
-        statsRejects = statsRejectsFor(table, v)))
+    load(table, schemaV).columnMapping.applyRead(
+      readLines(table, v, load(table, v), statsRejects = statsRejectsFor(table, v)))
 
-  private def readLines(table: String, lines: Seq[String],
+  /** Version `v`'s rows from its loaded manifest `m`, logical names. */
+  private def readManifest(table: String, v: Long, m: Manifest,
+                           withRowId: Boolean = false): DataFrame =
+    m.columnMapping.applyRead(readLines(table, v, m, withRowId,
+      statsRejects = statsRejectsFor(table, v)))
+
+  /** Raw (physical) rows of the files `m` lists — `m` is version `v`'s
+    * manifest or a subset of its lines. With no data file at all the
+    * result is an empty frame of the schema `v`'s commit recorded. */
+  private def readLines(table: String, v: Long, m: Manifest,
                         withRowId: Boolean = false,
                         statsRejects: Seq[org.apache.spark.sql.catalyst.expressions.Expression] => Set[String] =
                           _ => Set.empty): DataFrame = {
-    val prefix = tablePath(table).toString
+    val lines = m.lines
     // Commit group = the d-<uuid> dir the file was written into. Find
     // it by the path component, NOT by stripping this table's prefix:
     // a shallow clone's manifest references files under the SOURCE
@@ -483,13 +492,12 @@ final class TableStore(private[graft] val spark: SparkSession,
         dirSegs.mkString("/")
       }
     }
-    val dels = lines.zipWithIndex.collect {
-      case (l, i) if l.startsWith(DelPrefix) => (l.stripPrefix(DelPrefix), i)
-    }
-    val dvs = lines.zipWithIndex.collect {
-      case (l, i) if l.startsWith(DvPrefix) => (l.stripPrefix(DvPrefix), i)
-    }
-    val data = lines.zipWithIndex.filterNot(t => isDeleteLine(t._1))
+    def at(kind: String => Boolean) = lines.zipWithIndex.collect {
+      case (l, i) if kind(l) => (Manifest.lineFile(l), i) }
+    val dels = at(Manifest.isDelLine)
+    val dvs = at(Manifest.isDvLine)
+    val data = at(!Manifest.isDeleteLine(_))
+    if (data.isEmpty) return emptyFrame(table, v, m, withRowId)
     val groups = data.groupBy { case (f, _) => baseOf(f) }.toSeq
       .map { case (base, fs) => (base, fs.map(_._1), fs.map(_._2).min) }
       .sortBy(_._3)
@@ -584,6 +592,17 @@ final class TableStore(private[graft] val spark: SparkSession,
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
+  /** A zero-file version's rows: none, under the physical schema its
+    * commit recorded. A manifest written before the `#schema=` header
+    * has no schema to offer, so the read fails naming the version. */
+  private def emptyFrame(table: String, v: Long, m: Manifest,
+                         withRowId: Boolean): DataFrame = {
+    val schema = m.physicalSchema.getOrElse(throw new IllegalStateException(
+      s"version $v of $table has no data file and records no schema"))
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      if (withRowId) schema.add(RowFileCol, "string").add(RowPosCol, "long") else schema)
+  }
+
   /** A row-id-tagged read's row sits at a position vectors `files`
     * hold. */
   private def inVectors(files: Seq[String]): Column =
@@ -653,8 +672,6 @@ final class TableStore(private[graft] val spark: SparkSession,
     spark.baseRelationToDataFrame(rel)
   }
 
-  private val DelPrefix = "del|"
-  private val DvPrefix = "dv|"
   private val RowFileCol = "__row_file"
   private val RowPosCol = "__row_pos"
   private val DvFileCol = "__dv_file"
@@ -663,15 +680,6 @@ final class TableStore(private[graft] val spark: SparkSession,
   // deleteWhere and updateWhere
   private val DvSchema = new org.apache.spark.sql.types.StructType()
     .add(DvFileCol, "string").add(DvPosCol, "long")
-
-  /** True for manifest lines that are delete entries (equality-delete
-    * key files or positional deletion vectors), not data files. */
-  private def isDeleteLine(l: String): Boolean =
-    l.startsWith(DelPrefix) || l.startsWith(DvPrefix)
-
-  /** Raw path of a manifest line, marker or not. */
-  private def lineFile(l: String): String =
-    l.stripPrefix(DelPrefix).stripPrefix(DvPrefix)
 
   /** Exact shape of a commit dir name (`d-<uuid>`), so group detection
     * can't be fooled by a partition value or table name that merely
@@ -723,10 +731,10 @@ final class TableStore(private[graft] val spark: SparkSession,
     * bits. Partition columns don't need this — hive pruning already
     * skips them. */
   def buildBloomIndex(table: String, column: String, fpp: Double = 0.01): Unit = {
-    val v = currentVersion(table).getOrElse(
-      throw new IllegalStateException(s"table $table does not exist"))
-    val phys = columnMapping(table, v).physicalOf(column)
-    val lines = manifest(table, v).filterNot(isDeleteLine)
+    val v = existing(table, currentVersion(table))
+    val m = load(table, v)
+    val phys = m.columnMapping.physicalOf(column)
+    val lines = m.data
     if (lines.isEmpty) return
     bloomEntries(table, v, lines, phys, fpp)
       .write.mode(SaveMode.Overwrite).parquet(bloomPath(table, phys).toString)
@@ -743,11 +751,11 @@ final class TableStore(private[graft] val spark: SparkSession,
     * files newly indexed. */
   def updateBloomIndex(table: String, column: String,
                        fpp: Double = 0.01): Int = {
-    val v = currentVersion(table).getOrElse(
-      throw new IllegalStateException(s"table $table does not exist"))
-    val phys = columnMapping(table, v).physicalOf(column)
+    val v = existing(table, currentVersion(table))
+    val m = load(table, v)
+    val phys = m.columnMapping.physicalOf(column)
     val p = bloomPath(table, phys)
-    val live = manifest(table, v).filterNot(isDeleteLine)
+    val live = m.data
     if (!fs(p).exists(p)) {
       buildBloomIndex(table, column, fpp)
       return live.size
@@ -812,8 +820,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     val dir = tablePath(table)
     val f = fs(dir)
     if (!f.exists(dir)) return Nil
-    val cm = currentVersion(table).map(columnMapping(table, _))
-      .getOrElse(ColumnMapping(Map.empty, Set.empty))
+    val cm = currentMapping(table)
     f.listStatus(dir).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("bloom-")).map(_.stripPrefix("bloom-"))
       .filterNot(cm.isDropped)
@@ -972,10 +979,14 @@ final class TableStore(private[graft] val spark: SparkSession,
     * anyway; the per-query read path never calls this, it streams
     * through [[statsRejectsFor]] instead. */
   private[lake] def statsFor(table: String, v: Long)
-      : Map[(String, String), FileStats.Stat] = {
+      : Map[(String, String), FileStats.Stat] =
+    FileStats.parse(statsText(table, v))
+
+  /** Version `v`'s stats sidecar text ("" for pre-stats tables) — what
+    * a metadata-only commit publishing `v`'s files copies verbatim. */
+  private def statsText(table: String, v: Long): String = {
     val p = statsPath(table, v)
-    if (!fs(p).exists(p)) Map.empty
-    else FileStats.parse(readSmallFile(p))
+    if (fs(p).exists(p)) readSmallFile(p) else ""
   }
 
   /** Run `f` over the sidecar's lines as a STREAM — the full text is
@@ -1055,9 +1066,14 @@ final class TableStore(private[graft] val spark: SparkSession,
   /** [[fileRowCounts]] pinned to a version — pass the same `v` to
     * [[liveDataFiles]] when composing the two, or a commit racing the
     * reads tears the profile across versions. */
-  def fileRowCounts(table: String, v: Long): Map[String, Long] = {
+  def fileRowCounts(table: String, v: Long): Map[String, Long] =
+    fileRows(table, v, load(table, v).data)
+
+  /** Folded footer row counts of `files`, data files of version `v`. */
+  private def fileRows(table: String, v: Long,
+                       files: Seq[String]): Map[String, Long] = {
     val stats = statsFor(table, v)
-    manifest(table, v).filterNot(isDeleteLine).flatMap { f =>
+    files.flatMap { f =>
       stats.get((FileStats.fileKey(f), FileStats.RowsCol))
         .flatMap(st => rowCountOf(FileStats.RowsCol, st))
         .map(f -> _)
@@ -1072,7 +1088,7 @@ final class TableStore(private[graft] val spark: SparkSession,
 
   /** [[liveDataFiles]] pinned to a version (see [[fileRowCounts]]). */
   def liveDataFiles(table: String, v: Long): Seq[String] =
-    manifest(table, v).filterNot(isDeleteLine)
+    load(table, v).data
 
   /** Table-level column statistics — one row per column:
     * (col_name, n_rows, n_nulls, min_v, max_v), numeric bounds as
@@ -1096,8 +1112,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     val v = currentVersion(table).getOrElse(
       return emptyOut.toDF("col_name", "n_rows", "n_nulls", "min_v", "max_v"))
     val stats = statsFor(table, v)
-    val live = manifest(table, v).filterNot(isDeleteLine)
-      .map(FileStats.fileKey)
+    val m = load(table, v)
+    val live = m.data.map(FileStats.fileKey)
     // the row count obeys the same contract as the bounds: any live
     // file without a folded footer count makes the total unknown
     val perFileRows = live.map(f => stats.get((f, FileStats.RowsCol))
@@ -1109,7 +1125,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     // dropped columns, and take FOR COLUMNS requests in logical terms,
     // same translation discipline as every other sidecar consumer
     // (statsRejectsFor, bloomIndexedColumns)
-    val cm = columnMapping(table, v)
+    val cm = m.columnMapping
     val present = stats.keysIterator.map(_._2)
       .filter(_ != FileStats.RowsCol).toSeq.distinct
       .filterNot(cm.isDropped)
@@ -1243,7 +1259,7 @@ final class TableStore(private[graft] val spark: SparkSession,
                  txns: Seq[(String, Long)],
                  readSnapshot: Option[Long] = None): Unit = {
     require(exists(table), s"table $table does not exist")
-    commit(table, df, carryAll(table), mustCreate = false,
+    commit(table, df, carryAll, mustCreate = false,
       txns = txns, readSnapshot = readSnapshot,
       op = "APPEND")
   }
@@ -1269,49 +1285,29 @@ final class TableStore(private[graft] val spark: SparkSession,
     * first (an app that commits every tick finds it in the current
     * manifest — O(1) in steady state). None if the app never
     * committed or its last txn commit was vacuumed. */
-  def lastTxn(table: String, app: String): Option[Long] = {
-    val prefix = s"$TxnHeader$app:"
-    // walk DOWN from the checkpoint-resolved current version instead
-    // of listing every manifest: the steady-state ingest (every
-    // commit carries the app's header) answers from the head manifest
-    // alone, and the micro-batch hot path stays O(1) metadata like
-    // reads. Published versions are dense downward until the vacuum
-    // horizon; a missing manifest IS that horizon — the watermark, if
-    // it ever existed, is unrecoverable past it, same answer the
-    // listing walk gave.
-    var v = currentVersion(table).getOrElse(return None)
-    while (v >= 0) {
-      val m = manifestFile(table, v)
-      if (!fs(m).exists(m)) return None
-      val hit = readSmallFile(m).split("\n").collectFirst {
-        case l if l.startsWith(prefix) => l.stripPrefix(prefix).trim.toLong
-      }
-      if (hit.isDefined) return hit
-      v -= 1
-    }
-    None
-  }
+  def lastTxn(table: String, app: String): Option[Long] =
+    latestTxn(table, _ == app).map(_._2)
 
   /** Latest (app, watermark) among apps whose id starts with
     * `appPrefix`, walking down from the current version like
     * [[lastTxn]]. For maintenance that must REDISCOVER a binding it
     * didn't create — e.g. an index rebuild carrying forward the
     * change-feed watermark `buildIvfIndexFromTable` recorded, without
-    * being told which corpus table the index follows. The app id is
-    * everything before the LAST ':' (app ids never contain ':' by
-    * construction, but the split tolerates one defensively). */
-  def lastTxnMatching(table: String, appPrefix: String): Option[(String, Long)] = {
-    val prefix = s"$TxnHeader$appPrefix"
+    * being told which corpus table the index follows. */
+  def lastTxnMatching(table: String, appPrefix: String): Option[(String, Long)] =
+    latestTxn(table, _.startsWith(appPrefix))
+
+  /** The newest watermark whose app passes `app`, walking DOWN from
+    * the current version — no manifest listing, so a steady-state
+    * ingest answers from the head manifest alone. Versions are dense
+    * downward until the vacuum horizon; a missing manifest IS that
+    * horizon, past which a watermark is unrecoverable. */
+  private def latestTxn(table: String,
+                        app: String => Boolean): Option[(String, Long)] = {
     var v = currentVersion(table).getOrElse(return None)
     while (v >= 0) {
-      val m = manifestFile(table, v)
-      if (!fs(m).exists(m)) return None
-      val hit = readSmallFile(m).split("\n").collectFirst {
-        case l if l.startsWith(prefix) =>
-          val rest = l.stripPrefix(TxnHeader)
-          val i = rest.lastIndexOf(':')
-          (rest.substring(0, i), rest.substring(i + 1).trim.toLong)
-      }
+      val hit = loadFile(manifestFile(table, v)).getOrElse(return None)
+        .txns.find(t => app(t._1))
       if (hit.isDefined) return hit
       v -= 1
     }
@@ -1324,15 +1320,15 @@ final class TableStore(private[graft] val spark: SparkSession,
     * Two first-appends racing on a fresh table: the create loser
     * retries as a carry append instead of failing. */
   def append(table: String, df: DataFrame): Unit =
-    if (exists(table)) commit(table, df, carryAll(table), mustCreate = false,
+    if (exists(table)) commit(table, df, carryAll, mustCreate = false,
       op = "APPEND")
     else try create(table, df) catch {
       case e: IllegalArgumentException if e.getMessage.contains("already exists") =>
-        commit(table, df, carryAll(table), mustCreate = false, op = "APPEND")
+        commit(table, df, carryAll, mustCreate = false, op = "APPEND")
     }
 
-  private def carryAll(table: String): Option[Long] => Seq[String] =
-    cur => cur.map(manifest(table, _)).getOrElse(Nil)
+  private val carryAll: Option[Manifest] => Seq[String] =
+    _.fold(Seq.empty[String])(_.lines)
 
   /** Merge-on-read commit (Iceberg v2 equality deletes): append `df`'s
     * rows AND register `deleteKeys` (its columns ARE the delete key)
@@ -1358,12 +1354,12 @@ final class TableStore(private[graft] val spark: SparkSession,
     // so a key on a renamed column must be stored physically too
     currentMapping(table).applyWrite(deleteKeys, table)
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(delDir.toString)
-    val delLines = listDataFiles(delDir).map(DelPrefix + _)
+    val delLines = listDataFiles(delDir).map(Manifest.delLine)
     // `txn` makes the delete+insert pair IDEMPOTENT under redelivery
     // (Delta SetTransaction semantics, same as appendTxn): a replayed
     // (app, version) no-ops inside the claim instead of double-applying
     commit(table, df,
-      carried = cur => carryAll(table)(cur) ++ delLines, mustCreate = false,
+      carried = carryAll(_) ++ delLines, mustCreate = false,
       readSnapshot = readSnapshot, txns = txn.toSeq, op = "MERGE-ON-READ")
   }
 
@@ -1387,11 +1383,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     var attempts = 0
     while (true) {
       attempts += 1
-      val rs = currentVersion(table).getOrElse(
-        throw new IllegalStateException(s"table $table does not exist"))
-      val withId = columnMapping(table, rs).applyRead(
-        readLines(table, manifest(table, rs), withRowId = true,
-          statsRejects = statsRejectsFor(table, rs)))
+      val rs = existing(table, currentVersion(table))
+      val withId = readManifest(table, rs, load(table, rs), withRowId = true)
       val dvDir = new Path(tablePath(table), s"v-${UUID.randomUUID()}")
       withId.where(pred)
         .select(col(RowFileCol).as(DvFileCol), col(RowPosCol).as(DvPosCol))
@@ -1402,18 +1395,11 @@ final class TableStore(private[graft] val spark: SparkSession,
       val n = dvFiles.map(FileStats.rowCount(hadoopConf, _)).sum
       if (n == 0) { fs(dvDir).delete(dvDir, true); return 0L }
       try {
-        claimLoop(table, mustCreate = false) { (cur, v) =>
-          assertSnapshotCurrent(table, rs, cur)
-          val carriedLines = cur.map(manifest(table, _)).getOrElse(Nil)
-          val prevStats = cur.map { w =>
-            val p = statsPath(table, w)
-            if (fs(p).exists(p)) readSmallFile(p) else ""
-          }.getOrElse("")
-          writeSmallFile(statsPath(table, v), prevStats)
-          val (colmap, carriedIng) = carriedHeader(table, cur)
-          publishManifest(table, v, carriedLines ++ dvFiles.map(DvPrefix + _),
-            colmap, ingest = carriedIng, op = "DELETE (dv)")
-        }
+        commitMeta(table, cur => {
+          val (c, m) = existing(table, cur)
+          assertSnapshotCurrent(table, rs, Some(c))
+          (m.copy(lines = m.lines ++ dvFiles.map(Manifest.dvLine)), statsText(table, c))
+        }, mustCreate = false, op = "DELETE (dv)")
         return n
       } catch { case e: SnapshotConflictException =>
         fs(dvDir).delete(dvDir, true)
@@ -1443,11 +1429,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     var attempts = 0
     while (true) {
       attempts += 1
-      val rs = currentVersion(table).getOrElse(
-        throw new IllegalStateException(s"table $table does not exist"))
-      val mapped = columnMapping(table, rs).applyRead(
-        readLines(table, manifest(table, rs), withRowId = true,
-          statsRejects = statsRejectsFor(table, rs)))
+      val rs = existing(table, currentVersion(table))
+      val mapped = readManifest(table, rs, load(table, rs), withRowId = true)
       val cols = mapped.columns.filterNot(c =>
         c == RowFileCol || c == RowPosCol).toIndexedSeq
       assigns.keys.foreach { k =>
@@ -1468,7 +1451,7 @@ final class TableStore(private[graft] val spark: SparkSession,
       }: _*)
       try {
         commit(table, updated,
-          carried = cur => carryAll(table)(cur) ++ dvFiles.map(DvPrefix + _),
+          carried = carryAll(_) ++ dvFiles.map(Manifest.dvLine),
           mustCreate = false,
           readSnapshot = Some(rs), op = "UPDATE (dv)")
         return n
@@ -1494,8 +1477,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     try {
       while (!done) {
         attempts += 1
-        val rs = currentVersion(table).getOrElse(
-          throw new IllegalStateException(s"table $table does not exist"))
+        val rs = existing(table, currentVersion(table))
         try { overwrite(table, readVersion(table, rs), readSnapshot = Some(rs),
           op = "COMPACT"); done = true }
         catch { case e: SnapshotConflictException =>
@@ -1569,12 +1551,11 @@ final class TableStore(private[graft] val spark: SparkSession,
   def restore(table: String, v: Long): Unit = {
     require(versions(table).contains(v),
       s"version $v of $table is not retained (have ${versions(table).mkString(",")})")
-    val lines = manifest(table, v)
-    val stats = { val p = statsPath(table, v)
-      if (fs(p).exists(p)) readSmallFile(p) else "" }
+    val restored = load(table, v)
+    val stats = statsText(table, v)
     // the column mapping is part of the restored state: rolling back
     // past a RENAME/DROP rolls the schema back with the data
-    commitMeta(table, _ => (lines, stats, rawColmap(table, v)),
+    commitMeta(table, _ => (restored, stats),
       mustCreate = false, op = s"RESTORE($v)")
   }
 
@@ -1600,8 +1581,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     * external engines may outlive vacuum/compaction with. */
   def exportSnapshot(table: String, destDir: String,
                      version: Option[Long] = None): Long = {
-    val v = version.getOrElse(currentVersion(table).getOrElse(
-      throw new IllegalStateException(s"table $table does not exist")))
+    val v = version.getOrElse(existing(table, currentVersion(table)))
     require(versions(table).contains(v),
       s"version $v of $table is not retained")
     readVersion(table, v).write.mode(SaveMode.Overwrite).parquet(destDir)
@@ -1609,11 +1589,10 @@ final class TableStore(private[graft] val spark: SparkSession,
   }
 
   def cloneTable(src: String, dst: String): Unit = {
-    val cur = currentVersion(src).getOrElse(
-      throw new IllegalStateException(s"table $src does not exist"))
+    val cur = existing(src, currentVersion(src))
     require(!exists(dst), s"table $dst already exists")
-    val stats = { val p = statsPath(src, cur)
-      if (fs(p).exists(p)) readSmallFile(p) else "" }
+    val source = load(src, cur)
+    val stats = statsText(src, cur)
     val srcParts = partitioning(src)
     // shared files carry the source's PHYSICAL names; the clone must
     // inherit the mapping or renamed columns would read physically.
@@ -1622,7 +1601,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     // streaming txn metadata: the clone is a new ingest target, and
     // silently skipping files "already loaded" into the SOURCE would
     // be the surprising behavior
-    commitMeta(dst, _ => (manifest(src, cur), stats, rawColmap(src, cur)),
+    commitMeta(dst, _ => (source, stats),
       mustCreate = true, createParts = srcParts, op = s"CLONE($src)")
     // a clone is a full table-metadata fork: CHECK constraints carry
     // too, or writes to the clone would accept rows the source rejects
@@ -1658,20 +1637,19 @@ final class TableStore(private[graft] val spark: SparkSession,
       s"non-uniform partition layout under $dir: expected " +
         s"[${parts.mkString(",")}] from every file, got " +
         offenders.take(3).mkString("; "))
-    commitMeta(table, _ => (files, "", None), mustCreate = true,
+    commitMeta(table, _ => (Manifest(files), ""), mustCreate = true,
       createParts = parts, op = "CONVERT")
   }
 
   /** Metadata-only commit under the standard claim/publish protocol —
-    * no data write at all. `mkContent` maps the version being
-    * superseded to (manifest lines, stats sidecar content, column
-    * mapping header) and is re-evaluated on every claim attempt, so
-    * content derived from the current manifest (schema evolution's
-    * carried lines) can't lose a racing commit; RESTORE-style fixed
-    * content simply ignores the argument. */
+    * no data write at all. `mkContent` maps the superseded version and
+    * its manifest to (the manifest whose lines, schema and column
+    * mapping to publish, stats sidecar content), re-evaluated on every
+    * claim attempt so content derived from the current manifest can't
+    * lose a racing commit. The ingest ledger carries from the
+    * superseded version. */
   private def commitMeta(table: String,
-                         mkContent: Option[Long] =>
-                           (Seq[String], String, Option[String]),
+                         mkContent: Option[(Long, Manifest)] => (Manifest, String),
                          mustCreate: Boolean,
                          createParts: Seq[String] = Nil,
                          op: String = "WRITE"): Unit = {
@@ -1683,10 +1661,11 @@ final class TableStore(private[graft] val spark: SparkSession,
       if (mustCreate && createParts.nonEmpty)
         writeSmallFile(new Path(tablePath(table), "_PARTITIONING"),
           createParts.mkString(","))
-      val (lines, statsContent, colmap) = mkContent(cur)
+      val curM = cur.map(c => (c, load(table, c)))
+      val (content, statsContent) = mkContent(curM)
       writeSmallFile(statsPath(table, v), statsContent)
-      publishManifest(table, v, lines, colmap,
-        ingest = carriedIngest(table, cur), op = op)
+      publishManifest(table, v, content.next(op)
+        .copy(ingest = curM.fold(Seq.empty[String])(_._2.ingest)))
     }
   }
 
@@ -1722,13 +1701,11 @@ final class TableStore(private[graft] val spark: SparkSession,
     val newFiles = listDataFiles(dataDir)
     require(newFiles.nonEmpty,
       s"schema-evolution write for $table produced no schema-bearing file")
-    commitMeta(table, cur => {
-      val carriedLines = cur.map(manifest(table, _)).getOrElse(Nil)
-      val prevStats = cur.map { v =>
-        val p = statsPath(table, v)
-        if (fs(p).exists(p)) readSmallFile(p) else ""
-      }.getOrElse("")
-      (carriedLines ++ newFiles, prevStats, cur.flatMap(rawColmap(table, _)))
+    commitMeta(table, {
+      case Some((v, m)) =>
+        (m.copy(lines = m.lines ++ newFiles, schema = Some(physSchema.json)),
+          statsText(table, v))
+      case None => (Manifest(newFiles, schema = Some(physSchema.json)), "")
     }, mustCreate = false, op = "ADD COLUMNS")
   }
 
@@ -1750,18 +1727,17 @@ final class TableStore(private[graft] val spark: SparkSession,
     var attempts = 0
     while (true) {
       attempts += 1
-      require(deleteDebt(table) == 0,
+      val cur = existing(table, currentVersion(table))
+      val lines = load(table, cur).lines
+      require(lines.forall(!Manifest.isDeleteLine(_)),
         s"table $table has pending merge-on-read deletes; compact first")
-      val cur = currentVersion(table).getOrElse(
-        throw new IllegalStateException(s"table $table does not exist"))
-      val lines = manifest(table, cur)
       def len(f: String): Long = { val p = new Path(f); fs(p).getFileStatus(p).getLen }
       val sizes = lines.map(f => f -> len(f)).toMap
       val small = lines.filter(sizes(_) < minBytes).toSet
       if (small.size <= 1) return 0
       val outFiles = math.max(1,
         math.ceil(small.toSeq.map(sizes).sum.toDouble / targetBytes).toInt)
-      val df = readLines(table, small.toSeq).coalesce(outFiles)
+      val df = readLines(table, cur, Manifest(small.toSeq)).coalesce(outFiles)
       try {
         // carried re-evaluates against the WINNING claim's version, so
         // a racing append's files survive the fold. Two races are NOT
@@ -1771,14 +1747,14 @@ final class TableStore(private[graft] val spark: SparkSession,
         // concurrent MoR delete markers (the folded copies, being this
         // commit's own rows, would be exempt from them).
         commit(table, df,
-          carried = c => c.map { v =>
-            val m = manifest(table, v)
+          carried = _.map { w =>
+            val m = w.lines
             val gone = small -- m.toSet
             if (gone.nonEmpty)
               throw new SnapshotConflictException(
                 s"$table: file(s) being folded were rewritten concurrently " +
                   s"(e.g. ${gone.head}); recomputing the fold")
-            if (m.exists(isDeleteLine))
+            if (m.exists(Manifest.isDeleteLine))
               throw new SnapshotConflictException(
                 s"$table: merge-on-read deletes raced in during the fold; " +
                   "recomputing")
@@ -1798,7 +1774,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     * — the read-side debt gauge for scheduling `compact`. */
   def deleteDebt(table: String): Int = {
     val cur = currentVersion(table).getOrElse(return 0)
-    manifest(table, cur).count(isDeleteLine)
+    load(table, cur).lines.count(Manifest.isDeleteLine)
   }
 
   /** Dynamic partition overwrite — the O(touched partitions) commit
@@ -1841,9 +1817,8 @@ final class TableStore(private[graft] val spark: SparkSession,
       // a pinned readSnapshot instead aborts on ANY concurrent change —
       // the read-then-rewrite merge paths need that, because their
       // replacement frame folded the touched partitions' OLD contents
-      carried = cur => cur.map(manifest(table, _)
-        .filterNot(f => touchedSet.contains(partitionDirOf(table, f))))
-        .getOrElse(Nil),
+      carried = carryAll(_)
+        .filterNot(f => touchedSet.contains(partitionDirOf(table, f))),
       mustCreate = false,
       requireWithin = Some(touchedSet),
       readSnapshot = readSnapshot,
@@ -1892,10 +1867,10 @@ final class TableStore(private[graft] val spark: SparkSession,
     require(newParts.map(_.toLowerCase).distinct.size == newParts.size,
       s"duplicate partition columns in ${newParts.mkString(",")}")
     claimLoop(table, mustCreate = false) { (cur, v) =>
-      val c = cur.getOrElse(
-        throw new IllegalStateException(s"table $table does not exist"))
-      val logical = readVersion(table, c).columns
-      val m = columnMapping(table, c)
+      val c = existing(table, cur)
+      val cm = load(table, c)
+      val logical = readManifest(table, c, cm).columns
+      val m = cm.columnMapping
       newParts.foreach { p =>
         require(logical.exists(_.equalsIgnoreCase(p)),
           s"no column $p in $table (have ${logical.mkString(", ")})")
@@ -1903,13 +1878,10 @@ final class TableStore(private[graft] val spark: SparkSession,
           s"cannot partition on renamed column $p: hive dirs store the " +
             "current name, files the physical one — OPTIMIZE first")
       }
-      val stats = { val p = statsPath(table, c)
-        if (fs(p).exists(p)) readSmallFile(p) else "" }
-      writeSmallFile(statsPath(table, v), stats)
+      writeSmallFile(statsPath(table, v), statsText(table, c))
       writeSmallFile(new Path(tablePath(table), "_PARTITIONING"),
         newParts.mkString(","))
-      publishManifest(table, v, manifest(table, c), rawColmap(table, c),
-        ingest = rawIngest(table, c), op = "SET PARTITIONING")
+      publishManifest(table, v, cm.next("SET PARTITIONING"))
     }
   }
 
@@ -1920,75 +1892,51 @@ final class TableStore(private[graft] val spark: SparkSession,
   private def requireCurrentLayout(table: String): Unit = {
     val parts = partitioning(table).map(_.toLowerCase)
     val v = currentVersion(table).getOrElse(return)
-    val bad = manifest(table, v).filterNot(isDeleteLine)
-      .filterNot(f => partitionKeysOf(f) == parts)
+    val bad = load(table, v).data.filterNot(f => partitionKeysOf(f) == parts)
     require(bad.isEmpty,
       s"table $table carries files from an earlier partition layout " +
         s"(e.g. ${bad.take(2).mkString(", ")}); OPTIMIZE or compact " +
         "into the current layout first")
   }
 
-  /** File list composing a retained version (`#`-prefixed header lines
-    * — the commit timestamp — are metadata, not files). */
-  def manifest(table: String, v: Long): Seq[String] = {
-    val m = manifestFile(table, v)
-    if (!fs(m).exists(m))
-      throw new IllegalStateException(
-        s"version $v of $table is not retained (vacuumed or never committed)")
-    readSmallFile(m).split("\n").toSeq.map(_.trim)
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
+  /** File list composing a retained version: data files and delete
+    * entries in manifest order, no headers. */
+  def manifest(table: String, v: Long): Seq[String] = load(table, v).lines
+
+  /** The one code path that opens a manifest file: version `v` of
+    * `table`, failing loudly when it is gone. */
+  private def load(table: String, v: Long): Manifest =
+    loadFile(manifestFile(table, v)).getOrElse(throw new IllegalStateException(
+      s"version $v of $table is not retained (vacuumed or never committed)"))
+
+  /** The manifest at `p` (published or staged), None when absent. */
+  private def loadFile(p: Path): Option[Manifest] = {
+    MetaMetrics.manifestLoads.incrementAndGet()
+    try Some(Manifest.parse(readSmallFile(p)))
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** When version `v` was committed. The commit writes an explicit
-    * `#ts=<epochMillis>` header into the manifest itself — filesystem
-    * mtime is coarse (1 s on many filesystems) and unstable on
-    * object stores (a copied/restored object gets a NEW mtime), so
-    * TIMESTAMP AS OF must not depend on it. Pre-header manifests fall
-    * back to mtime. */
-  def commitTimeMs(table: String, v: Long): Long = {
-    val m = manifestFile(table, v)
-    if (!fs(m).exists(m))
-      throw new IllegalStateException(
-        s"version $v of $table is not retained (vacuumed or never committed)")
-    readSmallFile(m).split("\n").collectFirst {
-      case l if l.startsWith(TsHeader) => l.stripPrefix(TsHeader).trim.toLong
-    }.getOrElse(fs(m).getFileStatus(m).getModificationTime)
-  }
+    * `#ts=` header into the manifest itself — filesystem mtime is
+    * coarse (1 s on many filesystems) and unstable on object stores (a
+    * copied/restored object gets a NEW mtime), so TIMESTAMP AS OF must
+    * not depend on it. Pre-header manifests fall back to mtime. */
+  def commitTimeMs(table: String, v: Long): Long =
+    commitTime(table, v, load(table, v))
 
-  private val TsHeader = "#ts="
-  private val OpHeader = "#op="
-  private val ColmapHeader = "#colmap="
-  private val TxnHeader = "#txn="
-  private[lake] val IngestHeader = "#ingest="
-  private[lake] val IngestWmHeader = "#ingestwm="
+  private def commitTime(table: String, v: Long, m: Manifest): Long =
+    m.ts.getOrElse {
+      val p = manifestFile(table, v)
+      fs(p).getFileStatus(p).getModificationTime
+    }
 
-  /** Single publication point for manifests: stamps the commit time,
-    * column-mapping, transaction, and ingest-ledger headers, then
-    * makes the version visible all-or-nothing. `ingest` lines are
-    * COPY INTO's per-source-file ledger (`#ingest=`/`#ingestwm=`,
-    * pre-formatted) — published in the SAME atomic swing as the data
-    * they describe, which is what makes file ingest exactly-once with
-    * no cross-commit crash window. */
-  private def publishManifest(table: String, v: Long, lines: Seq[String],
-                              colmap: Option[String],
-                              txns: Seq[(String, Long)] = Nil,
-                              ingest: Seq[String] = Nil,
-                              op: String = "WRITE"): Unit = {
-    txns.foreach { case (app, _) =>
-      require(!app.contains(":") && !app.contains("\n"),
-        s"bad txn app id '$app'")
-    }
-    require(!op.contains("\n"), s"bad op name '$op'")
-    ingest.foreach { l =>
-      require((l.startsWith(IngestHeader) || l.startsWith(IngestWmHeader)) &&
-        !l.contains("\n"), s"bad ingest ledger line '$l'")
-    }
-    val headers = Seq(s"$TsHeader${System.currentTimeMillis()}",
-      s"$OpHeader$op") ++
-      colmap.map(ColmapHeader + _).toSeq ++
-      txns.map { case (app, ver) => s"$TxnHeader$app:$ver" } ++
-      ingest
-    val body = (headers ++ lines).mkString("\n")
+  /** Single publication point for manifests: stamps the commit time
+    * and makes the version visible all-or-nothing. The COPY INTO
+    * ledger rides the SAME atomic swing as the data it describes,
+    * which is what makes file ingest exactly-once with no cross-commit
+    * crash window. */
+  private def publishManifest(table: String, v: Long, m: Manifest): Unit = {
+    val body = m.copy(ts = Some(System.currentTimeMillis())).render
     activeTxn match {
       case Some(t) =>
         // transaction staging: the claim is held, but publication
@@ -2001,74 +1949,17 @@ final class TableStore(private[graft] val spark: SparkSession,
     }
   }
 
-  /** Raw ingest-ledger header lines (`#ingest=`/`#ingestwm=`) of
-    * version `v` — carried forward by every commit kind (like the
-    * column mapping), so a plain append or overwrite never forgets
-    * which source files COPY INTO already loaded. */
-  private[lake] def rawIngest(table: String, v: Long): Seq[String] = {
-    val m = manifestFile(table, v)
-    if (!fs(m).exists(m)) Nil
-    else readSmallFile(m).split("\n").toSeq.filter(l =>
-      l.startsWith(IngestHeader) || l.startsWith(IngestWmHeader))
-  }
-
-  /** Shorthand: the ingest lines a non-ingest commit carries from the
-    * version it supersedes. */
-  private def carriedIngest(table: String, cur: Option[Long]): Seq[String] =
-    cur.toSeq.flatMap(rawIngest(table, _))
-
-  /** (column mapping, ingest ledger lines) of `cur`'s manifest in ONE
-    * small-file read — the carried headers every data commit
-    * republishes. Separate rawColmap/rawIngest calls would GET the
-    * same small object twice more per commit on an object-store
-    * backend; a future header kind gets carried by extending THIS
-    * helper, not by finding every commit path. */
-  private def carriedHeader(table: String,
-                            cur: Option[Long]): (Option[String], Seq[String]) = {
-    // Unlike the READ-ONLY rawColmap/rawIngest tolerance, a commit
-    // must NOT shrug off a vanished current manifest: publishing a new
-    // version with empty carried headers silently discards the column
-    // mapping (logical names revert to physical) and the COPY INTO
-    // ledger (every ingested source file reloads — duplicate rows).
-    // A current-version manifest that is gone mid-commit means the
-    // snapshot itself was destroyed externally; refuse loudly.
-    val header = cur.map { w =>
-      val m = manifestFile(table, w)
-      require(fs(m).exists(m),
-        s"manifest for current version ($table, v$w) vanished mid-commit; " +
-          "refusing to publish with empty carried headers (column mapping " +
-          "and COPY INTO ledger would be silently lost)")
-      readSmallFile(m).split("\n").toSeq
-    }.getOrElse(Nil)
-    (header.collectFirst {
-      case l if l.startsWith(ColmapHeader) =>
-        l.stripPrefix(ColmapHeader).trim
-    }.filter(_.nonEmpty),
-      header.filter(l => l.startsWith(IngestHeader) ||
-        l.startsWith(IngestWmHeader)))
-  }
-
   /** COPY INTO's ledger at version `v`, parsed:
     * (source file → its listing mtime, source root → listing
     * watermark). O(manifest header) — one small-file read, no table
     * scan; the watermark pruning in [[FileIngest]] keeps the header
     * bounded to the recent-mtime window instead of all history. */
-  def ingestState(table: String, v: Long): TableStore.IngestState = {
-    val (files, wms) = rawIngest(table, v).partition(_.startsWith(IngestHeader))
-    def split(l: String, h: String): (String, Long) = {
-      val body = l.stripPrefix(h)
-      val i = body.indexOf('\t')
-      require(i > 0, s"malformed ingest header '$l'")
-      (body.substring(i + 1), body.substring(0, i).toLong)
-    }
-    TableStore.IngestState(
-      files.map(l => split(l, IngestHeader)).toMap,
-      wms.map(l => split(l, IngestWmHeader)).toMap)
-  }
+  def ingestState(table: String, v: Long): TableStore.IngestState =
+    load(table, v).ingestState
 
   /** Append that publishes data AND the updated COPY INTO ledger
-    * (`ingestLines`, pre-formatted via [[TableStore.ingestLine]] /
-    * [[TableStore.ingestWmLine]]) in ONE atomic commit, aborting
+    * (`ingestLines`, pre-formatted via [[Manifest.ingestLine]] /
+    * [[Manifest.ingestWmLine]]) in ONE atomic commit, aborting
     * ([[SnapshotConflictException]]) if the table moved past
     * `readSnapshot` — the single-commit exactly-once ingest
     * primitive: there is no state in which the data is visible but
@@ -2079,7 +1970,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     * scan of the source. */
   def appendIngest(table: String, df: DataFrame, ingestLines: Seq[String],
                    readSnapshot: Long): Long =
-    commit(table, df, carryAll(table), mustCreate = false,
+    commit(table, df, carryAll, mustCreate = false,
       readSnapshot = Some(readSnapshot), ingest = Some(ingestLines),
       op = "COPY INTO")
 
@@ -2092,19 +1983,9 @@ final class TableStore(private[graft] val spark: SparkSession,
       ingest = Some(ingestLines), op = "COPY INTO")
   }
 
-  /** Raw `#colmap=` header of version `v`, if any. */
-  private def rawColmap(table: String, v: Long): Option[String] = {
-    val m = manifestFile(table, v)
-    if (!fs(m).exists(m)) None
-    else readSmallFile(m).split("\n").collectFirst {
-      case l if l.startsWith(ColmapHeader) =>
-        l.stripPrefix(ColmapHeader).trim
-    }.filter(_.nonEmpty)
-  }
-
   /** Column mapping in force at version `v` (identity when absent). */
   def columnMapping(table: String, v: Long): ColumnMapping =
-    rawColmap(table, v).map(ColumnMapping.parse).getOrElse(ColumnMapping.empty)
+    load(table, v).columnMapping
 
   private def currentMapping(table: String): ColumnMapping =
     currentVersion(table).map(columnMapping(table, _))
@@ -2119,12 +2000,11 @@ final class TableStore(private[graft] val spark: SparkSession,
   def renameColumn(table: String, from: String, to: String): Unit = {
     ColumnMapping.requireMappable(to); ColumnMapping.requireMappable(from)
     commitMeta(table, cur => {
-      val v = cur.getOrElse(
-        throw new IllegalStateException(s"table $table does not exist"))
+      val (v, cm) = existing(table, cur)
       // validated INSIDE the claim loop, against the winning claim's
       // version — a racing ADD COLUMNS / rename must re-fail the
       // checks, not slip between a stale validation and the commit
-      val logical = readVersion(table, v).columns
+      val logical = readManifest(table, v, cm).columns
       require(logical.exists(_.equalsIgnoreCase(from)),
         s"no column $from in $table (have ${logical.mkString(", ")})")
       require(!logical.exists(_.equalsIgnoreCase(to)),
@@ -2132,7 +2012,7 @@ final class TableStore(private[graft] val spark: SparkSession,
       require(!partitioning(table).exists(_.equalsIgnoreCase(from)),
         s"cannot rename partition column $from: the hive layout is physical")
       requireNoConstraintRef(table, from)
-      val m = columnMapping(table, v)
+      val m = cm.columnMapping
       val phys = m.physicalOf(from)
       // OTHER columns' physical names are off-limits; renaming BACK to
       // this column's own physical name is the legal collapse case
@@ -2144,10 +2024,8 @@ final class TableStore(private[graft] val spark: SparkSession,
       val renames = m.renames.filterNot(_._1.equalsIgnoreCase(from)) ++
         (if (to.equalsIgnoreCase(phys)) Map.empty[String, String]
          else Map(to -> phys))
-      val stats = { val p = statsPath(table, v)
-        if (fs(p).exists(p)) readSmallFile(p) else "" }
-      (manifest(table, v), stats,
-        ColumnMapping(renames, m.dropped).serialize)
+      (cm.copy(colmap = ColumnMapping(renames, m.dropped).serialize),
+        statsText(table, v))
     }, mustCreate = false, op = "RENAME COLUMN")
   }
 
@@ -2158,23 +2036,19 @@ final class TableStore(private[graft] val spark: SparkSession,
   def dropColumn(table: String, name: String): Unit = {
     ColumnMapping.requireMappable(name)
     commitMeta(table, cur => {
-      val v = cur.getOrElse(
-        throw new IllegalStateException(s"table $table does not exist"))
+      val (v, cm) = existing(table, cur)
       // inside the claim loop for the same reason as renameColumn
-      val logical = readVersion(table, v).columns
+      val logical = readManifest(table, v, cm).columns
       require(logical.exists(_.equalsIgnoreCase(name)),
         s"no column $name in $table (have ${logical.mkString(", ")})")
       require(logical.length > 1, s"cannot drop the only column of $table")
       require(!partitioning(table).exists(_.equalsIgnoreCase(name)),
         s"cannot drop partition column $name: the hive layout is physical")
       requireNoConstraintRef(table, name)
-      val m = columnMapping(table, v)
+      val m = cm.columnMapping
       val phys = m.physicalOf(name)
-      val stats = { val p = statsPath(table, v)
-        if (fs(p).exists(p)) readSmallFile(p) else "" }
-      (manifest(table, v), stats,
-        ColumnMapping(m.renames.filterNot(_._1.equalsIgnoreCase(name)),
-          m.dropped + phys).serialize)
+      (cm.copy(colmap = ColumnMapping(m.renames.filterNot(_._1.equalsIgnoreCase(name)),
+          m.dropped + phys).serialize), statsText(table, v))
     }, mustCreate = false, op = "DROP COLUMN")
   }
 
@@ -2194,16 +2068,16 @@ final class TableStore(private[graft] val spark: SparkSession,
 
   /** Write data + claim the next version exclusively; retry on claim
     * conflict (optimistic concurrency). `carried` maps the current
-    * version (as of the winning claim — re-evaluated per attempt so a
-    * lost race carries the racer's files, not a stale list) to the
-    * previous files this commit keeps by reference. `createParts` is
+    * version's manifest (as of the winning claim — re-evaluated per
+    * attempt so a lost race carries the racer's files, not a stale
+    * list) to the previous files this commit keeps by reference. `createParts` is
     * the partition layout for a create — recorded only after the claim
     * succeeds, so a failed create can't poison a later one with stale
     * metadata. `requireWithin` asserts every new file lands inside the
     * declared partition dirs (a row outside them would silently
     * double-count against a carried file). */
   private def commit(table: String, df: DataFrame,
-                     carried: Option[Long] => Seq[String],
+                     carried: Option[Manifest] => Seq[String],
                      mustCreate: Boolean,
                      createParts: Seq[String] = Nil,
                      requireWithin: Option[Set[String]] = None,
@@ -2249,6 +2123,15 @@ final class TableStore(private[graft] val spark: SparkSession,
     val shaped =
       if (parts.nonEmpty && !preserveLayout) toWrite.hint("rebalance", parts: _*)
       else toWrite
+    // the frame's schema in read order (partition columns last, as
+    // hive dirs resolve them), so a version this write leaves without
+    // a single file still reads as an empty table of these columns
+    val schema = {
+      val (p, d) = toWrite.schema.fields.toSeq
+        .partition(f => parts.exists(_.equalsIgnoreCase(f.name)))
+      org.apache.spark.sql.types.StructType((d ++ parts.flatMap(n =>
+        p.find(_.name.equalsIgnoreCase(n)))).map(_.copy(nullable = true))).json
+    }
     val writer = shaped.write.mode(SaveMode.Overwrite)
     JobLabel(spark, s"graft:commit $table op=$op") {
       (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
@@ -2366,7 +2249,8 @@ final class TableStore(private[graft] val spark: SparkSession,
       if (mustCreate && createParts.nonEmpty)
         writeSmallFile(new Path(tablePath(table), "_PARTITIONING"),
           createParts.mkString(","))
-      val carriedLines = carried(cur)
+      val curM = cur.map(load(table, _))
+      val carriedLines = carried(curM)
       // carried files keep their stats by reference, same as the
       // data itself: copy the matching lines from cur's sidecar.
       // Written after the claim (so the version is ours) and before
@@ -2377,12 +2261,14 @@ final class TableStore(private[graft] val spark: SparkSession,
       // fold: carrying a 10⁷-file sidecar holds one line plus the
       // carried-key set (whose strings the manifest already holds),
       // never the full text or the (file, column) map.
-      val carriedKeys = carriedLines.filterNot(isDeleteLine)
+      val carriedKeys = carriedLines.filterNot(Manifest.isDeleteLine)
         .map(FileStats.fileKey).toSet
       writeStatsCarried(table, cur, v, carriedKeys.contains, newStats)
-      val (colmap, carriedIng) = carriedHeader(table, cur)
-      publishManifest(table, v, carriedLines ++ newFiles, colmap, txns,
-        ingest = ingest.getOrElse(carriedIng), op = op)
+      // data commits carry cur's column mapping and ingest ledger
+      val base = curM.getOrElse(Manifest())
+      publishManifest(table, v, base.next(op, carriedLines ++ newFiles).copy(
+        schema = Some(schema), txns = txns,
+        ingest = ingest.getOrElse(base.ingest)))
     } catch {
       case e: SnapshotConflictException =>
         // conflicts are an expected, caller-handled outcome (retry or
@@ -2434,14 +2320,13 @@ final class TableStore(private[graft] val spark: SparkSession,
     // the common, uncontended case: nothing moved — zero extra reads
     if (c == readSnapshot) return
     def stateOf(v: Long): (Set[String], Option[String]) =
-      try (manifest(table, v).toSet, rawColmap(table, v))
+      try { val m = load(table, v); (m.lines.toSet, m.colmap) }
       catch { case _: IllegalStateException =>
         throw new SnapshotConflictException(
           s"$table: version $v was vacuumed while a rewrite of " +
             s"snapshot $readSnapshot was in flight; cannot prove safety") }
-    // each iteration's state is the next one's predecessor — one
-    // manifest read per in-between version, not two (inside the held
-    // claim every read widens the claim window)
+    // each iteration's state is the next one's predecessor (inside
+    // the held claim every read widens the claim window)
     var (prevLines, prevMap) = stateOf(readSnapshot)
     var w = readSnapshot + 1
     while (w <= c) {
@@ -2451,7 +2336,7 @@ final class TableStore(private[graft] val spark: SparkSession,
           val removed = prevLines -- lines
           val added = lines -- prevLines
           removed.isEmpty && added.forall(l =>
-            !isDeleteLine(l) && !touched.contains(partitionDirOf(table, l)))
+            !Manifest.isDeleteLine(l) && !touched.contains(partitionDirOf(table, l)))
         }
         if (!harmlessAdd)
           throw new SnapshotConflictException(
@@ -2582,17 +2467,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     * legitimately lists the directory — the hot read path resolves
     * the current version through [[currentVersion]]'s O(1) checkpoint
     * hint instead and never calls this. */
-  def versions(table: String): Seq[Long] = {
-    val published = listedPublished(table)
-    // this instance's own staged commits are visible to itself (a
-    // transaction reads its earlier writes); invisible to every other
-    // reader until the commit swing
-    val staged =
-      if (activeTxn.isEmpty) Seq.empty[Long]
-      else synchronized {
-        stagedCommits.collect { case (t, v) if t == table => v }.toSeq }
-    (published ++ staged).distinct.sorted
-  }
+  def versions(table: String): Seq[Long] =
+    (listedPublished(table) ++ stagedVersions(table)).distinct.sorted
 
   /** Full `manifest-<n>` directory listing — O(#commits-ever).
     * Instrumented (MetaMetrics) so specs can pin that table READS
@@ -2655,8 +2531,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     def tagged(df: DataFrame, kind: String, v: Long): DataFrame =
       df.withColumn("_change_type", lit(kind))
         .withColumn("_commit_version", lit(v))
-    def empty = tagged(readVersion(table, toV).limit(0), "", 0L)
     val plan = new FeedPlan(table, fromV, toV)
+    def empty = tagged(readManifest(table, toV, plan.manifest(toV)).limit(0), "", 0L)
     // a range of content-neutral rewrites preserves the row bag by
     // contract: emit the empty feed directly instead of falling back
     // to the O(table) two-sided bag diff a rewrite normally forces —
@@ -2669,7 +2545,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     // spans a RENAME emit one column under its current name (not an
     // old-name/new-name pair, each half-null), and a column dropped
     // by toV is absent from the whole feed
-    val mvTo = columnMapping(table, toV)
+    val mvTo = plan.manifest(toV).columnMapping
     if (!plan.rewrite) {
       val feeds = plan.commits.flatMap { case (v, newLines) =>
         // inserts: this commit's own data files, as committed (its
@@ -2679,10 +2555,10 @@ final class TableStore(private[graft] val spark: SparkSession,
         // delete(v2) — with deletes taken from the v-1 view below, the
         // feed telescopes exactly from the fromV state to the toV
         // state under plain bag algebra, per version or all at once.
+        val added = Manifest(newLines)
         val ins =
-          if (newLines.exists(!isDeleteLine(_)))
-            Some(tagged(mvTo.applyRead(readLines(table, newLines)),
-              "insert", v))
+          if (added.data.nonEmpty)
+            Some(tagged(mvTo.applyRead(readLines(table, v, added)), "insert", v))
           else None
         // deletes: the PREVIOUS version's rows this commit's delete
         // lines remove. Reading v-1 (not fromV) keeps multiplicities
@@ -2692,8 +2568,8 @@ final class TableStore(private[graft] val spark: SparkSession,
         // v-1 by construction. A row both a key and a vector remove
         // emits once. The filter runs RAW (physical names on both
         // sides); the row ids drop before the mapping.
-        val keyFiles = newLines.filter(_.startsWith(DelPrefix)).map(lineFile)
-        val dvFiles = newLines.filter(_.startsWith(DvPrefix)).map(lineFile)
+        val keyFiles = added.dels
+        val dvFiles = added.dvs
         // a vector-only commit removes rows of the files its vectors
         // name and nothing else: read just those (and v-1's delete
         // lines, in manifest order) — O(changed files), not O(table)
@@ -2701,17 +2577,19 @@ final class TableStore(private[graft] val spark: SparkSession,
           if (dvFiles.isEmpty || keyFiles.nonEmpty) plan.lines(v - 1)
           else {
             val named = DeleteSet.vectorTargets(spark, hadoopConf, dvFiles, DvSchema)
-            val kept = plan.lines(v - 1).filter(l => isDeleteLine(l) || named(new Path(l)))
+            val kept = plan.lines(v - 1)
+              .filter(l => Manifest.isDeleteLine(l) || named(new Path(l)))
             // a name that matched no line would silently drop its deletes
-            if (kept.count(!isDeleteLine(_)) != named.size)
+            if (kept.count(!Manifest.isDeleteLine(_)) != named.size)
               throw new IllegalStateException(
                 s"deletion vectors of $table version $v name files not live at ${v - 1}")
             kept
           }
         val del =
-          if (keyFiles.isEmpty && dvFiles.isEmpty || prevLines.forall(isDeleteLine)) None
+          if (keyFiles.isEmpty && dvFiles.isEmpty || prevLines.forall(Manifest.isDeleteLine)) None
           else {
-            val prev = readLines(table, prevLines, withRowId = dvFiles.nonEmpty)
+            val prev = readLines(table, v - 1, Manifest(prevLines),
+              withRowId = dvFiles.nonEmpty)
             val removed = Option.when(dvFiles.nonEmpty)(inVectors(dvFiles)) ++
               Option.when(keyFiles.nonEmpty)(
                 DeleteSet.inKeys(spark, hadoopConf, keyFiles, prev))
@@ -2727,8 +2605,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     } else {
       // both endpoints read RAW and map through toV's colmap (see
       // above) so a rename inside the range still diffs one column
-      val a = mvTo.applyRead(readLines(table, plan.lines(fromV)))
-      val b = mvTo.applyRead(readLines(table, plan.lines(toV)))
+      val a = mvTo.applyRead(readLines(table, fromV, plan.manifest(fromV)))
+      val b = mvTo.applyRead(readLines(table, toV, plan.manifest(toV)))
       // the diff runs under toV's schema exactly: a column added since
       // fromV null-fills the old side (typed from toV), and a column
       // present only at fromV (its files all rewritten away by a
@@ -2748,12 +2626,12 @@ final class TableStore(private[graft] val spark: SparkSession,
   /** `changes`' case analysis over `(fromV, toV]`, from manifest
     * metadata alone — no Spark job. `changes`, [[rangeMayDelete]] and
     * [[changeRowsBound]] all read it, so the feed and the two answers
-    * about it cannot drift apart. Each manifest is read at most once,
+    * about it cannot drift apart. Each manifest is loaded at most once,
     * and only when asked for. */
   private final class FeedPlan(table: String, fromV: Long, toV: Long) {
-    private val man = scala.collection.mutable.LongMap.empty[Seq[String]]
-    def lines(v: Long): Seq[String] =
-      man.getOrElseUpdate(v, manifest(table, v))
+    private val man = scala.collection.mutable.LongMap.empty[Manifest]
+    def manifest(v: Long): Manifest = man.getOrElseUpdate(v, load(table, v))
+    def lines(v: Long): Seq[String] = manifest(v).lines
     private def range = (fromV + 1) to toV
     /** Every commit is a content-neutral rewrite (COMPACT / OPTIMIZE /
       * z-order): the feed is empty. Decided from the commits' op
@@ -2761,7 +2639,7 @@ final class TableStore(private[graft] val spark: SparkSession,
       * fromV's manifest. */
     val neutral: Boolean =
       fromV < toV &&
-        range.forall(v => TableStore.NeutralOps(operationOf(table, v)))
+        range.forall(v => TableStore.NeutralOps(manifest(v).op))
     /** Some commit drops a line its predecessor had — its rows lose
       * their lineage, so the feed is the endpoint bag diff. */
     lazy val rewrite: Boolean = range.exists { v =>
@@ -2792,7 +2670,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     if (fromV >= toV) return false
     val plan = new FeedPlan(table, fromV, toV)
     !plan.neutral &&
-      (plan.rewrite || plan.commits.exists(_._2.exists(isDeleteLine)))
+      (plan.rewrite || plan.commits.exists(_._2.exists(Manifest.isDeleteLine)))
   }
 
   /** An upper bound on the rows `changes(table, fromV, toV)` emits,
@@ -2813,19 +2691,18 @@ final class TableStore(private[graft] val spark: SparkSession,
     if (plan.neutral) return Some(0L)
     // physical rows of `v`'s data lines among `lines`
     def rows(v: Long, lines: Seq[String]): Option[Long] = {
-      val counts = fileRowCounts(table, v)
-      lines.filterNot(isDeleteLine).foldLeft(Option(0L)) { (acc, f) =>
-        acc.flatMap(a => counts.get(f).map(a + _))
-      }
+      val data = Manifest(lines).data
+      val counts = fileRows(table, v, data)
+      if (data.forall(counts.contains)) Some(data.map(counts).sum) else None
     }
     val parts =
       if (plan.rewrite)
         Seq(rows(fromV, plan.lines(fromV)), rows(toV, plan.lines(toV)))
       else plan.commits.flatMap { case (v, nl) =>
+        val added = Manifest(nl)
         rows(v, nl) +: (
-          if (nl.exists(_.startsWith(DelPrefix))) Seq(rows(v - 1, plan.lines(v - 1)))
-          else nl.filter(_.startsWith(DvPrefix)).map(l =>
-            Some(FileStats.rowCount(hadoopConf, lineFile(l)))))
+          if (added.dels.nonEmpty) Seq(rows(v - 1, plan.lines(v - 1)))
+          else added.dvs.map(f => Some(FileStats.rowCount(hadoopConf, f))))
       }
     parts.foldLeft(Option(0L))((acc, p) => acc.flatMap(a => p.map(a + _)))
   }
@@ -3001,11 +2878,17 @@ final class TableStore(private[graft] val spark: SparkSession,
     * delete-set filter) or any data file lacking a recorded count (pre-stats
     * commits). */
   def fastRowCount(table: String): Option[Long] = {
-    if (deleteDebt(table) != 0) return None
     val cur = currentVersion(table).getOrElse(return None)
-    val stats = statsFor(table, cur)
-    val counts = manifest(table, cur).filterNot(isDeleteLine)
-      .map(f => stats.get((FileStats.fileKey(f), FileStats.RowsCol)))
+    exactRows(table, cur, load(table, cur))
+  }
+
+  /** Version `v`'s row count from folded footer counts: None with any
+    * delete entry pending, or any data file (or none at all) lacking
+    * a count. */
+  private def exactRows(table: String, v: Long, m: Manifest): Option[Long] = {
+    if (m.lines.exists(Manifest.isDeleteLine)) return None
+    val stats = statsFor(table, v)
+    val counts = m.data.map(f => stats.get((FileStats.fileKey(f), FileStats.RowsCol)))
     if (counts.isEmpty || counts.exists(_.isEmpty)) None
     else Some(counts.flatten.map(_.min.toLong).sum)
   }
@@ -3017,39 +2900,22 @@ final class TableStore(private[graft] val spark: SparkSession,
   def history(table: String): DataFrame = {
     import spark.implicits._
     versions(table).map { v =>
-      // ONE manifest read per version: lines, commit time, and the
-      // op header all parse from the same bytes (3 GETs -> 1 on an
-      // object store with deep histories)
-      val raw = readSmallFile(manifestFile(table, v)).split("\n")
-        .toSeq.map(_.trim).filter(_.nonEmpty)
-      val lines = raw.filterNot(_.startsWith("#"))
-      val ts = raw.collectFirst {
-        case l if l.startsWith(TsHeader) => l.stripPrefix(TsHeader).trim.toLong
-      }.getOrElse(fs(manifestFile(table, v))
-        .getFileStatus(manifestFile(table, v)).getModificationTime)
-      val opName = raw.collectFirst {
-        case l if l.startsWith(OpHeader) => l.stripPrefix(OpHeader).trim
-      }.getOrElse("WRITE")
-      val (dels, data) = lines.partition(isDeleteLine)
-      val bytes = data.map { f =>
-        val p = new Path(f); fs(p).getFileStatus(p).getLen }.sum
-      val stats = statsFor(table, v)
-      val counts = data.map(f => stats.get((FileStats.fileKey(f), FileStats.RowsCol)))
-      val rows = if (dels.nonEmpty || counts.isEmpty || counts.exists(_.isEmpty))
-        None else Some(counts.flatten.map(_.min.toLong).sum)
-      (v, opName, data.size, dels.size, bytes, rows,
-        new java.sql.Timestamp(ts))
+      val m = load(table, v)
+      val data = m.data
+      (v, m.op, data.size, m.lines.size - data.size, bytesOf(data), exactRows(table, v, m),
+        new java.sql.Timestamp(commitTime(table, v, m)))
     }.toDF("version", "operation", "n_files", "n_delete_entries",
       "total_bytes", "n_rows", "committed_at")
   }
 
+  /** Total length of `files`, one stat each. */
+  private def bytesOf(files: Seq[String]): Long =
+    files.map { f => val p = new Path(f); fs(p).getFileStatus(p).getLen }.sum
+
   /** The `#op=` provenance header of version `v` — which operation
     * published the commit (Delta history's operation column).
     * "WRITE" for pre-provenance manifests. */
-  def operationOf(table: String, v: Long): String =
-    readSmallFile(manifestFile(table, v)).split("\n").collectFirst {
-      case l if l.startsWith(OpHeader) => l.stripPrefix(OpHeader).trim
-    }.getOrElse("WRITE")
+  def operationOf(table: String, v: Long): String = load(table, v).op
 
   /** DESCRIBE DETAIL equivalent: ONE row of current-state table
     * metadata — location, version, commit times, file/byte/row
@@ -3060,25 +2926,21 @@ final class TableStore(private[graft] val spark: SparkSession,
     * exact (pending MoR deletes or a pre-stats commit). */
   def detail(table: String): DataFrame = {
     import spark.implicits._
-    val cur = currentVersion(table).getOrElse(
-      throw new IllegalStateException(s"table $table does not exist"))
+    val cur = existing(table, currentVersion(table))
     val retained = versions(table)
-    val lines = manifest(table, cur)
-    val (dels, data) = lines.partition(isDeleteLine)
+    val cm = load(table, cur)
+    val data = cm.data
     // deletion-vector debt gets its own gauge: every dv| entry is
     // decoded into the delete set EVERY read filters by until
     // compacted, so count and bytes are the numbers a maintenance
     // policy thresholds on
-    val dvs = dels.filter(_.startsWith(DvPrefix)).map(_.stripPrefix(DvPrefix))
-    val dvBytes = dvs.map { f =>
-      val p = new Path(f); fs(p).getFileStatus(p).getLen }.sum
-    val bytes = data.map { f =>
-      val p = new Path(f); fs(p).getFileStatus(p).getLen }.sum
-    val m = columnMapping(table, cur)
+    val dvs = cm.dvs
+    val m = cm.columnMapping
     Seq((table, tablePath(table).toString, cur, retained.size,
       new java.sql.Timestamp(commitTimeMs(table, retained.head)),
-      new java.sql.Timestamp(commitTimeMs(table, cur)),
-      data.size, dels.size, dvs.size, dvBytes, bytes, fastRowCount(table),
+      new java.sql.Timestamp(commitTime(table, cur, cm)),
+      data.size, cm.lines.size - data.size, dvs.size, bytesOf(dvs), bytesOf(data),
+      exactRows(table, cur, cm),
       partitioning(table), constraints(table).keys.toSeq.sorted,
       m.renames.toSeq.sorted.map { case (l, p) => s"$l<-$p" },
       m.dropped.toSeq.sorted,
@@ -3132,9 +2994,9 @@ final class TableStore(private[graft] val spark: SparkSession,
 
   private def vacuumRetain(table: String, kept: Seq[Long]): Unit = {
     val all = versions(table)
-    // manifest lines may carry the del| marker — compare raw paths
-    def pathOf(line: String): String = lineFile(line)
-    val referenced = kept.flatMap(manifest(table, _)).map(pathOf).toSet
+    // manifest lines may carry a delete marker — compare raw paths
+    def pathsOf(v: Long): Seq[String] = load(table, v).lines.map(Manifest.lineFile)
+    val referenced = kept.flatMap(pathsOf).toSet
     val f = fs(tablePath(table))
     // never delete a file outside this table's own root: a shallow
     // clone's manifest references the SOURCE table's files, which are
@@ -3145,7 +3007,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     // to sweep immediately once emptied, no age floor needed
     val touchedDirs = scala.collection.mutable.Set.empty[String]
     all.filterNot(kept.contains).foreach { v =>
-      manifest(table, v).map(pathOf).filterNot(referenced.contains)
+      pathsOf(v).filterNot(referenced.contains)
         .filter(_.startsWith(own))
         .foreach { p =>
           f.delete(new Path(p), false)
@@ -3228,11 +3090,10 @@ final class TableStore(private[graft] val spark: SparkSession,
       .map(_.getPath)
       .filter(p => p.getName.startsWith("staged-") &&
         p.getName.contains("-manifest-"))
-      .flatMap(p => readSmallFile(p).split("\n").toSeq
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")))
+      .flatMap(loadFile(_).toSeq.flatMap(_.lines))
     val referenced = (versions(table).flatMap(manifest(table, _)) ++
       stagedLines)
-      .map(lineFile)
+      .map(Manifest.lineFile)
       .flatMap { p =>
         val rel = p.stripPrefix(dir.toString).stripPrefix("/")
         rel.split("/").headOption
@@ -3329,21 +3190,6 @@ object TableStore {
     def isEmpty: Boolean = files.isEmpty && watermarks.isEmpty
   }
   object IngestState { val empty: IngestState = IngestState(Map.empty, Map.empty) }
-
-  /** Format one ingested-file ledger line. Tab-separated — paths may
-    * contain anything but tabs/newlines (enforced here, loudly). */
-  def ingestLine(mtime: Long, path: String): String = {
-    require(!path.contains("\t") && !path.contains("\n"),
-      s"unsupported control character in ingest path '$path'")
-    s"#ingest=$mtime\t$path"
-  }
-
-  /** Format one source-root watermark line. */
-  def ingestWmLine(mtime: Long, root: String): String = {
-    require(!root.contains("\t") && !root.contains("\n"),
-      s"unsupported control character in ingest root '$root'")
-    s"#ingestwm=$mtime\t$root"
-  }
 }
 
 /** A rewrite commit lost a race it cannot safely win: between the

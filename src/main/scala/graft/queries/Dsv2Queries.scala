@@ -283,9 +283,7 @@ object Dsv2Queries {
       store.appendWithDeletes("p_t", ord.limit(0),
         deleteKeys = ord.select("k").where(col("k") % 7 === 0))
       require(store.deleteDebt("p_t") > 0, "setup must leave MoR debt")
-      def files(): Int = store
-        .manifest("p_t", store.currentVersion("p_t").get)
-        .count(l => !l.startsWith("del|") && !l.startsWith("dv|"))
+      def files(): Int = store.liveDataFiles("p_t").size
       // vanilla from here on: maintenance via stored procedures only
       s.conf.set("spark.sql.catalog.gc", classOf[GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.gc.root", root)

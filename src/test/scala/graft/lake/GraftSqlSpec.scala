@@ -1059,6 +1059,22 @@ class GraftSqlSpec extends SparkSpec {
     }
   }
 
+  test("a qualified FOREIGN KEY target never binds to the store's own table") {
+    val store = new TableStore(spark, tmpDir("gsql"))
+    store.create("p", Seq(1, 2).toDF("k"))
+    store.create("c", Seq(1, 2).toDF("k"))
+    val e = intercept[IllegalArgumentException] {
+      GraftSql.execute(spark, store,
+        "ALTER TABLE c ADD CONSTRAINT f FOREIGN KEY (k) REFERENCES other_cat.db.p (k)")
+    }
+    assert(e.getMessage.contains("other_cat.db.p"))
+    assert(store.foreignKeys("c").isEmpty)
+    // the bare name still binds to the store's p
+    GraftSql.execute(spark, store,
+      "ALTER TABLE c ADD CONSTRAINT f FOREIGN KEY (k) REFERENCES p (k)")
+    assert(store.foreignKeys("c") == Seq(("f", Seq("k"), "p", Seq("k"))))
+  }
+
   test("table_changes TVF composes with plain SQL over the feed") {
     val store = new TableStore(spark, tmpDir("gsql"))
     store.create("tch", Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"))
