@@ -160,10 +160,11 @@ object MaintenanceJob {
 
   /** Sync every vector index BOUND to `args.table` (its lists/codes
     * table carries the `ivf-sync-<table>` watermark the
-    * buildIvf[Pq]IndexFromTable bootstrap records), then fold each
-    * synced index's own merge-on-read debt — the `deleteFrom*`/sync
-    * paths accrue equality-delete entries that otherwise grow
-    * unbounded, since nothing else maintains index tables. Returns
+    * buildIvf[Pq]IndexFromTable bootstrap records) with the codec its
+    * suffix names, then fold each synced index's own merge-on-read
+    * debt — the `deleteFrom*`/sync paths accrue equality-delete
+    * entries that otherwise grow unbounded, since nothing else
+    * maintains index tables. Returns
     * "name@version" per synced index ("name" when already current).
     * Column names come from Args (`--index_id_col/--index_vec_col`):
     * indexes built with non-default columns declare them to the job.
@@ -173,17 +174,10 @@ object MaintenanceJob {
     import graft.ops.VectorIndex
     val app = s"ivf-sync-${args.table}"
     store.tables().sorted.flatMap { t =>
-      val shape =
-        if (t.endsWith("_lists")) Some((t.stripSuffix("_lists"), false))
-        else if (t.endsWith("_codes")) Some((t.stripSuffix("_codes"), true))
-        else None
-      shape.filter(_ => store.lastTxn(t, app).isDefined).map {
-        case (name, isPq) =>
-          val to =
-            if (isPq) VectorIndex.syncIvfPqIndex(store, name, args.table,
-              idCol = args.indexIdCol, vecCol = args.indexVecCol)
-            else VectorIndex.syncIvfIndex(store, name, args.table,
-              idCol = args.indexIdCol, vecCol = args.indexVecCol)
+      VectorIndex.indexOf(t).filter(_ => store.lastTxn(t, app).isDefined).map {
+        case (name, codec) =>
+          val to = VectorIndex.sync(store, name, codec, args.table, 0,
+            args.indexIdCol, args.indexVecCol)
           if (store.deleteDebt(t) >= args.compactDebt) store.compact(t)
           to.fold(name)(v => s"$name@$v")
       }

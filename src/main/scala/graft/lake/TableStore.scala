@@ -1304,14 +1304,27 @@ final class TableStore(private[graft] val spark: SparkSession,
     * horizon, past which a watermark is unrecoverable. */
   private def latestTxn(table: String,
                         app: String => Boolean): Option[(String, Long)] = {
-    var v = currentVersion(table).getOrElse(return None)
-    while (v >= 0) {
-      val hit = loadFile(manifestFile(table, v)).getOrElse(return None)
-        .txns.find(t => app(t._1))
-      if (hit.isDefined) return hit
-      v -= 1
+    val v = currentVersion(table).getOrElse(return None)
+    var hit: Option[(String, Long)] = None
+    for (head <- loadFile(manifestFile(table, v)))
+      walkTxns(table, v, head) { txns =>
+        hit = txns.find(t => app(t._1))
+        hit.isDefined
+      }
+    hit
+  }
+
+  /** Hands the `#txn=` watermarks of version `v` (manifest `head`, as
+    * the caller loaded it) and then of each older retained version to
+    * `done`, newest first, until `done` answers true or the walk
+    * reaches version 0 or the vacuum horizon. */
+  private def walkTxns(table: String, v: Long, head: Manifest)(
+                       done: Seq[(String, Long)] => Boolean): Unit = {
+    var (w, m) = (v, head)
+    while (!done(m.txns) && w > 0) {
+      w -= 1
+      m = loadFile(manifestFile(table, w)).getOrElse(return)
     }
-    None
   }
 
   /** S8: append — O(batch): writes only the new files; the manifest
@@ -1807,11 +1820,15 @@ final class TableStore(private[graft] val spark: SparkSession,
                           op: String = "OVERWRITE-PARTITIONS"): Unit = {
     require(partitioning(table).nonEmpty,
       s"table $table is not partitioned; use overwrite")
-    require(deleteDebt(table) == 0,
+    // one pre-claim load serves the debt check, the layout check and
+    // the write's column mapping
+    val head = currentVersion(table).map(load(table, _))
+    require(head.forall(!_.lines.exists(Manifest.isDeleteLine)),
       s"table $table has pending merge-on-read deletes; compact first")
-    requireCurrentLayout(table)
+    head.foreach(requireCurrentLayout(table, _))
     val touchedSet = touched.toSet
     commit(table, df,
+      mapping = Some(head.fold(ColumnMapping.empty)(_.columnMapping)),
       // untouched partitions re-carry from the WINNING claim's version
       // (concurrent appends to them survive with readSnapshot = None);
       // a pinned readSnapshot instead aborts on ANY concurrent change —
@@ -1889,10 +1906,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     * every live data file sits under the CURRENT layout (partition-
     * scoped overwrite): after an evolution, pre-evolution files would
     * silently escape the touched-dir filter. */
-  private def requireCurrentLayout(table: String): Unit = {
+  private def requireCurrentLayout(table: String, head: Manifest): Unit = {
     val parts = partitioning(table).map(_.toLowerCase)
-    val v = currentVersion(table).getOrElse(return)
-    val bad = load(table, v).data.filterNot(f => partitionKeysOf(f) == parts)
+    val bad = head.data.filterNot(f => partitionKeysOf(f) == parts)
     require(bad.isEmpty,
       s"table $table carries files from an earlier partition layout " +
         s"(e.g. ${bad.take(2).mkString(", ")}); OPTIMIZE or compact " +
@@ -2075,7 +2091,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     * succeeds, so a failed create can't poison a later one with stale
     * metadata. `requireWithin` asserts every new file lands inside the
     * declared partition dirs (a row outside them would silently
-    * double-count against a carried file). */
+    * double-count against a carried file). `mapping` is the current
+    * column mapping when the caller has already loaded it. */
   private def commit(table: String, df: DataFrame,
                      carried: Option[Manifest] => Seq[String],
                      mustCreate: Boolean,
@@ -2088,7 +2105,8 @@ final class TableStore(private[graft] val spark: SparkSession,
                      readSnapshot: Option[Long] = None,
                      snapshotDisjointOk: Boolean = false,
                      ingest: Option[Seq[String]] = None,
-                     op: String = "WRITE"): Long = {
+                     op: String = "WRITE",
+                     mapping: Option[ColumnMapping] = None): Long = {
     val dataDir = new Path(tablePath(table), s"d-${UUID.randomUUID()}")
     val parts = if (mustCreate) createParts else partitioning(table)
     // CHECK constraints ride the write job itself (observe = metrics
@@ -2109,7 +2127,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     // (compactSmall) whose frame is already raw file bytes
     val toWrite =
       if (mustCreate || physicalFrame) observed
-      else currentMapping(table).applyWrite(observed, table)
+      else mapping.getOrElse(currentMapping(table)).applyWrite(observed, table)
     // Partitioned writes: AQE-rebalance on the partition columns first,
     // or every upstream task emits a file per partition value it holds
     // (tasks x values small files per commit — footer-read debt on every
@@ -2235,21 +2253,27 @@ final class TableStore(private[graft] val spark: SparkSession,
       // published watermarks; any single component strictly PAST its
       // proposed value is a zombie crossing newer work — both no-op.
       // For the single-app case this is exactly the old `last >= ver`.
+      // Every app resolves in ONE walk down from the claim's loaded head.
+      val curM = cur.map(load(table, _))
       if (!txnReassert && txns.nonEmpty) {
-        val states = txns.map { case (app, ver) =>
-          (app, ver, lastTxn(table, app)) }
-        val regressed = states.exists { case (_, ver, last) =>
-          last.exists(_ > ver) }
-        if (regressed || states.forall { case (_, ver, last) =>
-            last.exists(_ >= ver) }) {
-          val (app, ver, _) = states.head
+        val apps = txns.map(_._1).toSet
+        val last = scala.collection.mutable.Map.empty[String, Long]
+        for (c <- cur; m <- curM) walkTxns(table, c, m) { found =>
+          for ((app, w) <- found if apps(app) && !last.contains(app))
+            last(app) = w
+          last.size == apps.size
+        }
+        val regressed = txns.exists { case (app, ver) =>
+          last.get(app).exists(_ > ver) }
+        if (regressed || txns.forall { case (app, ver) =>
+            last.get(app).exists(_ >= ver) }) {
+          val (app, ver) = txns.head
           throw new TableStore.TxnAlreadyApplied(app, ver)
         }
       }
       if (mustCreate && createParts.nonEmpty)
         writeSmallFile(new Path(tablePath(table), "_PARTITIONING"),
           createParts.mkString(","))
-      val curM = cur.map(load(table, _))
       val carriedLines = carried(curM)
       // carried files keep their stats by reference, same as the
       // data itself: copy the matching lines from cur's sidecar.

@@ -8,12 +8,13 @@ import org.apache.spark.sql.functions._
   * stored IN the table store — train once, serve many. The per-query
   * [[Similarity.ivfTopK]] re-trains and re-assigns the corpus on every
   * call; at 100 TB the index build is the expensive pass and queries
-  * must not repeat it. Build writes two tables:
+  * must not repeat it. Build writes the tables:
   *
   *   - `<name>_centroids` — the (cent_id, cvec) k-means result, tiny
   *     (nlist × dim), broadcast at search time;
-  *   - `<name>_lists` — the inverted lists (cent_id, id, vec),
-  *     hive-PARTITIONED by cent_id.
+  *   - the inverted lists, hive-PARTITIONED by cent_id, under one
+  *     lifecycle and one of two payload codecs ([[Codec]]): full
+  *     vectors in `<name>_lists`, or PQ codes in `<name>_codes`.
   *
   * Search assigns each probe its `nprobe` closest centroids (broadcast
   * — no corpus touch), then reads ONLY those lists: the probed
@@ -55,9 +56,78 @@ import org.apache.spark.sql.functions._
 object VectorIndex {
 
   def centroidsTable(name: String): String = s"${name}_centroids"
-  def listsTable(name: String): String = s"${name}_lists"
+  def listsTable(name: String): String = Flat.dataTable(name)
   def booksTable(name: String): String = s"${name}_books"
-  def codesTable(name: String): String = s"${name}_codes"
+  def codesTable(name: String): String = Pq.dataTable(name)
+
+  /** The inverted lists' payload encoding, the one step the two index
+    * shapes differ in (FAISS `IndexIVF`'s pluggable encoder): [[Flat]]
+    * keeps `_lists` rows (cent_id, id, vec, attrs…), [[Pq]] `_codes`
+    * rows (cent_id, id, sub, code, attrs…) under `_books` codebooks.
+    * `tag` names its job labels and stream watermarks, `builder` the
+    * FromTable builder that binds it. */
+  private[graft] sealed abstract class Codec(val tag: String,
+                                             val suffix: String,
+                                             val builder: String) {
+    def dataTable(name: String): String = name + suffix
+    /** The payload columns between (cent_id, id) and the attributes. */
+    def payload(vecCol: String): Seq[String] =
+      if (this == Flat) Seq(vecCol) else Seq("sub", "code")
+  }
+  private[graft] case object Flat
+    extends Codec("ivf", "_lists", "buildIvfIndexFromTable")
+  private[graft] case object Pq
+    extends Codec("ivfpq", "_codes", "buildIvfPqIndexFromTable")
+
+  /** Maps an assigned frame (id, vec, cent_id, attrs…) and its
+    * attribute columns to data-table rows. */
+  private type Encoder = (DataFrame, Seq[String]) => DataFrame
+
+  /** The codec's own quantizer trained over the corpus projection
+    * `proj`: the tables it adds next to the centroids, and its
+    * encoder. */
+  private def train(codec: Codec, name: String, proj: DataFrame, m: Int,
+                    ksub: Int, iters: Int, idCol: String,
+                    vecCol: String): (Seq[(String, DataFrame)], Encoder) =
+    codec match {
+      case Flat => (Nil, (a, _) => a)
+      case Pq =>
+        val books = Similarity.pqTrain(proj, m, ksub, iters, idCol, vecCol)
+        (Seq(booksTable(name) -> books), pqEncoder(books, m, 0, idCol, vecCol))
+    }
+
+  /** The codec's STORED coarse centroids and encoder — no retraining. */
+  private def stored(codec: Codec, store: TableStore, name: String, m: Int,
+                     idCol: String, vecCol: String): (DataFrame, Encoder) =
+    codec match {
+      case Flat => (store.read(centroidsTable(name)), (a, _) => a)
+      case Pq =>
+        val q = quantizer(store, name, m)
+        (store.readVersion(centroidsTable(name), q.centsVersion),
+          pqEncoder(store.readVersion(booksTable(name), q.booksVersion), q.m,
+            q.sd, idCol, vecCol))
+    }
+
+  // the encode CARRIES cent_id + attrs through its per-(id, sub) argmax
+  // (constant per id): the codes pipeline is assign → explode → encode
+  // → write, with no id-join re-attaching them (guide §2.4). sd 0
+  // reads the sub-dimension off the books.
+  private def pqEncoder(books: DataFrame, m: Int, sd: Int, idCol: String,
+                        vecCol: String): Encoder = (a, attrs) =>
+    Similarity.pqEncodeSd(a, books, m, sd, idCol, vecCol, "cent_id" +: attrs)
+
+  /** The codec of the built index `name`, read from its stored data
+    * table (full-vector lists first). */
+  private[graft] def codecOf(store: TableStore, name: String): Codec =
+    Seq(Flat, Pq).find(c => store.exists(c.dataTable(name))).getOrElse(
+      throw new IllegalArgumentException(s"unknown vector index $name — " +
+        "build it with buildIvfIndex or buildIvfPqIndex first"))
+
+  /** The (index name, codec) whose data table `table` is. */
+  private[graft] def indexOf(table: String): Option[(String, Codec)] =
+    Seq(Flat, Pq).collectFirst {
+      case c if table.endsWith(c.suffix) => (table.stripSuffix(c.suffix), c)
+    }
 
   /** An index table's column set, cached per (store root, table): it
     * is fixed at build time (appends conform to it), and the
@@ -71,12 +141,49 @@ object VectorIndex {
   private val colsCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[String]]()
 
-  private[graft] def cachedCols(store: TableStore, table: String): Seq[String] =
+  private def cachedCols(store: TableStore, table: String): Seq[String] =
     colsCache.computeIfAbsent((store.rootPath, table),
       _ => store.read(table).columns.toSeq)
 
-  private[graft] def listCols(store: TableStore, name: String): Seq[String] =
-    cachedCols(store, listsTable(name))
+  /** The one build. ONE corpus materialization feeds coarse training,
+    * the codec's training, assignment and encode (guide §2.4: the
+    * passes read executor-local checkpoint blocks, not parquet), and
+    * pins the corpus rows — a rebuild's old lists — before any
+    * overwrite. The centroids and the codec's tables commit first,
+    * then the data table, re-ASSERTING `binding` (app, watermark): a
+    * re-build at an unchanged corpus version must still replace the
+    * lists, and overwriteTxn's replay guard would no-op the equal
+    * version and pair new centroids with old lists. */
+  private def build(store: TableStore, name: String, corpus: DataFrame,
+                    codec: Codec, binding: Option[(String, Long)],
+                    nlist: Int, m: Int, ksub: Int, kmeansIters: Int,
+                    idCol: String, vecCol: String,
+                    attrCols: Seq[String]): Unit = {
+    val proj = graft.lake.JobLabel(corpus.sparkSession,
+        s"graft:${codec.tag} build checkpoint") {
+      corpus.select((Seq(idCol, vecCol) ++ attrCols).map(col): _*)
+        .localCheckpoint()
+    }
+    val cents = Similarity.kmeansCentroidsOn(proj, nlist, kmeansIters,
+      idCol, vecCol)
+    val (tables, encoder) = train(codec, name, proj, m, ksub, kmeansIters,
+      idCol, vecCol)
+    val cols = Seq("cent_id", idCol) ++ codec.payload(vecCol) ++ attrCols
+    val data = encoder(Similarity.assignClusters(proj, cents, idCol, vecCol,
+        carryCols = attrCols), attrCols)
+      .select(cols.map(col): _*)
+    for ((t, df) <- (centroidsTable(name) -> cents) +: tables)
+      if (store.exists(t)) store.overwrite(t, df) else store.create(t, df)
+    // default layout handling on every path: the commit AQE-rebalances
+    // partitioned writes on cent_id, so list files stay few and
+    // right-sized instead of tasks × nlist fragments (preserveLayout
+    // would skip that — it is for pre-shaped z-ordered frames, which
+    // this assignment output is not)
+    val (dt, txns) = (codec.dataTable(name), binding.toSeq)
+    if (store.exists(dt)) store.overwriteReassertTxns(dt, data, txns)
+    else store.createTxns(dt, data, txns, partitionBy = Seq("cent_id"))
+    colsCache.put((store.rootPath, dt), cols)
+  }
 
   /** Train k-means over `corpus` and persist centroids + inverted
     * lists under `name`. O(corpus) — one assignment pass after
@@ -90,36 +197,9 @@ object VectorIndex {
                     nlist: Int = 16, kmeansIters: Int = 2,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding",
-                    attrCols: Seq[String] = Nil): Unit = {
-    // ONE corpus materialization feeds training AND assignment: the
-    // k-means passes and the list-assignment pass all read executor-
-    // local checkpoint blocks instead of re-decoding parquet per
-    // consumer (guide §2.4 — the passes share the projection, so the
-    // exchange-equivalent work happens once). Same at-scale story as
-    // kmeansCentroids' own checkpoint: the caller samples at 100 TB.
-    val proj = graft.lake.JobLabel(corpus.sparkSession, "graft:ivf build checkpoint") {
-      corpus.select((Seq(idCol, vecCol) ++ attrCols).map(col): _*)
-        .localCheckpoint()
-    }
-    val cents = Similarity.kmeansCentroidsOn(proj, nlist, kmeansIters,
-      idCol, vecCol)
-    val lists = Similarity.assignClusters(proj, cents, idCol, vecCol,
-        carryCols = attrCols)
-      .select((Seq("cent_id", idCol, vecCol) ++ attrCols).map(col): _*)
-    val ct = centroidsTable(name)
-    val lt = listsTable(name)
-    if (store.exists(ct)) store.overwrite(ct, cents)
-    else store.create(ct, cents)
-    // default layout handling on every path: the commit AQE-rebalances
-    // partitioned writes on cent_id, so list files stay few and
-    // right-sized instead of tasks × nlist fragments (preserveLayout
-    // would skip that — it is for pre-shaped z-ordered frames, which
-    // this assignment output is not)
-    if (store.exists(lt)) store.overwrite(lt, lists)
-    else store.create(lt, lists, partitionBy = Seq("cent_id"))
-    colsCache.put((store.rootPath, lt),
-      Seq("cent_id", idCol, vecCol) ++ attrCols)
-  }
+                    attrCols: Seq[String] = Nil): Unit =
+    build(store, name, corpus, Flat, None, nlist, 0, 0, kmeansIters, idCol,
+      vecCol, attrCols)
 
   /** Persist an IVF-PQ index (the IVFADC design of Jégou/Douze/Schmid,
     * "Product Quantization for Nearest Neighbor Search", TPAMI 2011 —
@@ -146,38 +226,9 @@ object VectorIndex {
                       kmeansIters: Int = 2,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding",
-                      attrCols: Seq[String] = Nil): Unit = {
-    // ONE corpus materialization feeds coarse training, PQ training,
-    // assignment and encode (see buildIvfIndex)
-    val proj = graft.lake.JobLabel(corpus.sparkSession, "graft:ivfpq build checkpoint") {
-      corpus.select((Seq(idCol, vecCol) ++ attrCols).map(col): _*)
-        .localCheckpoint()
-    }
-    val cents = Similarity.kmeansCentroidsOn(proj, nlist, kmeansIters,
-      idCol, vecCol)
-    val books = Similarity.pqTrain(proj, m, ksub, kmeansIters,
-      idCol, vecCol)
-    // assignment first, then the encode CARRIES cent_id + attrCols
-    // through its per-(id, sub) argmax (constant per id) — the old
-    // id-join that re-attached them shuffled the whole code frame;
-    // now the codes pipeline is assign → explode → encode → write
-    // with no join (guide §2.4). attrCols ride as before (narrow
-    // values that RLE/dict-compress away in parquet) so
-    // [[searchIvfPqIndexFiltered]] can push predicates into the scan.
-    val assigned = Similarity.assignClusters(proj, cents, idCol, vecCol,
-        carryCols = attrCols)
-    val codes = Similarity.pqEncode(assigned, books, m, idCol, vecCol,
-        carryCols = "cent_id" +: attrCols)
-      .select((Seq("cent_id", idCol, "sub", "code") ++ attrCols).map(col): _*)
-    def put(t: String, df: DataFrame, parts: Seq[String] = Nil): Unit =
-      if (store.exists(t)) store.overwrite(t, df)
-      else store.create(t, df, partitionBy = parts)
-    put(centroidsTable(name), cents)
-    put(booksTable(name), books)
-    put(codesTable(name), codes, Seq("cent_id"))
-    colsCache.put((store.rootPath, codesTable(name)),
-      Seq("cent_id", idCol, "sub", "code") ++ attrCols)
-  }
+                      attrCols: Seq[String] = Nil): Unit =
+    build(store, name, corpus, Pq, None, nlist, m, ksub, kmeansIters, idCol,
+      vecCol, attrCols)
 
   /** IVF-PQ search: probes assign to their nprobe coarse lists
     * (broadcast centroids), ONLY those code partitions are read
@@ -223,22 +274,11 @@ object VectorIndex {
                                        filter: org.apache.spark.sql.Column,
                                        selectivity: Double, m: Int,
                                        idCol: String, vecCol: String,
-                                       driverRows: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{count => cnt}
-    val codes0 = store.read(codesTable(name))
-    val s0 =
-      if (!selectivity.isNaN) selectivity
-      else {
-        val r = codes0.agg(cnt(lit(1)), cnt(when(filter, 1))).first()
-        if (r.getLong(0) == 0L) 1.0
-        else r.getLong(1) * 1.0 / r.getLong(0)
-      }
-    val nlist = quantizer(store, name, m).nlist
-    val widened = math.min(nlist.toDouble,
-      math.ceil(nprobe / math.max(s0, 1e-9))).toInt
-    searchIvfPqCore(store, name, probes, k, math.max(nprobe, widened),
+                                       driverRows: Int): DataFrame =
+    searchIvfPqCore(store, name, probes, k,
+      widenedProbes(store, codesTable(name), filter, selectivity, nprobe,
+        quantizer(store, name, m).nlist),
       Some(filter), m, idCol, vecCol, driverRows)
-  }
 
   /** One IVF-PQ search: driver-served when its scoring work (probes ×
     * probed code rows) fits `driverRows`, the distributed plan
@@ -308,6 +348,22 @@ object VectorIndex {
     scored.withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
   }
 
+  /** Assign + encode `batch` against the STORED quantizers — the one
+    * O(batch) frame behind appends, ingest and sync, conformed to the
+    * cached column set: attribute columns the index was built with
+    * must come from the batch, loudly, not null-fill. */
+  private[graft] def encode(store: TableStore, name: String, codec: Codec,
+                            batch: DataFrame, m: Int, idCol: String,
+                            vecCol: String): DataFrame = {
+    val cols = cachedCols(store, codec.dataTable(name))
+    val attrs =
+      cols.filterNot((Seq("cent_id", idCol) ++ codec.payload(vecCol)).toSet)
+    val (cents, encoder) = stored(codec, store, name, m, idCol, vecCol)
+    encoder(Similarity.assignClusters(batch, cents, idCol, vecCol,
+        carryCols = attrs), attrs)
+      .select(cols.map(col): _*)
+  }
+
   /** Assign + encode a batch against an IVF-PQ index's STORED
     * quantizers — the shared O(batch · m) maintenance frame
     * ((cent_id, id, sub, code)) behind both the batch append and the
@@ -315,37 +371,17 @@ object VectorIndex {
   def encodeForIvfPq(store: TableStore, name: String, batch: DataFrame,
                      m: Int = 0, idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame =
-    encodeWith(store, name, quantizer(store, name, m), batch, idCol, vecCol)
-
-  private def encodeWith(store: TableStore, name: String, q: PqQuantizer,
-                         batch: DataFrame, idCol: String,
-                         vecCol: String): DataFrame = {
-    val cents = store.readVersion(centroidsTable(name), q.centsVersion)
-    val books = store.readVersion(booksTable(name), q.booksVersion)
-    // conform to the codes table's column set (cached — the streaming
-    // ingest calls this per micro-batch): attribute columns the index
-    // was built with must come from the batch, loudly, not null-fill
-    val cols = cachedCols(store, codesTable(name))
-    val attrs = cols.filterNot(Set("cent_id", idCol, "sub", "code"))
-    // assign, then carry cent_id + attrs through the encode's
-    // per-(id, sub) argmax — no id-join (see buildIvfPqIndex)
-    val assigned = Similarity.assignClusters(batch, cents, idCol, vecCol,
-        carryCols = attrs)
-    Similarity.pqEncodeSd(assigned, books, q.m, q.sd, idCol, vecCol,
-        "cent_id" +: attrs)
-      .select(cols.map(col): _*)
-  }
+    encode(store, name, Pq, batch, m, idCol, vecCol)
 
   /** Incremental IVF-PQ maintenance: assign + encode `batch` against
     * the STORED coarse centroids and codebooks and append its code
-    * rows — O(batch · m), no retraining, no corpus re-read, same
-    * append-≡-rebuild contract as [[appendToIvfIndex]]. */
+    * rows — O(batch · m), no retraining, no corpus re-read. */
   def appendToIvfPqIndex(store: TableStore, name: String, batch: DataFrame,
                          m: Int = 0,
                          idCol: String = "vec_id",
                          vecCol: String = "embedding"): Unit =
-    store.append(codesTable(name),
-      encodeForIvfPq(store, name, batch, m, idCol, vecCol))
+    store.append(codesTable(name), encode(store, name, Pq, batch, m, idCol,
+      vecCol))
 
   /** Incremental index maintenance: assign `batch` to the EXISTING
     * trained centroids and append to the inverted lists — O(batch);
@@ -360,17 +396,19 @@ object VectorIndex {
     * max(rows) outgrows the mean by your probe budget. */
   def appendToIvfIndex(store: TableStore, name: String, batch: DataFrame,
                        idCol: String = "vec_id",
-                       vecCol: String = "embedding"): Unit = {
-    val cents = store.read(centroidsTable(name))
-    // carry whatever attribute columns the lists were BUILT with —
-    // the batch must supply them, or the append fails loudly instead
-    // of silently nulling the filterable attributes of new vectors
-    val cols = listCols(store, name)
-    val assigned = Similarity.assignClusters(batch, cents, idCol, vecCol,
-        carryCols = cols.filterNot(Set("cent_id", idCol, vecCol)))
-      .select(cols.map(col): _*)
-    store.append(listsTable(name), assigned)
+                       vecCol: String = "embedding"): Unit =
+    store.append(listsTable(name), encode(store, name, Flat, batch, 0, idCol,
+      vecCol))
+
+  /** A store table's version-pinned read and its sync binding. */
+  private def pinned(store: TableStore,
+                     corpusTable: String): (DataFrame, Option[(String, Long)]) = {
+    val v = store.currentVersion(corpusTable).getOrElse(
+      throw new IllegalStateException(s"table $corpusTable does not exist"))
+    (store.readVersion(corpusTable, v), Some((syncApp(corpusTable), v)))
   }
+
+  private def syncApp(corpusTable: String) = s"ivf-sync-$corpusTable"
 
   /** Build an IVF index over a STORE TABLE and bind it to that
     * table's version history: the lists table's creation commit
@@ -385,36 +423,10 @@ object VectorIndex {
                              idCol: String = "vec_id",
                              vecCol: String = "embedding",
                              attrCols: Seq[String] = Nil): Unit = {
-    val v = store.currentVersion(corpusTable).getOrElse(
-      throw new IllegalStateException(s"table $corpusTable does not exist"))
-    val corpus = store.readVersion(corpusTable, v)
-    // one corpus materialization for training + assignment (see
-    // buildIvfIndex); also pins the version-v rows against the store
-    val proj = graft.lake.JobLabel(corpus.sparkSession, "graft:ivf build checkpoint") {
-      corpus.select((Seq(idCol, vecCol) ++ attrCols).map(col): _*)
-        .localCheckpoint()
-    }
-    val cents = Similarity.kmeansCentroidsOn(proj, nlist, kmeansIters,
-      idCol, vecCol)
-    val lists = Similarity.assignClusters(proj, cents, idCol, vecCol,
-        carryCols = attrCols)
-      .select((Seq("cent_id", idCol, vecCol) ++ attrCols).map(col): _*)
-    val ct = centroidsTable(name)
-    val lt = listsTable(name)
-    if (store.exists(ct)) store.overwrite(ct, cents)
-    else store.create(ct, cents)
-    // a re-build at an unchanged corpus version must still replace the
-    // lists: re-ASSERT the watermark (overwriteTxn's replay guard would
-    // no-op the equal version and pair new centroids with old lists)
-    if (store.exists(lt))
-      store.overwriteReassertTxn(lt, lists, syncApp(corpusTable), v)
-    else store.createTxn(lt, lists, syncApp(corpusTable), v,
-      partitionBy = Seq("cent_id"))
-    colsCache.put((store.rootPath, lt),
-      Seq("cent_id", idCol, vecCol) ++ attrCols)
+    val (corpus, binding) = pinned(store, corpusTable)
+    build(store, name, corpus, Flat, binding, nlist, 0, 0, kmeansIters,
+      idCol, vecCol, attrCols)
   }
-
-  private def syncApp(corpusTable: String) = s"ivf-sync-$corpusTable"
 
   /** [[buildIvfIndexFromTable]] for the IVF-PQ shape: the codes
     * table's creation commit carries the indexed corpus version, so
@@ -426,36 +438,9 @@ object VectorIndex {
                                idCol: String = "vec_id",
                                vecCol: String = "embedding",
                                attrCols: Seq[String] = Nil): Unit = {
-    val v = store.currentVersion(corpusTable).getOrElse(
-      throw new IllegalStateException(s"table $corpusTable does not exist"))
-    val corpus = store.readVersion(corpusTable, v)
-    // one corpus materialization + join-free carry-through encode
-    // (see buildIvfPqIndex)
-    val proj = graft.lake.JobLabel(corpus.sparkSession, "graft:ivfpq build checkpoint") {
-      corpus.select((Seq(idCol, vecCol) ++ attrCols).map(col): _*)
-        .localCheckpoint()
-    }
-    val cents = Similarity.kmeansCentroidsOn(proj, nlist, kmeansIters,
-      idCol, vecCol)
-    val books = Similarity.pqTrain(proj, m, ksub, kmeansIters,
-      idCol, vecCol)
-    val assigned = Similarity.assignClusters(proj, cents, idCol, vecCol,
-        carryCols = attrCols)
-    val codes = Similarity.pqEncode(assigned, books, m, idCol, vecCol,
-        carryCols = "cent_id" +: attrCols)
-      .select((Seq("cent_id", idCol, "sub", "code") ++ attrCols).map(col): _*)
-    def put(t: String, df: DataFrame): Unit =
-      if (store.exists(t)) store.overwrite(t, df) else store.create(t, df)
-    put(centroidsTable(name), cents)
-    put(booksTable(name), books)
-    val kt = codesTable(name)
-    // re-assert, not overwriteTxn: see buildIvfIndexFromTable
-    if (store.exists(kt))
-      store.overwriteReassertTxn(kt, codes, syncApp(corpusTable), v)
-    else store.createTxn(kt, codes, syncApp(corpusTable), v,
-      partitionBy = Seq("cent_id"))
-    colsCache.put((store.rootPath, kt),
-      Seq("cent_id", idCol, "sub", "code") ++ attrCols)
+    val (corpus, binding) = pinned(store, corpusTable)
+    build(store, name, corpus, Pq, binding, nlist, m, ksub, kmeansIters,
+      idCol, vecCol, attrCols)
   }
 
   /** [[syncIvfIndex]] on the code-compressed index: the same netted
@@ -467,66 +452,7 @@ object VectorIndex {
   def syncIvfPqIndex(store: TableStore, name: String, corpusTable: String,
                      m: Int = 0, idCol: String = "vec_id",
                      vecCol: String = "embedding"): Option[Long] =
-    syncIvfPq(store, name, corpusTable, m, idCol, vecCol,
-      Similarity.MaxDriverTrainRows)
-
-  /** [[syncIvfPqIndex]] with the driver bound as a parameter:
-    * `driverRows` ≤ 0 forces the distributed plan. */
-  private[graft] def syncIvfPq(store: TableStore, name: String,
-                             corpusTable: String, m: Int, idCol: String,
-                             vecCol: String, driverRows: Int): Option[Long] = {
-    val kt = codesTable(name)
-    val app = syncApp(corpusTable)
-    val last = store.lastTxn(kt, app).getOrElse(throw new IllegalStateException(
-      s"index $name is not bound to $corpusTable — build it with " +
-        "buildIvfPqIndexFromTable to record the sync watermark"))
-    store.changesSince(corpusTable, last) match {
-      case None => None
-      case Some((feed, cur)) =>
-        val q = quantizer(store, name, m)
-        // the feed's size is bounded from metadata BEFORE it is
-        // evaluated: a feed the driver can hold is collected once and
-        // serves whichever path then runs; a larger (or uncounted) one
-        // stays the distributed plan over the feed itself
-        val held =
-          if (driverRows <= 0 || q.arrays.isEmpty ||
-              !store.changeRowsBound(corpusTable, last, cur)
-                .exists(_ <= driverRows)) None
-          else {
-            val attrs = cachedCols(store, kt)
-              .filterNot(Set("cent_id", idCol, "sub", "code"))
-            val proj = feed.select((Seq(idCol, vecCol) ++ attrs ++
-              Seq("_change_type", "_commit_version")).map(col): _*)
-            val rows = graft.lake.JobLabel(store.spark, "graft:ivfpq sync feed") {
-              proj.collect()
-            }
-            Some((rows, proj.schema, attrs))
-          }
-        val onDriver = held.exists { case (rows, schema, attrs) =>
-          syncOnDriver(store, name, q, q.arrays.get, rows, schema,
-            (app, cur), attrs, idCol)
-        }
-        if (!onDriver) {
-          import org.apache.spark.sql.expressions.Window
-          import scala.jdk.CollectionConverters._
-          val src = held.fold(feed) { case (rows, schema, _) =>
-            store.spark.createDataFrame(rows.toSeq.asJava, schema)
-          }
-          val w = Window.partitionBy(idCol).orderBy(
-            col("_commit_version").desc,
-            when(col("_change_type") === "insert", 0).otherwise(1))
-          val latest = src.withColumn("__r", row_number().over(w))
-            .where(col("__r") === 1)
-          val inserts = latest.where(col("_change_type") === "insert")
-            .drop("_change_type", "_commit_version", "__r")
-          val touched = src.select(col(idCol)).distinct()
-          store.appendWithDeletes(kt,
-            encodeWith(store, name, q, inserts, idCol, vecCol),
-            touched, txn = Some((app, cur)))
-        }
-        Some(cur)
-    }
-  }
+    sync(store, name, Pq, corpusTable, m, idCol, vecCol)
 
   /** Catch the index up with its corpus table's CHANGE FEED — the
     * "index follows the table" maintenance move. One call applies
@@ -544,36 +470,72 @@ object VectorIndex {
     * current. */
   def syncIvfIndex(store: TableStore, name: String, corpusTable: String,
                    idCol: String = "vec_id",
-                   vecCol: String = "embedding"): Option[Long] = {
-    val lt = listsTable(name)
+                   vecCol: String = "embedding"): Option[Long] =
+    sync(store, name, Flat, corpusTable, 0, idCol, vecCol)
+
+  /** The one sync ([[syncIvfIndex]]): a PQ index tries the driver arm
+    * first, `driverRows` ≤ 0 forces the distributed plan. */
+  private[graft] def sync(store: TableStore, name: String, codec: Codec,
+                          corpusTable: String, m: Int, idCol: String,
+                          vecCol: String,
+                          driverRows: Int = Similarity.MaxDriverTrainRows)
+      : Option[Long] = {
+    val dt = codec.dataTable(name)
     val app = syncApp(corpusTable)
-    val last = store.lastTxn(lt, app).getOrElse(throw new IllegalStateException(
+    val last = store.lastTxn(dt, app).getOrElse(throw new IllegalStateException(
       s"index $name is not bound to $corpusTable — build it with " +
-        "buildIvfIndexFromTable to record the sync watermark"))
+        s"${codec.builder} to record the sync watermark"))
     store.changesSince(corpusTable, last) match {
       case None => None
       case Some((feed, cur)) =>
-        import org.apache.spark.sql.expressions.Window
-        // net the feed to each touched id's FINAL state: latest
-        // commit wins; within one commit an insert beats the delete
-        // that precedes it (a delete-and-reinsert batch)
-        val w = Window.partitionBy(idCol).orderBy(
-          col("_commit_version").desc,
-          when(col("_change_type") === "insert", 0).otherwise(1))
-        val latest = feed.withColumn("__r", row_number().over(w))
-          .where(col("__r") === 1)
-        val inserts = latest.where(col("_change_type") === "insert")
-          .drop("_change_type", "_commit_version", "__r")
-        val touched = feed.select(col(idCol)).distinct()
-        val cents = store.read(centroidsTable(name))
-        val cols = listCols(store, name)
-        val assigned = Similarity.assignClusters(inserts, cents, idCol,
-            vecCol,
-            carryCols = cols.filterNot(Set("cent_id", idCol, vecCol)))
-          .select(cols.map(col): _*)
-        store.appendWithDeletes(lt, assigned, touched,
-          txn = Some((app, cur)))
+        val src =
+          if (codec == Pq) pqDriverArm(store, name, m, feed, corpusTable,
+            last, cur, app, idCol, vecCol, driverRows)
+          else Some(feed)
+        src.foreach { src =>
+          import org.apache.spark.sql.expressions.Window
+          // net the feed to each touched id's FINAL state: latest
+          // commit wins; within one commit an insert beats the delete
+          // that precedes it (a delete-and-reinsert batch)
+          val w = Window.partitionBy(idCol).orderBy(
+            col("_commit_version").desc,
+            when(col("_change_type") === "insert", 0).otherwise(1))
+          val inserts = src.withColumn("__r", row_number().over(w))
+            .where(col("__r") === 1 && col("_change_type") === "insert")
+            .drop("_change_type", "_commit_version", "__r")
+          store.appendWithDeletes(dt,
+            encode(store, name, codec, inserts, m, idCol, vecCol),
+            src.select(col(idCol)).distinct(), txn = Some((app, cur)))
+        }
         Some(cur)
+    }
+  }
+
+  /** The PQ sync's driver arm: a feed the driver can hold (bounded
+    * from metadata BEFORE it is evaluated) is collected once and, when
+    * [[syncOnDriver]] reproduces it, committed there (None). Otherwise
+    * the frame the distributed plan nets: the collected copy or the
+    * feed. */
+  private def pqDriverArm(store: TableStore, name: String, m: Int,
+                          feed: DataFrame, corpusTable: String, last: Long,
+                          cur: Long, app: String, idCol: String,
+                          vecCol: String, driverRows: Int): Option[DataFrame] = {
+    val q = quantizer(store, name, m)
+    if (driverRows <= 0 || q.arrays.isEmpty ||
+        !store.changeRowsBound(corpusTable, last, cur).exists(_ <= driverRows))
+      return Some(feed)
+    val attrs = cachedCols(store, codesTable(name))
+      .filterNot(Set("cent_id", idCol, "sub", "code"))
+    val proj = feed.select((Seq(idCol, vecCol) ++ attrs ++
+      Seq("_change_type", "_commit_version")).map(col): _*)
+    val rows = graft.lake.JobLabel(store.spark, "graft:ivfpq sync feed") {
+      proj.collect()
+    }
+    if (syncOnDriver(store, name, q, q.arrays.get, rows, proj.schema,
+        (app, cur), attrs, idCol)) None
+    else {
+      import scala.jdk.CollectionConverters._
+      Some(store.spark.createDataFrame(rows.toSeq.asJava, proj.schema))
     }
   }
 
@@ -624,45 +586,19 @@ object VectorIndex {
                       kmeansIters: Int = 2, idCol: String = "vec_id",
                       vecCol: String = "embedding"): Unit = {
     val lt = listsTable(name)
+    val lists = store.read(lt)
     // an attribute-built index keeps its attributes across rebuilds —
     // they are derived from the stored lists schema, not re-declared
     // by the caller (dropping them would silently break filtered
     // search AND poison colsCache so later appends stop carrying them)
-    val attrs = store.read(lt).columns.toSeq
-      .filterNot(Set("cent_id", idCol, vecCol))
+    val attrs = lists.columns.toSeq.filterNot(Set("cent_id", idCol, vecCol))
     // an index bound to a corpus table's change feed keeps its
     // binding: the rebuild re-commits the lists under the SAME app id
     // and watermark, so syncIvfIndex keeps pulling the feed from where
     // the last sync left it (a plain overwrite would strand the
     // watermark in an old manifest and unbind once it's vacuumed)
-    val binding = store.lastTxnMatching(lt, "ivf-sync-")
-    // pin the read before the overwrite swings the pointer; the
-    // checkpoint MATERIALIZES the old version's rows, so the rebuild's
-    // write depends on no store files at all (and training +
-    // re-assignment share the one materialization — see buildIvfIndex)
-    val corpus = graft.lake.JobLabel(store.spark, "graft:ivf rebuild checkpoint") {
-      store.read(lt)
-        .select((Seq(idCol, vecCol) ++ attrs).map(col): _*)
-        .localCheckpoint()
-    }
-    val cents = Similarity.kmeansCentroidsOn(corpus, nlist, kmeansIters,
-      idCol, vecCol)
-    val lists = Similarity.assignClusters(corpus, cents, idCol, vecCol,
-        carryCols = attrs)
-      .select((Seq("cent_id", idCol, vecCol) ++ attrs).map(col): _*)
-    val ct = centroidsTable(name)
-    if (store.exists(ct)) store.overwrite(ct, cents)
-    else store.create(ct, cents)
-    binding match {
-      // re-ASSERT (not advance) the watermark: the rebuild rewrites
-      // content the syncs already applied, so the cursor must stay
-      // where the last sync left it — overwriteTxn's replay guard
-      // would see the equal version and no-op the whole rebuild
-      case Some((app, v)) => store.overwriteReassertTxn(lt, lists, app, v)
-      case None           => store.overwrite(lt, lists)
-    }
-    colsCache.put((store.rootPath, lt),
-      Seq("cent_id", idCol, vecCol) ++ attrs)
+    build(store, name, lists, Flat, store.lastTxnMatching(lt, "ivf-sync-"),
+      nlist, 0, 0, kmeansIters, idCol, vecCol, attrs)
   }
 
   /** Scan-free index profile: one row per inverted list with its live
@@ -677,9 +613,7 @@ object VectorIndex {
     // works for both index shapes: full-vector lists (one row per
     // vector) and IVF-PQ codes (m rows per vector — the skew RATIO is
     // what matters, and a constant factor cancels out of it)
-    val lt = if (store.exists(listsTable(name))) listsTable(name)
-             else codesTable(name)
-    require(store.exists(lt), s"unknown vector index $name")
+    val lt = codecOf(store, name).dataTable(name)
     // one version pin for BOTH the file inventory and the row counts —
     // a commit racing the profile must not tear it across versions
     val v = store.currentVersion(lt).get
@@ -742,22 +676,30 @@ object VectorIndex {
                              selectivity: Double = Double.NaN,
                              idCol: String = "vec_id",
                              vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.functions.{count => cnt}
-    val lists0 = store.read(listsTable(name))
+    // one centroid read serves both the widening bound and the search
+    val cents = store.read(centroidsTable(name))
+    searchIvfCore(store, name, cents, probes, k,
+      widenedProbes(store, listsTable(name), filter, selectivity, nprobe,
+        cents.count()),
+      Some(filter), idCol, vecCol)
+  }
+
+  /** A filtered search's widened probe count over data table `table`
+    * (the rule in [[searchIvfIndexFiltered]]). */
+  private def widenedProbes(store: TableStore, table: String,
+                            filter: org.apache.spark.sql.Column,
+                            selectivity: Double, nprobe: Int,
+                            nlist: => Long): Int = {
     val s0 =
       if (!selectivity.isNaN) selectivity
       else {
-        val r = lists0.agg(cnt(lit(1)), cnt(when(filter, 1))).first()
+        val r = store.read(table).agg(count(lit(1)), count(when(filter, 1)))
+          .first()
         if (r.getLong(0) == 0L) 1.0
         else r.getLong(1) * 1.0 / r.getLong(0)
       }
-    // one centroid read serves both the widening bound and the search
-    val cents = store.read(centroidsTable(name))
-    val nlist = cents.count()
-    val widened = math.min(nlist.toDouble,
-      math.ceil(nprobe / math.max(s0, 1e-9))).toInt
-    searchIvfCore(store, name, cents, probes, k, math.max(nprobe, widened),
-      Some(filter), idCol, vecCol)
+    math.max(nprobe,
+      math.min(nlist.toDouble, math.ceil(nprobe / math.max(s0, 1e-9))).toInt)
   }
 
   private def searchIvfCore(store: TableStore, name: String,

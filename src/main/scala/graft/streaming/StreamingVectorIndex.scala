@@ -1,17 +1,16 @@
 package graft.streaming
 
 import graft.lake.TableStore
-import graft.ops.{Similarity, VectorIndex}
+import graft.ops.VectorIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Streaming maintenance of a persisted IVF ANN index
+/** Streaming maintenance of a persisted IVF or IVF-PQ ANN index
   * ([[graft.ops.VectorIndex]]): embedding arrivals land in a parquet
   * directory, each micro-batch is assigned to the stored (already
-  * trained) centroids and appended to the inverted lists — the
-  * streaming form of `appendToIvfIndex`, so searches see new vectors
-  * within one trigger without any rebuild.
+  * trained) centroids, encoded under the index's codec and appended
+  * to the inverted lists — the streaming form of `appendToIvfIndex`,
+  * so searches see new vectors within one trigger without any rebuild.
   *
   * Exactly-once: `foreachBatch` is at-least-once under crash-replay,
   * so each batch commits through [[TableStore.appendTxn]] with the
@@ -25,22 +24,22 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * double-appending.
   *
   * Scale: per-batch cost is O(batch) — one broadcast centroid
-  * assignment (nlist × dim, tiny) plus an append commit under the
-  * lists table's hive layout, so partition pruning keeps holding for
-  * searches as the index grows. The corpus is never re-read.
+  * assignment (nlist × dim, tiny), the codec's encode, plus an append
+  * commit under the lists table's hive layout, so partition pruning
+  * keeps holding for searches as the index grows. The corpus is never
+  * re-read.
   */
 object StreamingVectorIndex {
 
-  private def appId(name: String) = s"ivf-ingest-$name"
-  private def pqAppId(name: String) = s"ivfpq-ingest-$name"
-
   /** Start streaming embedding arrivals from `sourceDir` into the
     * persisted index `name` (which must already be built —
-    * `buildIvfIndex` trains the centroids this ingest assigns
-    * against). Caller stops the returned query. `sourceSchema` is
-    * required when the landing dir may still be empty at start.
+    * `buildIvfIndex` or `buildIvfPqIndex` trains the quantizers this
+    * ingest encodes against). Caller stops the returned query.
+    * `sourceSchema` is required when the landing dir may still be
+    * empty at start; `m` (IVF-PQ only) is checked against the stored
+    * codebooks, 0 takes the stored value.
     *
-    * `checkpointDir` is REQUIRED and must be durable: the appId
+    * `checkpointDir` is REQUIRED and must be durable: the ingest
     * watermark guard is only sound under a STABLE checkpoint. A
     * restart without one gets fresh batch ids starting at 0, and
     * every new batch with id ≤ the persisted watermark would be
@@ -55,9 +54,8 @@ object StreamingVectorIndex {
                   checkpointDir: String,
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   sourceSchema: Option[org.apache.spark.sql.types.StructType] = None,
-                  maxFilesPerTrigger: Int = 16): StreamingQuery = {
-    require(store.exists(VectorIndex.centroidsTable(name)),
-      s"IVF index $name is not built — run buildIvfIndex first")
+                  maxFilesPerTrigger: Int = 16, m: Int = 0): StreamingQuery = {
+    VectorIndex.codecOf(store, name) // an unbuilt index fails here
     require(checkpointDir.nonEmpty,
       "checkpointDir must be a durable location: without a stable " +
         "checkpoint, restarted batch ids restart at 0 and the " +
@@ -70,92 +68,35 @@ object StreamingVectorIndex {
       .trigger(Trigger.ProcessingTime(0))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) ingestBatch(store, name, batch, batchId,
-          idCol, vecCol)
+          idCol, vecCol, m)
       }
       .option("checkpointLocation", checkpointDir)
       .start()
   }
 
-  /** One micro-batch: skip if the lists table already committed this
-    * batch id, else assign against the stored centroids and append
-    * with the watermark in the same commit. Public so callers wiring
-    * their own foreachBatch (or a non-streaming driver with its own
-    * batch-id ledger) get the identical exactly-once discipline —
-    * under the SAME stable-id caveat as [[startIngest]]'s
-    * checkpointDir: batch ids must never restart.
-    * Attribute columns the lists were built with
-    * (buildIvfIndex attrCols) are carried from the batch, same as
+  /** One micro-batch: skip if the index's data table already
+    * committed this batch id, else assign + encode against the stored
+    * quantizers and append with the watermark in the same commit.
+    * Public so callers wiring their own foreachBatch (or a
+    * non-streaming driver with its own batch-id ledger) get the
+    * identical exactly-once discipline — under the SAME stable-id
+    * caveat as [[startIngest]]'s checkpointDir: batch ids must never
+    * restart. Attribute columns the index was built with (attrCols)
+    * are carried from the batch, same as
     * [[graft.ops.VectorIndex.appendToIvfIndex]]. */
   def ingestBatch(store: TableStore, name: String,
                   batch: DataFrame, batchId: Long,
                   idCol: String = "vec_id",
-                  vecCol: String = "embedding"): Unit = {
-    val lt = VectorIndex.listsTable(name)
-    val wm = store.lastTxn(lt, appId(name))
-    guardBatchIdRegression(wm, batchId, appId(name), name)
-    val replayed = wm.exists(_ >= batchId)
-    if (!replayed) {
-      val cents = store.read(VectorIndex.centroidsTable(name))
-      // cached per (store, index): the lists schema is fixed at build
-      // time, and a per-batch read plan just for column names would
-      // put O(manifest) metadata back on the micro-batch hot path
-      val cols = VectorIndex.listCols(store, name)
-      val assigned = Similarity.assignClusters(batch, cents, idCol, vecCol,
-          carryCols = cols.filterNot(Set("cent_id", idCol, vecCol)))
-        .select(cols.map(col): _*)
-      store.appendTxn(lt, assigned, appId(name), batchId)
-    }
-  }
-
-  /** IVF-PQ form of [[startIngest]]: arrivals assign + PQ-encode
-    * against the stored quantizers and append m-byte code rows —
-    * per micro-batch O(batch · m), exactly-once through the same
-    * appendTxn/lastTxn watermark, searches see new vectors within a
-    * trigger at the code-compressed storage cost. `checkpointDir`
-    * must be durable — see [[startIngest]]. */
-  def startPqIngest(spark: SparkSession, sourceDir: String,
-                    store: TableStore, name: String,
-                    checkpointDir: String, m: Int = 0,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
-                    sourceSchema: Option[org.apache.spark.sql.types.StructType] = None,
-                    maxFilesPerTrigger: Int = 16): StreamingQuery = {
-    require(store.exists(booksTableOf(name)),
-      s"IVF-PQ index $name is not built — run buildIvfPqIndex first")
-    require(checkpointDir.nonEmpty,
-      "checkpointDir must be a durable location: without a stable " +
-        "checkpoint, restarted batch ids restart at 0 and the " +
-        "exactly-once watermark would silently DROP new batches")
-    val schema = sourceSchema.getOrElse(spark.read.parquet(sourceDir).schema)
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-      .writeStream
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) ingestPqBatch(store, name, batch, batchId, m,
-          idCol, vecCol)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-  }
-
-  private def booksTableOf(name: String) = VectorIndex.booksTable(name)
-
-  /** One IVF-PQ micro-batch: lastTxn replay guard, then the shared
-    * assign+encode frame appended with the watermark in one commit. */
-  private[streaming] def ingestPqBatch(store: TableStore, name: String,
-                                       batch: DataFrame, batchId: Long,
-                                       m: Int = 0,
-                                       idCol: String = "vec_id",
-                                       vecCol: String = "embedding"): Unit = {
-    val ct = VectorIndex.codesTable(name)
-    val wm = store.lastTxn(ct, pqAppId(name))
-    guardBatchIdRegression(wm, batchId, pqAppId(name), name)
-    val replayed = wm.exists(_ >= batchId)
-    if (!replayed)
-      store.appendTxn(ct,
-        VectorIndex.encodeForIvfPq(store, name, batch, m, idCol, vecCol),
-        pqAppId(name), batchId)
+                  vecCol: String = "embedding", m: Int = 0): Unit = {
+    val codec = VectorIndex.codecOf(store, name)
+    // `ivf-ingest-<name>` or `ivfpq-ingest-<name>`
+    val (t, app) = (codec.dataTable(name), s"${codec.tag}-ingest-$name")
+    val wm = store.lastTxn(t, app)
+    guardBatchIdRegression(wm, batchId, app, name)
+    if (!wm.exists(_ >= batchId))
+      store.appendTxn(t,
+        VectorIndex.encode(store, name, codec, batch, m, idCol, vecCol),
+        app, batchId)
   }
 
   /** A batch id BELOW the persisted watermark is never a legitimate

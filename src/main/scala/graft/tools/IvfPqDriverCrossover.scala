@@ -87,10 +87,10 @@ object IvfPqDriverCrossover {
       val batch = vectors(spark, next, f, dim).localCheckpoint()
       next += f
       stores.foreach(_.append("corpus", batch))
-      (secs(VectorIndex.syncIvfPq(ds, "ix", "corpus", 0, "vec_id",
-        "embedding", Int.MaxValue)),
-        secs(VectorIndex.syncIvfPq(xs, "ix", "corpus", 0, "vec_id",
-          "embedding", 0)))
+      (secs(VectorIndex.sync(ds, "ix", VectorIndex.Pq, "corpus", 0,
+        "vec_id", "embedding", Int.MaxValue)),
+        secs(VectorIndex.sync(xs, "ix", VectorIndex.Pq, "corpus", 0,
+          "vec_id", "embedding", 0)))
     }
     sync(256) // warms both paths
     for (f <- Iterator.iterate(1024)(_ * 4).takeWhile(_ <= maxFeed)) {

@@ -58,6 +58,50 @@ class ManifestSpec extends SparkSpec {
     assert(loads(assert(store.lastTxn("t", "app").contains(5L))) == 1L)
   }
 
+  test("overwritePartitions loads the current manifest once before its claim") {
+    val store = new TableStore(spark, tmpDir("mload"))
+    store.create("t", Seq((1, "a"), (2, "b")).toDF("id", "p"),
+      partitionBy = Seq("p"))
+    store.append("t", Seq((3, "a")).toDF("id", "p"))
+    // one load for the debt check, the layout check and the write's
+    // column mapping, one in the claim
+    assert(loads(store.overwritePartitions("t", Seq((4, "a")).toDF("id", "p"),
+      Seq("p=a"))) <= 2L)
+    assert(store.read("t").select("id").as[Int].collect().sorted.toSeq ==
+      Seq(2, 4))
+  }
+
+  // a txn commit's replay check reads the claim's loaded head: one
+  // load before the claim (the write's column mapping), one in it
+  test("a steady-state appendTxn loads at most twice") {
+    val store = new TableStore(spark, tmpDir("mload"))
+    store.createTxn("t", Seq(0).toDF("id"), "a", 0L)
+    store.appendTxn("t", Seq(1).toDF("id"), "a", 1L)
+    assert(loads(store.appendTxn("t", Seq(2).toDF("id"), "a", 2L)) <= 2L)
+    assert(loads(store.appendTxn("t", Seq(2).toDF("id"), "a", 2L)) <= 2L)
+    assert(store.read("t").count() == 3L)
+    assert(store.lastTxn("t", "a").contains(2L))
+  }
+
+  test("a steady-state two-app appendTxns resolves both apps in one walk") {
+    val store = new TableStore(spark, tmpDir("mload"))
+    store.createTxns("t", Seq(0).toDF("id"), Seq("a" -> 0L, "b" -> 0L))
+    store.appendTxns("t", Seq(1).toDF("id"), Seq("a" -> 1L, "b" -> 1L))
+    assert(loads(store.appendTxns("t", Seq(2).toDF("id"),
+      Seq("a" -> 2L, "b" -> 2L))) <= 2L)
+    // a replayed vector and a zombie crossing newer work both no-op
+    store.appendTxns("t", Seq(9).toDF("id"), Seq("a" -> 2L, "b" -> 2L))
+    store.appendTxns("t", Seq(9).toDF("id"), Seq("a" -> 3L, "b" -> 1L))
+    store.appendTxn("t", Seq(3).toDF("id"), "a", 3L)
+    // b's watermark now sits one version down: the walk continues to it
+    store.appendTxns("t", Seq(9).toDF("id"), Seq("a" -> 3L, "b" -> 2L))
+    store.appendTxns("t", Seq(9).toDF("id"), Seq("a" -> 4L, "b" -> 1L))
+    assert(store.read("t").select("id").as[Int].collect().sorted.toSeq ==
+      Seq(0, 1, 2, 3))
+    assert(store.lastTxn("t", "a").contains(3L))
+    assert(store.lastTxn("t", "b").contains(2L))
+  }
+
   test("a change feed over three appends loads each version once") {
     val store = new TableStore(spark, tmpDir("mload"))
     store.create("t", Seq(0).toDF("id"))

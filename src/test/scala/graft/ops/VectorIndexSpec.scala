@@ -676,14 +676,14 @@ class VectorIndexSpec extends SparkSpec {
       new TableStore(spark, tmpDir("pqsyncx")))
     history(ds); history(dd)
     val planned = executionsDuring {
-      assert(VectorIndex.syncIvfPq(ds, "px", "corpus", 0, "vec_id",
-        "embedding", Similarity.MaxDriverTrainRows).isDefined)
+      assert(VectorIndex.sync(ds, "px", VectorIndex.Pq, "corpus", 0,
+        "vec_id", "embedding", Similarity.MaxDriverTrainRows).isDefined)
     }
     // the driver path nets the feed on the driver: no window runs
     assert(!planned.exists(_.analyzed.exists(
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window])))
-    assert(VectorIndex.syncIvfPq(dd, "px", "corpus", 0, "vec_id",
-      "embedding", driverRows = 0).isDefined)
+    assert(VectorIndex.sync(dd, "px", VectorIndex.Pq, "corpus", 0,
+      "vec_id", "embedding", driverRows = 0).isDefined)
     assert(codeRows(ds, "px") == codeRows(dd, "px"))
     // both commits carry the watermark: a second sync is a no-op
     assert(VectorIndex.syncIvfPqIndex(ds, "px", "corpus").isEmpty)
@@ -724,8 +724,8 @@ class VectorIndexSpec extends SparkSpec {
     store.append("corpus", emb.where(col("vec_id") >= 100))
     // above the bound, decided from metadata: the feed is never
     // collected, and the distributed plan evaluates it as before
-    val above = executionsDuring(VectorIndex.syncIvfPq(store, "px", "corpus",
-      0, "vec_id", "embedding", driverRows = 50))
+    val above = executionsDuring(VectorIndex.sync(store, "px",
+      VectorIndex.Pq, "corpus", 0, "vec_id", "embedding", driverRows = 50))
     assert(windowed(above) && feedReads(above) == 2)
     store.append("corpus",
       Seq((900L, null.asInstanceOf[Array[Float]])).toDF("vec_id", "embedding"))

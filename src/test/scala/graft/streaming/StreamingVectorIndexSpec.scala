@@ -56,7 +56,7 @@ class StreamingVectorIndexSpec extends SparkSpec {
     VectorIndex.buildIvfPqIndex(store, "px", seed, nlist = 8, m = 4,
       ksub = 8, kmeansIters = 2)
     corpus(120, 40).coalesce(1).write.mode("append").parquet(src)
-    val q = StreamingVectorIndex.startPqIngest(spark, src, store, "px",
+    val q = StreamingVectorIndex.startIngest(spark, src, store, "px",
       checkpointDir = tmpDir("sivfpq-ckpt"), m = 4)
     try {
       q.processAllAvailable()
@@ -78,7 +78,7 @@ class StreamingVectorIndexSpec extends SparkSpec {
         r.getLong(3))).toSet
     assert(got == want && got.size == 200 * 4)
     // replay guard: re-delivering the last batch id is a no-op
-    StreamingVectorIndex.ingestPqBatch(store, "px", corpus(160, 40),
+    StreamingVectorIndex.ingestBatch(store, "px", corpus(160, 40),
       batchId = 1L, m = 4)
     assert(store.read(VectorIndex.codesTable("px")).count() == 200L * 4)
   }
@@ -156,11 +156,11 @@ class StreamingVectorIndexSpec extends SparkSpec {
     val store = new TableStore(spark, tmpDir("sivfpq-regress"))
     VectorIndex.buildIvfPqIndex(store, "px", corpus(0, 60), nlist = 4,
       m = 4, ksub = 8, kmeansIters = 1)
-    StreamingVectorIndex.ingestPqBatch(store, "px", corpus(100, 10),
+    StreamingVectorIndex.ingestBatch(store, "px", corpus(100, 10),
       batchId = 3L, m = 4)
     val before = store.read(VectorIndex.codesTable("px")).count()
     intercept[IllegalStateException] {
-      StreamingVectorIndex.ingestPqBatch(store, "px", corpus(110, 5),
+      StreamingVectorIndex.ingestBatch(store, "px", corpus(110, 5),
         batchId = 1L, m = 4)
     }
     assert(store.read(VectorIndex.codesTable("px")).count() == before)
