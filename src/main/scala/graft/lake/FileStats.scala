@@ -79,19 +79,29 @@ object FileStats {
     finally reader.close()
   }
 
-  /** Fold one file's footer into sidecar lines. Per supported
+  /** What one pass over footers yields: the sidecar lines, and the
+    * Spark schema JSON the (first) footer carries, None without one —
+    * every file of one Spark write carries the same schema, so the
+    * commit seeds its schema cache from this without opening a footer
+    * twice. */
+  final case class Folded(lines: Seq[String], sparkSchema: Option[String])
+
+  /** Key under which Spark's parquet writer stores the row schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Fold each file's footer into sidecar lines. Per supported
     * top-level column: all-null if every row group reports
     * nulls == rows; otherwise min-of-mins / max-of-maxes over groups
     * that have values. Any group with unusable statistics (older
     * writer, NaN-bearing doubles, unknown null counts) makes the
     * column unknown for the whole file — conservative keep. */
-  def compute(conf: Configuration, files: Seq[String]): Seq[String] = {
+  def compute(conf: Configuration, files: Seq[String]): Folded = {
     // footer reads are independent metadata round-trips: run them on a
     // bounded pool instead of serially on the driver thread — against
     // an object store each open is a network RTT, so a many-file commit
     // would otherwise serialize N latencies. Encounter order is
     // preserved (per-file line groups come back in input order).
-    def one(uri: String): Seq[String] = {
+    def one(uri: String): Folded = {
       val reader = ParquetFileReader.open(
         HadoopInputFile.fromPath(new Path(uri), conf))
       try {
@@ -108,7 +118,7 @@ object FileStats {
             val total = blocks.map(_.getRowCount).sum
             Some(s"$key\t$RowsCol\t$CntTag\t$total\t$total")
           }
-        rowLine.toSeq ++
+        val lines = rowLine.toSeq ++
           footer.getFileMetaData.getSchema.getFields.asScala.toSeq
             .filter(_.isPrimitive)
             .flatMap { f =>
@@ -116,34 +126,38 @@ object FileStats {
                 lineOf(key, f.getName, tag, blocks)
               }
             }
+        Folded(lines, Option(footer.getFileMetaData.getKeyValueMetaData
+          .get(SparkSchemaKey)))
       } finally reader.close()
     }
-    if (files.size <= 1) files.flatMap(one)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, files.size))
-      try {
-        val futures = files.map(uri => pool.submit(
-          new java.util.concurrent.Callable[Seq[String]] {
-            def call(): Seq[String] = one(uri)
-          }))
-        val out = futures.flatMap { f =>
-          try f.get()
-          catch {
-            // surface the reader's own exception, not the pool wrapper
-            // — same error contract as the single-file path
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
+    val perFile =
+      if (files.size <= 1) files.map(one)
+      else {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.min(16, files.size))
+        try {
+          val futures = files.map(uri => pool.submit(
+            new java.util.concurrent.Callable[Folded] {
+              def call(): Folded = one(uri)
+            }))
+          val out = futures.map { f =>
+            try f.get()
+            catch {
+              // surface the reader's own exception, not the pool wrapper
+              // — same error contract as the single-file path
+              case e: java.util.concurrent.ExecutionException =>
+                throw e.getCause
+            }
           }
+          pool.shutdown()
+          out
+        } catch {
+          // on failure cancel queued/in-flight footer reads instead of
+          // letting them run to completion in background threads
+          case e: Throwable => pool.shutdownNow(); throw e
         }
-        pool.shutdown()
-        out
-      } catch {
-        // on failure cancel queued/in-flight footer reads instead of
-        // letting them run to completion in background threads
-        case e: Throwable => pool.shutdownNow(); throw e
       }
-    }
+    Folded(perFile.flatMap(_.lines), perFile.headOption.flatMap(_.sparkSchema))
   }
 
   private def lineOf(key: String, name: String, tag: String,

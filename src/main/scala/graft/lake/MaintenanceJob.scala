@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
   * IngestJob that keeps a 100 TB store healthy: recover claims
   * orphaned by crashed writers, sweep their unreferenced commit dirs,
   * fold merge-on-read delete debt — equality-delete entries AND
-  * positional deletion vectors, which each cost one broadcast
-  * anti-join per read — once the combined count crosses a threshold
-  * (`deleteDebt` gauges both; `DESCRIBE DETAIL` breaks out
+  * positional deletion vectors, which every read applies as a
+  * driver-built hash-set filter — once the combined count crosses a
+  * threshold (`deleteDebt` gauges both; `DESCRIBE DETAIL` breaks out
   * `n_dv_entries`/`dv_bytes`), and vacuum old snapshots.
   *
   * {{{

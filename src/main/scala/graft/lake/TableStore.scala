@@ -369,14 +369,26 @@ final class TableStore(private[graft] val spark: SparkSession,
   private def latestHintPath(table: String): Path =
     new Path(tablePath(table), "_LATEST")
 
-  /** Best-effort checkpoint-hint write (atomic overwrite via the
-    * commit primitive's publish — readers never see a torn file on
-    * rename-capable backends). The hint is an OPTIMIZATION, never a
-    * source of truth: a failed write merely leaves the next reader a
-    * longer forward probe or the listing fallback. */
+  /** Best-effort checkpoint-hint write: DELETE the old hint, then
+    * publish the new one through the commit primitive (readers never
+    * see a torn file on rename-capable backends). The publish is then
+    * a rename onto a free name: a rename that replaces an existing
+    * file forces a data flush on ext4 (`auto_da_alloc`; ~50 ms against
+    * ~0.1 ms for a 2-byte file on a 4-core VM's disk), which every
+    * commit would otherwise pay. Between the
+    * delete and the publish the hint is missing, the state a reader
+    * already handles: [[publishedCurrent]] takes the listing fallback
+    * and repairs the hint. Every value written is a published
+    * version, so the hint stays a lower bound even when writers race.
+    * The hint is an OPTIMIZATION, never a source of truth: a failed
+    * write merely leaves the next reader a longer forward probe or
+    * the listing fallback. */
   private def writeLatestHint(table: String, v: Long): Unit =
-    try claims.publish(latestHintPath(table), v.toString)
-    catch { case scala.util.control.NonFatal(_) => () }
+    try {
+      val p = latestHintPath(table)
+      fs(p).delete(p, false)
+      claims.publish(p, v.toString)
+    } catch { case scala.util.control.NonFatal(_) => () }
 
   /** The hint is trusted only as a LOWER bound on published versions:
     * even a torn plain-file write can only truncate the decimal to a
@@ -398,7 +410,10 @@ final class TableStore(private[graft] val spark: SparkSession,
     * current+1; vacuum only removes versions below the retained
     * window), so the first missing `manifest-(v+1)` is the frontier.
     * A hint pointing at a since-vacuumed version falls back to the
-    * full listing and repairs itself. */
+    * full listing and repairs itself, and so does a missing hint —
+    * including one a writer has just deleted and not yet republished
+    * ([[writeLatestHint]]): the listing sees every published manifest,
+    * so the fallback is slower in that window, never wrong. */
   private def publishedCurrent(table: String): Option[Long] =
     readLatestHint(table) match {
       case Some(h) if manifestPublished(table, h) =>
@@ -1213,22 +1228,16 @@ final class TableStore(private[graft] val spark: SparkSession,
       txns = Seq(app -> version), readSnapshot = readSnapshot,
       op = "OVERWRITE")
 
-  /** Overwrite RE-ASSERTING an application watermark verbatim — for
+  /** Overwrite RE-ASSERTING application watermarks verbatim — for
     * maintenance that rewrites a table's contents WITHOUT advancing
-    * the app's cursor (an index rebuild re-committing its change-feed
+    * the apps' cursors (an index rebuild re-committing its change-feed
     * binding so the watermark rides the new head manifest instead of
-    * stranding in an old one a vacuum will drop). Unlike
-    * [[overwriteTxn]], the replay guard is OFF: re-publishing the
-    * SAME version is the point here, not a redelivery to suppress —
-    * so this must never be used for at-least-once batch commits. */
-  def overwriteReassertTxn(table: String, df: DataFrame,
-                           app: String, version: Long,
-                           readSnapshot: Option[Long] = None): Unit =
-    overwriteReassertTxns(table, df, Seq(app -> version), readSnapshot)
-
-  /** [[overwriteReassertTxn]] for several app watermarks at once — a
-    * join view's partial fold re-asserts its fact AND dim bindings in
-    * the same rewrite commit. */
+    * stranding in an old one a vacuum will drop; a join view's
+    * partial fold re-asserting its fact AND dim bindings in the same
+    * rewrite commit). Unlike [[overwriteTxn]], the replay guard is
+    * OFF: re-publishing the SAME version is the point here, not a
+    * redelivery to suppress — so this must never be used for
+    * at-least-once batch commits. */
   def overwriteReassertTxns(table: String, df: DataFrame,
                             txns: Seq[(String, Long)],
                             readSnapshot: Option[Long] = None): Unit =
@@ -2180,7 +2189,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     // folded from the footers the write just produced — O(new files)
     // driver-side metadata reads, no second pass over the data;
     // retries reuse it (the files don't change across attempts)
-    val newStats = FileStats.compute(hadoopConf, newFiles)
+    val FileStats.Folded(newStats, footerSchema) =
+      FileStats.compute(hadoopConf, newFiles)
     // rows this commit adds, from the same footers — the exact-once
     // COPY INTO report reads the batch ONCE (the write), never a
     // second counting pass. -1 = unknown (a file carrying a real
@@ -2200,30 +2210,21 @@ final class TableStore(private[graft] val spark: SparkSession,
     // Seed the schema cache for this commit's group so its FIRST read
     // skips the distributed mergeSchema inference job: all newFiles
     // come from ONE Spark write, so every footer carries the same
-    // Spark-written schema and one DRIVER-side footer read IS the
-    // merged schema. (A spark.read.parquet(...).schema probe here
-    // would itself launch a small job per commit — measured at
-    // ~30 ms, i.e. exactly the cost being saved — so the footer's
-    // "org.apache.spark.sql.parquet.row.metadata" key is read
-    // directly; absent key ⇒ skip, the first read just infers.)
-    // Non-fatal on any error.
-    if (newFiles.nonEmpty) try {
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(newFiles.head), hadoopConf))
-      val sparkSchema =
-        try Option(footer.getFooter.getFileMetaData.getKeyValueMetaData
-            .get("org.apache.spark.sql.parquet.row.metadata"))
-        finally footer.close()
-      sparkSchema.foreach { json =>
+    // Spark-written schema, and the footer pass above already read it
+    // (a spark.read.parquet(...).schema probe here would itself launch
+    // a small job per commit — measured at ~30 ms, i.e. exactly the
+    // cost being saved; absent key ⇒ skip, the first read just
+    // infers). Non-fatal on any error.
+    footerSchema.foreach { json =>
+      try {
         val st = org.apache.spark.sql.types.DataType.fromJson(json)
           .asInstanceOf[org.apache.spark.sql.types.StructType]
         // keyed on the dir name, so a read of any SUBSET of the group
         // (a partition overwrite superseded some of its files, or a
         // feed reads only the files a vector names) finds it too
         SchemaCache.getOrInfer(commitDirKey(dataDir.getName))(st)
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
+      } catch { case scala.util.control.NonFatal(_) => () }
+    }
 
     try claimLoop(table, mustCreate,
         onExists = () => fs(dataDir).delete(dataDir, true)) { (cur, v) =>

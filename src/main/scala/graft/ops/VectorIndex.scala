@@ -676,11 +676,13 @@ object VectorIndex {
                              selectivity: Double = Double.NaN,
                              idCol: String = "vec_id",
                              vecCol: String = "embedding"): DataFrame = {
-    // one centroid read serves both the widening bound and the search
-    val cents = store.read(centroidsTable(name))
+    val ct = centroidsTable(name)
+    val cents = store.read(ct)
+    // nlist from the centroids' footer row counts (metadata, no job);
+    // counted only when those are not exact
     searchIvfCore(store, name, cents, probes, k,
       widenedProbes(store, listsTable(name), filter, selectivity, nprobe,
-        cents.count()),
+        store.fastRowCount(ct).getOrElse(cents.count())),
       Some(filter), idCol, vecCol)
   }
 

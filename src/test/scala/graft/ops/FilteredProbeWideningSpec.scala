@@ -157,4 +157,48 @@ class FilteredProbeWideningSpec extends SparkSpec {
       info(f"${shape.name}: s=$s0%.3f eff=$eff/$nlist recall=$mean%.2f")
     }
   }
+
+  test("a filtered search reads nlist from metadata: no centroid count " +
+    "job, and the same ids and scores as a search over every list") {
+    val store = new TableStore(spark, tmpDir("widen-jobs"))
+    val emb = corpus(N)
+    VectorIndex.buildIvfIndex(store, "ix", emb, nlist = NList,
+      kmeansIters = 2, attrCols = Seq("u25"))
+    val probes = emb.where(col("vec_id") < 6)
+    val filter = col("u25") === 0
+    // s = 0.04 widens 2 probes to ceil(2 / 0.04) = 50, capped at nlist:
+    // the cap is where nlist decides the probe count
+    val s = 1.0 / 25
+    type Hit = (Long, Long, Double, Int)
+    def hits(df: DataFrame): Set[Hit] =
+      df.select("qid", "vid", "cos", "rnk").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+        .toSet
+    var got = Set.empty[Hit]
+    val filteredJobs = jobsDuring {
+      got = hits(VectorIndex.searchIvfIndexFiltered(store, "ix", probes,
+        k = K, nprobe = NProbe, filter = filter, selectivity = s))
+    }
+    var all = Set.empty[Hit]
+    val everyListJobs = jobsDuring {
+      all = hits(VectorIndex.searchIvfIndex(store, "ix", probes, k = N,
+        nprobe = NList))
+    }
+    // the filter only narrows the lists scan: with selectivity given,
+    // the filtered search runs the jobs of the unfiltered one and no
+    // nlist count on top
+    assert(filteredJobs == everyListJobs,
+      s"filtered search ran $filteredJobs jobs, unfiltered $everyListJobs")
+    // every list probed: the filtered top k is the unfiltered ranking
+    // restricted to survivors, re-ranked by (cos desc, vid)
+    val survivors = emb.where(filter).select("vec_id").as[Long]
+      .collect().toSet
+    val expect = all.filter(h => survivors(h._2)).groupBy(_._1)
+      .flatMap { case (_, hs) =>
+        hs.toSeq.sortBy(h => (-h._3, h._2)).take(K).zipWithIndex
+          .map { case (h, i) => h.copy(_4 = i + 1) }
+      }.toSet
+    assert(got.nonEmpty)
+    assert(got == expect)
+  }
 }
