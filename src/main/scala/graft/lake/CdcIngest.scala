@@ -95,7 +95,7 @@ object CdcIngest {
     // deletes by design apply to a racer's rows too), so no pin there.
     val rs = store.currentVersion(table).get
     val dest = store.readVersion(table, rs)
-    val bucketed = store.partitioning(table).contains(BucketCol)
+    val bucketed = store.partitioning(table, rs).contains(BucketCol)
     if (bucketed && !cfg.mergeOnRead)
       return mergeTouchedPartitions(store, table, dest, source, cfg, rs)
     // A1/A2: watermark = max(process_date) in the destination (:131)

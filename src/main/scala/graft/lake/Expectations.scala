@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Write-side data-quality expectations with QUARANTINE routing — the
   * Delta-Live-Tables shape that completes the engine's DQ story:
   * read-time audit (`dq_audit_report`), write-time hard CHECK
-  * constraints (`TableStore.addCheckConstraint`, abort on violation),
+  * constraints (`TableStore.addConstraint`, abort on violation),
   * and now per-row routing: rows failing any expectation land in
   * `<table>_quarantine` tagged with the failed rule names, clean rows
   * commit to the table — the batch never aborts, every row lands on

@@ -752,14 +752,8 @@ object GraftSql {
   private def executeDropConstraint(spark: SparkSession, store: TableStore,
                                     d: DropConstraint, sqlText: String): DataFrame = {
     val target = storeTable(store, d.table).getOrElse(return spark.sql(sqlText))
-    val check = store.constraints(target).contains(d.name)
-    val rely = store.relyConstraintNames(target).contains(d.name)
-    require(check || rely || d.ifExists,
-      s"no constraint ${d.name} on $target " +
-        s"(have ${(store.constraints(target).keys ++
-          store.relyConstraintNames(target)).mkString(", ")})")
-    if (check) store.dropConstraint(target, d.name)
-    if (rely) store.dropRelyConstraint(target, d.name)
+    require(store.dropConstraint(target, d.name) || d.ifExists,
+      s"no constraint ${d.name} on $target")
     store.read(target)
   }
 

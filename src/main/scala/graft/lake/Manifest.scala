@@ -9,6 +9,9 @@ package graft.lake
   *   #op=<operation>              provenance (DESCRIBE HISTORY)
   *   #schema=<json>               physical schema of the commit's frame
   *   #colmap=<mapping>            column mapping (renames, drops)
+  *   #parts=<col>,<col>           partition layout new commits write under
+  *   #check=<name>\t<sql>         CHECK constraint, one per constraint
+  *   #key=<kind>\t<name>\t<cols>  RELY key (pk, uq; fk adds \t<ref>\t<refcols>)
   *   #txn=<app>:<version>         application watermark, one per app
   *   #ingest=<mtime>\t<path>      COPY INTO ledger: a loaded source file
   *   #ingestwm=<mtime>\t<root>    COPY INTO ledger: a root's watermark
@@ -18,13 +21,17 @@ package graft.lake
   * }}}
   *
   * Every header is optional on parse, so a manifest written before a
-  * header existed reads as before. `ingest` keeps the ledger's raw
-  * lines, since commits carry them verbatim. */
+  * header existed reads as before; the store writes `#parts=` on every
+  * manifest, so `parts` = None marks one older than the table-metadata
+  * headers. `ingest` and `keys` keep their raw lines. */
 private[lake] final case class Manifest(lines: Seq[String] = Nil,
                                         op: String = "WRITE",
                                         ts: Option[Long] = None,
                                         schema: Option[String] = None,
                                         colmap: Option[String] = None,
+                                        parts: Option[Seq[String]] = None,
+                                        checks: Seq[(String, String)] = Nil,
+                                        keys: Seq[String] = Nil,
                                         txns: Seq[(String, Long)] = Nil,
                                         ingest: Seq[String] = Nil) {
   import Manifest._
@@ -35,6 +42,13 @@ private[lake] final case class Manifest(lines: Seq[String] = Nil,
   def dels: Seq[String] = lines.filter(isDelLine).map(lineFile)
   /** Deletion-vector file paths, marker stripped. */
   def dvs: Seq[String] = lines.filter(isDvLine).map(lineFile)
+
+  /** The partition layout (empty = unpartitioned). */
+  def layout: Seq[String] = parts.getOrElse(Nil)
+  /** RELY key lines split into fields: kind, name, columns[, ref, refcols]. */
+  def keyFields: Seq[Array[String]] = keys.map(_.split("\t", -1))
+  /** CHECK and RELY names: one namespace (DROP CONSTRAINT takes a bare name). */
+  def constraintNames: Seq[String] = checks.map(_._1) ++ keyFields.map(_(1))
 
   def columnMapping: ColumnMapping =
     colmap.map(ColumnMapping.parse).getOrElse(ColumnMapping.empty)
@@ -59,8 +73,8 @@ private[lake] final case class Manifest(lines: Seq[String] = Nil,
   }
 
   /** The manifest a metadata-only commit on top of this one publishes:
-    * schema, column mapping and ingest ledger carry; `#txn=` never
-    * does (a watermark belongs to the commit that recorded it). */
+    * every header but `#ts=` and `#txn=` carries (a watermark belongs
+    * to the commit that recorded it). */
   def next(op: String, lines: Seq[String] = lines): Manifest =
     copy(lines = lines, op = op, ts = None, txns = Nil)
 
@@ -70,12 +84,18 @@ private[lake] final case class Manifest(lines: Seq[String] = Nil,
       require(!app.contains(":") && !app.contains("\n"), s"bad txn app id '$app'")
     }
     require(!op.contains("\n"), s"bad op name '$op'")
+    require(layout.forall(p => !p.contains(",") && !p.contains("\n")) &&
+      checks.forall { case (n, sql) => !n.contains("\t") && !(n + sql).contains("\n") } &&
+      keys.forall(!_.contains("\n")), s"bad table metadata: $layout $checks $keys")
     ingest.foreach { l =>
       require((l.startsWith(IngestHeader) || l.startsWith(IngestWmHeader)) &&
         !l.contains("\n"), s"bad ingest ledger line '$l'")
     }
     val headers = ts.map(TsHeader + _).toSeq ++ Seq(OpHeader + op) ++
       schema.map(SchemaHeader + _) ++ colmap.map(ColmapHeader + _) ++
+      parts.map(PartsHeader + _.mkString(",")) ++
+      checks.map { case (n, sql) => s"$CheckHeader$n\t$sql" } ++
+      keys.map(KeyHeader + _) ++
       txns.map { case (app, ver) => s"$TxnHeader$app:$ver" } ++ ingest
     (headers ++ lines).mkString("\n")
   }
@@ -86,6 +106,9 @@ private[lake] object Manifest {
   private val OpHeader = "#op="
   private val SchemaHeader = "#schema="
   private val ColmapHeader = "#colmap="
+  private val PartsHeader = "#parts="
+  private val CheckHeader = "#check="
+  private val KeyHeader = "#key="
   private val TxnHeader = "#txn="
   private val IngestHeader = "#ingest="
   private val IngestWmHeader = "#ingestwm="
@@ -99,6 +122,8 @@ private[lake] object Manifest {
     val lines = Vector.newBuilder[String]
     val txns = Vector.newBuilder[(String, Long)]
     val ingest = Vector.newBuilder[String]
+    val checks = Vector.newBuilder[String]
+    val keys = Vector.newBuilder[String]
     val single = scala.collection.mutable.Map.empty[String, String]
     text.split("\n").foreach { l =>
       val t = l.trim
@@ -112,7 +137,9 @@ private[lake] object Manifest {
         txns += ((rest.substring(0, i), rest.substring(i + 1).trim.toLong))
       }
       else if (l.startsWith(IngestHeader) || l.startsWith(IngestWmHeader)) ingest += l
-      else Seq(TsHeader, OpHeader, SchemaHeader, ColmapHeader).find(l.startsWith)
+      else if (l.startsWith(CheckHeader)) checks += l.stripPrefix(CheckHeader)
+      else if (l.startsWith(KeyHeader)) keys += l.stripPrefix(KeyHeader)
+      else Seq(TsHeader, OpHeader, SchemaHeader, ColmapHeader, PartsHeader).find(l.startsWith)
         .foreach(h => if (!single.contains(h)) single(h) = l.stripPrefix(h).trim)
     }
     Manifest(lines.result(),
@@ -120,6 +147,10 @@ private[lake] object Manifest {
       ts = single.get(TsHeader).map(_.toLong),
       schema = single.get(SchemaHeader).filter(_.nonEmpty),
       colmap = single.get(ColmapHeader).filter(_.nonEmpty),
+      parts = single.get(PartsHeader).map(_.split(",").toSeq.filter(_.nonEmpty)),
+      // the name ends at the first tab (render refuses one in a name)
+      checks = checks.result().map(_.split("\t", 2)).collect { case Array(n, sql) => n -> sql },
+      keys = keys.result(),
       txns = txns.result(), ingest = ingest.result())
   }
 

@@ -786,10 +786,12 @@ object MaterializedView {
 
   private[lake] def surface(store: TableStore, mv: String): Surface = {
     val d = loadDef(store, mv)
+    // metadata-only commits past the watermark (a declared constraint,
+    // a layout change) leave the folded rows as they were
     def current(app: String, table: String): Boolean = (for {
       b <- store.lastTxn(mv, app)
       c <- store.currentVersion(table)
-    } yield c <= b).getOrElse(false)
+    } yield c <= b || store.sameRows(table, b, c)).getOrElse(false)
     val fresh = current(appId(d.src), d.src) &&
       d.dims.forall(dim => current(dimAppId(dim), dim))
     // a join view's rows have JOIN multiplicity — it serves only

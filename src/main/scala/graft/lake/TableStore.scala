@@ -18,9 +18,8 @@ import java.util.UUID
   *
   * {{{
   *   <root>/<table>/d-<uuid>/part-*.parquet  data files of ONE commit
-  *   <root>/<table>/manifest-<n>             file list composing version n
-  *   <root>/<table>/_VERSION                 current version pointer
-  *   <root>/<table>/_PARTITIONING            optional partition columns
+  *   <root>/<table>/manifest-<n>             version n: table metadata + files
+  *   <root>/<table>/_LATEST                  checkpoint hint (a lower bound)
   * }}}
   *
   * Commit: write the batch's data files into a fresh `d-<uuid>` dir
@@ -1180,11 +1179,8 @@ final class TableStore(private[graft] val spark: SparkSession,
   /** S6: CTAS — fails if the table already exists. `partitionBy`
     * selects a hive-style layout; reads then get partition pruning on
     * those columns — the scan-avoidance lever at 100 TB. */
-  def create(table: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
-    require(!exists(table), s"table $table already exists")
-    commit(table, df, carried = _ => Nil, mustCreate = true,
-      createParts = partitionBy, op = "CREATE")
-  }
+  def create(table: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit =
+    createTxns(table, df, Nil, partitionBy)
 
   /** Drop the table: every version, manifest, claim and commit dir.
     * Irreversible (no trash); false if the table never existed. */
@@ -1287,7 +1283,7 @@ final class TableStore(private[graft] val spark: SparkSession,
                  partitionBy: Seq[String] = Nil): Unit = {
     require(!exists(table), s"table $table already exists")
     commit(table, df, carried = _ => Nil, mustCreate = true,
-      createParts = partitionBy, txns = txns, op = "CREATE")
+      base = Some(Manifest(parts = Some(partitionBy))), txns = txns, op = "CREATE")
   }
 
   /** Latest watermark `app` recorded on any RETAINED version, newest
@@ -1401,34 +1397,36 @@ final class TableStore(private[graft] val spark: SparkSession,
     * head (SQL DELETE semantics: remove whatever matches at execution).
     * `compact` folds dv debt exactly like equality-delete debt.
     * Returns the number of rows deleted. */
-  def deleteWhere(table: String, pred: Column): Long = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      val rs = existing(table, currentVersion(table))
-      val withId = readManifest(table, rs, load(table, rs), withRowId = true)
-      val dvDir = new Path(tablePath(table), s"v-${UUID.randomUUID()}")
-      withId.where(pred)
-        .select(col(RowFileCol).as(DvFileCol), col(RowPosCol).as(DvPosCol))
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dvDir.toString)
-      val dvFiles = listDataFiles(dvDir)
-      // the deleted-row count comes from the vector files' footers — a
-      // driver metadata read (as FileStats.compute does), not a scan job
-      val n = dvFiles.map(FileStats.rowCount(hadoopConf, _)).sum
-      if (n == 0) { fs(dvDir).delete(dvDir, true); return 0L }
-      try {
-        commitMeta(table, cur => {
-          val (c, m) = existing(table, cur)
-          assertSnapshotCurrent(table, rs, Some(c))
-          (m.copy(lines = m.lines ++ dvFiles.map(Manifest.dvLine)), statsText(table, c))
-        }, mustCreate = false, op = "DELETE (dv)")
-        return n
-      } catch { case e: SnapshotConflictException =>
-        fs(dvDir).delete(dvDir, true)
-        if (attempts >= 5) throw e
-      }
+  def deleteWhere(table: String, pred: Column): Long = recomputing(5) {
+    val rs = existing(table, currentVersion(table))
+    val withId = readManifest(table, rs, load(table, rs), withRowId = true)
+    val dvDir = new Path(tablePath(table), s"v-${UUID.randomUUID()}")
+    withId.where(pred)
+      .select(col(RowFileCol).as(DvFileCol), col(RowPosCol).as(DvPosCol))
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dvDir.toString)
+    val dvFiles = listDataFiles(dvDir)
+    // the deleted-row count comes from the vector files' footers — a
+    // driver metadata read (as FileStats.compute does), not a scan job
+    val n = dvFiles.map(FileStats.rowCount(hadoopConf, _)).sum
+    if (n == 0) fs(dvDir).delete(dvDir, true)
+    else try commitEdit(table, "DELETE (dv)") { (c, m) =>
+      assertSnapshotCurrent(table, rs, Some(c))
+      m.copy(lines = m.lines ++ dvFiles.map(Manifest.dvLine))
+    } catch { case e: SnapshotConflictException =>
+      fs(dvDir).delete(dvDir, true)
+      throw e
     }
-    0L
+    n
+  }
+
+  /** `attempt`, rerun (`n` runs at most) after a lost snapshot race. */
+  private def recomputing[A](n: Int)(attempt: => A): A = {
+    var runs = 1
+    var out: Option[A] = None
+    while (out.isEmpty)
+      try out = Some(attempt)
+      catch { case _: SnapshotConflictException if runs < n => runs += 1 }
+    out.get
   }
 
   /** Positional UPDATE — the deletion-vector companion to
@@ -1448,9 +1446,7 @@ final class TableStore(private[graft] val spark: SparkSession,
   def updateWhere(table: String, cond: Column,
                   assigns: Map[String, Column]): Long = {
     require(assigns.nonEmpty, "updateWhere needs at least one assignment")
-    var attempts = 0
-    while (true) {
-      attempts += 1
+    recomputing(5) {
       val rs = existing(table, currentVersion(table))
       val mapped = readManifest(table, rs, load(table, rs), withRowId = true)
       val cols = mapped.columns.filterNot(c =>
@@ -1461,28 +1457,27 @@ final class TableStore(private[graft] val spark: SparkSession,
       }
       val matched = mapped.where(cond).localCheckpoint()
       val n = matched.count()
-      if (n == 0) return 0L
-      val dvDir = new Path(tablePath(table), s"v-${UUID.randomUUID()}")
-      matched
-        .select(col(RowFileCol).as(DvFileCol), col(RowPosCol).as(DvPosCol))
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dvDir.toString)
-      val dvFiles = listDataFiles(dvDir)
-      val updated = matched.select(cols.map { c =>
-        assigns.find(_._1.equalsIgnoreCase(c))
-          .map(_._2.as(c)).getOrElse(col(c))
-      }: _*)
-      try {
-        commit(table, updated,
+      if (n > 0) {
+        val dvDir = new Path(tablePath(table), s"v-${UUID.randomUUID()}")
+        matched
+          .select(col(RowFileCol).as(DvFileCol), col(RowPosCol).as(DvPosCol))
+          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dvDir.toString)
+        val dvFiles = listDataFiles(dvDir)
+        val updated = matched.select(cols.map { c =>
+          assigns.find(_._1.equalsIgnoreCase(c))
+            .map(_._2.as(c)).getOrElse(col(c))
+        }: _*)
+        try commit(table, updated,
           carried = carryAll(_) ++ dvFiles.map(Manifest.dvLine),
           mustCreate = false,
           readSnapshot = Some(rs), op = "UPDATE (dv)")
-        return n
-      } catch { case e: SnapshotConflictException =>
-        fs(dvDir).delete(dvDir, true)
-        if (attempts >= 5) throw e
+        catch { case e: SnapshotConflictException =>
+          fs(dvDir).delete(dvDir, true)
+          throw e
+        }
       }
+      n
     }
-    0L
   }
 
   /** Fold merge-on-read delete debt: materialize the current merged
@@ -1493,27 +1488,18 @@ final class TableStore(private[graft] val spark: SparkSession,
     * RECOMPUTES from the new head (idempotent maintenance — recompute,
     * don't surface) up to a bounded number of attempts. */
   def compact(table: String): Unit = {
-    var attempts = 0
-    var done = false
-    var raised = false
-    try {
-      while (!done) {
-        attempts += 1
-        val rs = existing(table, currentVersion(table))
-        try { overwrite(table, readVersion(table, rs), readSnapshot = Some(rs),
-          op = "COMPACT"); done = true }
-        catch { case e: SnapshotConflictException =>
-          if (attempts >= 8) throw e
-          // two straight losses mean a HOT writer: without priority
-          // the fold defers forever and the table's merge-on-read
-          // debt (a delete-set filter on every read) grows unbounded.
-          // Raise the janitor claim — writers back off at their claim
-          // point until the fold lands or the marker's TTL expires —
-          // and recompute from the new head.
-          if (attempts >= 2 && !raised) { raiseJanitor(table); raised = true }
-        }
-      }
-    } finally if (raised) clearJanitor(table)
+    var runs = 0
+    try recomputing(8) {
+      runs += 1
+      // two straight losses mean a HOT writer: without priority the
+      // fold defers forever and the table's merge-on-read debt (a
+      // delete-set filter on every read) grows unbounded. Raise the
+      // janitor claim — writers back off at their claim point until
+      // the fold lands or the marker's TTL expires — and recompute.
+      if (runs == 3) raiseJanitor(table)
+      val rs = existing(table, currentVersion(table))
+      overwrite(table, readVersion(table, rs), readSnapshot = Some(rs), op = "COMPACT")
+    } finally if (runs >= 3) clearJanitor(table)
   }
 
   /** The janitor priority claim: while `_JANITOR` holds an unexpired
@@ -1569,14 +1555,14 @@ final class TableStore(private[graft] val spark: SparkSession,
   /** Roll the table back to retained version `v` as a NEW commit whose
     * manifest (and stats sidecar) is a byte copy of `v`'s — O(1)
     * metadata, no data moves, and the rolled-past versions stay
-    * readable until vacuumed (Delta RESTORE semantics). */
+    * readable until vacuumed (Delta RESTORE semantics). `v`'s table
+    * metadata (column mapping, layout, constraints, keys) comes back
+    * with its rows, so no later constraint stands over unchecked rows. */
   def restore(table: String, v: Long): Unit = {
     require(versions(table).contains(v),
       s"version $v of $table is not retained (have ${versions(table).mkString(",")})")
     val restored = load(table, v)
     val stats = statsText(table, v)
-    // the column mapping is part of the restored state: rolling back
-    // past a RENAME/DROP rolls the schema back with the data
     commitMeta(table, _ => (restored, stats),
       mustCreate = false, op = s"RESTORE($v)")
   }
@@ -1615,19 +1601,15 @@ final class TableStore(private[graft] val spark: SparkSession,
     require(!exists(dst), s"table $dst already exists")
     val source = load(src, cur)
     val stats = statsText(src, cur)
-    val srcParts = partitioning(src)
-    // shared files carry the source's PHYSICAL names; the clone must
-    // inherit the mapping or renamed columns would read physically.
+    // a clone forks the source's table metadata with its manifest:
+    // layout, constraints, keys, and the mapping the shared files'
+    // PHYSICAL names need.
     // The COPY INTO ledger (#ingest=) deliberately does NOT clone —
     // same stance as Delta CLONE, whose docs exclude COPY INTO and
     // streaming txn metadata: the clone is a new ingest target, and
     // silently skipping files "already loaded" into the SOURCE would
     // be the surprising behavior
-    commitMeta(dst, _ => (source, stats),
-      mustCreate = true, createParts = srcParts, op = s"CLONE($src)")
-    // a clone is a full table-metadata fork: CHECK constraints carry
-    // too, or writes to the clone would accept rows the source rejects
-    constraints(src).foreach { case (n, sql) => addConstraint(dst, n, sql) }
+    commitMeta(dst, _ => (source, stats), mustCreate = true, op = s"CLONE($src)")
   }
 
   /** Adopt a pre-existing parquet directory at this table's path
@@ -1659,8 +1641,8 @@ final class TableStore(private[graft] val spark: SparkSession,
       s"non-uniform partition layout under $dir: expected " +
         s"[${parts.mkString(",")}] from every file, got " +
         offenders.take(3).mkString("; "))
-    commitMeta(table, _ => (Manifest(files), ""), mustCreate = true,
-      createParts = parts, op = "CONVERT")
+    commitMeta(table, _ => (Manifest(files, parts = Some(parts)), ""),
+      mustCreate = true, op = "CONVERT")
   }
 
   /** Metadata-only commit under the standard claim/publish protocol —
@@ -1673,16 +1655,12 @@ final class TableStore(private[graft] val spark: SparkSession,
   private def commitMeta(table: String,
                          mkContent: Option[(Long, Manifest)] => (Manifest, String),
                          mustCreate: Boolean,
-                         createParts: Seq[String] = Nil,
                          op: String = "WRITE"): Unit = {
     // the data write creates the table dir in the normal commit path;
     // a metadata-only commit must do it itself or the claim fails
     val dir = tablePath(table)
     if (!fs(dir).exists(dir)) fs(dir).mkdirs(dir)
     claimLoop(table, mustCreate) { (cur, v) =>
-      if (mustCreate && createParts.nonEmpty)
-        writeSmallFile(new Path(tablePath(table), "_PARTITIONING"),
-          createParts.mkString(","))
       val curM = cur.map(c => (c, load(table, c)))
       val (content, statsContent) = mkContent(curM)
       writeSmallFile(statsPath(table, v), statsContent)
@@ -1690,6 +1668,14 @@ final class TableStore(private[graft] val spark: SparkSession,
         .copy(ingest = curM.fold(Seq.empty[String])(_._2.ingest)))
     }
   }
+
+  /** [[commitMeta]] publishing `edit`(head version, head manifest). */
+  private def commitEdit(table: String, op: String)(
+                         edit: (Long, Manifest) => Manifest): Unit =
+    commitMeta(table, cur => {
+      val (c, m) = existing(table, cur)
+      (edit(c, m), statsText(table, c))
+    }, mustCreate = false, op = op)
 
   /** Schema evolution as one commit: write ONE empty file carrying the
     * full `widened` schema (unpartitioned even on a partitioned table
@@ -1723,12 +1709,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     val newFiles = listDataFiles(dataDir)
     require(newFiles.nonEmpty,
       s"schema-evolution write for $table produced no schema-bearing file")
-    commitMeta(table, {
-      case Some((v, m)) =>
-        (m.copy(lines = m.lines ++ newFiles, schema = Some(physSchema.json)),
-          statsText(table, v))
-      case None => (Manifest(newFiles, schema = Some(physSchema.json)), "")
-    }, mustCreate = false, op = "ADD COLUMNS")
+    commitEdit(table, "ADD COLUMNS")((_, m) =>
+      m.copy(lines = m.lines ++ newFiles, schema = Some(physSchema.json)))
   }
 
   /** Size-aware compaction: fold only the data files smaller than
@@ -1745,59 +1727,50 @@ final class TableStore(private[graft] val spark: SparkSession,
     * across the default parallelism. Returns the number of files
     * folded (0 or 1 small file = nothing to gain, no commit). */
   def compactSmall(table: String, minBytes: Long,
-                   targetBytes: Long = 128L << 20): Int = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      val cur = existing(table, currentVersion(table))
-      val lines = load(table, cur).lines
-      require(lines.forall(!Manifest.isDeleteLine(_)),
-        s"table $table has pending merge-on-read deletes; compact first")
-      def len(f: String): Long = { val p = new Path(f); fs(p).getFileStatus(p).getLen }
-      val sizes = lines.map(f => f -> len(f)).toMap
-      val small = lines.filter(sizes(_) < minBytes).toSet
-      if (small.size <= 1) return 0
+                   targetBytes: Long = 128L << 20): Int = recomputing(5) {
+    val cur = existing(table, currentVersion(table))
+    val lines = load(table, cur).lines
+    require(lines.forall(!Manifest.isDeleteLine(_)),
+      s"table $table has pending merge-on-read deletes; compact first")
+    def len(f: String): Long = { val p = new Path(f); fs(p).getFileStatus(p).getLen }
+    val sizes = lines.map(f => f -> len(f)).toMap
+    val small = lines.filter(sizes(_) < minBytes).toSet
+    if (small.size > 1) {
       val outFiles = math.max(1,
         math.ceil(small.toSeq.map(sizes).sum.toDouble / targetBytes).toInt)
       val df = readLines(table, cur, Manifest(small.toSeq)).coalesce(outFiles)
-      try {
-        // carried re-evaluates against the WINNING claim's version, so
-        // a racing append's files survive the fold. Two races are NOT
-        // append-safe and conflict instead (then the fold recomputes):
-        // a concurrent rewrite that removed any of the folding files
-        // (their rows would resurrect through the folded copies), and
-        // concurrent MoR delete markers (the folded copies, being this
-        // commit's own rows, would be exempt from them).
-        commit(table, df,
-          carried = _.map { w =>
-            val m = w.lines
-            val gone = small -- m.toSet
-            if (gone.nonEmpty)
-              throw new SnapshotConflictException(
-                s"$table: file(s) being folded were rewritten concurrently " +
-                  s"(e.g. ${gone.head}); recomputing the fold")
-            if (m.exists(Manifest.isDeleteLine))
-              throw new SnapshotConflictException(
-                s"$table: merge-on-read deletes raced in during the fold; " +
-                  "recomputing")
-            m.filterNot(small)
-          }.getOrElse(Nil),
-          mustCreate = false,
-          physicalFrame = true, // raw readLines bytes: already physical
-          op = "OPTIMIZE")
-        return small.size
-      } catch { case e: SnapshotConflictException =>
-        if (attempts >= 5) throw e }
+      // carried re-evaluates against the WINNING claim's version, so
+      // a racing append's files survive the fold. Two races are NOT
+      // append-safe and conflict instead (then the fold recomputes):
+      // a concurrent rewrite that removed any of the folding files
+      // (their rows would resurrect through the folded copies), and
+      // concurrent MoR delete markers (the folded copies, being this
+      // commit's own rows, would be exempt from them).
+      commit(table, df,
+        carried = _.map { w =>
+          val m = w.lines
+          val gone = small -- m.toSet
+          if (gone.nonEmpty)
+            throw new SnapshotConflictException(
+              s"$table: file(s) being folded were rewritten concurrently " +
+                s"(e.g. ${gone.head}); recomputing the fold")
+          if (m.exists(Manifest.isDeleteLine))
+            throw new SnapshotConflictException(
+              s"$table: merge-on-read deletes raced in during the fold; " +
+                "recomputing")
+          m.filterNot(small)
+        }.getOrElse(Nil),
+        mustCreate = false,
+        physicalFrame = true, // raw readLines bytes: already physical
+        op = "OPTIMIZE")
     }
-    0 // unreachable
+    if (small.size > 1) small.size else 0
   }
 
   /** Number of equality-delete entries pending in the current version
     * — the read-side debt gauge for scheduling `compact`. */
-  def deleteDebt(table: String): Int = {
-    val cur = currentVersion(table).getOrElse(return 0)
-    load(table, cur).lines.count(Manifest.isDeleteLine)
-  }
+  def deleteDebt(table: String): Int =
+    headManifest(table).fold(0)(_.lines.count(Manifest.isDeleteLine))
 
   /** Dynamic partition overwrite — the O(touched partitions) commit
     * that keeps CDC merges from rewriting 100 TB to delete a day's
@@ -1827,17 +1800,15 @@ final class TableStore(private[graft] val spark: SparkSession,
                           readSnapshot: Option[Long] = None,
                           disjointAddsOk: Boolean = false,
                           op: String = "OVERWRITE-PARTITIONS"): Unit = {
-    require(partitioning(table).nonEmpty,
+    // one pre-claim load serves every check and plans the write
+    val head = headManifest(table)
+    require(head.exists(_.layout.nonEmpty),
       s"table $table is not partitioned; use overwrite")
-    // one pre-claim load serves the debt check, the layout check and
-    // the write's column mapping
-    val head = currentVersion(table).map(load(table, _))
     require(head.forall(!_.lines.exists(Manifest.isDeleteLine)),
       s"table $table has pending merge-on-read deletes; compact first")
     head.foreach(requireCurrentLayout(table, _))
     val touchedSet = touched.toSet
-    commit(table, df,
-      mapping = Some(head.fold(ColumnMapping.empty)(_.columnMapping)),
+    commit(table, df, base = head,
       // untouched partitions re-carry from the WINNING claim's version
       // (concurrent appends to them survive with readSnapshot = None);
       // a pinned readSnapshot instead aborts on ANY concurrent change —
@@ -1872,31 +1843,28 @@ final class TableStore(private[graft] val spark: SparkSession,
     * resolves each era's dirs into columns, union-by-name aligning
     * the eras (a column that is a dir in one era is plain file data
     * in the other). */
-  def partitioning(table: String): Seq[String] = {
-    val meta = new Path(tablePath(table), "_PARTITIONING")
-    if (!fs(meta).exists(meta)) Seq.empty
-    else readSmallFile(meta).trim.split(",").toSeq.filter(_.nonEmpty)
-  }
+  def partitioning(table: String): Seq[String] =
+    headManifest(table).fold(Seq.empty[String])(_.layout)
+
+  /** The layout in force at retained version `v` (time travel). */
+  private[graft] def partitioning(table: String, v: Long): Seq[String] =
+    load(table, v).layout
 
   /** Partition evolution: change the layout NEW commits write under —
     * a metadata commit, never a rewrite (at 100 TB, re-laying a table
     * out must be a choice, not a prerequisite). Old files stay under
     * their old dirs and keep reading correctly (see [[partitioning]]);
     * a later `compact`/OPTIMIZE folds everything into the new layout.
-    * Publishes a content-identical manifest version so the evolution
-    * shows in DESCRIBE HISTORY and serializes against racing commits;
-    * the `_PARTITIONING` update itself is the authoritative switch.
-    * Partition dirs store values by NAME, so renamed columns (whose
-    * files store the physical name) are rejected. */
+    * The new `#parts=` header over the same files is a metadata commit
+    * (DESCRIBE HISTORY shows it). Partition dirs store values by NAME,
+    * so renamed columns (files store the physical name) are rejected. */
   def setPartitioning(table: String, newParts: Seq[String]): Unit = {
     newParts.foreach(ColumnMapping.requireMappable)
     require(newParts.map(_.toLowerCase).distinct.size == newParts.size,
       s"duplicate partition columns in ${newParts.mkString(",")}")
-    claimLoop(table, mustCreate = false) { (cur, v) =>
-      val c = existing(table, cur)
-      val cm = load(table, c)
-      val logical = readManifest(table, c, cm).columns
-      val m = cm.columnMapping
+    declare(table, "SET PARTITIONING") { (rs, pinned) =>
+      val logical = readManifest(table, rs, pinned).columns
+      val m = pinned.columnMapping
       newParts.foreach { p =>
         require(logical.exists(_.equalsIgnoreCase(p)),
           s"no column $p in $table (have ${logical.mkString(", ")})")
@@ -1904,10 +1872,29 @@ final class TableStore(private[graft] val spark: SparkSession,
           s"cannot partition on renamed column $p: hive dirs store the " +
             "current name, files the physical one — OPTIMIZE first")
       }
-      writeSmallFile(statsPath(table, v), statsText(table, c))
-      writeSmallFile(new Path(tablePath(table), "_PARTITIONING"),
-        newParts.mkString(","))
-      publishManifest(table, v, cm.next("SET PARTITIONING"))
+      _.copy(parts = Some(newParts))
+    }
+  }
+
+  /** A table-metadata declaration: `plan` validates it against a pinned
+    * version (Spark jobs allowed) and returns the edit the claim applies
+    * to the head; a racing data commit makes it validate again. CHECK
+    * and RELY constraints share one `name` space (DROP CONSTRAINT). */
+  private def declare(table: String, op: String, name: Option[String] = None)(
+                      plan: (Long, Manifest) => Manifest => Manifest): Unit = {
+    name.foreach(n => require(!n.contains("\t") && !n.contains("\n"), "bad constraint name"))
+    def free(m: Manifest): Unit = name.foreach(n => require(!m.constraintNames.contains(n),
+      s"constraint $n already exists on $table"))
+    recomputing(5) {
+      val rs = existing(table, currentVersion(table))
+      val pinned = load(table, rs)
+      free(pinned)
+      val edit = plan(rs, pinned)
+      commitEdit(table, op) { (c, m) =>
+        assertSnapshotCurrent(table, rs, Some(c)) // the rows `plan` validated
+        free(m)
+        edit(m)
+      }
     }
   }
 
@@ -1916,7 +1903,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     * scoped overwrite): after an evolution, pre-evolution files would
     * silently escape the touched-dir filter. */
   private def requireCurrentLayout(table: String, head: Manifest): Unit = {
-    val parts = partitioning(table).map(_.toLowerCase)
+    val parts = head.layout.map(_.toLowerCase)
     val bad = head.data.filterNot(f => partitionKeysOf(f) == parts)
     require(bad.isEmpty,
       s"table $table carries files from an earlier partition layout " +
@@ -1934,12 +1921,32 @@ final class TableStore(private[graft] val spark: SparkSession,
     loadFile(manifestFile(table, v)).getOrElse(throw new IllegalStateException(
       s"version $v of $table is not retained (vacuumed or never committed)"))
 
+  /** The current version's manifest; None for a missing table. */
+  private def headManifest(table: String): Option[Manifest] =
+    currentVersion(table).map(load(table, _))
+
   /** The manifest at `p` (published or staged), None when absent. */
   private def loadFile(p: Path): Option[Manifest] = {
     MetaMetrics.manifestLoads.incrementAndGet()
-    try Some(Manifest.parse(readSmallFile(p)))
+    try Some(withLegacyMeta(p.getParent, Manifest.parse(readSmallFile(p))))
     catch { case _: java.io.FileNotFoundException => None }
   }
+
+  /** A manifest without `#parts=` predates the metadata headers: its table
+    * kept them in `_PARTITIONING`, `_CONSTRAINTS` and `_RELY`, read only
+    * here; the next commit carries them. */
+  private def withLegacyMeta(dir: Path, m: Manifest): Manifest =
+    if (m.parts.isDefined) m
+    else {
+      def lines(name: String): Seq[String] = {
+        val p = new Path(dir, name)
+        if (!fs(p).exists(p)) Nil
+        else readSmallFile(p).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+      }
+      m.copy(parts = Some(lines("_PARTITIONING").flatMap(_.split(",")).filter(_.nonEmpty)),
+        checks = lines("_CONSTRAINTS").map(_.split("\t", 2)).collect { case Array(n, sql) => n -> sql },
+        keys = lines("_RELY"))
+    }
 
   /** When version `v` was committed. The commit writes an explicit
     * `#ts=` header into the manifest itself — filesystem mtime is
@@ -1961,7 +1968,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     * which is what makes file ingest exactly-once with no cross-commit
     * crash window. */
   private def publishManifest(table: String, v: Long, m: Manifest): Unit = {
-    val body = m.copy(ts = Some(System.currentTimeMillis())).render
+    // `#parts=` always, even empty: its absence marks an old manifest
+    val body = m.copy(ts = Some(System.currentTimeMillis()),
+      parts = Some(m.layout)).render
     activeTxn match {
       case Some(t) =>
         // transaction staging: the claim is held, but publication
@@ -2013,8 +2022,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     load(table, v).columnMapping
 
   private def currentMapping(table: String): ColumnMapping =
-    currentVersion(table).map(columnMapping(table, _))
-      .getOrElse(ColumnMapping.empty)
+    headManifest(table).fold(ColumnMapping.empty)(_.columnMapping)
 
   /** RENAME COLUMN as a pure metadata commit (Delta name-mapping):
     * files keep the old PHYSICAL name; the new manifest maps
@@ -2024,8 +2032,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     * first (its SQL would silently stop matching rows). */
   def renameColumn(table: String, from: String, to: String): Unit = {
     ColumnMapping.requireMappable(to); ColumnMapping.requireMappable(from)
-    commitMeta(table, cur => {
-      val (v, cm) = existing(table, cur)
+    commitEdit(table, "RENAME COLUMN") { (v, cm) =>
       // validated INSIDE the claim loop, against the winning claim's
       // version — a racing ADD COLUMNS / rename must re-fail the
       // checks, not slip between a stale validation and the commit
@@ -2034,9 +2041,9 @@ final class TableStore(private[graft] val spark: SparkSession,
         s"no column $from in $table (have ${logical.mkString(", ")})")
       require(!logical.exists(_.equalsIgnoreCase(to)),
         s"column $to already exists in $table")
-      require(!partitioning(table).exists(_.equalsIgnoreCase(from)),
+      require(!cm.layout.exists(_.equalsIgnoreCase(from)),
         s"cannot rename partition column $from: the hive layout is physical")
-      requireNoConstraintRef(table, from)
+      requireNoConstraintRef(table, cm, from)
       val m = cm.columnMapping
       val phys = m.physicalOf(from)
       // OTHER columns' physical names are off-limits; renaming BACK to
@@ -2049,9 +2056,8 @@ final class TableStore(private[graft] val spark: SparkSession,
       val renames = m.renames.filterNot(_._1.equalsIgnoreCase(from)) ++
         (if (to.equalsIgnoreCase(phys)) Map.empty[String, String]
          else Map(to -> phys))
-      (cm.copy(colmap = ColumnMapping(renames, m.dropped).serialize),
-        statsText(table, v))
-    }, mustCreate = false, op = "RENAME COLUMN")
+      cm.copy(colmap = ColumnMapping(renames, m.dropped).serialize)
+    }
   }
 
   /** DROP COLUMN as a pure metadata commit: the PHYSICAL column stays
@@ -2060,30 +2066,30 @@ final class TableStore(private[graft] val spark: SparkSession,
     * via OPTIMIZE first if the name must return). O(manifest). */
   def dropColumn(table: String, name: String): Unit = {
     ColumnMapping.requireMappable(name)
-    commitMeta(table, cur => {
-      val (v, cm) = existing(table, cur)
+    commitEdit(table, "DROP COLUMN") { (v, cm) =>
       // inside the claim loop for the same reason as renameColumn
       val logical = readManifest(table, v, cm).columns
       require(logical.exists(_.equalsIgnoreCase(name)),
         s"no column $name in $table (have ${logical.mkString(", ")})")
       require(logical.length > 1, s"cannot drop the only column of $table")
-      require(!partitioning(table).exists(_.equalsIgnoreCase(name)),
+      require(!cm.layout.exists(_.equalsIgnoreCase(name)),
         s"cannot drop partition column $name: the hive layout is physical")
-      requireNoConstraintRef(table, name)
+      requireNoConstraintRef(table, cm, name)
       val m = cm.columnMapping
       val phys = m.physicalOf(name)
-      (cm.copy(colmap = ColumnMapping(m.renames.filterNot(_._1.equalsIgnoreCase(name)),
-          m.dropped + phys).serialize), statsText(table, v))
-    }, mustCreate = false, op = "DROP COLUMN")
+      cm.copy(colmap = ColumnMapping(m.renames.filterNot(_._1.equalsIgnoreCase(name)),
+        m.dropped + phys).serialize)
+    }
   }
 
   /** A CHECK constraint's SQL references logical names as free text;
     * renaming/dropping one out from under it would make the predicate
     * resolve differently (or fail) on the next commit. */
-  private def requireNoConstraintRef(table: String, name: String): Unit = {
+  private def requireNoConstraintRef(table: String, m: Manifest,
+                                     name: String): Unit = {
     val pat = java.util.regex.Pattern.compile(
       s"(?i)\\b${java.util.regex.Pattern.quote(name)}\\b")
-    val hits = constraints(table).collect {
+    val hits = m.checks.collect {
       case (n, sql) if pat.matcher(sql).find() => n
     }
     require(hits.isEmpty,
@@ -2095,17 +2101,16 @@ final class TableStore(private[graft] val spark: SparkSession,
     * conflict (optimistic concurrency). `carried` maps the current
     * version's manifest (as of the winning claim — re-evaluated per
     * attempt so a lost race carries the racer's files, not a stale
-    * list) to the previous files this commit keeps by reference. `createParts` is
-    * the partition layout for a create — recorded only after the claim
-    * succeeds, so a failed create can't poison a later one with stale
-    * metadata. `requireWithin` asserts every new file lands inside the
-    * declared partition dirs (a row outside them would silently
-    * double-count against a carried file). `mapping` is the current
-    * column mapping when the caller has already loaded it. */
+    * list) to the previous files this commit keeps by reference.
+    * `base` (the pre-claim head, loaded when None; for a create, the
+    * metadata version 0 publishes) gives the write its column mapping,
+    * layout and CHECK set. `requireWithin` asserts every new file lands
+    * inside the declared partition dirs (a row outside them would
+    * silently double-count against a carried file). */
   private def commit(table: String, df: DataFrame,
                      carried: Option[Manifest] => Seq[String],
                      mustCreate: Boolean,
-                     createParts: Seq[String] = Nil,
+                     base: Option[Manifest] = None,
                      requireWithin: Option[Set[String]] = None,
                      physicalFrame: Boolean = false,
                      txns: Seq[(String, Long)] = Nil,
@@ -2114,16 +2119,17 @@ final class TableStore(private[graft] val spark: SparkSession,
                      readSnapshot: Option[Long] = None,
                      snapshotDisjointOk: Boolean = false,
                      ingest: Option[Seq[String]] = None,
-                     op: String = "WRITE",
-                     mapping: Option[ColumnMapping] = None): Long = {
+                     op: String = "WRITE"): Long = {
     val dataDir = new Path(tablePath(table), s"d-${UUID.randomUUID()}")
-    val parts = if (mustCreate) createParts else partitioning(table)
+    val planned = base.getOrElse(
+      if (mustCreate) Manifest() else headManifest(table).getOrElse(Manifest()))
+    val parts = planned.layout
     // CHECK constraints ride the write job itself (observe = metrics
     // collected during the action, zero extra passes); a violation
     // deletes the orphan data dir and aborts before any claim.
     // Constraints see LOGICAL names — the physical rename happens
     // after, on top of the observed plan.
-    val checks = constraints(table).toSeq
+    val checks = planned.checks
     val obs = if (checks.isEmpty) None
       else Some(new Observation(s"ck-${UUID.randomUUID()}"))
     val observed = obs.map { o =>
@@ -2136,7 +2142,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     // (compactSmall) whose frame is already raw file bytes
     val toWrite =
       if (mustCreate || physicalFrame) observed
-      else mapping.getOrElse(currentMapping(table)).applyWrite(observed, table)
+      else planned.columnMapping.applyWrite(observed, table)
     // Partitioned writes: AQE-rebalance on the partition columns first,
     // or every upstream task emits a file per partition value it holds
     // (tasks x values small files per commit — footer-read debt on every
@@ -2272,9 +2278,13 @@ final class TableStore(private[graft] val spark: SparkSession,
           throw new TableStore.TxnAlreadyApplied(app, ver)
         }
       }
-      if (mustCreate && createParts.nonEmpty)
-        writeSmallFile(new Path(tablePath(table), "_PARTITIONING"),
-          createParts.mkString(","))
+      // the metadata the write was planned under must still hold
+      // (Delta: a concurrent metaData change conflicts): a CHECK added
+      // since never saw these rows, and touched dirs need their layout
+      if (curM.exists(m => !m.checks.toSet.subsetOf(checks.toSet) ||
+          requireWithin.isDefined && m.layout != parts))
+        throw new SnapshotConflictException(s"$table: table metadata (CHECK " +
+          "constraints or layout) changed while the write was in flight; retry")
       val carriedLines = carried(curM)
       // carried files keep their stats by reference, same as the
       // data itself: copy the matching lines from cur's sidecar.
@@ -2289,11 +2299,11 @@ final class TableStore(private[graft] val spark: SparkSession,
       val carriedKeys = carriedLines.filterNot(Manifest.isDeleteLine)
         .map(FileStats.fileKey).toSet
       writeStatsCarried(table, cur, v, carriedKeys.contains, newStats)
-      // data commits carry cur's column mapping and ingest ledger
-      val base = curM.getOrElse(Manifest())
-      publishManifest(table, v, base.next(op, carriedLines ++ newFiles).copy(
+      // data commits carry cur's table metadata and ingest ledger
+      val prev = curM.getOrElse(planned)
+      publishManifest(table, v, prev.next(op, carriedLines ++ newFiles).copy(
         schema = Some(schema), txns = txns,
-        ingest = ingest.getOrElse(base.ingest)))
+        ingest = ingest.getOrElse(prev.ingest)))
     } catch {
       case e: SnapshotConflictException =>
         // conflicts are an expected, caller-handled outcome (retry or
@@ -2378,6 +2388,11 @@ final class TableStore(private[graft] val spark: SparkSession,
       w += 1
     }
   }
+
+  /** True when only metadata commits lie between `from` and `to`. */
+  private[lake] def sameRows(table: String, from: Long, to: Long): Boolean =
+    try { assertSnapshotCurrent(table, from, Some(to)); true }
+    catch { case _: SnapshotConflictException => false }
 
   /** THE optimistic-concurrency loop — every commit path (data or
     * metadata-only) serializes through this one helper so protocol
@@ -2732,50 +2747,36 @@ final class TableStore(private[graft] val spark: SparkSession,
     parts.foldLeft(Option(0L))((acc, p) => acc.flatMap(a => p.map(a + _)))
   }
 
-  /** Declarative write-time CHECK constraints (Delta parity). One
-    * `name\tsql` line per constraint in `_CONSTRAINTS`; every
-    * create / overwrite / append / MoR commit validates the incoming
-    * batch and aborts BEFORE claiming a version when any row fails.
-    * Validation rides the commit's own write job via
-    * `Dataset.observe` — zero extra passes over the batch — and is
-    * O(batch), never O(table): existing data was validated by its own
-    * commits. SQL CHECK semantics: a NULL predicate passes. */
-  def addConstraint(table: String, name: String, sql: String): Unit = {
-    require(!name.contains("\t") && !name.contains("\n"), "bad constraint name")
-    // one namespace across CHECK and RELY constraints: DROP CONSTRAINT
-    // drops by bare name, so a shared name would silently delete both
-    require(!constraints(table).contains(name) &&
-      !relyConstraintNames(table).contains(name),
-      s"constraint $name already exists on $table")
-    // existing rows must satisfy the new constraint (one read job)
-    val bad = read(table).where(!coalesce(expr(sql), lit(true))).count()
-    require(bad == 0,
-      s"constraint $name rejected: $bad existing row(s) of $table violate ($sql)")
-    val p = constraintsPath(table)
-    val prior = if (fs(p).exists(p)) readSmallFile(p) + "\n" else ""
-    writeSmallFile(p, prior + s"$name\t$sql")
-  }
+  /** Declarative write-time CHECK constraints (Delta parity), one
+    * `#check=` header each, declared by a metadata commit that first
+    * validates the pinned version's rows (one read job). Every create
+    * / overwrite / append / MoR commit validates the incoming batch
+    * and aborts BEFORE claiming a version when any row fails.
+    * Validation rides the commit's own write job via `Dataset.observe`
+    * — zero extra passes over the batch — and is O(batch), never
+    * O(table): existing data was validated by its own commits. SQL
+    * CHECK semantics: a NULL predicate passes. */
+  def addConstraint(table: String, name: String, sql: String): Unit =
+    declare(table, "ADD CONSTRAINT", Some(name)) { (rs, pinned) =>
+      val bad = readManifest(table, rs, pinned)
+        .where(!coalesce(expr(sql), lit(true))).count()
+      require(bad == 0,
+        s"constraint $name rejected: $bad existing row(s) of $table violate ($sql)")
+      m => m.copy(checks = m.checks :+ (name -> sql))
+    }
 
-  def dropConstraint(table: String, name: String): Unit = {
-    val left = constraints(table) - name
-    val p = constraintsPath(table)
-    if (left.isEmpty) fs(p).delete(p, false)
-    else writeSmallFile(p,
-      left.map { case (n, s) => s"$n\t$s" }.mkString("\n"))
-  }
+  /** DROP CONSTRAINT: removes the CHECK or RELY constraint `name` in
+    * one metadata commit; false, and no commit, when there is none. */
+  def dropConstraint(table: String, name: String): Boolean =
+    headManifest(table).exists(_.constraintNames.contains(name)) && {
+      commitEdit(table, "DROP CONSTRAINT")((_, m) => m.copy(
+        checks = m.checks.filterNot(_._1 == name),
+        keys = m.keys.filterNot(_.split("\t", -1)(1) == name)))
+      true
+    }
 
-  def constraints(table: String): Map[String, String] = {
-    val p = constraintsPath(table)
-    if (!fs(p).exists(p)) Map.empty
-    else readSmallFile(p).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      .flatMap(_.split("\t", 2) match {
-        case Array(n, s) => Some(n -> s)
-        case _ => None
-      }).toMap
-  }
-
-  private def constraintsPath(table: String): Path =
-    new Path(tablePath(table), "_CONSTRAINTS")
+  def constraints(table: String): Map[String, String] =
+    headManifest(table).fold(Map.empty[String, String])(_.checks.toMap)
 
   /** Informational RELY constraints (Databricks RELY / Snowflake
     * NOVALIDATE lineage): a declared PRIMARY KEY / UNIQUE / FOREIGN
@@ -2789,33 +2790,33 @@ final class TableStore(private[graft] val spark: SparkSession,
     * declaration additionally asserts the child columns are
     * NON-NULL) means the inner join cannot drop them — so a query
     * over a SUBSET of a star view's tables still serves from the
-    * view. Storage: one `kind\tname\tcols[\tref\trefcols]` line per
-    * constraint in `_RELY`. */
+    * view. Storage: one `#key=` manifest header per constraint. */
   def setKeyConstraint(table: String, name: String, cols: Seq[String],
                        unique: Boolean = false): Unit = {
     require(cols.nonEmpty, "key constraint needs columns")
-    requireRelyNameFree(table, name)
     val kind = if (unique) "UNIQUE" else "PRIMARY KEY"
-    // declare-time validation, ONE aggregation pass over the table:
-    // total rows, rows with a NULL key column, and the distinct key
-    // count (count(DISTINCT cols) skips any-NULL rows, SQL-style, so
-    // uniqueness is total - nulls == distinct)
-    val anyNull = cols.map(c => col(c).isNull).reduce(_ || _)
-    val row = read(table).agg(
-      count(lit(1)).as("total"),
-      sum(when(anyNull, 1L).otherwise(0L)).as("nulls"),
-      countDistinct(col(cols.head), cols.tail.map(col): _*).as("dist")).first()
-    val (total, nulls, dist) =
-      (row.getLong(0), Option(row.get(1)).fold(0L)(_ => row.getLong(1)),
-        row.getLong(2))
-    require(nulls == 0,
-      s"$kind $name rejected: $nulls row(s) of $table hold NULL in " +
-        s"(${cols.mkString(", ")})")
-    require(total == dist,
-      s"$kind $name rejected: (${cols.mkString(", ")}) has " +
-        s"${total - dist} duplicate key(s) in $table")
-    appendRelyLine(table,
-      s"${if (unique) "uq" else "pk"}\t$name\t${cols.mkString(",")}")
+    declare(table, "ADD CONSTRAINT", Some(name)) { (rs, pinned) =>
+      // declare-time validation, ONE aggregation pass over the table:
+      // total rows, rows with a NULL key column, and the distinct key
+      // count (count(DISTINCT cols) skips any-NULL rows, SQL-style, so
+      // uniqueness is total - nulls == distinct)
+      val anyNull = cols.map(c => col(c).isNull).reduce(_ || _)
+      val row = readManifest(table, rs, pinned).agg(
+        count(lit(1)).as("total"),
+        sum(when(anyNull, 1L).otherwise(0L)).as("nulls"),
+        countDistinct(col(cols.head), cols.tail.map(col): _*).as("dist")).first()
+      val (total, nulls, dist) =
+        (row.getLong(0), Option(row.get(1)).fold(0L)(_ => row.getLong(1)),
+          row.getLong(2))
+      require(nulls == 0,
+        s"$kind $name rejected: $nulls row(s) of $table hold NULL in " +
+          s"(${cols.mkString(", ")})")
+      require(total == dist,
+        s"$kind $name rejected: (${cols.mkString(", ")}) has " +
+          s"${total - dist} duplicate key(s) in $table")
+      val line = s"${if (unique) "uq" else "pk"}\t$name\t${cols.mkString(",")}"
+      m => m.copy(keys = m.keys :+ line)
+    }
   }
 
   def addForeignKey(table: String, name: String, cols: Seq[String],
@@ -2823,78 +2824,44 @@ final class TableStore(private[graft] val spark: SparkSession,
     require(cols.nonEmpty && cols.length == refCols.length,
       "foreign key needs matching child/parent column lists")
     require(exists(refTable), s"referenced table $refTable does not exist")
-    requireRelyNameFree(table, name)
-    // declare-time validation in ONE pass over the outer join: NULL
-    // child keys (graft FKs assert NON-NULL children — the
-    // subsumption proof needs "every fact row joins") and orphans
-    // (non-NULL keys with no parent) fall out of the same scan
-    val anyNull = cols.map(c => col(c).isNull).reduce(_ || _)
-    val parents = read(refTable).select(refCols.zip(cols)
-      .map { case (rc, c) => col(rc).as(c) }: _*)
-      .distinct().withColumn("__fk_m", lit(1))
-    val row = read(table).select(cols.map(col): _*)
-      .join(parents, cols, "left_outer")
-      .agg(
-        sum(when(anyNull, 1L).otherwise(0L)).as("nulls"),
-        sum(when(!anyNull && col("__fk_m").isNull, 1L).otherwise(0L))
-          .as("orphans")).first()
-    val nulls = Option(row.get(0)).fold(0L)(_ => row.getLong(0))
-    val orphans = Option(row.get(1)).fold(0L)(_ => row.getLong(1))
-    require(nulls == 0,
-      s"FOREIGN KEY $name rejected: $nulls row(s) of $table hold NULL " +
-        s"in (${cols.mkString(", ")})")
-    require(orphans == 0,
-      s"FOREIGN KEY $name rejected: $orphans row(s) of $table reference " +
-        s"no row of $refTable")
-    appendRelyLine(table,
-      s"fk\t$name\t${cols.mkString(",")}\t$refTable\t${refCols.mkString(",")}")
+    declare(table, "ADD CONSTRAINT", Some(name)) { (rs, pinned) =>
+      // declare-time validation in ONE pass over the outer join: NULL
+      // child keys (graft FKs assert NON-NULL children — the
+      // subsumption proof needs "every fact row joins") and orphans
+      // (non-NULL keys with no parent) fall out of the same scan
+      val anyNull = cols.map(c => col(c).isNull).reduce(_ || _)
+      val parents = read(refTable).select(refCols.zip(cols)
+        .map { case (rc, c) => col(rc).as(c) }: _*)
+        .distinct().withColumn("__fk_m", lit(1))
+      val row = readManifest(table, rs, pinned).select(cols.map(col): _*)
+        .join(parents, cols, "left_outer")
+        .agg(
+          sum(when(anyNull, 1L).otherwise(0L)).as("nulls"),
+          sum(when(!anyNull && col("__fk_m").isNull, 1L).otherwise(0L))
+            .as("orphans")).first()
+      val nulls = Option(row.get(0)).fold(0L)(_ => row.getLong(0))
+      val orphans = Option(row.get(1)).fold(0L)(_ => row.getLong(1))
+      require(nulls == 0,
+        s"FOREIGN KEY $name rejected: $nulls row(s) of $table hold NULL " +
+          s"in (${cols.mkString(", ")})")
+      require(orphans == 0,
+        s"FOREIGN KEY $name rejected: $orphans row(s) of $table reference " +
+          s"no row of $refTable")
+      val line = s"fk\t$name\t${cols.mkString(",")}\t$refTable\t${refCols.mkString(",")}"
+      m => m.copy(keys = m.keys :+ line)
+    }
   }
 
   /** Column sets declared jointly unique (PRIMARY KEY or UNIQUE). */
   def uniqueKeys(table: String): Seq[Seq[String]] =
-    relyLines(table).collect {
+    headManifest(table).toSeq.flatMap(_.keyFields).collect {
       case Array("pk" | "uq", _, cols) => cols.split(",").toSeq }
 
   /** (name, childCols, refTable, refCols) per declared FK. */
   def foreignKeys(table: String): Seq[(String, Seq[String], String, Seq[String])] =
-    relyLines(table).collect {
+    headManifest(table).toSeq.flatMap(_.keyFields).collect {
       case Array("fk", n, cols, ref, refCols) =>
         (n, cols.split(",").toSeq, ref, refCols.split(",").toSeq) }
-
-  /** All RELY constraint names on `table`. */
-  def relyConstraintNames(table: String): Seq[String] =
-    relyLines(table).map(_(1))
-
-  def dropRelyConstraint(table: String, name: String): Unit = {
-    val left = relyLines(table).filterNot(_(1) == name)
-    val p = relyPath(table)
-    if (left.isEmpty) fs(p).delete(p, false)
-    else writeSmallFile(p, left.map(_.mkString("\t")).mkString("\n"))
-  }
-
-  private def requireRelyNameFree(table: String, name: String): Unit = {
-    require(!name.contains("\t") && !name.contains("\n") &&
-      !name.contains(","), "bad constraint name")
-    require(!relyConstraintNames(table).contains(name) &&
-      !constraints(table).contains(name),
-      s"constraint $name already exists on $table")
-  }
-
-  private def relyLines(table: String): Seq[Array[String]] = {
-    val p = relyPath(table)
-    if (!fs(p).exists(p)) Nil
-    else readSmallFile(p).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      .map(_.split("\t", -1))
-  }
-
-  private def appendRelyLine(table: String, line: String): Unit = {
-    val p = relyPath(table)
-    val prior = if (fs(p).exists(p)) readSmallFile(p) + "\n" else ""
-    writeSmallFile(p, prior + line)
-  }
-
-  private def relyPath(table: String): Path =
-    new Path(tablePath(table), "_RELY")
 
   /** Metadata-only COUNT(*): the sum of per-file row counts the commit
     * recorded from parquet footers — answers without a scan or a job,
@@ -2902,10 +2869,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     * metadata can't be exact: pending equality deletes (rows need the
     * delete-set filter) or any data file lacking a recorded count (pre-stats
     * commits). */
-  def fastRowCount(table: String): Option[Long] = {
-    val cur = currentVersion(table).getOrElse(return None)
-    exactRows(table, cur, load(table, cur))
-  }
+  def fastRowCount(table: String): Option[Long] =
+    currentVersion(table).flatMap(v => exactRows(table, v, load(table, v)))
 
   /** Version `v`'s row count from folded footer counts: None with any
     * delete entry pending, or any data file (or none at all) lacking
@@ -2946,7 +2911,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     * metadata — location, version, commit times, file/byte/row
     * tallies, partitioning, constraints, and the column-mapping
     * exceptions (renames as `logical<-physical`, drops by physical
-    * name). Driver-side metadata only (manifests, sidecars, footer
+    * name). Driver-side metadata only (the head manifest, footer
     * stats); `n_rows` is null exactly when `fastRowCount` can't be
     * exact (pending MoR deletes or a pre-stats commit). */
   def detail(table: String): DataFrame = {
@@ -2966,17 +2931,15 @@ final class TableStore(private[graft] val spark: SparkSession,
       new java.sql.Timestamp(commitTime(table, cur, cm)),
       data.size, cm.lines.size - data.size, dvs.size, bytesOf(dvs), bytesOf(data),
       exactRows(table, cur, cm),
-      partitioning(table), constraints(table).keys.toSeq.sorted,
+      cm.layout, cm.checks.map(_._1).sorted,
       m.renames.toSeq.sorted.map { case (l, p) => s"$l<-$p" },
       m.dropped.toSeq.sorted,
       // informational RELY constraints, rendered for the operator:
       // pk/uq as "name(cols)", fk as "name(cols)->ref(refcols)"
-      (uniqueKeys(table).zip(relyLines(table).collect {
-        case Array("pk" | "uq", n, _) => n })
-        .map { case (cols, n) => s"$n(${cols.mkString(",")})" } ++
-        foreignKeys(table).map { case (n, cols, ref, refCols) =>
-          s"$n(${cols.mkString(",")})->$ref(${refCols.mkString(",")})" })
-        .sorted))
+      cm.keyFields.map {
+        case Array("fk", n, cols, ref, refCols) => s"$n($cols)->$ref($refCols)"
+        case f => s"${f(1)}(${f(2)})"
+      }.sorted))
       .toDF("table", "location", "version", "n_retained_versions",
         "oldest_retained_at", "last_committed_at", "n_files",
         "n_delete_entries", "n_dv_entries", "dv_bytes", "total_bytes",

@@ -246,9 +246,10 @@ final class GraftTable(store: TableStore, table: String, version: Long,
     if (isMv) graft.lake.MaterializedView.readAt(store, table, version).schema
     else store.readVersion(table, version).schema
 
+  /** The pinned version's layout (a time-travel table's own). */
   override def partitioning(): Array[Transform] =
     if (isMv) Array.empty
-    else store.partitioning(table).map(Expressions.identity).toArray
+    else store.partitioning(table, version).map(Expressions.identity).toArray
 
   override def properties(): util.Map[String, String] =
     Map("provider" -> "graft", "version" -> version.toString,

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions.col
 /** Micro-benchmark of the store's commit fixed overhead: N tiny
   * commits of each kind the lake benchmark's write ops and index sync
   * make (append, appendWithDeletes, deleteWhere) against a scratch
-  * store, next to plain parquet and noop writes of the same 5-row
-  * frame. Prints each phase's total, per-commit mean and per-commit
+  * store (and appends to a partitioned table with one CHECK
+  * constraint), next to plain parquet and noop writes of the same
+  * 5-row frame. Prints each phase's total, per-commit mean and per-commit
   * median. Run: `sbt "runMain graft.tools.CommitMicro [n]"`. */
 object CommitMicro {
 
@@ -42,11 +43,14 @@ object CommitMicro {
     val store = new graft.lake.TableStore(spark, root)
     // batch i holds ids 5i+1..5i+5, so every phase below finds rows
     def batch(i: Int) = (1 to 5).map(j => (5 * i + j, s"v$j")).toDF("id", "v")
+    def parted(i: Int) = batch(i).withColumn("p", col("id") % 2)
     // warm every commit kind once
     store.create("warm", batch(0))
     (1 to 3).foreach(i => store.append("warm", batch(i)))
     store.appendWithDeletes("warm", batch(4), Seq(1).toDF("id"))
     store.deleteWhere("warm", col("id") === 2)
+    store.create("pc", parted(0), partitionBy = Seq("p"))
+    store.addConstraint("pc", "pos", "id > 0")
 
     val create = timed(1)(_ => store.create("t", batch(0)))
     val append = timed(n)(i => store.append("t", batch(i)))
@@ -55,6 +59,7 @@ object CommitMicro {
       store.appendWithDeletes("t", batch(n + i), Seq(5 * i + 1).toDF("id")))
     // each positional delete removes one earlier row that still exists
     val dv = timed(n)(i => store.deleteWhere("t", col("id") === 5 * i + 2))
+    val checked = timed(n)(i => store.append("pc", parted(i)))
     val read = timed(5)(_ => store.read("t").write.format("noop")
       .mode("overwrite").save())
     val plain = timed(n)(i => batch(i).write.mode("overwrite")
@@ -66,6 +71,7 @@ object CommitMicro {
     report("append", append)
     report("appendWithDeletes", mor)
     report("deleteWhere", dv)
+    report("append (parts + CHECK)", checked)
     report(s"read (${3 * n + 1} commits)", read)
     report("plain parquet write", plain)
     report("noop write", noop)

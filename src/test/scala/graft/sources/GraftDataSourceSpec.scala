@@ -297,6 +297,16 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(store.read("t").count() == 2)
   }
 
+  test("a time-travel table reports the layout of its pinned version") {
+    val store = new TableStore(spark, tmpDir("dsv2parts"))
+    store.create("t", Seq((1L, "a")).toDF("id", "p"), partitionBy = Seq("p"))
+    store.setPartitioning("t", Nil)
+    def layout(v: Long): Seq[String] = new GraftTable(store, "t", v)
+      .partitioning().toSeq.flatMap(_.references().toSeq.flatMap(_.fieldNames().toSeq))
+    assert(layout(0L) == Seq("p"))
+    assert(layout(1L).isEmpty)
+  }
+
   test("catalog TIMESTAMP AS OF resolves by commit time") {
     val root = tmpDir("dsv2ts")
     val store = new TableStore(spark, root)
